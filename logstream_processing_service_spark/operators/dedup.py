@@ -542,55 +542,6 @@ def _lsh_pairs_from_registry(
     )
 
 
-def lsh_delete_tombstones(delete_ids: DataFrame) -> DataFrame:
-    """Doc-grain DELETE markers in band-key schema: (doc_id, band=-1,
-    bkey=''). One row per deleted document — O(|deletes|) to write,
-    never O(|band keys of deleted docs|) — and the sentinel band < 0
-    cannot collide with real keys (band indexes are ≥ 0). The bm25
-    registry's tombstone discipline (retrieval.bm25_delete_tombstones)
-    applied to the dedup index."""
-    return delete_ids.select(
-        "doc_id",
-        F.lit(-1).cast("int").alias("band"),
-        F.lit("").alias("bkey"),
-    )
-
-
-def lsh_live_keys(merged: DataFrame) -> DataFrame:
-    """Tombstone-aware read of a band-key registry snapshot: drop every
-    tombstoned document's keys with one anti-join on the 8-byte doc_id.
-    Shared by the merge-on-read path and compaction
-    (:func:`lsh_compact_registry`) so the two can never disagree on
-    what 'live' means — the retrieval.live_postings discipline."""
-    dead = merged.filter(F.col("band") < 0).select("doc_id")
-    return merged.filter(F.col("band") >= 0).join(dead, "doc_id", "left_anti")
-
-
-def lsh_compact_registry(spark, table_dir: str, target_files: int = 1) -> int:
-    """Fold accumulated tombstones + deltas of the LSH band-key
-    registry into a rewritten base — the dedup index's compaction verb,
-    completing its add / delete / compact lifecycle (the
-    bm25_compact_registry discipline on the other index family).
-    After compaction readers take the plain-scan path: no tombstone
-    anti-join, fewer files; the pre-compaction snapshot stays
-    time-travelable until vacuumed.
-
-    OCC discipline (the r12-advice fix, applied from birth here):
-    capture the base version FIRST, read exactly that snapshot, and
-    commit against it — a concurrent append between read and commit
-    raises CommitConflict instead of being silently dropped by the
-    rewrite.
-    """
-    from . import txlog as TX
-
-    base = TX._versions(table_dir)[-1]
-    merged = TX.read_snapshot(spark, table_dir, version=base)
-    live = lsh_live_keys(merged).coalesce(target_files)
-    return TX.commit(
-        table_dir, live, mode="overwrite", expected_version=base
-    )
-
-
 def lsh_registry_lifecycle_pairs(
     base_docs: DataFrame,
     delta_docs: DataFrame,
@@ -602,10 +553,12 @@ def lsh_registry_lifecycle_pairs(
     """Near-dup pairs after the FULL dedup-registry lifecycle — the
     r14 completion of the incremental story: base band keys committed
     v0, delta keys appended v1 (:func:`lsh_incremental_pairs`'s
-    merge-on-read ingest), doc-grain tombstones appended v2, and
-    :func:`lsh_compact_registry` folds all three into a rewritten v3;
-    candidate generation then reads the PLAIN compacted scan (no
-    tombstone filtering left in the plan). Hash-matching the
+    merge-on-read ingest), doc-grain tombstones appended v2
+    (``txlog.tombstones`` with sentinel ``band = -1``, which cannot
+    collide with real band indexes ≥ 0), and ``txlog.rewrite_snapshot``
+    folds all three into a rewritten v3 of the ``live_rows``; candidate
+    generation then reads the PLAIN compacted scan (no tombstone
+    filtering left in the plan). Hash-matching the
     from-scratch batch LSH over the post-delete union corpus proves
     compaction is a pure physical rewrite of the dedup index — same
     pairs, same Jaccards, fewer files.
@@ -623,16 +576,21 @@ def lsh_registry_lifecycle_pairs(
 
     spark = base_docs.sparkSession
     _, frozen = lsh_frozen_hot(base_docs, table_dir)
-    TX.commit(
-        table_dir, _frozen_capped_keys(base_docs, frozen),
-        mode="overwrite",
-    )
+    base_keys = _frozen_capped_keys(base_docs, frozen)
+    TX.commit(table_dir, base_keys, mode="overwrite")
     TX.commit(
         table_dir, _frozen_capped_keys(delta_docs, frozen),
         mode="append",
     )
-    TX.commit(table_dir, lsh_delete_tombstones(delete_ids), mode="append")
-    lsh_compact_registry(spark, table_dir)
+    TX.commit(
+        table_dir,
+        TX.tombstones(delete_ids, base_keys, "doc_id", "band"),
+        mode="append",
+    )
+    TX.rewrite_snapshot(
+        spark, table_dir,
+        lambda snap: TX.live_rows(snap, "doc_id", "band").coalesce(1),
+    )
     banded = TX.read_snapshot(spark, table_dir)  # plain scan: v3 only
     live_docs = base_docs.unionByName(delta_docs).join(
         delete_ids.select("doc_id"), "doc_id", "left_anti"

@@ -370,21 +370,14 @@ def synthetic_gif(doc_id: int) -> bytes:
     return encode_gif(frames, _analytic_palette(), interlace_odd=True)
 
 
-def with_synthetic_gif_payload(
-    documents: DataFrame, n_parts: int | None = None
-) -> DataFrame:
+def with_synthetic_gif_payload(documents: DataFrame) -> DataFrame:
+    from .jpegcodec import _spread_doc_ids
+
     @F.pandas_udf("binary")
     def make(doc_id: pd.Series) -> pd.Series:
         return doc_id.map(lambda d: synthetic_gif(int(d)))
 
-    # codec work is CPU-bound Python: spread it across tasks BEFORE the
-    # UDFs (the jpeg-lane discipline, jpegcodec.py:416 — a doc_id-only
-    # shuffle costs ~8 bytes/row; the local testdata parquet is one row
-    # group, so without this every encode+decode runs serially in ONE
-    # task: measured 18.6s -> ~2s at sf0.1). n_parts defaults to the
-    # session's parallelism (r14) — scale-adaptive, not a local constant.
-    n_parts = n_parts or documents.sparkSession.sparkContext.defaultParallelism
-    return documents.select("doc_id").repartition(n_parts, "doc_id").select(
+    return _spread_doc_ids(documents).select(
         "doc_id", make(F.col("doc_id")).alias("payload")
     )
 

@@ -397,7 +397,22 @@ def synthetic_jpeg_blocks(width: int, height: int, seed: int = 0) -> bytes:
     return encode_jpeg_gray(px, quality=100)
 
 
-def with_blocky_jpeg_payload(documents, n_parts: int | None = None):
+def _spread_doc_ids(documents):
+    """The doc ids of ``documents`` hash-spread over the session's
+    parallelism — the input every codec payload builder encodes from.
+    Codec work is CPU-bound Python, so it must spread across tasks
+    BEFORE the UDFs: the local testdata parquet is one row group, and
+    without this every encode+decode runs serially in a single task
+    (measured 18.6 s -> ~2 s on the gif lane at sf0.1). A doc_id-only
+    shuffle costs ~8 bytes/row, downstream lanes inherit the spread so
+    payload bytes never cross an exchange, and at 100 TB this is how a
+    media pipeline bounds per-task batch bytes anyway (cf.
+    extract_features)."""
+    n = documents.sparkSession.sparkContext.defaultParallelism
+    return documents.select("doc_id").repartition(n, "doc_id")
+
+
+def with_blocky_jpeg_payload(documents):
     from pyspark.sql import functions as F
 
     @F.pandas_udf("binary")
@@ -408,15 +423,7 @@ def with_blocky_jpeg_payload(documents, n_parts: int | None = None):
             )
         )
 
-    # codec work is CPU-bound Python: spread it across tasks BEFORE the
-    # UDFs (a doc_id-only shuffle costs ~8 bytes/row; the local testdata
-    # parquet is one row group, so without this every encode+decode runs
-    # serially in a single task — and at 100 TB this is how a media
-    # pipeline bounds per-task batch bytes anyway, cf. extract_features).
-    # n_parts defaults to the session's parallelism (r14) —
-    # scale-adaptive, not a local constant.
-    n_parts = n_parts or documents.sparkSession.sparkContext.defaultParallelism
-    return documents.select("doc_id").repartition(n_parts, "doc_id").select(
+    return _spread_doc_ids(documents).select(
         "doc_id", make_jpeg(F.col("doc_id")).alias("payload")
     )
 

@@ -293,18 +293,16 @@ def synthetic_mjpeg_mp4(doc_id: int) -> bytes:
     return mux_mp4_frames(frames, durations)
 
 
-def with_mjpeg_mp4_payload(documents, n_parts: int | None = None):
+def with_mjpeg_mp4_payload(documents):
     from pyspark.sql import functions as F
+
+    from .jpegcodec import _spread_doc_ids
 
     @F.pandas_udf("binary")
     def make(doc_id: pd.Series) -> pd.Series:
         return doc_id.map(lambda d: synthetic_mjpeg_mp4(int(d)))
 
-    # spread the codec work before the UDF (with_blocky_jpeg_payload's
-    # one-row-group lesson); n_parts defaults to the session's
-    # parallelism (r14) — scale-adaptive, not a local constant
-    n_parts = n_parts or documents.sparkSession.sparkContext.defaultParallelism
-    return documents.select("doc_id").repartition(n_parts, "doc_id").select(
+    return _spread_doc_ids(documents).select(
         "doc_id", make(F.col("doc_id")).alias("payload")
     )
 

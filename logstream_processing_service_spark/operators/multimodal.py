@@ -957,21 +957,15 @@ def audio_pcm_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def with_gradient_image_payload(
-    documents: DataFrame, n_parts: int | None = None
-) -> DataFrame:
+def with_gradient_image_payload(documents: DataFrame) -> DataFrame:
     """Fixture image corpus with CONTENT: per doc a real grayscale PNG,
     w = doc_id%48+8, h = doc_id%37+8, pixel(x,y) = (3x+7y+doc_id%256)%256
     — integer closed forms an oracle recomputes without any decoder.
 
-    r14 (guide §2.5/§2.6 idle capacity): codec work is CPU-bound Python —
-    spread doc ids across tasks BEFORE the encode UDF (the jpeg-lane
-    discipline; the local testdata parquet is one row group, so without
-    this every PNG encode AND every downstream decode ran serially in
-    ONE task). The doc_id-only shuffle costs 8 bytes/row; downstream
-    lanes inherit the spread, so the payload bytes never cross an
-    exchange. ``n_parts`` defaults to the session's parallelism —
-    scale-adaptive, not a local-mode constant."""
+    Doc ids are spread across tasks BEFORE the encode UDF
+    (``jpegcodec._spread_doc_ids``), so every PNG encode and every
+    downstream decode runs in parallel."""
+    from .jpegcodec import _spread_doc_ids
 
     @F.pandas_udf(BinaryType())
     def make_png(doc_id: pd.Series) -> pd.Series:
@@ -981,9 +975,8 @@ def with_gradient_image_payload(
             )
         )
 
-    n = n_parts or documents.sparkSession.sparkContext.defaultParallelism
     payload = make_png(F.col("doc_id"))
-    return documents.select("doc_id").repartition(n, "doc_id").select(
+    return _spread_doc_ids(documents).select(
         "doc_id",
         payload.alias("payload"),
         F.struct(
@@ -996,16 +989,14 @@ def with_gradient_image_payload(
     )
 
 
-def with_tone_audio_payload(
-    documents: DataFrame, n_parts: int | None = None
-) -> DataFrame:
+def with_tone_audio_payload(documents: DataFrame) -> DataFrame:
     """Fixture audio corpus with CONTENT: per doc a real sine-tone PCM WAV
     (rate 8000, frames = 400+doc_id%200, freq = 100+doc_id%200,
     amp = (1+doc_id%8)/10, channels = doc_id%2+1) — the quantized sample
     formula is oracle-recomputable sample-for-sample.
 
-    Same r14 pre-encode spread as :func:`with_gradient_image_payload`
-    (one-row-group input serialized the whole encode+decode lane)."""
+    Same pre-encode spread as :func:`with_gradient_image_payload`."""
+    from .jpegcodec import _spread_doc_ids
 
     @F.pandas_udf(BinaryType())
     def make_wav(doc_id: pd.Series) -> pd.Series:
@@ -1019,9 +1010,8 @@ def with_tone_audio_payload(
             )
         )
 
-    n = n_parts or documents.sparkSession.sparkContext.defaultParallelism
     payload = make_wav(F.col("doc_id"))
-    return documents.select("doc_id").repartition(n, "doc_id").select(
+    return _spread_doc_ids(documents).select(
         "doc_id",
         payload.alias("payload"),
         F.struct(

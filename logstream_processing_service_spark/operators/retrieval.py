@@ -1610,26 +1610,16 @@ def bm25_incremental_index(
     return TX.read_snapshot(base_docs.sparkSession, table_dir)
 
 
-def bm25_delete_tombstones(delete_ids: DataFrame) -> DataFrame:
-    """Doc-grain DELETE markers in posting schema: (doc_id, tok='',
-    tc=-1). A tombstone is one row per deleted document — O(|deletes|)
-    to write, never O(|postings of deleted docs|) — and the sentinel
-    tc < 0 cannot collide with real postings (term counts are ≥ 1)."""
-    return delete_ids.select(
-        "doc_id",
-        F.lit("").alias("tok"),
-        F.lit(-1).cast("bigint").alias("tc"),
-    )
-
-
 def bm25_incremental_delete(
     base_docs: DataFrame, delete_ids: DataFrame, table_dir: str
 ) -> DataFrame:
     """DELETE path of the incremental posting registry — the edge
     :func:`bm25_incremental_index` declares out of scope, closed: v0
     commits the base postings, v1 APPENDS doc-grain tombstones
-    (:func:`bm25_delete_tombstones`), and the merged read drops every
-    tombstoned document's postings with one anti-join. Returns the
+    (``txlog.tombstones``: one row per deleted doc, ``tc = -1``, which
+    cannot collide with real term counts ≥ 1), and the merged read
+    (``txlog.live_rows``) drops every tombstoned document's postings
+    with one anti-join. Returns the
     LIVE posting frame; feed it to ``bm25_topk(tf=...)``.
 
     Because bm25_topk derives every global statistic (N, avgdl, df)
@@ -1645,60 +1635,17 @@ def bm25_incremental_delete(
     realistic daily-churn ratio (Spark broadcasts it under AQE when
     small, shuffles on the 8-byte key when not). Compaction — folding
     tombstones into a rewritten base at some churn threshold — is
-    txlog.optimize_table's job, not the read path's.
+    ``txlog.rewrite_snapshot`` with ``live_rows`` as the fold, not the
+    read path's job.
     """
     from . import txlog as TX
 
-    TX.commit(table_dir, doc_tf(base_docs), mode="overwrite")
-    TX.commit(table_dir, bm25_delete_tombstones(delete_ids), mode="append")
-    merged = TX.read_snapshot(base_docs.sparkSession, table_dir)
-    return live_postings(merged)
-
-
-def live_postings(merged: DataFrame) -> DataFrame:
-    """The tombstone-aware read of a posting registry snapshot: drop
-    every tombstoned document's postings with one anti-join on the
-    8-byte doc_id key. Shared by the merge-on-read path
-    (:func:`bm25_incremental_delete`) and compaction
-    (:func:`bm25_compact_registry`) so the two can never disagree on
-    what 'live' means."""
-    dead = merged.filter(F.col("tc") < 0).select("doc_id")
-    return merged.filter(F.col("tc") >= 0).join(dead, "doc_id", "left_anti")
-
-
-def bm25_compact_registry(
-    spark, table_dir: str, target_files: int = 1
-) -> int:
-    """Fold accumulated tombstones and deltas into a rewritten base —
-    the registry lifecycle's third verb (add / delete / COMPACT, the
-    Delta OPTIMIZE discipline applied to the inverted index): reads
-    the current snapshot, applies the tombstone anti-join ONCE, and
-    commits the live posting set as a new overwrite version. After
-    compaction, readers take the plain-scan path (no tombstone
-    filtering, fewer files); the pre-compaction snapshot stays
-    time-travelable until vacuumed (snapshot isolation throughout —
-    the commit point is the atomic manifest link, so an interrupted
-    compaction leaves only an orphan data dir for vacuum).
-
-    When to run it: merge-on-read keeps ingest O(|delta|) but every
-    read pays the anti-join and the growing file list; compaction
-    moves that cost to one background rewrite. At 100 TB the trigger
-    is a churn ratio (tombstoned/live rows) or file-count threshold —
-    policy lives with the table maintenance scheduler, not here.
-    """
-    from . import txlog as TX
-
-    # OCC discipline (r12-advice fix): capture the base version FIRST,
-    # then read exactly that snapshot. Reading "latest" and capturing
-    # the version afterwards leaves a window where a concurrent append
-    # lands in between — the commit's expected_version check would then
-    # pass against the newer version while the rewritten 'live' frame
-    # is pinned to the older snapshot, silently dropping the concurrent
-    # append's rows. Pinning read and check to the SAME version makes
-    # that interleaving a loud CommitConflict instead.
-    base = TX._versions(table_dir)[-1]
-    merged = TX.read_snapshot(spark, table_dir, version=base)
-    live = live_postings(merged).coalesce(target_files)
-    return TX.commit(
-        table_dir, live, mode="overwrite", expected_version=base
+    postings = doc_tf(base_docs)
+    TX.commit(table_dir, postings, mode="overwrite")
+    TX.commit(
+        table_dir,
+        TX.tombstones(delete_ids, postings, "doc_id", "tc"),
+        mode="append",
     )
+    merged = TX.read_snapshot(base_docs.sparkSession, table_dir)
+    return TX.live_rows(merged, "doc_id", "tc")

@@ -1406,45 +1406,6 @@ def hard_negative_mining(
     return neg.unionByName(pos).orderBy("q_id", "kind", "rank")
 
 
-def ivf_delete_tombstones(delete_ids: DataFrame, emb_type) -> DataFrame:
-    """Vec-grain DELETE markers in assignment schema: (vec_id,
-    embedding=NULL, v_bucket=-1). One row per deleted vector —
-    O(|deletes|) — and the sentinel bucket < 0 cannot collide with
-    real coarse buckets (they are label ids ≥ 0, asserted by the
-    lifecycle operator). The bm25/LSH tombstone discipline on the
-    vector index."""
-    return delete_ids.select(
-        "vec_id",
-        F.lit(None).cast(emb_type).alias("embedding"),
-        F.lit(-1).cast("int").alias("v_bucket"),
-    )
-
-
-def ivf_live_assignments(merged: DataFrame) -> DataFrame:
-    """Tombstone-aware read of the assignment registry: drop every
-    tombstoned vector's row with one anti-join on the 8-byte vec_id —
-    shared by merge-on-read and compaction so 'live' has one
-    definition (the live_postings discipline)."""
-    dead = merged.filter(F.col("v_bucket") < 0).select("vec_id")
-    return merged.filter(F.col("v_bucket") >= 0).join(
-        dead, "vec_id", "left_anti"
-    )
-
-
-def ivf_compact_registry(spark, table_dir: str, target_files: int = 1) -> int:
-    """Fold tombstones + deltas of the IVF assignment registry into a
-    rewritten base (the OCC discipline: base version captured FIRST,
-    snapshot read pinned to it, commit checked against it)."""
-    from . import txlog as TX
-
-    base = TX._versions(table_dir)[-1]
-    merged = TX.read_snapshot(spark, table_dir, version=base)
-    live = ivf_live_assignments(merged).coalesce(target_files)
-    return TX.commit(
-        table_dir, live, mode="overwrite", expected_version=base
-    )
-
-
 def ann_ivf_lifecycle(
     base_emb: DataFrame,
     delta_emb: DataFrame,
@@ -1458,11 +1419,13 @@ def ann_ivf_lifecycle(
     :func:`ann_ivf_incremental` (add) this completes the third column
     of the index-family × lifecycle-verb matrix (bm25, LSH, IVF) ×
     (add, delete, compact): base assignments v0 (centroids frozen on
-    the base), delta assignments appended v1, vec-grain tombstones v2,
-    :func:`ivf_compact_registry` folds them into a rewritten v3, and
-    probes read the PLAIN compacted scan. Hash-matching the
-    frozen-centroid batch IVF over the post-delete union proves
-    compaction is a pure physical rewrite of the vector index.
+    the base), delta assignments appended v1, vec-grain tombstones v2
+    (``txlog.tombstones``, sentinel ``v_bucket = -1``),
+    ``txlog.rewrite_snapshot`` folds them into a rewritten v3 of the
+    ``live_rows``, and probes read the PLAIN compacted scan.
+    Hash-matching the frozen-centroid batch IVF over the post-delete
+    union proves compaction is a pure physical rewrite of the vector
+    index.
     Centroid REFRESH (re-cluster + full reassign) is deliberately not
     a lifecycle verb — it is the scheduled rebuild that creates a new
     registry generation.
@@ -1481,13 +1444,10 @@ def ann_ivf_lifecycle(
     # lifecycle is caller-owned (repo contract — bench/driver clear caches
     # per query)
     cent = label_centroids(base_emb).persist()
-    emb_type = base_emb.schema["embedding"].dataType
-    TX.commit(
-        table_dir,
-        _nearest_buckets(base_emb, cent, "vec_id", "embedding", 1, "v_bucket")
-        .select("vec_id", "embedding", "v_bucket"),
-        mode="overwrite",
-    )
+    base_assign = _nearest_buckets(
+        base_emb, cent, "vec_id", "embedding", 1, "v_bucket"
+    ).select("vec_id", "embedding", "v_bucket")
+    TX.commit(table_dir, base_assign, mode="overwrite")
     TX.commit(
         table_dir,
         _nearest_buckets(delta_emb, cent, "vec_id", "embedding", 1, "v_bucket")
@@ -1496,9 +1456,12 @@ def ann_ivf_lifecycle(
     )
     TX.commit(
         table_dir,
-        ivf_delete_tombstones(delete_ids.select("vec_id"), emb_type),
+        TX.tombstones(delete_ids, base_assign, "vec_id", "v_bucket"),
         mode="append",
     )
-    ivf_compact_registry(spark, table_dir)
+    TX.rewrite_snapshot(
+        spark, table_dir,
+        lambda snap: TX.live_rows(snap, "vec_id", "v_bucket").coalesce(1),
+    )
     bucketed = TX.read_snapshot(spark, table_dir)  # plain scan: v3 only
     return _ivf_probe(bucketed, cent, queries, k, nprobe)

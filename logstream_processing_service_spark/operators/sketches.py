@@ -717,26 +717,20 @@ def cm_compact_registry(
     with no groupBy-sum fan-in over many versions. Cells whose folded
     count is ZERO (fully retracted) are DROPPED, so a compacted
     registry is cell-for-cell identical to a one-shot registry over the
-    surviving slices (asserted in tests/test_cm_incremental.py).
-
-    OCC discipline (the r12-advice shape, applied from birth): capture
-    the base version FIRST, read exactly that snapshot, and commit with
-    expected_version=base — a concurrent slice commit landing mid-fold
-    becomes a loud CommitConflict instead of silently vanishing from
-    the rewritten registry."""
+    surviving slices (asserted in tests/test_cm_incremental.py). The
+    rewrite is ``txlog.rewrite_snapshot``, so a slice commit landing
+    mid-fold is a CommitConflict, never silently dropped."""
     from . import txlog as TX
 
-    base = TX._versions(table_dir)[-1]
-    merged = TX.read_snapshot(spark, table_dir, version=base)
-    folded = (
-        merged.groupBy("key", "day", "r", "c")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        .filter(F.col("cnt") != 0)
-        .coalesce(target_files)
-    )
-    return TX.commit(
-        table_dir, folded, mode="overwrite", expected_version=base
-    )
+    def fold(merged: DataFrame) -> DataFrame:
+        return (
+            merged.groupBy("key", "day", "r", "c")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+            .filter(F.col("cnt") != 0)
+            .coalesce(target_files)
+        )
+
+    return TX.rewrite_snapshot(spark, table_dir, fold)
 
 
 def mg_daily_registry(

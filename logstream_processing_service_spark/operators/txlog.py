@@ -29,6 +29,7 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -709,32 +710,28 @@ def read_snapshot_null_pruned(
     return kept.filter(F.col(col).isNull())
 
 
-def optimize_table(
+def rewrite_snapshot(
     spark: SparkSession,
     table_dir: str,
-    target_files: int = 1,
-    sort_col: str | None = None,
+    fold: Callable[[DataFrame], DataFrame],
     stats_cols: tuple[str, ...] = (),
 ) -> int:
-    """Delta OPTIMIZE for a txlog table: rewrite the current snapshot's
-    files into ``target_files`` (optionally range-clustered on
-    ``sort_col`` so stats pruning works afterward) and commit the result
-    as a NEW version — readers keep snapshot isolation throughout, the
-    pre-optimize snapshot stays time-travelable until vacuumed, and the
-    rewrite is crash-safe for free (an interrupted optimize leaves an
-    orphan data directory that vacuum's retention logic collects; the
-    commit point is still the atomic manifest link).
+    """Commit ``fold(latest snapshot)`` as a new overwrite version — the
+    one rewrite verb behind OPTIMIZE and every registry compaction. The
+    pre-rewrite snapshot stays time-travelable until vacuumed, and an
+    interrupted rewrite leaves only an orphan data directory for vacuum
+    (the commit point is the atomic manifest link). Non-empty
+    ``stats_cols`` records per-file manifest stats (commit_with_stats).
 
-    A streaming ingest (streaming_commit_sink) accretes one small file
-    per micro-batch; this is the companion job that folds them back into
-    scan-efficient files, with manifest stats so read_snapshot_pruned
-    skips from the log."""
-    df = read_snapshot(spark, table_dir)
-    if sort_col is not None:
-        rewritten = df.repartitionByRange(target_files, F.col(sort_col))
-    else:
-        rewritten = df.coalesce(target_files)
+    Optimistic concurrency: the base version is captured FIRST, the read
+    is pinned to exactly that version, and the commit is checked against
+    it. Reading "latest" and looking the version up afterwards leaves a
+    window in which a concurrent append passes the check while the
+    rewritten frame, pinned to the older snapshot, silently drops the
+    appended rows; pinning read and check to the same version turns that
+    interleaving into a CommitConflict."""
     base = _versions(table_dir)[-1]
+    rewritten = fold(read_snapshot(spark, table_dir, version=base))
     if stats_cols:
         return commit_with_stats(
             table_dir,
@@ -746,6 +743,61 @@ def optimize_table(
     return commit(
         table_dir, rewritten, mode="overwrite", expected_version=base
     )
+
+
+def tombstones(
+    delete_ids: DataFrame, like: DataFrame, key: str, sentinel: str
+) -> DataFrame:
+    """Key-grain DELETE markers in ``like``'s schema: one row per
+    deleted ``key`` with ``sentinel = -1`` and a typed NULL in every
+    other column, ready to APPEND to a registry whose real rows keep
+    ``sentinel >= 0``. Writing is O(|deletes|), never O(|rows of the
+    deleted keys|); :func:`live_rows` is the matching read."""
+    cols = []
+    for f in like.schema:
+        if f.name == key:
+            cols.append(F.col(key))
+        else:
+            fill = -1 if f.name == sentinel else None
+            cols.append(F.lit(fill).cast(f.dataType).alias(f.name))
+    return delete_ids.select(*cols)
+
+
+def live_rows(snapshot: DataFrame, key: str, sentinel: str) -> DataFrame:
+    """The tombstone-aware read of a registry snapshot: drop the
+    tombstones (``sentinel < 0``) and every row of a tombstoned ``key``
+    with one anti-join. Filter first, then anti-join, so the sentinel
+    predicate reaches the scans. Merge-on-read and compaction both use
+    it, so the two can never disagree on what 'live' means."""
+    dead = snapshot.filter(F.col(sentinel) < 0).select(key)
+    return snapshot.filter(F.col(sentinel) >= 0).join(dead, key, "left_anti")
+
+
+def optimize_table(
+    spark: SparkSession,
+    table_dir: str,
+    target_files: int = 1,
+    sort_col: str | None = None,
+    stats_cols: tuple[str, ...] = (),
+) -> int:
+    """Delta OPTIMIZE for a txlog table: rewrite the current snapshot's
+    files into ``target_files`` (optionally range-clustered on
+    ``sort_col`` so stats pruning works afterward) and commit the result
+    as a NEW version through :func:`rewrite_snapshot` (snapshot
+    isolation, time travel, crash safety and the OCC check come from
+    there).
+
+    A streaming ingest (streaming_commit_sink) accretes one small file
+    per micro-batch; this is the companion job that folds them back into
+    scan-efficient files, with manifest stats so read_snapshot_pruned
+    skips from the log."""
+
+    def fold(df: DataFrame) -> DataFrame:
+        if sort_col is not None:
+            return df.repartitionByRange(target_files, F.col(sort_col))
+        return df.coalesce(target_files)
+
+    return rewrite_snapshot(spark, table_dir, fold, stats_cols)
 
 
 # ---------------------------------------------------------------------------

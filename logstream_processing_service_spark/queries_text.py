@@ -2279,8 +2279,9 @@ def q_bm25_delete_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bm25_compaction_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked search
     AFTER registry compaction — base postings v0, tombstones v1,
-    bm25_compact_registry folds them into a rewritten v2, and search
-    reads v2 with the PLAIN scan path (no tombstone filtering left).
+    txlog.rewrite_snapshot folds them into a rewritten v2 of the
+    live_rows, and search reads v2 with the PLAIN scan path (no
+    tombstone filtering left).
     Hash-matching the post-delete batch oracle proves compaction is a
     pure physical rewrite; the manifest-level test pins the fewer-files
     and no-tombstones facts plus v1's unchanged time-travel read."""
@@ -2289,18 +2290,16 @@ def q_bm25_compaction_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
-    from .operators.retrieval import (
-        bm25_compact_registry,
-        bm25_incremental_delete,
-        bm25_topk,
-    )
+    from .operators.retrieval import bm25_incremental_delete, bm25_topk
 
     docs = _t(spark, sf_dir, "documents")
     dels = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
     t = _bm25_inc_dir(spark, sf_dir, kind="bm25_inc_cmp")
     shutil.rmtree(t, ignore_errors=True)
     bm25_incremental_delete(docs, dels, t)  # v0 + v1 (tombstones)
-    bm25_compact_registry(spark, t)  # v2: folded rewrite
+    TX.rewrite_snapshot(  # v2: folded rewrite
+        spark, t, lambda snap: TX.live_rows(snap, "doc_id", "tc").coalesce(1)
+    )
     return bm25_topk(docs, tf=TX.read_snapshot(spark, t))
 
 
@@ -2413,7 +2412,7 @@ def lsh_lifecycle_oracle_sql() -> str:
 def q_lsh_compaction_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs after the dedup registry's FULL lifecycle — base
     band keys v0, delta keys appended v1, doc-grain tombstones v2,
-    lsh_compact_registry folds them into a rewritten v3, and candidate
+    txlog.rewrite_snapshot folds them into a rewritten v3, and candidate
     generation reads the PLAIN compacted scan. Hash-matching the batch
     LSH over the post-delete union proves compaction is a pure
     physical rewrite of the dedup index (r14 queue; completes the

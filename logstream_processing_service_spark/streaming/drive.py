@@ -27,10 +27,8 @@ fixed state-store cost by partitions × stores × batches (measured 14.5 s
 shuffle-partition count is therefore derived from the STAGED INPUT SIZE
 (~32 MB of input per state partition, clamped to [1, defaultParallelism])
 — scale-adaptive, not a local-mode constant: a 100× corpus raises the
-derived count toward the cluster's parallelism, and
-``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides it for deployments that
-size state explicitly. The session's batch setting is restored after the
-stream finishes.
+derived count toward the cluster's parallelism. The session's batch
+setting is restored after the stream finishes.
 """
 
 from __future__ import annotations
@@ -59,11 +57,7 @@ def _stream_shuffle_partitions(
     module docstring). ``min_partitions``: floor for transforms that do
     real per-key Python compute inside the batch (grouped-map operators
     like denstream — collapsing them to 1-2 partitions serializes the
-    per-group work; measured +30% on the denstream twin). Env override:
-    SPARK_GRAFT_STREAM_STATE_PARTITIONS."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    per-group work; measured +30% on the denstream twin)."""
     total = 0
     for dirpath, _dirs, files in os.walk(src):
         for f in files:

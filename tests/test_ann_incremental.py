@@ -102,7 +102,6 @@ def test_ivf_compaction_folds_tombstones_and_preserves_time_travel(
     from logstream_processing_service_spark.operators import txlog as TX
     from logstream_processing_service_spark.operators.similarity import (
         ann_ivf_lifecycle,
-        ivf_live_assignments,
     )
 
     def vec(seed, dim=8):
@@ -129,7 +128,9 @@ def test_ivf_compaction_folds_tombstones_and_preserves_time_travel(
     compacted = TX.read_snapshot(spark, t)
     assert compacted.filter(F.col("v_bucket") < 0).count() == 0
     assert compacted.filter("vec_id = 3").count() == 0
-    v2 = ivf_live_assignments(TX.read_snapshot(spark, t, version=2))
+    v2 = TX.live_rows(
+        TX.read_snapshot(spark, t, version=2), "vec_id", "v_bucket"
+    )
     a = sorted((r["vec_id"], r["v_bucket"]) for r in v2.collect())
     b = sorted((r["vec_id"], r["v_bucket"]) for r in compacted.collect())
     assert a == b

@@ -78,38 +78,6 @@ def test_delete_by_negation_then_compact_is_cell_identical(spark, tmp_path):
     assert TX.read_snapshot(spark, t, version=3).count() > compacted.count()
 
 
-def test_compact_occ_refuses_concurrent_append(spark, tmp_path):
-    """A slice commit landing between the fold's base capture and its
-    commit must be a loud CommitConflict, never silently dropped."""
-    from pyspark.sql import functions as F
-
-    from logstream_processing_service_spark.operators import txlog as TX
-    from logstream_processing_service_spark.operators.sketches import (
-        cm_daily_registry,
-    )
-    from logstream_processing_service_spark.sources import load_table
-
-    ev = load_table(spark, SF_DIR_ORACLE, "events")
-    t = str(tmp_path / "cmocc")
-    TX.commit(t, cm_daily_registry(ev.filter(F.col("event_id") % 2 == 0)))
-    base = TX._versions(t)[-1]
-    merged = TX.read_snapshot(spark, t, version=base)
-    folded = (
-        merged.groupBy("key", "day", "r", "c")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        .filter(F.col("cnt") != 0)
-        .coalesce(1)
-    )
-    # concurrent append lands AFTER the base capture
-    TX.commit(
-        t,
-        cm_daily_registry(ev.filter(F.col("event_id") % 2 == 1)),
-        mode="append",
-    )
-    with pytest.raises(TX.CommitConflict):
-        TX.commit(t, folded, mode="overwrite", expected_version=base)
-
-
 def test_slice_sum_is_cell_identical_to_one_shot(spark, tmp_path):
     """The algebra itself, at registry grain: the merged incremental
     registry equals cm_merge of the one-shot registry — every (key, r,

@@ -343,12 +343,14 @@ def test_save_never_built_index_is_empty_snapshot(spark, tmp_path):
     assert back.entry == -1 and back.max_level == -1
 
 
-def test_einsum_fallback_path_matches_private_kernel():
+def test_einsum_fallback_path_matches_private_kernel(monkeypatch):
     """r14 (r13 VERDICT "What's wrong" #5): the hot _dist path binds
     numpy's private c_einsum kernel with a public np.einsum fallback for
     numpy 2.x. Exercise the fallback EXPLICITLY — swap it in, rebuild a
     small index, and pin graph identity with the private-kernel build —
     so the except branch stays covered even while numpy 1.x is pinned."""
+    if H._c_einsum is np.einsum:
+        pytest.skip("private c_einsum unavailable: nothing to compare")
     rng = np.random.RandomState(11)
     vecs = [
         (i, [float(x) for x in rng.rand(8)]) for i in range(40)
@@ -369,12 +371,8 @@ def test_einsum_fallback_path_matches_private_kernel():
         H._c_einsum("ij,j->i", a, q), np.einsum("ij,j->i", a, q)
     )
 
-    orig = H._c_einsum
     base = build()
-    try:
-        H._c_einsum = np.einsum  # the numpy 2.x fallback binding
-        fb = build()
-    finally:
-        H._c_einsum = orig
+    monkeypatch.setattr(H, "_c_einsum", np.einsum)  # the numpy 2.x binding
+    fb = build()
     assert fb.ids == base.ids and fb.levels == base.levels
     assert fb.links == base.links and fb.entry == base.entry

