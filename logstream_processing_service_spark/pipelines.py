@@ -25,9 +25,10 @@ import os
 import shutil
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
+from pyspark.sql.types import ArrayType, FloatType, StructType
 
 from .ml.clustering import fit_kmeans_centroids
 from .ml.embedding import hash_featurizer
@@ -38,6 +39,7 @@ from .sources import load_table
 INTERESTING_TYPES = ("error", "signup")  # reference: level IN ('error','warning')
 CENTROID_THRESHOLD = 0.35  # src/ml/vector_engine.py:8
 EMBED_DIM = 64  # test stand-in for the 384-dim MiniLM space
+INCIDENTS_DDL = "cluster_id bigint, status string, created_at timestamp"
 
 
 def compose_text(df: DataFrame) -> DataFrame:
@@ -131,17 +133,43 @@ def read_staged_csv(spark: SparkSession, path: str) -> DataFrame:
     ).drop("embedding_json")
 
 
+def _path_not_found(e: AnalysisException) -> bool:
+    return e.getCondition() == "PATH_NOT_FOUND"
+
+
 def upsert_parquet(
     spark: SparkSession, new: DataFrame, target: str, key: str = "event_id"
 ) -> None:
-    """S6: ON CONFLICT DO NOTHING as anti-join append (idempotent sink)."""
+    """S6: ON CONFLICT DO NOTHING as anti-join append (idempotent sink).
+
+    The target is read with the key's known type, so no schema-inference
+    job runs; only the key is read because the rows the training and the
+    scoring path append carry different column sets. A missing target is
+    the first write; any other read failure (an unreadable target) raises
+    instead of appending without the anti-join.
+    """
     deduped = new.dropDuplicates([key])
     try:
-        existing = spark.read.parquet(target).select(key)
+        existing = spark.read.schema(StructType([new.schema[key]])).parquet(target)
+    except AnalysisException as e:
+        if not _path_not_found(e):
+            raise
+    else:
         deduped = deduped.join(existing, key, "left_anti")
-    except Exception:
-        pass  # first write: no target yet
     deduped.write.mode("append").parquet(target)
+
+
+def write_commit_marker(work_dir: str, record: dict) -> None:
+    """S9: replace ``batch_status.json`` atomically. The record goes to a
+    temp file in the same directory first, so a crash mid-write leaves the
+    previous marker intact."""
+    path = os.path.join(work_dir, "batch_status.json")
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(record, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
 
 
 # ---------------------------------------------------------------------------
@@ -253,6 +281,15 @@ def run_incremental_batch(
     (run_incremental_batch.py:28-112). The per-row loop (:76-93) is one
     declarative plan; the per-row write txn (:66-81 in log_ops) is one
     idempotent upsert.
+
+    The scored slice is materialized once per batch: it is persisted and
+    its count (the only action that runs the scan → embed → assign plan)
+    serves both the empty-slice exit and the result. The embeddings
+    upsert, the pattern refresh, the volume append and the commit marker
+    all read the cached rows. The caches this function takes are released
+    in ``finally``, so none outlives the batch. The tables the service
+    writes itself (the sink keys, the volume history, the incidents) are
+    read with their known schema, so no schema-inference job runs.
     """
     store = ModelStore(os.path.join(work_dir, "models"))
     centroids = store.load_centroids(spark)  # state load, §3.1 step 2
@@ -262,8 +299,6 @@ def run_incremental_batch(
     batch = R.scan_slice(
         events, lo=start_id, hi=end_id, levels=INTERESTING_TYPES, limit=None
     )
-    if batch.isEmpty():  # empty-batch early exit (:69-71)
-        return {"scored": 0, "incidents": 0}
 
     # embed + nearest-centroid with the 0.35 mint threshold (M3); batch
     # semantics: beyond-threshold rows stay unassigned (-1) — matching the
@@ -274,65 +309,77 @@ def run_incremental_batch(
         centroids,
         threshold=CENTROID_THRESHOLD,
     )
+    # cache: NOT caller-owned — batch-scoped, released in the `finally` below
     scored = emb.join(
         assigned.select(
             F.col("vec_id").alias("event_id"),
             F.col("assigned_label").alias("cluster_id"),
         ),
         "event_id",
-    )
-
-    # T2/S6 idempotent sink (vs per-row txn log_ops.py:66-81)
-    upsert_parquet(spark, scored, os.path.join(work_dir, "log_embeddings"))
-
-    # pattern refresh above the watermark (S8 + P6, pattern_ops.py:12-46)
-    clustered = scored.select(
-        "event_id", F.col("cluster_id").alias("user_id"), "event_type",
-        F.col("text").alias("props"), "ts",
-    ).filter(F.col("user_id") >= 0)
-    patterns = R.mine_patterns(clustered)
-    upsert_parquet(
-        spark, patterns, os.path.join(work_dir, "log_patterns_incr"), key="cluster_id"
-    )
-
-    # anomaly pass (incident_ops.py:44-105): A1 count → history append →
-    # W1-W5 features → M10 flag → J2 incident upsert split
-    volume = R.batch_volume(clustered.select("user_id", "event_id"))
-    hist_path = os.path.join(work_dir, "volume_history")
-    volume.write.mode("append").parquet(hist_path)
-    history = spark.read.parquet(hist_path)
-    flagged = R.flag_anomalies(R.volume_zscore(history))
-
-    inc_path = os.path.join(work_dir, "incidents")
+    ).persist()
+    new_incidents = None
     try:
-        incidents = spark.read.parquet(inc_path)
-    except Exception:
-        incidents = spark.createDataFrame(
-            [], "cluster_id bigint, status string, created_at timestamp"
-        )
-    actions = R.open_incident_upsert(
-        flagged.select("cluster_id"), incidents
-    )
-    new_incidents = (
-        actions.filter(F.col("action") == "insert")
-        .select(
-            "cluster_id",
-            F.lit("NEW").alias("status"),
-            F.current_timestamp().alias("created_at"),
-        )
-    )
-    # Count BEFORE appending: the plan's `incidents` input reads inc_path,
-    # so re-executing it after the write would anti-join the just-inserted
-    # rows away (and re-evaluate current_timestamp). localCheckpoint
-    # materializes the rows once; the write and the count both reuse them.
-    new_incidents = new_incidents.localCheckpoint()
-    n_new = new_incidents.count()
-    new_incidents.write.mode("append").parquet(inc_path)
+        n_scored = scored.count()
+        if n_scored == 0:  # empty-batch early exit (:69-71)
+            return {"scored": 0, "incidents": 0}
 
-    # S9 commit marker (vs UPDATE batch_order, run_incremental_batch.py:103-110)
-    n_scored = scored.count()
-    with open(os.path.join(work_dir, "batch_status.json"), "w") as fh:
-        json.dump(
+        # T2/S6 idempotent sink (vs per-row txn log_ops.py:66-81). The cached
+        # rows keep the assign window's shuffle partitions (AQE does not
+        # coalesce a cached plan's output), so without the rebalance every
+        # batch would append one small file per shuffle partition.
+        upsert_parquet(
+            spark, scored.hint("rebalance", "event_id"),
+            os.path.join(work_dir, "log_embeddings"),
+        )
+
+        # pattern refresh above the watermark (S8 + P6, pattern_ops.py:12-46)
+        clustered = scored.select(
+            "event_id", F.col("cluster_id").alias("user_id"), "event_type",
+            F.col("text").alias("props"), "ts",
+        ).filter(F.col("user_id") >= 0)
+        patterns = R.mine_patterns(clustered)
+        upsert_parquet(
+            spark, patterns, os.path.join(work_dir, "log_patterns_incr"), key="cluster_id"
+        )
+
+        # anomaly pass (incident_ops.py:44-105): A1 count → history append →
+        # W1-W5 features → M10 flag → J2 incident upsert split
+        volume = R.batch_volume(clustered.select("user_id", "event_id"))
+        hist_path = os.path.join(work_dir, "volume_history")
+        volume.write.mode("append").parquet(hist_path)
+        history = spark.read.schema(volume.schema).parquet(hist_path)
+        flagged = R.flag_anomalies(R.volume_zscore(history))
+
+        inc_path = os.path.join(work_dir, "incidents")
+        try:
+            incidents = spark.read.schema(INCIDENTS_DDL).parquet(inc_path)
+        except AnalysisException as e:
+            if not _path_not_found(e):
+                raise
+            incidents = spark.createDataFrame([], INCIDENTS_DDL)
+        actions = R.open_incident_upsert(
+            flagged.select("cluster_id"), incidents
+        )
+        # Count BEFORE appending: the plan's `incidents` input reads inc_path,
+        # so re-executing it after the write would anti-join the just-inserted
+        # rows away (and re-evaluate current_timestamp). The count fills the
+        # cache once; the write reuses the cached rows. cache: NOT
+        # caller-owned — batch-scoped, released in the `finally` below.
+        new_incidents = (
+            actions.filter(F.col("action") == "insert")
+            .select(
+                "cluster_id",
+                F.lit("NEW").alias("status"),
+                F.current_timestamp().alias("created_at"),
+            )
+            .persist()
+        )
+        n_new = new_incidents.count()
+        new_incidents.write.mode("append").parquet(inc_path)
+
+        # S9 commit marker (vs UPDATE batch_order, run_incremental_batch.py:103-110)
+        write_commit_marker(
+            work_dir,
             {
                 "start_id": start_id,
                 "end_id": end_id,
@@ -340,9 +387,12 @@ def run_incremental_batch(
                 "scored": n_scored,
                 "ts": time.time(),
             },
-            fh,
         )
-    return {"scored": n_scored, "incidents": n_new}
+        return {"scored": n_scored, "incidents": n_new}
+    finally:
+        if new_incidents is not None:
+            new_incidents.unpersist()
+        scored.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -1,0 +1,116 @@
+"""Scoring-batch fan-out: one materialization of the scored slice feeds
+every sink, its caches are released, and the service-owned sink targets
+fail loudly when unreadable (default tier; the end-to-end pipeline suite
+in test_pipelines.py is ``slow``)."""
+
+from __future__ import annotations
+
+import json
+import os
+
+import pandas as pd
+import pytest
+
+from logstream_processing_service_spark import pipelines as P
+
+from .conftest import SF_DIR
+
+EMPTY_LO = 10**12  # above every event_id
+
+
+@pytest.fixture(scope="module")
+def work_dir(spark, tmp_path_factory):
+    work = str(tmp_path_factory.mktemp("fanout_run"))
+    P.run_training_batch(spark, SF_DIR, work, limit=200, k=4)
+    return work
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _files(root: str) -> dict[str, float]:
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(root) for f in fs
+    }
+
+
+def _emb_rows(spark, work_dir: str) -> int:
+    return spark.read.parquet(os.path.join(work_dir, "log_embeddings")).count()
+
+
+def test_scoring_embeds_the_slice_once(spark, work_dir, monkeypatch):
+    rows = spark.sparkContext.accumulator(0)
+    orig = P.hash_featurizer
+
+    def counted(*args, **kwargs):
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import ArrayType, FloatType
+
+        func = orig(*args, **kwargs).func
+
+        def embed(texts: pd.Series) -> pd.Series:
+            rows.add(len(texts))
+            return func(texts)
+
+        return F.pandas_udf(embed, ArrayType(FloatType()))
+
+    monkeypatch.setattr(P, "hash_featurizer", counted)
+    before_ids = _persisted_ids(spark)
+    out = P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=0, end_id=999)
+    assert out["scored"] > 0
+    # one materialization: the assign join reads the embedding twice at most
+    assert rows.value <= 2 * out["scored"]
+    assert _persisted_ids(spark) - before_ids == set()
+
+    # re-running the slice adds nothing to the idempotent sink
+    n = _emb_rows(spark, work_dir)
+    P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=0, end_id=999)
+    assert _emb_rows(spark, work_dir) == n
+
+
+def test_empty_slice_writes_nothing_and_releases_cache(spark, work_dir):
+    files = _files(work_dir)
+    before_ids = _persisted_ids(spark)
+    out = P.run_incremental_batch(spark, SF_DIR, work_dir, EMPTY_LO, EMPTY_LO + 10)
+    assert out == {"scored": 0, "incidents": 0}
+    assert _files(work_dir) == files
+    assert _persisted_ids(spark) - before_ids == set()
+
+
+def test_commit_marker_survives_crash_mid_write(spark, work_dir, monkeypatch):
+    marker = os.path.join(work_dir, "batch_status.json")
+    P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=0, end_id=499)
+    with open(marker) as fh:
+        assert json.load(fh)["end_id"] == 499
+
+    def torn_dump(obj, fh, **kwargs):
+        fh.write(json.dumps(obj)[:12])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=500, end_id=999)
+    monkeypatch.undo()
+    with open(marker) as fh:
+        status = json.load(fh)
+    assert (status["status"], status["end_id"]) == ("COMPLETED", 499)
+
+
+def test_upsert_raises_on_unreadable_target(spark, tmp_path):
+    target = tmp_path / "sink"
+    target.mkdir()
+    (target / "part-0.parquet").write_bytes(b"not a parquet file")
+    new = spark.range(3).withColumnRenamed("id", "event_id")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        P.upsert_parquet(spark, new, str(target))
+    assert sorted(os.listdir(target)) == ["part-0.parquet"]
+
+
+def test_upsert_first_write_creates_target(spark, tmp_path):
+    target = str(tmp_path / "sink")
+    new = spark.range(3).withColumnRenamed("id", "event_id")
+    P.upsert_parquet(spark, new, target)
+    P.upsert_parquet(spark, new, target)
+    assert spark.read.parquet(target).count() == 3
