@@ -2196,8 +2196,9 @@ def char_window_dup_profile(
     the doc-grain rollup). Keys are the raw 40-char windows by default;
     ``hash_keys=True`` swaps the shuffle key for xxhash64(window) —
     8-byte longs instead of 40-char strings through the one analytic
-    exchange, in-row transform unchanged. A/B-MEASURED r12
-    (tools/charwin_ab.py, min of 2 warm reps): hashed/raw = 0.889 at
+    exchange, in-row transform unchanged. A/B-MEASURED r12 (one-off
+    A/B, min of 2 warm reps; the query's bench rows are in the
+    PERF_r13.json / PERF_r14.json ledgers): hashed/raw = 0.889 at
     5k docs (3.30→2.93 s), 0.851 at 50k (6.67→5.68 s), 0.788 at 500k
     (31.5→24.8 s) — the win GROWS with scale because the exchange is
     byte-volume-bound. The registered form keeps RAW keys anyway: the
@@ -2751,8 +2752,9 @@ def lcp_neighbor_profile(
     corpus skewed onto one leading token (e.g. everything starts
     "the ") serializes onto one task.
 
-    ``mode="range"`` (the r13 skew escalation, measured in
-    tools/lcp_skew.py): ``repartitionByRange`` on the FULL truncated
+    ``mode="range"`` (the r13 skew escalation, measured by a one-off
+    skew A/B; bench rows in the PERF_r13.json / PERF_r14.json ledgers):
+    ``repartitionByRange`` on the FULL truncated
     key — the range partitioner's sampled boundaries split a shared
     prefix across as many partitions as needed, so parallelism is
     unbounded and skew-immune, and the result is STILL EXACT (no

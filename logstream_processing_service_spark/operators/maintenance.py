@@ -12,26 +12,26 @@ packing, or ``repartitionByRange(sort_col)`` + in-partition sort to
 (re)establish clustering while compacting (the OPTIMIZE ... ZORDER
 analogue; pair with operators/layout.py write_zordered for 2-D keys).
 
-Swap semantics (honest contract): the swap is TWO renames — the table
-path is absent for the instant between rename(path, backup) and
-rename(tmp, path), and a crash in that window strands the data under
-``<path>._old``. Readers therefore must not race a compaction, and the
-caller owns single-writer scheduling (exactly Delta OPTIMIZE's contract,
-which takes a table lock). A crash is recoverable: the next
-``compact_parquet`` / ``recover_compaction`` call detects a leftover
-``._old`` with the table path missing and restores it before
-proceeding. For concurrent readers use the txlog (operators/txlog.py):
-commit the compacted files as a new snapshot and let pinned manifests
-provide the atomicity a filesystem rename cannot.
+Swap semantics: the rewrite is swapped in with ``sources.tables.swap_in``,
+the one rename-swap every parquet sink uses. Its contract lives there: the
+table path is absent for the instant between two renames, readers must not
+race a compaction, and the caller owns single-writer scheduling (exactly
+Delta OPTIMIZE's contract, which takes a table lock). A crash in that
+window strands the data under ``<path>._old``; ``compact_parquet`` calls
+``recover_swap`` before it reads, which restores it. For concurrent readers
+use the txlog (operators/txlog.py): commit the compacted files as a new
+snapshot and let pinned manifests provide the atomicity a filesystem
+rename cannot.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+from ..sources.tables import recover_swap, swap_in
 
 
 def _parquet_files(path: str) -> list[tuple[str, int]]:
@@ -62,7 +62,7 @@ def compact_parquet(
     rewrite."""
     if sort_col is not None and cluster_cols is not None:
         raise ValueError("pass sort_col OR cluster_cols, not both")
-    recover_compaction(path)
+    recover_swap(path)
     before = _parquet_files(path)
     if not before:
         raise ValueError(f"no parquet files under {path}")
@@ -90,13 +90,7 @@ def compact_parquet(
         )
     else:
         out = df.repartition(n_files)
-    tmp, backup = path.rstrip("/") + "._compact", path.rstrip("/") + "._old"
-    out.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    os.rename(path, backup)
-    os.rename(tmp, path)  # crash between these renames: see recover_compaction
-    shutil.rmtree(backup)
+    swap_in(out, path)
     after = _parquet_files(path)
     return {
         "files_before": len(before),
@@ -105,24 +99,6 @@ def compact_parquet(
         "bytes_after": sum(sz for _, sz in after),
         "target_bytes": target_bytes,
     }
-
-
-def recover_compaction(path: str) -> bool:
-    """Detect and repair a compaction that crashed mid-swap: if the table
-    path is missing but ``<path>._old`` exists, the crash happened in the
-    two-rename window — restore the backup (and drop a half-written
-    ``._compact`` staging dir, which is unreferenced either way). Returns
-    True if a recovery was performed. Called automatically at the start
-    of every ``compact_parquet``."""
-    backup = path.rstrip("/") + "._old"
-    tmp = path.rstrip("/") + "._compact"
-    recovered = False
-    if not os.path.exists(path) and os.path.isdir(backup):
-        os.rename(backup, path)
-        recovered = True
-    if os.path.isdir(tmp) and os.path.exists(path):
-        shutil.rmtree(tmp)
-    return recovered
 
 
 def build_file_stats_index(

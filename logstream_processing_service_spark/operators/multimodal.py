@@ -836,8 +836,9 @@ def dhash_near_dup_report(
     cap²; the verify is an O(4) band xor per candidate, never pixel
     work.
     ``hashed``: pass a pre-materialized (doc_id, dhash) frame to skip
-    the decode stage — the tools/dhash_split.py cost-attribution knob
-    (decode-vs-candidate split at the scaling decades) and the natural
+    the decode stage — the cost-attribution knob (decode-vs-candidate
+    split at the scaling decades; bench rows in the PERF_r13.json /
+    PERF_r14.json ledgers) and the natural
     seam for an incremental pipeline that persists the dHash registry.
     """
     if hashed is None:

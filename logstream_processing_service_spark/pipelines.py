@@ -25,21 +25,20 @@ import os
 import shutil
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType, StructType
+from pyspark.sql.types import ArrayType, FloatType
 
 from .ml.clustering import fit_kmeans_centroids
 from .ml.embedding import hash_featurizer
 from .operators import relational as R
 from .operators.similarity import assign_nearest_centroid
 from .sources import load_table
+from .sources.tables import read_parquet_or_empty, upsert_parquet
 
 INTERESTING_TYPES = ("error", "signup")  # reference: level IN ('error','warning')
 CENTROID_THRESHOLD = 0.35  # src/ml/vector_engine.py:8
 EMBED_DIM = 64  # test stand-in for the 384-dim MiniLM space
-INCIDENTS_DDL = "cluster_id bigint, status string, created_at timestamp"
 
 
 def compose_text(df: DataFrame) -> DataFrame:
@@ -131,32 +130,6 @@ def read_staged_csv(spark: SparkSession, path: str) -> DataFrame:
     return df.withColumn(
         "embedding", F.from_json("embedding_json", ArrayType(FloatType()))
     ).drop("embedding_json")
-
-
-def _path_not_found(e: AnalysisException) -> bool:
-    return e.getCondition() == "PATH_NOT_FOUND"
-
-
-def upsert_parquet(
-    spark: SparkSession, new: DataFrame, target: str, key: str = "event_id"
-) -> None:
-    """S6: ON CONFLICT DO NOTHING as anti-join append (idempotent sink).
-
-    The target is read with the key's known type, so no schema-inference
-    job runs; only the key is read because the rows the training and the
-    scoring path append carry different column sets. A missing target is
-    the first write; any other read failure (an unreadable target) raises
-    instead of appending without the anti-join.
-    """
-    deduped = new.dropDuplicates([key])
-    try:
-        existing = spark.read.schema(StructType([new.schema[key]])).parquet(target)
-    except AnalysisException as e:
-        if not _path_not_found(e):
-            raise
-    else:
-        deduped = deduped.join(existing, key, "left_anti")
-    deduped.write.mode("append").parquet(target)
 
 
 def write_commit_marker(work_dir: str, record: dict) -> None:
@@ -351,12 +324,7 @@ def run_incremental_batch(
         flagged = R.flag_anomalies(R.volume_zscore(history))
 
         inc_path = os.path.join(work_dir, "incidents")
-        try:
-            incidents = spark.read.schema(INCIDENTS_DDL).parquet(inc_path)
-        except AnalysisException as e:
-            if not _path_not_found(e):
-                raise
-            incidents = spark.createDataFrame([], INCIDENTS_DDL)
+        incidents = read_parquet_or_empty(spark, inc_path, R.INCIDENTS_DDL)
         actions = R.open_incident_upsert(
             flagged.select("cluster_id"), incidents
         )

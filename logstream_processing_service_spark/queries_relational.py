@@ -650,12 +650,12 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "S6", "merge", "T7",
 )
 def q_merge_events_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the MERGE sink family (sources/tables.py merge_full,
-    streaming/pipeline.py merge_sink, streaming/dedup.py registry): WHEN
-    MATCHED UPDATE + WHEN NOT MATCHED INSERT over overlapping event
-    slices — the full-outer one-pass clause evaluation is what every
-    incremental registry/upsert in this repo persists with, here exposed
-    oracle-paired so the driver checks MERGE semantics directly.
+    """Batch twin of the MERGE sinks (sources/tables.py merge_full, which
+    merge_parquet and streaming/pipeline.py merge_sink persist through the
+    one sources/tables.py swap_in): WHEN MATCHED UPDATE + WHEN NOT MATCHED
+    INSERT over overlapping event slices — the full-outer one-pass clause
+    evaluation both sinks write, here exposed oracle-paired so the DuckDB
+    oracle checks MERGE semantics directly.
 
     Reference parity: the dual embedding-upsert/cluster-update write,
     src/db/log_ops.py:66-81."""

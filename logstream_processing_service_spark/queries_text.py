@@ -2375,7 +2375,8 @@ def q_lcp_neighbor_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic neighbors — the suffix-array escalation of the affix
     rung ladder. mode="range" since r13: the r12 first-char partition
     key caps parallelism at ≤256 and serializes on skewed corpora —
-    measured in tools/lcp_skew.py at the third decade (500k docs:
+    measured by a one-off r13 skew A/B (bench rows in the PERF_r13.json
+    / PERF_r14.json ledgers) at the third decade (500k docs:
     first_char 11.5 s plain / 29.5 s under an 80%-shared-prefix skew;
     range 5.7 / 4.7 s — 2x faster unskewed, skew-IMMUNE, still exact
     via the boundary-pass fix)."""

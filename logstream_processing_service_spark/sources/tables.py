@@ -9,9 +9,13 @@ what downstream operators need, which is what makes the same code viable at
 
 from __future__ import annotations
 
+import os
+import shutil
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from ..session import apply_runtime_conf
 
@@ -116,6 +120,99 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
+def recover_swap(path: str) -> bool:
+    """Repair a rename-swap that crashed. If ``path`` is missing but
+    ``<path>._old`` exists, the crash happened between the two renames of
+    ``swap_in``: restore the backup. A leftover ``._old`` next to a present
+    table (crash before the backup was removed) and a leftover ``._staged``
+    (an uncommitted write) are dropped. Returns True if the backup was
+    restored. ``read_parquet_or_empty`` calls it before every read."""
+    path = path.rstrip("/")
+    staged, backup = path + "._staged", path + "._old"
+    recovered = False
+    if not os.path.exists(path) and os.path.isdir(backup):
+        os.rename(backup, path)
+        recovered = True
+    for stale in (staged, backup):
+        if os.path.isdir(stale):
+            shutil.rmtree(stale)
+    return recovered
+
+
+def swap_in(df: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with ``df`` (the ModelStore
+    blue/green move, T8, run_training_batch.py:243-257): write
+    ``<path>._staged``, rename the table to ``<path>._old``, rename the
+    staged dir into place, drop the backup. ``df`` may read ``path``
+    lazily: nothing is renamed until its write has succeeded.
+
+    Call it after ``recover_swap`` (or a ``read_*`` verb here) on the same
+    path: a stale ``._old`` makes the first rename fail, and ``df`` is bound
+    to the table before any repair, so it does not repair by itself.
+
+    The swap is two renames, so the table is absent for the instant
+    between them, and a crash there leaves the data under ``._old`` —
+    ``recover_swap`` restores it. Readers must not race a swap; the caller
+    owns single-writer scheduling. On Delta/Iceberg this is one commit."""
+    path = path.rstrip("/")
+    staged, backup = path + "._staged", path + "._old"
+    df.write.mode("overwrite").parquet(staged)
+    moved = os.path.exists(path)
+    if moved:
+        os.rename(path, backup)
+    os.rename(staged, path)  # crash between the renames: see recover_swap
+    if moved:
+        shutil.rmtree(backup)
+
+
+def read_parquet_or_empty(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame:
+    """Read a table this service writes itself, with its known schema (no
+    inference job). A missing table is the first write and reads as an
+    empty frame; any other failure (an unreadable file) raises, so a sink
+    never mistakes a broken target for an empty one. A crashed swap is
+    repaired first (``recover_swap``)."""
+    return _read_or_empty(spark, spark.read.schema(schema), path, schema)
+
+
+def read_merge_target(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame:
+    """``read_parquet_or_empty`` for a MERGE target: the table is read with
+    the schema its own files carry, and ``schema`` shapes only the empty
+    frame of a first write. A target holding a column the batch lacks then
+    fails ``merge_full``'s column check; a read pinned to the batch schema
+    would drop that column, and the swap would delete it from every row."""
+    return _read_or_empty(spark, spark.read, path, schema)
+
+
+def _read_or_empty(spark, reader, path, schema) -> DataFrame:
+    recover_swap(path)
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], schema)
+
+
+def upsert_parquet(
+    spark: SparkSession, new: DataFrame, target: str, key: str = "event_id"
+) -> None:
+    """S6: ON CONFLICT DO NOTHING as anti-join append (idempotent sink,
+    src/db/log_ops.py:47-55).
+
+    Only the key is read, with its known type: the rows the training and
+    the scoring path append carry different column sets. A missing target
+    is the first write; an unreadable one raises instead of appending
+    without the anti-join.
+    """
+    existing = read_parquet_or_empty(spark, target, StructType([new.schema[key]]))
+    deduped = new.dropDuplicates([key]).join(existing, key, "left_anti")
+    deduped.write.mode("append").parquet(target)
+
+
 def merge_parquet(
     spark: SparkSession,
     target: str,
@@ -125,32 +222,11 @@ def merge_parquet(
     """MERGE INTO for plain parquet: WHEN MATCHED update (source row wins),
     WHEN NOT MATCHED insert — the reference's dual write (embedding upsert +
     cluster_id update in one txn, src/db/log_ops.py:66-81) as one
-    set-oriented sink.
-
-    Atomicity without a table format: the merged result is written to a
-    temp directory and swapped in with two renames (the ModelStore
-    blue/green move, T8). Readers see the old or the new directory, never a
-    partial write. On Delta/Iceberg this whole function is one MERGE INTO.
+    set-oriented sink. The merged result is swapped in whole
+    (``swap_in``); on Delta/Iceberg this whole function is one MERGE INTO.
     """
-    import os
-    import shutil
-
-    tmp = target.rstrip("/") + "._staged"
-    backup = target.rstrip("/") + "._old"
-    try:
-        existing = spark.read.parquet(target)
-    except Exception:
-        updates.dropDuplicates([key]).write.mode("overwrite").parquet(target)
-        return
-    deduped = updates.dropDuplicates([key])
-    merged = existing.join(deduped, key, "left_anti").unionByName(deduped)
-    merged.write.mode("overwrite").parquet(tmp)
-    # swap: target -> backup, tmp -> target, drop backup
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    os.rename(target, backup)
-    os.rename(tmp, target)
-    shutil.rmtree(backup)
+    existing = read_merge_target(spark, target, updates.schema)
+    swap_in(merge_full(existing, updates, key), target)
 
 
 def merge_full(
@@ -165,8 +241,7 @@ def merge_full(
     """Delta-style MERGE as a pure DataFrame transform: full set of clauses —
     WHEN MATCHED [AND cond] UPDATE or DELETE, WHEN NOT MATCHED INSERT,
     WHEN NOT MATCHED BY SOURCE DELETE. Returns the merged frame; pair with
-    ``merge_parquet``'s rename-swap (or a table format's MERGE INTO) to
-    persist.
+    ``swap_in`` (or a table format's MERGE INTO) to persist.
 
     ``matched_condition`` is an optional callable receiving the joined
     frame (target columns as ``t.*``, source as ``s.*``) and returning a

@@ -8,8 +8,10 @@ anything already accepted". Structured Streaming cannot chain the two
 stateful groupings this needs (per-bucket first-wins, then per-doc
 any-bucket-hit), so the operator lives in ``foreachBatch`` with the
 registry as an explicit parquet table — the same batch-incremental shape
-as ``upsert_sink``/``merge_sink``, and the shape that ports directly to a
-Delta/Iceberg MERGE at scale.
+as ``upsert_sink``/``merge_sink``, read and swapped with the same verbs
+(``sources.tables.read_parquet_or_empty`` / ``swap_in``, so a crashed
+swap is recovered on the next batch), and the shape that ports directly
+to a Delta/Iceberg MERGE at scale.
 
 Semantics: candidate = LSH band-key collision (``MINHASH_BANDS`` bands of
 ``MINHASH_PERMS``/bands rows — the same blocking as
@@ -29,7 +31,7 @@ Scale shape: per micro-batch — one doc_id-keyed aggregate for signatures,
 one (band, bkey) shuffle against the registry (broadcast-able while the
 registry is small; hash join once it isn't), one (band, bkey) in-batch
 first-wins aggregate. Registry updates are append-only rows merged by
-rename swap; at 100 TB the registry is a bucketed table and the collision
+``swap_in``; at 100 TB the registry is a bucketed table and the collision
 probe is a bucket-local join.
 
 Replay idempotence (at-least-once foreachBatch): registry rows carry the
@@ -42,29 +44,13 @@ same registry rows (first-writer-wins on (band, bkey)).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_band_keys
+from ..sources.tables import read_parquet_or_empty, recover_swap, swap_in
 
 REGISTRY_SCHEMA = "band int, bkey string, first_doc_id long, batch_id long"
-
-
-def _atomic_overwrite(df: DataFrame, target: str) -> None:
-    """Write df to a staging dir and rename-swap it over target (readers
-    see old or new, never partial)."""
-    tmp, backup = target + "._staged", target + "._old"
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    if os.path.exists(target):
-        os.rename(target, backup)
-    os.rename(tmp, target)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
 
 
 def minhash_dedup_sink(
@@ -99,10 +85,7 @@ def minhash_dedup_sink(
         bk = minhash_band_keys(batch_df, n, bands, max_doc_freq).persist()
         dropped = None
         try:
-            try:
-                reg = spark.read.parquet(reg_path)
-            except Exception:
-                reg = spark.createDataFrame([], REGISTRY_SCHEMA)
+            reg = read_parquet_or_empty(spark, reg_path, REGISTRY_SCHEMA)
             # replay guard: see exactly the registry this batch saw first time
             reg_eff = reg.filter(F.col("batch_id") < batch_id)
             prior = (
@@ -167,7 +150,7 @@ def minhash_dedup_sink(
 
                 with ThreadPoolExecutor(max_workers=2) as pool:
                     fk = pool.submit(_write_kept)
-                    fr = pool.submit(_atomic_overwrite, merged, reg_path)
+                    fr = pool.submit(swap_in, merged, reg_path)
                     fk.result()
                     fr.result()
             finally:
@@ -193,15 +176,17 @@ def compact_registry(
     sliding-window semantics, not a bug; run the batch ``minhash_lsh_pairs``
     audit over the accepted set when full-history dedup is required.
 
-    Uses the same rename-swap as the sink, so a crashed compaction never
-    leaves a partial registry. Returns {"before": n, "after": n} row
-    counts (the registry is KBs-per-thousand-docs small; two counts of it
-    are maintenance noise, not a corpus scan).
+    Recovers a crashed swap first, then uses the sink's ``swap_in``, so a
+    crashed compaction never leaves a partial registry. Returns
+    {"before": n, "after": n} row counts (the registry is
+    KBs-per-thousand-docs small; two counts of it are maintenance noise,
+    not a corpus scan).
     """
     reg_path = f"{out_dir}/registry/data"
+    recover_swap(reg_path)
     reg = spark.read.parquet(reg_path)
     before = reg.count()
     kept = reg.filter(F.col("batch_id") > current_batch_id - max_age)
     after = kept.count()
-    _atomic_overwrite(kept, reg_path)
+    swap_in(kept, reg_path)
     return {"before": before, "after": after}

@@ -9,8 +9,9 @@ and exactly-once faked by idempotent upserts (src/db/log_ops.py:47-81).
 Spark-native mapping:
 - offset ranges        → file-source offsets / Trigger.AvailableNow catch-up
 - hand watermarks      → ``withWatermark`` + append mode
-- per-row upsert txn   → idempotent ``foreachBatch`` anti-join append,
-                         keyed by batchId (T2)
+- per-row upsert txn   → idempotent ``foreachBatch`` anti-join append or
+                         MERGE, over the batch service's parquet sink
+                         verbs (``sources.tables``, T2)
 - batch_order status   → the checkpoint's commit log (S9)
 
 Every transformation is the SAME function used in batch (operators/*) —
@@ -32,6 +33,14 @@ from pyspark.sql.types import (
 )
 
 from ..session import apply_runtime_conf
+from ..sources.tables import (
+    merge_full,
+    read_merge_target,
+    read_parquet_or_empty,
+    swap_in,
+    upsert_parquet,
+)
+
 
 def _events_schema(spark: SparkSession, src: str) -> StructType:
     """The stream source needs an explicit schema; derive the ts column's
@@ -110,21 +119,14 @@ def windowed_volume(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 
 
 def upsert_sink(out_dir: str, key: str = "event_id"):
-    """Idempotent foreachBatch sink: anti-join against what's already in the
-    target, then append (T2/S6: ON CONFLICT DO NOTHING, set-oriented).
-    Re-delivered batches become no-ops, giving effective exactly-once on
-    top of at-least-once delivery."""
+    """Idempotent foreachBatch sink over ``{out_dir}/data``: the batch
+    service's anti-join append (``sources.tables.upsert_parquet``, T2/S6:
+    ON CONFLICT DO NOTHING, set-oriented). Re-delivered batches become
+    no-ops, giving effective exactly-once on top of at-least-once
+    delivery; an unreadable target raises instead of appending."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        target = f"{out_dir}/data"
-        new = batch_df.dropDuplicates([key])
-        try:
-            existing = spark.read.parquet(target).select(key)
-            new = new.join(existing, key, "left_anti")
-        except Exception:
-            pass  # first batch: nothing to dedup against
-        new.write.mode("append").parquet(target)
+        upsert_parquet(batch_df.sparkSession, batch_df, f"{out_dir}/data", key)
 
     return write
 
@@ -213,6 +215,7 @@ def run_anomaly_pipeline(
     `open_incident_upsert`), unchanged, wired into foreachBatch.
     """
     from ..operators.relational import (
+        INCIDENTS_DDL,
         batch_volume,
         flag_anomalies,
         open_incident_upsert,
@@ -232,12 +235,7 @@ def run_anomaly_pipeline(
         vol.write.mode("overwrite").parquet(f"{hist_path}/ingest_batch={batch_id}")
         history = sp.read.parquet(hist_path).drop("ingest_batch")
         flagged = flag_anomalies(volume_zscore(history))
-        try:
-            incidents = sp.read.parquet(inc_path)
-        except Exception:
-            incidents = sp.createDataFrame(
-                [], "cluster_id bigint, status string, created_at timestamp"
-            )
+        incidents = read_parquet_or_empty(sp, inc_path, INCIDENTS_DDL)
         actions = open_incident_upsert(flagged.select("cluster_id"), incidents)
         (
             actions.filter(F.col("action") == "insert")
@@ -344,30 +342,24 @@ def merge_sink(
     when_matched: str = "update",
     matched_condition=None,
 ):
-    """foreachBatch MERGE sink: the update-capable sibling of
-    ``upsert_sink`` (which is insert-only). Each micro-batch runs the full
-    Delta-style clause set (sources/tables.py ``merge_full``) against the
-    target and swaps the result in atomically (rename pair — readers see
-    old or new, never partial).
+    """foreachBatch MERGE sink over ``{out_dir}/data``: the update-capable
+    sibling of ``upsert_sink`` (which is insert-only). Each micro-batch runs
+    the full Delta-style clause set (``sources.tables.merge_full``) against
+    the target and swaps the result in whole (``sources.tables.swap_in``).
+    The target is read with its own schema (``read_merge_target``, which
+    first recovers a swap that crashed), so a target holding a column the
+    batch lacks raises, as does an unreadable one, instead of being
+    replaced.
 
     Replay-idempotent on at-least-once delivery: re-merging the same batch
     updates rows to the values they already hold and inserts nothing new.
     On a table format (Delta/Iceberg) this whole sink is one MERGE INTO
     with snapshot isolation; the rename swap is the plain-parquet stand-in.
     """
-    import shutil
-
-    from ..sources.tables import merge_full
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         target = f"{out_dir}/data"
-        try:
-            # safe to read lazily: the merge writes to tmp and the target
-            # dir is only renamed AFTER that write succeeds
-            existing = spark.read.parquet(target)
-        except Exception:
-            existing = spark.createDataFrame([], batch_df.schema)
+        existing = read_merge_target(batch_df.sparkSession, target, batch_df.schema)
         merged = merge_full(
             existing,
             batch_df,
@@ -375,14 +367,6 @@ def merge_sink(
             when_matched=when_matched,
             matched_condition=matched_condition,
         )
-        tmp, backup = target + "._staged", target + "._old"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        if os.path.exists(target):
-            os.rename(target, backup)
-        os.rename(tmp, target)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        swap_in(merged, target)
 
     return write

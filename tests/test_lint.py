@@ -57,3 +57,41 @@ def test_every_persist_states_cache_contract():
         "persist() without a caller-owned cache-contract note:\n"
         + "\n".join(offenders)
     )
+
+
+def _reads(node: ast.AST) -> bool:
+    return any(
+        (isinstance(n, ast.Attribute) and n.attr in ("read", "read_parquet"))
+        or (isinstance(n, ast.Name) and n.id == "read_parquet")
+        for n in ast.walk(node)
+    )
+
+
+def _catches_everything(handler: ast.ExceptHandler) -> bool:
+    if handler.type is None:
+        return True
+    types = handler.type.elts if isinstance(handler.type, ast.Tuple) else [handler.type]
+    return any(
+        isinstance(t, ast.Name) and t.id in ("Exception", "BaseException") for t in types
+    )
+
+
+def test_no_read_swallows_every_exception():
+    """A table read wrapped in a bare or ``except Exception`` handler turns
+    an unreadable target into "missing": the sink then appends without its
+    anti-join or overwrites the table with one batch. Missing-target reads
+    go through ``sources.tables.read_parquet_or_empty`` (or, for a MERGE
+    target, ``read_merge_target``), which catch only PATH_NOT_FOUND."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Try):
+                continue
+            if any(_reads(stmt) for stmt in node.body) and any(
+                _catches_everything(h) for h in node.handlers
+            ):
+                offenders.append(f"{py.relative_to(PKG.parent)}:{node.lineno}")
+    assert not offenders, (
+        "read wrapped in a catch-all handler:\n" + "\n".join(offenders)
+    )

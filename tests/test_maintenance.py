@@ -135,28 +135,29 @@ import pytest  # noqa: E402
 
 def test_compact_crash_recovery(spark, tmp_path):
     """A crash between the two swap renames leaves the table absent and
-    the data under '._old'; the next compact (or recover_compaction)
+    the data under '._old'; the next compact (or recover_swap)
     restores it instead of failing on the missing path."""
     import os
     import shutil
 
     from logstream_processing_service_spark.operators import maintenance as M
+    from logstream_processing_service_spark.sources.tables import recover_swap
 
     path = str(tmp_path / "tbl")
     spark.range(100).repartition(8).write.parquet(path)
     # simulate the crash window: table renamed away, new files not yet in
     os.rename(path, path + "._old")
-    shutil.os.makedirs(path + "._compact")
+    shutil.os.makedirs(path + "._staged")
     assert not os.path.exists(path)
-    assert M.recover_compaction(path) is True
-    assert not os.path.exists(path + "._compact")
+    assert recover_swap(path) is True
+    assert not os.path.exists(path + "._staged")
     assert spark.read.parquet(path).count() == 100
     # and compact_parquet itself self-heals when called on the wreck
     os.rename(path, path + "._old")
     stats = M.compact_parquet(spark, path, target_bytes=1 << 30)
     assert stats["files_after"] == 1
     assert spark.read.parquet(path).count() == 100
-    assert M.recover_compaction(path) is False  # clean state: no-op
+    assert recover_swap(path) is False  # clean state: no-op
 
 
 def test_bloom_file_index_point_lookup(spark, sf_dir, tmp_path):

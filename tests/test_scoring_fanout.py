@@ -99,13 +99,27 @@ def test_commit_marker_survives_crash_mid_write(spark, work_dir, monkeypatch):
 
 
 def test_upsert_raises_on_unreadable_target(spark, tmp_path):
-    target = tmp_path / "sink"
-    target.mkdir()
-    (target / "part-0.parquet").write_bytes(b"not a parquet file")
+    """A junk file in the target makes every sink raise before it writes:
+    the batch upsert and the streaming upsert and MERGE sinks. None may
+    append without the anti-join or replace the target with the batch."""
+    from logstream_processing_service_spark.streaming.pipeline import (
+        merge_sink,
+        upsert_sink,
+    )
+
     new = spark.range(3).withColumnRenamed("id", "event_id")
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
-        P.upsert_parquet(spark, new, str(target))
-    assert sorted(os.listdir(target)) == ["part-0.parquet"]
+    sinks = {
+        "upsert_parquet": lambda out: P.upsert_parquet(spark, new, f"{out}/data"),
+        "upsert_sink": lambda out: upsert_sink(out)(new, 0),
+        "merge_sink": lambda out: merge_sink(out)(new, 0),
+    }
+    for name, write in sinks.items():
+        target = tmp_path / name / "data"
+        target.mkdir(parents=True)
+        (target / "part-0.parquet").write_bytes(b"not a parquet file")
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            write(str(tmp_path / name))
+        assert sorted(os.listdir(target)) == ["part-0.parquet"], name
 
 
 def test_upsert_first_write_creates_target(spark, tmp_path):
