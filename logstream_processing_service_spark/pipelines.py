@@ -34,7 +34,7 @@ from .ml.embedding import hash_featurizer
 from .operators import relational as R
 from .operators.similarity import assign_nearest_centroid
 from .sources import load_table
-from .sources.tables import read_parquet_or_empty, upsert_parquet
+from .sources.tables import put_tagged, read_parquet_or_empty, upsert_parquet
 
 INTERESTING_TYPES = ("error", "signup")  # reference: level IN ('error','warning')
 CENTROID_THRESHOLD = 0.35  # src/ml/vector_engine.py:8
@@ -159,7 +159,7 @@ def run_training_batch(
     dim: int = EMBED_DIM,
 ) -> dict:
     """Initial training: scan → embed → fit → assign → bulk load → patterns
-    → volume features → promote model (run_training_batch.py:76-257).
+    → volume history → promote model (run_training_batch.py:76-257).
 
     The reference's sequential learn_one loop (:121-150) becomes fit (one
     distributed KMeans) + transform (one broadcast nearest-centroid pass);
@@ -213,11 +213,9 @@ def run_training_batch(
     patterns = R.mine_patterns(clustered)
     patterns.write.mode("overwrite").parquet(os.path.join(work_dir, "log_patterns"))
 
-    # A4/F5 volume history + M8 rolling features (run_training_batch.py:213-241)
+    # A4/F5 volume history (run_training_batch.py:213-241)
     volume = R.batch_volume(clustered.select("user_id", "event_id"))
     volume.write.mode("overwrite").parquet(os.path.join(work_dir, "volume_history"))
-    features = R.volume_zscore(volume)
-    features.write.mode("overwrite").parquet(os.path.join(work_dir, "volume_features"))
 
     # S10 persist to staging + T8 blue/green promote
     store.save_centroids(centroids, stage=True)
@@ -241,6 +239,43 @@ def run_training_batch(
 # ---------------------------------------------------------------------------
 
 
+def anomaly_pass(
+    spark: SparkSession, volume: DataFrame, work_dir: str, batch_tag: str
+) -> int:
+    """The anomaly pass of the scoring batch and the stream
+    (incident_ops.py:44-105): history write → W1-W5 features → M10 flag →
+    J2 incident upsert split → insert append. Returns the incidents opened.
+    ``volume`` replaces the history file tagged ``batch_tag``
+    (``put_tagged``), so a replayed batch leaves the history as it was and
+    finds the clusters it flags already open."""
+    hist_path = os.path.join(work_dir, "volume_history")
+    put_tagged(volume, hist_path, batch_tag)
+    history = spark.read.schema(volume.schema).parquet(hist_path)
+    flagged = R.flag_anomalies(R.volume_zscore(history))
+
+    inc_path = os.path.join(work_dir, "incidents")
+    incidents = read_parquet_or_empty(spark, inc_path, R.INCIDENTS_DDL)
+    actions = R.open_incident_upsert(flagged.select("cluster_id"), incidents)
+    # Count BEFORE appending: the plan reads inc_path, so re-running it
+    # after the write would anti-join the new rows away. cache: NOT
+    # caller-owned — released in the `finally` below.
+    new_incidents = (
+        actions.filter(F.col("action") == "insert")
+        .select(
+            "cluster_id",
+            F.lit("NEW").alias("status"),
+            F.current_timestamp().alias("created_at"),
+        )
+        .persist()
+    )
+    try:
+        n_new = new_incidents.count()
+        new_incidents.write.mode("append").parquet(inc_path)
+    finally:
+        new_incidents.unpersist()
+    return n_new
+
+
 def run_incremental_batch(
     spark: SparkSession,
     sf_dir: str,
@@ -258,11 +293,15 @@ def run_incremental_batch(
     The scored slice is materialized once per batch: it is persisted and
     its count (the only action that runs the scan → embed → assign plan)
     serves both the empty-slice exit and the result. The embeddings
-    upsert, the pattern refresh, the volume append and the commit marker
+    upsert, the pattern refresh, the anomaly pass and the commit marker
     all read the cached rows. The caches this function takes are released
     in ``finally``, so none outlives the batch. The tables the service
     writes itself (the sink keys, the volume history, the incidents) are
     read with their known schema, so no schema-inference job runs.
+
+    A retried slice (the reference reruns any slice not COMPLETED,
+    run_incremental_batch.py:29-41) is idempotent: the sinks skip the keys
+    they hold and ``anomaly_pass`` replaces the slice's history file.
     """
     store = ModelStore(os.path.join(work_dir, "models"))
     centroids = store.load_centroids(spark)  # state load, §3.1 step 2
@@ -290,7 +329,6 @@ def run_incremental_batch(
         ),
         "event_id",
     ).persist()
-    new_incidents = None
     try:
         n_scored = scored.count()
         if n_scored == 0:  # empty-batch early exit (:69-71)
@@ -315,35 +353,9 @@ def run_incremental_batch(
             spark, patterns, os.path.join(work_dir, "log_patterns_incr"), key="cluster_id"
         )
 
-        # anomaly pass (incident_ops.py:44-105): A1 count → history append →
-        # W1-W5 features → M10 flag → J2 incident upsert split
+        # anomaly pass (incident_ops.py:44-105), one history file per slice
         volume = R.batch_volume(clustered.select("user_id", "event_id"))
-        hist_path = os.path.join(work_dir, "volume_history")
-        volume.write.mode("append").parquet(hist_path)
-        history = spark.read.schema(volume.schema).parquet(hist_path)
-        flagged = R.flag_anomalies(R.volume_zscore(history))
-
-        inc_path = os.path.join(work_dir, "incidents")
-        incidents = read_parquet_or_empty(spark, inc_path, R.INCIDENTS_DDL)
-        actions = R.open_incident_upsert(
-            flagged.select("cluster_id"), incidents
-        )
-        # Count BEFORE appending: the plan's `incidents` input reads inc_path,
-        # so re-executing it after the write would anti-join the just-inserted
-        # rows away (and re-evaluate current_timestamp). The count fills the
-        # cache once; the write reuses the cached rows. cache: NOT
-        # caller-owned — batch-scoped, released in the `finally` below.
-        new_incidents = (
-            actions.filter(F.col("action") == "insert")
-            .select(
-                "cluster_id",
-                F.lit("NEW").alias("status"),
-                F.current_timestamp().alias("created_at"),
-            )
-            .persist()
-        )
-        n_new = new_incidents.count()
-        new_incidents.write.mode("append").parquet(inc_path)
+        n_new = anomaly_pass(spark, volume, work_dir, f"{start_id}-{end_id}")
 
         # S9 commit marker (vs UPDATE batch_order, run_incremental_batch.py:103-110)
         write_commit_marker(
@@ -358,8 +370,6 @@ def run_incremental_batch(
         )
         return {"scored": n_scored, "incidents": n_new}
     finally:
-        if new_incidents is not None:
-            new_incidents.unpersist()
         scored.unpersist()
 
 

@@ -165,6 +165,23 @@ def swap_in(df: DataFrame, path: str) -> None:
         shutil.rmtree(backup)
 
 
+def put_tagged(df: DataFrame, path: str, tag: str) -> None:
+    """Write ``df`` as the one flat file ``<path>/<tag>.parquet``, so a
+    replayed batch replaces its rows instead of appending them twice. The
+    single part file (an empty frame writes one with its schema) is staged
+    under ``<path>._staged`` and renamed into place, an atomic replace; a
+    crash before the rename keeps the tag's previous file."""
+    if "/" in tag or tag.startswith((".", "_")):
+        raise ValueError(f"tag must name a visible file in {path}: {tag!r}")
+    path = path.rstrip("/")
+    staged = path + "._staged"
+    df.coalesce(1).write.mode("overwrite").parquet(staged)
+    (part,) = [f for f in os.listdir(staged) if f.startswith("part-")]
+    os.makedirs(path, exist_ok=True)
+    os.rename(os.path.join(staged, part), os.path.join(path, f"{tag}.parquet"))
+    shutil.rmtree(staged)
+
+
 def read_parquet_or_empty(
     spark: SparkSession, path: str, schema: StructType | str
 ) -> DataFrame:

@@ -13,9 +13,10 @@ Spark-native mapping:
                          MERGE, over the batch service's parquet sink
                          verbs (``sources.tables``, T2)
 - batch_order status   → the checkpoint's commit log (S9)
+- history append       → ``pipelines.anomaly_pass`` tagged by batch id
 
-Every transformation is the SAME function used in batch (operators/*) —
-the stream shell only wires sources and sinks.
+Every transformation is the SAME function used in batch (operators/*,
+pipelines.anomaly_pass) — the stream shell only wires sources and sinks.
 """
 
 from __future__ import annotations
@@ -33,13 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..session import apply_runtime_conf
-from ..sources.tables import (
-    merge_full,
-    read_merge_target,
-    read_parquet_or_empty,
-    swap_in,
-    upsert_parquet,
-)
+from ..sources.tables import merge_full, read_merge_target, swap_in, upsert_parquet
 
 
 def _events_schema(spark: SparkSession, src: str) -> StructType:
@@ -207,46 +202,19 @@ def run_anomaly_pipeline(
     out_dir: str,
     levels: tuple[str, ...] = ("error", "signup"),
 ) -> None:
-    """The reference's full incremental anomaly pass (SURVEY §3.1 steps
-    5-6) inside ONE streaming query: each micro-batch appends its volume
-    counts to history, recomputes rolling features over the accumulated
-    history, flags anomalies, and upserts incidents — the same batch
-    operators (`batch_volume`/`volume_zscore`/`flag_anomalies`/
-    `open_incident_upsert`), unchanged, wired into foreachBatch.
-    """
-    from ..operators.relational import (
-        INCIDENTS_DDL,
-        batch_volume,
-        flag_anomalies,
-        open_incident_upsert,
-        volume_zscore,
-    )
-
-    hist_path = os.path.join(out_dir, "volume_history")
-    inc_path = os.path.join(out_dir, "incidents")
+    """The reference's incremental anomaly pass (SURVEY §3.1 steps 5-6)
+    inside ONE streaming query: each micro-batch runs the scoring batch's
+    ``pipelines.anomaly_pass`` tagged with its ``batch_id``, so the history
+    is one flat ``<batch_id>.parquet`` per micro-batch, and a replayed
+    batch (foreachBatch is at-least-once) replaces its own file and opens
+    no incident twice."""
+    # pipelines imports pyspark.ml, which the other stream shells skip
+    from ..operators import relational as R
+    from ..pipelines import anomaly_pass
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        vol = batch_volume(batch_df.select("user_id", "event_id"))
-        # foreachBatch is at-least-once: a replayed batch must not
-        # double-count history, so each micro-batch owns one overwritten
-        # partition ("ingest_batch" — batch_volume already emits a
-        # "batch_id" column of its own).
-        vol.write.mode("overwrite").parquet(f"{hist_path}/ingest_batch={batch_id}")
-        history = sp.read.parquet(hist_path).drop("ingest_batch")
-        flagged = flag_anomalies(volume_zscore(history))
-        incidents = read_parquet_or_empty(sp, inc_path, INCIDENTS_DDL)
-        actions = open_incident_upsert(flagged.select("cluster_id"), incidents)
-        (
-            actions.filter(F.col("action") == "insert")
-            .select(
-                "cluster_id",
-                F.lit("NEW").alias("status"),
-                F.current_timestamp().alias("created_at"),
-            )
-            .write.mode("append")
-            .parquet(inc_path)
-        )
+        vol = R.batch_volume(batch_df.select("user_id", "event_id"))
+        anomaly_pass(batch_df.sparkSession, vol, out_dir, str(batch_id))
 
     events = read_events_stream(spark, sf_dir).filter(
         F.col("event_type").isin(*levels)

@@ -95,3 +95,52 @@ def test_no_read_swallows_every_exception():
     assert not offenders, (
         "read wrapped in a catch-all handler:\n" + "\n".join(offenders)
     )
+
+
+# (module, enclosing def) pairs allowed to move files; ``None`` = anywhere
+_MOVERS = {
+    ("sources/tables.py", None),
+    ("pipelines.py", "ModelStore.promote"),
+    ("pipelines.py", "write_commit_marker"),
+}
+
+
+def _file_moves(tree: ast.AST):
+    """Yield (lineno, enclosing qualname) for every ``os.rename`` /
+    ``os.replace`` reference, and for any import of either from ``os``."""
+
+    def walk(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                yield from walk(child, f"{scope}.{child.name}" if scope else child.name)
+                continue
+            if (
+                isinstance(child, ast.Attribute)
+                and child.attr in ("rename", "replace")
+                and isinstance(child.value, ast.Name)
+                and child.value.id == "os"
+            ) or (
+                isinstance(child, ast.ImportFrom)
+                and child.module == "os"
+                and any(a.name in ("rename", "replace") for a in child.names)
+            ):
+                yield child.lineno, scope
+            yield from walk(child, scope)
+
+    yield from walk(tree, "")
+
+
+def test_file_moves_stay_in_the_sink_verbs():
+    """Every rename in the package is a commit step of a sink, so it lives
+    in ``sources.tables`` (the swap, its recovery and the replace-by-tag
+    put) or in the two pipeline commits (the model promote and the batch
+    marker). A move anywhere else is a second commit protocol with its own
+    crash window."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for lineno, scope in _file_moves(tree):
+            if (rel, None) not in _MOVERS and (rel, scope) not in _MOVERS:
+                offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
+    assert not offenders, "file move outside the sink verbs:\n" + "\n".join(offenders)

@@ -420,16 +420,34 @@ def test_streaming_anomaly_pipeline(spark, tmpdir):
         run_anomaly_pipeline,
     )
 
-    run_anomaly_pipeline(spark, SF_DIR, tmpdir)
-    hist = spark.read.parquet(f"{tmpdir}/volume_history")
-    assert hist.count() > 0
     import os
 
-    if os.path.exists(f"{tmpdir}/incidents"):
+    def state():
+        hist = spark.read.parquet(f"{tmpdir}/volume_history")
+        inc = (
+            spark.read.parquet(f"{tmpdir}/incidents").collect()
+            if os.path.exists(f"{tmpdir}/incidents") else []
+        )
+        return sorted(map(tuple, hist.collect())), sorted(r["cluster_id"] for r in inc)
+
+    run_anomaly_pipeline(spark, SF_DIR, tmpdir)
+    # the scoring batch's flat layout: one <batch_id>.parquet per micro-batch
+    names = os.listdir(f"{tmpdir}/volume_history")
+    assert names and all(n.endswith(".parquet") for n in names)
+    assert not any(n.startswith("ingest_batch=") for n in names)
+    hist_rows, incidents = state()
+    assert hist_rows
+    # anomaly cap: at most 3 incidents minted per micro-batch
+    assert len(incidents) <= 3 * len(names)
+    if incidents:
         inc = spark.read.parquet(f"{tmpdir}/incidents")
-        # anomaly cap: at most 3 incidents minted per micro-batch
-        assert inc.count() <= 3 * 2
         assert inc.filter(F.col("status") != "NEW").count() == 0
+
+    # a lost checkpoint replays every micro-batch: each replaces its own
+    # history file and finds its incidents already open
+    shutil.rmtree(f"{tmpdir}/_checkpoint_anom")
+    run_anomaly_pipeline(spark, SF_DIR, tmpdir)
+    assert state() == (hist_rows, incidents)
 
 
 def test_viz_prep_and_gate(spark):

@@ -2,16 +2,18 @@
 target (``sources.tables.swap_in``) must survive a crash between the two
 renames. Batch 0 commits, batch 1 crashes with the target renamed to
 ``._old`` and the new data still under ``._staged``, batch 2 runs: the rows
-committed before the crash survive and no swap leftovers remain."""
+committed before the crash survive and no swap leftovers remain. The
+replace-by-tag history verb (``put_tagged``) is held to the same bar."""
 
 from __future__ import annotations
 
 import os
 
+import duckdb
 import pytest
 
 from logstream_processing_service_spark.operators.maintenance import compact_parquet
-from logstream_processing_service_spark.sources.tables import merge_parquet
+from logstream_processing_service_spark.sources.tables import merge_parquet, put_tagged
 from logstream_processing_service_spark.streaming.dedup import minhash_dedup_sink
 from logstream_processing_service_spark.streaming.pipeline import merge_sink
 
@@ -118,3 +120,42 @@ def test_merge_refuses_target_with_extra_column(spark, tmp_path, sink):
         sink(spark, root, 1)
     assert _rows(spark, f"{root}/data") == old
     assert sorted(os.listdir(root)) == ["data"]
+
+
+def test_put_tagged_replaces_by_tag(spark, tmp_path, monkeypatch):
+    """One flat file per tag: a second put of a tag replaces its file, a
+    new tag adds one, and DuckDB's flat ``*.parquet`` glob reads the rows
+    Spark reads. A crash in the rename keeps the tag's previous file; the
+    next put (here an empty frame, which still writes its schema) drops
+    the stale staging dir."""
+    hist = str(tmp_path / "hist")
+
+    def put(rows, tag):
+        put_tagged(spark.createDataFrame(rows, SCHEMA), hist, tag)
+
+    put(ROWS[0], "0-9")
+    put(ROWS[1], "0-9")
+    assert os.listdir(hist) == ["0-9.parquet"]
+    assert _rows(spark, hist) == [(3, "c")]
+    put(ROWS[2], "10-19")
+    assert sorted(os.listdir(hist)) == ["0-9.parquet", "10-19.parquet"]
+    assert _rows(spark, hist) == [(3, "c"), (4, "d")]
+    glob = duckdb.sql(f"SELECT id, v FROM read_parquet('{hist}/*.parquet')")
+    assert sorted(glob.fetchall()) == _rows(spark, hist)
+
+    def crash(src, dst, *args, **kwargs):
+        raise OSError("simulated crash in the rename")
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        put(ROWS[0], "0-9")
+    monkeypatch.undo()
+    assert os.path.isdir(hist + "._staged")
+    assert _rows(spark, hist) == [(3, "c"), (4, "d")]
+
+    put([], "20-29")
+    assert not os.path.exists(hist + "._staged")
+    assert sorted(os.listdir(hist)) == ["0-9.parquet", "10-19.parquet", "20-29.parquet"]
+    assert _rows(spark, hist) == [(3, "c"), (4, "d")]
+    with pytest.raises(ValueError, match="visible file"):
+        put(ROWS[0], "_hidden")

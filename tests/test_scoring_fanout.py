@@ -1,5 +1,6 @@
 """Scoring-batch fan-out: one materialization of the scored slice feeds
-every sink, its caches are released, and the service-owned sink targets
+every sink, its caches are released, a retried slice leaves the volume
+history and the incidents as they were, and the service-owned sink targets
 fail loudly when unreadable (default tier; the end-to-end pipeline suite
 in test_pipelines.py is ``slow``)."""
 
@@ -40,6 +41,18 @@ def _emb_rows(spark, work_dir: str) -> int:
     return spark.read.parquet(os.path.join(work_dir, "log_embeddings")).count()
 
 
+def _anomaly_state(spark, work_dir: str) -> tuple[list, set[int]]:
+    """The sorted volume history rows and the opened incidents' clusters."""
+    hist = spark.read.parquet(os.path.join(work_dir, "volume_history"))
+    rows = hist.select("cluster_id", "batch_id", "log_count").collect()
+    inc_path = os.path.join(work_dir, "incidents")
+    incidents = (
+        {r["cluster_id"] for r in spark.read.parquet(inc_path).collect()}
+        if os.path.exists(inc_path) else set()
+    )
+    return sorted(map(tuple, rows)), incidents
+
+
 def test_scoring_embeds_the_slice_once(spark, work_dir, monkeypatch):
     rows = spark.sparkContext.accumulator(0)
     orig = P.hash_featurizer
@@ -64,10 +77,13 @@ def test_scoring_embeds_the_slice_once(spark, work_dir, monkeypatch):
     assert rows.value <= 2 * out["scored"]
     assert _persisted_ids(spark) - before_ids == set()
 
-    # re-running the slice adds nothing to the idempotent sink
+    # re-running the slice adds nothing to the idempotent sink, and it
+    # neither re-counts its volume history nor opens another incident
     n = _emb_rows(spark, work_dir)
+    state = _anomaly_state(spark, work_dir)
     P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=0, end_id=999)
     assert _emb_rows(spark, work_dir) == n
+    assert _anomaly_state(spark, work_dir) == state
 
 
 def test_empty_slice_writes_nothing_and_releases_cache(spark, work_dir):
@@ -96,6 +112,15 @@ def test_commit_marker_survives_crash_mid_write(spark, work_dir, monkeypatch):
     with open(marker) as fh:
         status = json.load(fh)
     assert (status["status"], status["end_id"]) == ("COMPLETED", 499)
+
+    # the crash came after the history and incident writes: the retry of
+    # the uncommitted slice must leave both as the crashed run left them
+    state = _anomaly_state(spark, work_dir)
+    P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=500, end_id=999)
+    assert _anomaly_state(spark, work_dir) == state
+    with open(marker) as fh:
+        status = json.load(fh)
+    assert (status["status"], status["end_id"]) == ("COMPLETED", 999)
 
 
 def test_upsert_raises_on_unreadable_target(spark, tmp_path):
