@@ -104,33 +104,25 @@ HEADLINE = [
     "image_dhash",
     "hourly_resample_ffill",
     "zorder_bucket_stats",
-    # eager-build caveat (see ROADMAP): the 8 power iterations run at
-    # fn() build time via localCheckpoint, like bpe_train's merge loop
     "part_pagerank",
     "hybrid_search_rrf",
     "rolling_median_value",
     "join_overlap_theta",
     "activity_islands",
     "mean_shift_scores",
-    # eager caveat: the 3 sink micro-batches run at fn() build time
     "streaming_bm25_twin",
     "dsir_weights",
     "snapshot_timetravel_twin",
     "rag_chunk_search",
     "kn_trigram_logprob",
-    # round-5 additions. Eager caveat: the twins run their availableNow
-    # stream at fn() build time (like streaming_bm25_twin); the bench
-    # line times the result read-back.
+    # round-5 additions
     "count_window_stream_twin",
     "decayed_volume_stream_twin",
     "denstream_stream_twin",
     "perplexity_buckets_exact",
     "json_shred_profile",
-    # eager caveat: the HNSW graph builds at fn() time (driver-bounded,
-    # the PQ-codebook pattern); the bench line times the distributed probe
     "ann_hnsw",
     "ann_ivf_hnsw",
-    # eager caveat: the 3 commits + 3 refreshes run at fn() build time
     "matview_refresh_twin",
     "windowed_volume_stream_twin",
     "session_volume_stream_twin",
@@ -140,33 +132,21 @@ HEADLINE = [
     "image_histogram_stats",
     "kn_trigram_pruned",
     "mjpeg_frame_pixel_stats",
-    # round-6 additions. Eager caveats: drift_window_twin runs its 3
-    # commits + incremental refreshes at fn() build time (the matview
-    # twin pattern); ann_hnsw_registry runs build->save->insert x2 at
-    # fn() time and the bench line times the distributed probe.
+    # round-6 additions
     "drift_window_twin",
     "cm_user_counts",
     "ann_hnsw_registry",
     "session_gap_sweep",
     "dsir_gumbel_sample",
-    # eager caveat: the 8-file staging write + bloom build run at fn()
-    # time; the bench line times the pruned scan
     "bloom_point_lookup",
-    # eager caveat: the two txlog commits run at fn() time; the bench
-    # line times the keyed full-outer CDC diff
     "snapshot_cdc_twin",
     "skew_report",
     "tokenizer_fertility",
-    # eager caveat: the LSH pair pipeline + 3 contraction batches run at
-    # fn() time; the bench line times the served report
     "components_incremental_twin",
     "weekly_heavy_actors",
-    # eager caveat: 3 stream-sink commits + the optimize rewrite run at
-    # fn() time; the bench line times the manifest-pruned scan
     "optimize_prune_twin",
     # round-6 continuation: the trends family, PMI collocations, and the
-    # stream-stream join twin (eager caveat: the 3-batch availableNow
-    # stream runs at fn() build time, like the other stream twins)
+    # stream-stream join twin
     "cohort_retention",
     "event_transitions",
     "volume_trend",
@@ -177,13 +157,7 @@ HEADLINE = [
     # strict-sequencing funnel + exact sliding-window distinct
     "funnel_conversion",
     "rolling_distinct_users",
-    # round-7 registrations (the r6-rehearsed queue). Eager caveats:
-    # the ddww/louter/fouter twins run their 3-batch availableNow
-    # streams at fn() build time (the stream_join_twin pattern);
-    # branch_wap_twin runs fork→append→merge commits at fn() time and
-    # the bench line times the merged-snapshot read; unigram_token_counts
-    # and tokenizer_compare run their vocab-grain EM/merge training at
-    # fn() time (the bpe_train pattern).
+    # round-7 registrations (the r6-rehearsed queue)
     "textrank_keywords",
     "ddww_twin",
     "louter_twin",
@@ -204,12 +178,7 @@ HEADLINE = [
     "tokenizer_compare",
     "vocab_divergence",
     "zipf_fit",
-    # round-8 registrations (the r7-rehearsed queue). Eager caveats:
-    # wordpiece_token_counts runs its vocab-grain merge training at
-    # fn() build time (the bpe_train pattern); router_twin runs its
-    # 3-batch availableNow stream at fn() time (stream_join_twin
-    # pattern); ann_recall_report builds the HNSW graph + IVF probes at
-    # fn() time and the bench line times the distributed hit-set joins.
+    # round-8 registrations (the r7-rehearsed queue)
     "dedup_containment",
     "holt_winters_daily",
     "html_text_extract",
@@ -221,10 +190,7 @@ HEADLINE = [
     "router_twin",
     "normalize_text",
     "ann_recall_report",
-    # round-8 session builds. Eager caveat: bucketed_join_twin stages
-    # its bucketed managed tables at fn() build time (the
-    # bloom_point_lookup pattern); the bench line times the
-    # exchange-free join + aggregate.
+    # round-8 session builds
     "association_rules",
     "kwic_snippets",
     "readability_scores",
@@ -284,9 +250,7 @@ HEADLINE = [
 # builds, vocab-grain training loops, driver-side greedy/MW iterations —
 # rather than pure lazy plan construction. r12 VERDICT methodology fix:
 # for these, the fn() build is the real cost of the operator, so it runs
-# INSIDE the timed window (build + noop-sink execution together). This
-# supersedes the per-entry "eager caveat: ... runs at fn() build time"
-# comments above, which described the pre-r13 exclusion. The one-time
+# INSIDE the timed window (build + noop-sink execution together). The one-time
 # timing discontinuity this creates for the twin/registry family is
 # annotated in BENCH_diff_r13.md rather than adjudicated as regression.
 EAGER_BUILD = {n for n in HEADLINE if n.endswith("_twin") or "registry" in n} | {

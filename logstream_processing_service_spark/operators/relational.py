@@ -12,18 +12,35 @@ holds at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # Scans / filters / projections (SURVEY §2.2 P1-P9, §2.7 O1-O2)
 # ---------------------------------------------------------------------------
 
+INTERESTING_TYPES = ("error", "signup")  # reference: level IN ('error','warning')
+
+
+def scorable(
+    levels: tuple[str, ...] = INTERESTING_TYPES,
+    level_col: str = "event_type",
+    ids: Column | None = None,
+) -> Column:
+    """The rows the scoring service takes: an interesting level with a
+    payload to embed. The slice scan passes its id range as ``ids``, and-ed
+    in between the two, so its pushed filters read level, range, payload;
+    the scoring stream keeps rows by the predicate alone."""
+    kept = F.col(level_col).isin(*levels)
+    if ids is not None:
+        kept = kept & ids
+    return kept & F.col("props").isNotNull()
+
 
 def scan_slice(
     df: DataFrame,
     id_col: str = "event_id",
-    levels: tuple[str, ...] = ("error", "signup"),
+    levels: tuple[str, ...] = INTERESTING_TYPES,
     level_col: str = "event_type",
     lo: int = 100,
     hi: int = 5000,
@@ -40,9 +57,7 @@ def scan_slice(
     LIMIT becomes a TakeOrdered, not a total sort.
     """
     out = df.filter(
-        F.col(level_col).isin(*levels)
-        & F.col(id_col).between(lo, hi)
-        & F.col("props").isNotNull()
+        scorable(levels, level_col, F.col(id_col).between(lo, hi))
     ).orderBy(id_col)
     return out.limit(limit) if limit else out
 

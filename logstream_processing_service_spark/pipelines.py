@@ -36,7 +36,6 @@ from .operators.similarity import assign_nearest_centroid
 from .sources import load_table
 from .sources.tables import put_tagged, read_parquet_or_empty, upsert_parquet
 
-INTERESTING_TYPES = ("error", "signup")  # reference: level IN ('error','warning')
 CENTROID_THRESHOLD = 0.35  # src/ml/vector_engine.py:8
 EMBED_DIM = 64  # test stand-in for the 384-dim MiniLM space
 
@@ -171,7 +170,7 @@ def run_training_batch(
     # Scan: P3 filter + O1 order + O2 limit (run_training_batch.py:87)
     events = load_table(spark, sf_dir, "events")
     batch = (
-        events.filter(F.col("event_type").isin(*INTERESTING_TYPES))
+        events.filter(F.col("event_type").isin(*R.INTERESTING_TYPES))
         .orderBy("event_id")
         .limit(limit)
     )
@@ -276,46 +275,33 @@ def anomaly_pass(
     return n_new
 
 
-def run_incremental_batch(
+def score_batch(
     spark: SparkSession,
-    sf_dir: str,
+    events: DataFrame,
     work_dir: str,
-    start_id: int,
-    end_id: int,
+    tag: str,
     dim: int = EMBED_DIM,
 ) -> dict:
-    """Incremental scoring: load state → slice scan → embed → assign →
-    upsert → pattern refresh → incident detection → commit
-    (run_incremental_batch.py:28-112). The per-row loop (:76-93) is one
-    declarative plan; the per-row write txn (:66-81 in log_ops) is one
-    idempotent upsert.
+    """The scoring body of the slice driver and the scoring stream
+    (run_incremental_batch.py:66-101): embed → assign → upsert → pattern
+    refresh → anomaly pass over ``events``, rows already kept by
+    ``R.scorable``; ``tag`` names the batch's volume history file.
 
-    The scored slice is materialized once per batch: it is persisted and
-    its count (the only action that runs the scan → embed → assign plan)
-    serves both the empty-slice exit and the result. The embeddings
-    upsert, the pattern refresh, the anomaly pass and the commit marker
-    all read the cached rows. The caches this function takes are released
-    in ``finally``, so none outlives the batch. The tables the service
-    writes itself (the sink keys, the volume history, the incidents) are
-    read with their known schema, so no schema-inference job runs.
-
-    A retried slice (the reference reruns any slice not COMPLETED,
-    run_incremental_batch.py:29-41) is idempotent: the sinks skip the keys
-    they hold and ``anomaly_pass`` replaces the slice's history file.
+    The scored rows are persisted once: their count, the only action that
+    runs the embed → assign plan, serves the empty-batch exit and the
+    result, every sink reads the cache, and ``finally`` releases it. The
+    tables the service writes itself are read with their known schema, so
+    no schema-inference job runs. A replayed batch is idempotent: the
+    sinks skip the keys they hold and ``anomaly_pass`` replaces the
+    batch's history file.
     """
     store = ModelStore(os.path.join(work_dir, "models"))
     centroids = store.load_centroids(spark)  # state load, §3.1 step 2
 
-    # P3/P4/P5 + O1 slice scan (run_incremental_batch.py:59-65)
-    events = load_table(spark, sf_dir, "events")
-    batch = R.scan_slice(
-        events, lo=start_id, hi=end_id, levels=INTERESTING_TYPES, limit=None
-    )
-
     # embed + nearest-centroid with the 0.35 mint threshold (M3); batch
     # semantics: beyond-threshold rows stay unassigned (-1) — matching the
     # reference's scoring path, which discards minted centroids (§3.1 step 7)
-    emb = embed_events(batch, dim)
+    emb = embed_events(events, dim)
     assigned = assign_nearest_centroid(
         emb.select(F.col("event_id").alias("vec_id"), "embedding"),
         centroids,
@@ -353,10 +339,40 @@ def run_incremental_batch(
             spark, patterns, os.path.join(work_dir, "log_patterns_incr"), key="cluster_id"
         )
 
-        # anomaly pass (incident_ops.py:44-105), one history file per slice
+        # anomaly pass (incident_ops.py:44-105), one history file per batch
         volume = R.batch_volume(clustered.select("user_id", "event_id"))
-        n_new = anomaly_pass(spark, volume, work_dir, f"{start_id}-{end_id}")
+        n_new = anomaly_pass(spark, volume, work_dir, tag)
+        return {"scored": n_scored, "incidents": n_new}
+    finally:
+        scored.unpersist()
 
+
+def run_incremental_batch(
+    spark: SparkSession,
+    sf_dir: str,
+    work_dir: str,
+    start_id: int,
+    end_id: int,
+    dim: int = EMBED_DIM,
+) -> dict:
+    """Incremental scoring of one id slice: slice scan → ``score_batch``
+    → commit (run_incremental_batch.py:28-112). The per-row loop (:76-93)
+    is one declarative plan; the per-row write txn (:66-81 in log_ops) is
+    one idempotent upsert. The scoring stream
+    (``streaming.pipeline.run_incremental_pipeline``) runs the same
+    ``score_batch`` per micro-batch, with its checkpoint as the commit
+    marker.
+
+    A retried slice (the reference reruns any slice not COMPLETED,
+    run_incremental_batch.py:29-41) is idempotent: its history file is
+    tagged ``"{start_id}-{end_id}"``. An empty slice writes nothing, not
+    even the marker.
+    """
+    # P3/P4/P5 + O1 slice scan (run_incremental_batch.py:59-65)
+    events = load_table(spark, sf_dir, "events")
+    batch = R.scan_slice(events, lo=start_id, hi=end_id, limit=None)
+    out = score_batch(spark, batch, work_dir, f"{start_id}-{end_id}", dim)
+    if out["scored"]:
         # S9 commit marker (vs UPDATE batch_order, run_incremental_batch.py:103-110)
         write_commit_marker(
             work_dir,
@@ -364,13 +380,11 @@ def run_incremental_batch(
                 "start_id": start_id,
                 "end_id": end_id,
                 "status": "COMPLETED",
-                "scored": n_scored,
+                "scored": out["scored"],
                 "ts": time.time(),
             },
         )
-        return {"scored": n_scored, "incidents": n_new}
-    finally:
-        scored.unpersist()
+    return out
 
 
 # ---------------------------------------------------------------------------

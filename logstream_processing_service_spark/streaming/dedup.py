@@ -8,7 +8,7 @@ anything already accepted". Structured Streaming cannot chain the two
 stateful groupings this needs (per-bucket first-wins, then per-doc
 any-bucket-hit), so the operator lives in ``foreachBatch`` with the
 registry as an explicit parquet table — the same batch-incremental shape
-as ``upsert_sink``/``merge_sink``, read and swapped with the same verbs
+as ``merge_sink`` and the scoring stream, read and swapped with the same verbs
 (``sources.tables.read_parquet_or_empty`` / ``swap_in``, so a crashed
 swap is recovered on the next batch), and the shape that ports directly
 to a Delta/Iceberg MERGE at scale.

@@ -7,16 +7,16 @@ The reference's 'streaming' is external micro-batching: a Lambda assigns
 and exactly-once faked by idempotent upserts (src/db/log_ops.py:47-81).
 
 Spark-native mapping:
-- offset ranges        → file-source offsets / Trigger.AvailableNow catch-up
+- slice range          → file-source offsets / Trigger.AvailableNow catch-up
 - hand watermarks      → ``withWatermark`` + append mode
-- per-row upsert txn   → idempotent ``foreachBatch`` anti-join append or
-                         MERGE, over the batch service's parquet sink
-                         verbs (``sources.tables``, T2)
+- scoring body         → ``pipelines.score_batch`` per micro-batch
+                         (``run_incremental_pipeline``): the same embed,
+                         assign, idempotent sinks and anomaly pass as the
+                         slice driver, with the history tagged by batch id
 - batch_order status   → the checkpoint's commit log (S9)
-- history append       → ``pipelines.anomaly_pass`` tagged by batch id
 
 Every transformation is the SAME function used in batch (operators/*,
-pipelines.anomaly_pass) — the stream shell only wires sources and sinks.
+pipelines.score_batch) — the stream shells only wire sources and sinks.
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..session import apply_runtime_conf
-from ..sources.tables import merge_full, read_merge_target, swap_in, upsert_parquet
+from ..sources.tables import merge_full, put_tagged, read_merge_target, swap_in
 
 
 def _events_schema(spark: SparkSession, src: str) -> StructType:
@@ -113,37 +113,25 @@ def windowed_volume(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def upsert_sink(out_dir: str, key: str = "event_id"):
-    """Idempotent foreachBatch sink over ``{out_dir}/data``: the batch
-    service's anti-join append (``sources.tables.upsert_parquet``, T2/S6:
-    ON CONFLICT DO NOTHING, set-oriented). Re-delivered batches become
-    no-ops, giving effective exactly-once on top of at-least-once
-    delivery; an unreadable target raises instead of appending."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(batch_df.sparkSession, batch_df, f"{out_dir}/data", key)
-
-    return write
-
-
-def run_incremental_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    levels: tuple[str, ...] = ("error", "signup"),
-) -> None:
+def run_incremental_pipeline(spark: SparkSession, sf_dir: str, work_dir: str) -> None:
     """The reference's incremental scoring batch (SURVEY §3.1) as ONE
-    streaming query with AvailableNow catch-up: filter → template compose →
-    idempotent sink. Embedding/cluster stages plug in as extra columns via
-    the same batch transforms."""
-    events = read_events_stream(spark, sf_dir)
-    scored = events.filter(F.col("event_type").isin(*levels)).withColumn(
-        "log_template",
-        F.concat_ws(" | ", F.col("event_type"), F.col("props")),
-    )
+    streaming query with AvailableNow catch-up: each micro-batch of the
+    rows ``R.scorable`` keeps runs the slice driver's
+    ``pipelines.score_batch`` tagged with its ``batch_id``. The checkpoint
+    (``<work_dir>/_checkpoint``) is the commit marker; a replayed batch
+    (foreachBatch is at-least-once) appends no key twice, replaces its own
+    history file and opens no incident twice."""
+    # pipelines imports pyspark.ml, which the other stream shells skip
+    from ..operators.relational import scorable
+    from ..pipelines import score_batch
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        score_batch(batch_df.sparkSession, batch_df, work_dir, str(batch_id))
+
+    events = read_events_stream(spark, sf_dir).filter(scorable())
     q = (
-        scored.writeStream.foreachBatch(upsert_sink(out_dir))
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
+        events.writeStream.foreachBatch(process)
+        .option("checkpointLocation", os.path.join(work_dir, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
@@ -157,14 +145,15 @@ def run_windowed_volume(
 
     Append output mode: a window is emitted exactly once, after the
     watermark closes it — so the sink never sees partial counts. The sink
-    itself writes each micro-batch into its own ``batch_id=N`` partition
-    with overwrite, so a replayed batch (foreachBatch is at-least-once)
-    lands in the same partition instead of duplicating rows.
+    itself writes each micro-batch as the one file
+    ``volume/<batch_id>.parquet`` (``put_tagged``), so a replayed batch
+    (foreachBatch is at-least-once) replaces its file instead of
+    duplicating rows.
     """
     vol = windowed_volume(read_events_stream(spark, sf_dir))
 
     def write(df: DataFrame, bid: int) -> None:
-        df.write.mode("overwrite").parquet(f"{out_dir}/volume/batch_id={bid}")
+        put_tagged(df, f"{out_dir}/volume", str(bid))
 
     q = (
         vol.writeStream.foreachBatch(write)
@@ -194,38 +183,6 @@ def session_volume(
             "n_events",
         )
     )
-
-
-def run_anomaly_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    levels: tuple[str, ...] = ("error", "signup"),
-) -> None:
-    """The reference's incremental anomaly pass (SURVEY §3.1 steps 5-6)
-    inside ONE streaming query: each micro-batch runs the scoring batch's
-    ``pipelines.anomaly_pass`` tagged with its ``batch_id``, so the history
-    is one flat ``<batch_id>.parquet`` per micro-batch, and a replayed
-    batch (foreachBatch is at-least-once) replaces its own file and opens
-    no incident twice."""
-    # pipelines imports pyspark.ml, which the other stream shells skip
-    from ..operators import relational as R
-    from ..pipelines import anomaly_pass
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        vol = R.batch_volume(batch_df.select("user_id", "event_id"))
-        anomaly_pass(batch_df.sparkSession, vol, out_dir, str(batch_id))
-
-    events = read_events_stream(spark, sf_dir).filter(
-        F.col("event_type").isin(*levels)
-    )
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint_anom"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def deduped_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -311,7 +268,8 @@ def merge_sink(
     matched_condition=None,
 ):
     """foreachBatch MERGE sink over ``{out_dir}/data``: the update-capable
-    sibling of ``upsert_sink`` (which is insert-only). Each micro-batch runs
+    sibling of the scoring stream's insert-only sink
+    (``sources.tables.upsert_parquet``). Each micro-batch runs
     the full Delta-style clause set (``sources.tables.merge_full``) against
     the target and swaps the result in whole (``sources.tables.swap_in``).
     The target is read with its own schema (``read_merge_target``, which

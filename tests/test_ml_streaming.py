@@ -4,6 +4,8 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import os
+import re
 import shutil
 import tempfile
 
@@ -126,7 +128,14 @@ def test_streaming_windowed_volume_matches_batch(spark, tmpdir):
     )
 
     run_windowed_volume(spark, SF_DIR, tmpdir)
-    out = spark.read.parquet(f"{tmpdir}/volume")
+    # one flat <batch_id>.parquet per micro-batch (put_tagged), no partitions
+    vol_dir = f"{tmpdir}/volume"
+    names = os.listdir(vol_dir)
+    assert names and all(
+        n.endswith(".parquet") and os.path.isfile(os.path.join(vol_dir, n))
+        for n in names
+    )
+    out = spark.read.parquet(vol_dir)
     batch = (
         _events(spark)
         .groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
@@ -157,20 +166,50 @@ def test_streaming_windowed_volume_matches_batch(spark, tmpdir):
         assert all_want.get(k) == v, k
 
 
-def test_streaming_idempotent_upsert(spark, tmpdir):
+def test_streaming_scoring_replay(spark, tmpdir):
+    from logstream_processing_service_spark.pipelines import run_training_batch
     from logstream_processing_service_spark.streaming.pipeline import (
         run_incremental_pipeline,
     )
 
+    run_training_batch(spark, SF_DIR, tmpdir, limit=200, k=4)
+    hist_dir = f"{tmpdir}/volume_history"
+    trained = set(os.listdir(hist_dir))
+
+    def state():
+        emb = spark.read.parquet(f"{tmpdir}/log_embeddings")
+        hist = spark.read.parquet(hist_dir).select("cluster_id", "batch_id", "log_count")
+        inc = (
+            spark.read.parquet(f"{tmpdir}/incidents").collect()
+            if os.path.exists(f"{tmpdir}/incidents") else []
+        )
+        return (
+            sorted(r["event_id"] for r in emb.select("event_id").collect()),
+            sorted(map(tuple, hist.collect())),
+            sorted(r["cluster_id"] for r in inc),
+        )
+
     run_incremental_pipeline(spark, SF_DIR, tmpdir)
-    first = spark.read.parquet(f"{tmpdir}/data")
-    n1 = first.count()
-    assert n1 > 0
-    assert first.select("event_id").distinct().count() == n1
-    # re-run: checkpoint makes it a no-op; even without it, the anti-join
-    # sink would dedup — either way the target must not grow
+    emb_ids, hist_rows, incidents = state()
+    assert emb_ids and len(set(emb_ids)) == len(emb_ids)
+    # the scoring batch's flat layout: one <batch_id>.parquet per micro-batch
+    names = set(os.listdir(hist_dir)) - trained
+    assert names and all(
+        re.fullmatch(r"\d+\.parquet", n) and os.path.isfile(os.path.join(hist_dir, n))
+        for n in names
+    )
+    # anomaly cap: at most 3 incidents minted per micro-batch
+    assert len(incidents) <= 3 * len(names)
+    if incidents:
+        inc = spark.read.parquet(f"{tmpdir}/incidents")
+        assert inc.filter(F.col("status") != "NEW").count() == 0
+
+    # a lost checkpoint replays every micro-batch: the sinks skip the keys
+    # they hold, each batch replaces its own history file and finds its
+    # incidents already open
+    shutil.rmtree(f"{tmpdir}/_checkpoint")
     run_incremental_pipeline(spark, SF_DIR, tmpdir)
-    assert spark.read.parquet(f"{tmpdir}/data").count() == n1
+    assert state() == (emb_ids, hist_rows, incidents)
 
 
 def test_stateful_semantic_grouping(spark, tmpdir):
@@ -413,41 +452,6 @@ def test_multimodal_resize_and_frames(spark):
     for r in fr:
         per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
     assert all(sorted(v) == list(range(len(v))) and len(v) <= 4 for v in per_doc.values())
-
-
-def test_streaming_anomaly_pipeline(spark, tmpdir):
-    from logstream_processing_service_spark.streaming.pipeline import (
-        run_anomaly_pipeline,
-    )
-
-    import os
-
-    def state():
-        hist = spark.read.parquet(f"{tmpdir}/volume_history")
-        inc = (
-            spark.read.parquet(f"{tmpdir}/incidents").collect()
-            if os.path.exists(f"{tmpdir}/incidents") else []
-        )
-        return sorted(map(tuple, hist.collect())), sorted(r["cluster_id"] for r in inc)
-
-    run_anomaly_pipeline(spark, SF_DIR, tmpdir)
-    # the scoring batch's flat layout: one <batch_id>.parquet per micro-batch
-    names = os.listdir(f"{tmpdir}/volume_history")
-    assert names and all(n.endswith(".parquet") for n in names)
-    assert not any(n.startswith("ingest_batch=") for n in names)
-    hist_rows, incidents = state()
-    assert hist_rows
-    # anomaly cap: at most 3 incidents minted per micro-batch
-    assert len(incidents) <= 3 * len(names)
-    if incidents:
-        inc = spark.read.parquet(f"{tmpdir}/incidents")
-        assert inc.filter(F.col("status") != "NEW").count() == 0
-
-    # a lost checkpoint replays every micro-batch: each replaces its own
-    # history file and finds its incidents already open
-    shutil.rmtree(f"{tmpdir}/_checkpoint_anom")
-    run_anomaly_pipeline(spark, SF_DIR, tmpdir)
-    assert state() == (hist_rows, incidents)
 
 
 def test_viz_prep_and_gate(spark):

@@ -1,15 +1,19 @@
 """Scoring-batch fan-out: one materialization of the scored slice feeds
 every sink, its caches are released, a retried slice leaves the volume
-history and the incidents as they were, and the service-owned sink targets
-fail loudly when unreadable (default tier; the end-to-end pipeline suite
-in test_pipelines.py is ``slow``)."""
+history and the incidents as they were, the scoring stream ends where the
+slice driver does, and the service-owned sink targets fail loudly when
+unreadable (default tier; the end-to-end pipeline suite in
+test_pipelines.py is ``slow``)."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from logstream_processing_service_spark import pipelines as P
@@ -20,9 +24,17 @@ EMPTY_LO = 10**12  # above every event_id
 
 
 @pytest.fixture(scope="module")
-def work_dir(spark, tmp_path_factory):
-    work = str(tmp_path_factory.mktemp("fanout_run"))
+def trained(spark, tmp_path_factory):
+    """A service work dir holding only the trained model, to be copied."""
+    work = str(tmp_path_factory.mktemp("trained"))
     P.run_training_batch(spark, SF_DIR, work, limit=200, k=4)
+    return work
+
+
+@pytest.fixture(scope="module")
+def work_dir(trained, tmp_path_factory):
+    work = str(tmp_path_factory.mktemp("fanout_run") / "svc")
+    shutil.copytree(trained, work)
     return work
 
 
@@ -125,17 +137,13 @@ def test_commit_marker_survives_crash_mid_write(spark, work_dir, monkeypatch):
 
 def test_upsert_raises_on_unreadable_target(spark, tmp_path):
     """A junk file in the target makes every sink raise before it writes:
-    the batch upsert and the streaming upsert and MERGE sinks. None may
-    append without the anti-join or replace the target with the batch."""
-    from logstream_processing_service_spark.streaming.pipeline import (
-        merge_sink,
-        upsert_sink,
-    )
+    the scoring upsert and the streaming MERGE sink. Neither may append
+    without the anti-join or replace the target with the batch."""
+    from logstream_processing_service_spark.streaming.pipeline import merge_sink
 
     new = spark.range(3).withColumnRenamed("id", "event_id")
     sinks = {
         "upsert_parquet": lambda out: P.upsert_parquet(spark, new, f"{out}/data"),
-        "upsert_sink": lambda out: upsert_sink(out)(new, 0),
         "merge_sink": lambda out: merge_sink(out)(new, 0),
     }
     for name, write in sinks.items():
@@ -153,3 +161,51 @@ def test_upsert_first_write_creates_target(spark, tmp_path):
     P.upsert_parquet(spark, new, target)
     P.upsert_parquet(spark, new, target)
     assert spark.read.parquet(target).count() == 3
+
+
+def _service_state(spark, work_dir: str) -> dict:
+    def rows(table: str, *cols: str) -> list:
+        df = spark.read.parquet(os.path.join(work_dir, table))
+        return sorted(map(tuple, df.select(*(cols or df.columns)).collect()))
+
+    history, incidents = _anomaly_state(spark, work_dir)
+    return {
+        "log_embeddings": rows("log_embeddings", "event_id", "cluster_id"),
+        "log_patterns_incr": rows("log_patterns_incr"),
+        "volume_history": history,
+        "incidents": incidents,
+    }
+
+
+def test_stream_scores_like_the_slice_driver(spark, trained, tmp_path):
+    """The scoring stream runs the slice driver's body: over the same rows
+    both end with the same sinks, history and incidents, and neither
+    embeds an interesting row that has no props to embed."""
+    from logstream_processing_service_spark.streaming.pipeline import (
+        run_incremental_pipeline,
+    )
+
+    events = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    last = events.slice(events.num_rows - 1).to_pylist()[0]
+    bare_id = max(events.column("event_id").to_pylist()) + 1
+    bare = {**last, "event_id": bare_id, "event_type": "error", "props": None}
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    pq.write_table(
+        pa.concat_tables([events, pa.Table.from_pylist([bare], schema=events.schema)]),
+        sf_dir / "events.parquet",
+    )
+
+    # the model is trained on the first 200 interesting rows, which the copy
+    # shares with SF_DIR
+    slice_dir, stream_dir = str(tmp_path / "slice"), str(tmp_path / "stream")
+    shutil.copytree(trained, slice_dir)
+    shutil.copytree(trained, stream_dir)
+
+    out = P.run_incremental_batch(spark, str(sf_dir), slice_dir, 0, bare_id)
+    run_incremental_pipeline(spark, str(sf_dir), stream_dir)
+
+    want = _service_state(spark, slice_dir)
+    assert out["scored"] > 0 and out["incidents"] == len(want["incidents"])
+    assert bare_id not in {r[0] for r in want["log_embeddings"]}
+    assert _service_state(spark, stream_dir) == want
