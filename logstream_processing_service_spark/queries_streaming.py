@@ -11,9 +11,7 @@ Batch split convention: batch b = event_id % 3, processed 0 → 1 → 2
 (file mtime order under maxFilesPerTrigger=1); within a batch the
 operators sort by their row key, so the arrival sequence — and therefore
 every window boundary and decay step — is fully determined.
-
-Bench caveat (shared with streaming_bm25_twin / bpe_train): the stream
-runs at fn() build time; the bench line times only the result read-back.
+``_event_slices`` builds that split for every twin.
 """
 
 from __future__ import annotations
@@ -26,6 +24,15 @@ from .streaming.drive import last_batch_per_key, run_deterministic_batches
 
 N_BATCHES = 3
 COUNT_WINDOW_SIZE = 100
+
+
+def _event_slices(events: DataFrame, *cols) -> list[DataFrame]:
+    """The twins' micro-batch split: slice b holds the ``events`` rows
+    with ``event_id % N_BATCHES == b``, projected to ``cols``."""
+    return [
+        events.filter(F.col("event_id") % N_BATCHES == b).select(*cols)
+        for b in range(N_BATCHES)
+    ]
 
 
 def _count_window_oracle(n_batches: int = N_BATCHES, w: int = COUNT_WINDOW_SIZE) -> str:
@@ -69,16 +76,14 @@ def q_count_window_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     window membership from the deterministic arrival order."""
     from .streaming.state import count_window_stream
 
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("key"), F.col("event_id").alias("row_id")
+    slices = _event_slices(
+        _t(spark, sf_dir, "events"),
+        F.col("event_type").alias("key"),
+        F.col("event_id").alias("row_id"),
     )
-    slices = [
-        ev.filter(F.col("row_id") % N_BATCHES == b) for b in range(N_BATCHES)
-    ]
     captured = run_deterministic_batches(
         spark,
         slices,
-        "key string, row_id long",
         lambda s: count_window_stream(s, "key", COUNT_WINDOW_SIZE),
         output_mode="append",
     )
@@ -149,19 +154,14 @@ def q_decayed_volume_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     recurrence as a chained CTE fold."""
     from .streaming.state import decayed_volume_stream
 
-    ev = _t(spark, sf_dir, "events").select(
+    slices = _event_slices(
+        _t(spark, sf_dir, "events"),
         F.col("event_type").alias("key"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.col("event_id").alias("_id"),
     )
-    slices = [
-        ev.filter(F.col("_id") % N_BATCHES == b).drop("_id")
-        for b in range(N_BATCHES)
-    ]
     captured = run_deterministic_batches(
         spark,
         slices,
-        "key string, ts_us long",
         lambda s: decayed_volume_stream(s, "key"),
         # the operator emits one running-state row per key per batch and
         # declares Append internally; the final state is still the last
@@ -196,22 +196,16 @@ def q_denstream_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming path runs end-to-end under the vanilla session."""
     from .streaming.state import denstream_stream
 
-    ev = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") < DENSTREAM_CAP)
-        .select(
-            F.col("event_type").alias("key"),
-            F.array(
-                F.col("value").cast("double"),
-                (F.col("user_id") % 100).cast("double"),
-            ).alias("vec"),
-            F.col("event_id").cast("double").alias("ts_s"),
-        )
+    events = _t(spark, sf_dir, "events").filter(F.col("event_id") < DENSTREAM_CAP)
+    slices = _event_slices(
+        events,
+        F.col("event_type").alias("key"),
+        F.array(
+            F.col("value").cast("double"),
+            (F.col("user_id") % 100).cast("double"),
+        ).alias("vec"),
+        F.col("event_id").cast("double").alias("ts_s"),
     )
-    slices = [
-        ev.filter(F.col("ts_s").cast("long") % N_BATCHES == b)
-        for b in range(N_BATCHES)
-    ]
     # grouped-map CPU floor (r14 A/B, VERDICT #6): DenStream does real
     # per-key Python work inside each batch, so its keys need their own
     # tasks — but the r13 full-parallelism floor re-paid the state-store
@@ -220,11 +214,10 @@ def q_denstream_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-key compute spread at a fraction of the store cost: interleaved
     # A/B 5.19 s vs 5.60 s median, captured output byte-identical. The
     # distinct count is one job over the capped (≤3k-row) slice.
-    n_keys = ev.select("key").distinct().count()
+    n_keys = events.select("event_type").distinct().count()
     captured = run_deterministic_batches(
         spark,
         slices,
-        "key string, vec array<double>, ts_s double",
         lambda s: denstream_stream(s, "key"),
         output_mode="update",
         min_partitions=min(n_keys, spark.sparkContext.defaultParallelism),
@@ -284,18 +277,14 @@ def q_windowed_volume_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame
     express."""
     from .streaming.pipeline import windowed_volume
 
-    ev = _t(spark, sf_dir, "events").select(
+    slices = _event_slices(
+        _t(spark, sf_dir, "events"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "event_type", "value", F.col("event_id").alias("_id"),
+        "event_type", "value",
     )
-    slices = [
-        ev.filter(F.col("_id") % N_BATCHES == b).drop("_id")
-        for b in range(N_BATCHES)
-    ]
     captured = run_deterministic_batches(
         spark,
         slices,
-        "ts_us long, event_type string, value double",
         lambda s: windowed_volume(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
             watermark="2 hours",
@@ -366,18 +355,14 @@ def q_session_volume_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     session merging included."""
     from .streaming.pipeline import session_volume
 
-    ev = _t(spark, sf_dir, "events").select(
+    slices = _event_slices(
+        _t(spark, sf_dir, "events"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "user_id", F.col("event_id").alias("_id"),
+        "user_id",
     )
-    slices = [
-        ev.filter(F.col("_id") % N_BATCHES == b).drop("_id")
-        for b in range(N_BATCHES)
-    ]
     captured = run_deterministic_batches(
         spark,
         slices,
-        "ts_us long, user_id long",
         lambda s: session_volume(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         ),
@@ -485,34 +470,7 @@ def q_stream_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return every pair the stream EMITS. The oracle unrolls admission AND
     join-state eviction, so this driver row hash-checks Spark's
     stream-stream join state machine end to end."""
-    from .streaming.pipeline import correlated_pairs_stream
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "user_id", "event_type", F.col("event_id"),
-    )
-    slices = [
-        ev.filter(F.col("event_id") % N_BATCHES == b) for b in range(N_BATCHES)
-    ]
-    captured = run_deterministic_batches(
-        spark,
-        slices,
-        "ts_us long, user_id long, event_type string, event_id long",
-        lambda s: correlated_pairs_stream(
-            s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
-            watermark=f"{_JOIN_DELAY_H} hours",
-            lookback_sec=_JOIN_LOOKBACK_S,
-        ),
-        output_mode="append",
-    )
-    return captured.select(
-        F.col("l_user").alias("user_id"),
-        F.col("l_event_id").alias("signup_id"),
-        F.col("r_event_id").alias("error_id"),
-        F.expr("(unix_micros(r_ts) - unix_micros(l_ts)) div 1000000")
-        .cast("bigint")
-        .alias("lag_s"),
-    ).orderBy("user_id", "signup_id", "error_id")
+    return _outer_join_twin(spark, sf_dir, "inner")
 
 
 # ---------------------------------------------------------------------------
@@ -582,23 +540,19 @@ def _louter_oracle(
 def _outer_join_twin(
     spark: SparkSession, sf_dir: str, how: str
 ) -> DataFrame:
-    """Shared driver body for the louter/fouter twins — identical to
-    q_stream_join_twin except for the join mode and the user_id
-    coalesce (a right-null row has no l_user)."""
+    """Shared driver body for the stream-stream join twins: ``how`` is the
+    join mode. ``user_id`` is the coalesce of both sides because a
+    right-null row has no l_user; on an inner join it is l_user."""
     from .streaming.pipeline import correlated_pairs_stream
 
-    ev = _t(spark, sf_dir, "events").select(
+    slices = _event_slices(
+        _t(spark, sf_dir, "events"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "user_id", "event_type", F.col("event_id"),
+        "user_id", "event_type", "event_id",
     )
-    slices = [
-        ev.filter(F.col("event_id") % N_BATCHES == b)
-        for b in range(N_BATCHES)
-    ]
     captured = run_deterministic_batches(
         spark,
         slices,
-        "ts_us long, user_id long, event_type string, event_id long",
         lambda s: correlated_pairs_stream(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
             watermark=f"{_JOIN_DELAY_H} hours",
@@ -728,18 +682,19 @@ def q_ddww_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checks the built-in watermarked-dedup state machine end to
     end (streaming/dedup.py's registry twin covers the custom
     foreachBatch form)."""
-    ev = _t(spark, sf_dir, "events").select(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "user_id", "event_type", "event_id",
-    )
+    # each slice file in event_id order: the oracle's first-wins admission
+    # takes the min event_id per key and batch
     slices = [
-        ev.filter(F.col("event_id") % N_BATCHES == b).orderBy("event_id")
-        for b in range(N_BATCHES)
+        sl.orderBy("event_id")
+        for sl in _event_slices(
+            _t(spark, sf_dir, "events"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+            "user_id", "event_type", "event_id",
+        )
     ]
     cap = run_deterministic_batches(
         spark,
         slices,
-        "ts_us long, user_id long, event_type string, event_id long",
         lambda st: st.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         .withWatermark("ts", f"{_DDWW_DELAY_H} hours")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
@@ -859,21 +814,11 @@ def q_ewma_volume_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume and observed-batch count. The oracle unrolls the per-batch
     EWMA recurrence as a chained CTE fold (the decayed_volume twin
     discipline). r10 queue, rehearsed r9 (tests/test_ewma_stream.py)."""
-    from .streaming.drive import last_batch_per_key, run_deterministic_batches
     from .streaming.state import ewma_volume_stream
 
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("key"),
-        F.col("event_id").alias("_id"),
-    )
-    slices = [
-        ev.filter(F.col("_id") % N_BATCHES == b).drop("_id")
-        for b in range(N_BATCHES)
-    ]
     captured = run_deterministic_batches(
         spark,
-        slices,
-        "key string",
+        _event_slices(_t(spark, sf_dir, "events"), F.col("event_type").alias("key")),
         lambda s: ewma_volume_stream(s, "key"),
         output_mode="append",
     )

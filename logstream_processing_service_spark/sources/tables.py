@@ -45,7 +45,15 @@ _NANO_TS_COLS: dict[str, tuple[str, ...]] = {
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table; normalize nano-timestamp columns."""
     apply_runtime_conf(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    return normalize_nano_ts(
+        spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet"), name
+    )
+
+
+def normalize_nano_ts(df: DataFrame, name: str) -> DataFrame:
+    """Turn table ``name``'s nano-timestamp columns, where ``df`` (a batch
+    or a streaming read of that table) holds them as LongType, into
+    tz-free microsecond timestamps; other columns pass through."""
     for col in _NANO_TS_COLS.get(name, ()):
         field = next((f for f in df.schema.fields if f.name == col), None)
         if field is not None and isinstance(field.dataType, LongType):

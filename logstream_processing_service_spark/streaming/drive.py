@@ -71,7 +71,6 @@ def _stream_shuffle_partitions(
 def run_deterministic_batches(
     spark: SparkSession,
     slices: list[DataFrame],
-    schema: str,
     transform: Callable[[DataFrame], DataFrame],
     output_mode: str = "update",
     min_partitions: int | None = None,
@@ -79,12 +78,15 @@ def run_deterministic_batches(
     """Run ``transform`` (a streaming DataFrame -> DataFrame stateful op)
     over micro-batches defined by ``slices`` (processed in list order)
     and return the captured output with an extra ``_batch`` long column.
+    The stream's schema is the first slice's; an empty ``slices`` raises
+    ``ValueError`` before anything is written.
 
     The returned frame is materialized (the stream has finished); all
-    work happens at call time — the eager-build bench caveat of
-    streaming_bm25_twin applies. The source/checkpoint temp dirs are
+    work happens at call time. The source/checkpoint temp dirs are
     cleaned up on success; the captured-output dir survives the call
     (the returned frame reads from it) and is removed at process exit."""
+    if not slices:
+        raise ValueError("run_deterministic_batches: `slices` is empty")
     work = tempfile.mkdtemp(prefix="stream_twin_")
     src = f"{work}/src"
     # the captured output outlives `work`: the returned DataFrame reads
@@ -102,7 +104,7 @@ def run_deterministic_batches(
             sl.coalesce(1).write.mode("overwrite").parquet(f"{src}/batch={b}")
             return b
 
-        with ThreadPoolExecutor(max_workers=min(4, len(slices) or 1)) as pool:
+        with ThreadPoolExecutor(max_workers=min(4, len(slices))) as pool:
             list(pool.map(_write, enumerate(slices)))
         base = time.time()
         for b in range(len(slices)):
@@ -117,7 +119,7 @@ def run_deterministic_batches(
             ).parquet(out)
 
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(slices[0].schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{src}/batch=*")
         )
@@ -136,14 +138,6 @@ def run_deterministic_batches(
             q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if not os.path.isdir(out):
-            # no batch ever fired (empty `slices`): there is no captured
-            # schema to return — make the failure loud instead of letting
-            # spark.read error on a missing path after cleanup
-            raise ValueError(
-                "run_deterministic_batches: no micro-batch produced output"
-                " (empty `slices`?)"
-            )
         return spark.read.parquet(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)

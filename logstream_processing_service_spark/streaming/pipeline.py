@@ -25,74 +25,31 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..session import apply_runtime_conf
-from ..sources.tables import merge_full, put_tagged, read_merge_target, swap_in
-
-
-def _events_schema(spark: SparkSession, src: str) -> StructType:
-    """The stream source needs an explicit schema; derive the ts column's
-    physical shape from a batch peek at the same files (TIMESTAMP(NANOS)
-    parquet arrives as LongType under nanosAsLong; micros arrives as a
-    native timestamp) so the stream normalizes exactly like ``load_table``
-    regardless of which the generator wrote."""
-    ts_type = next(
-        f.dataType
-        for f in spark.read.parquet(src).schema.fields
-        if f.name == "ts"
-    )
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
+from ..sources.tables import (
+    merge_full,
+    normalize_nano_ts,
+    put_tagged,
+    read_merge_target,
+    swap_in,
+)
 
 
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source stream over the events table; ts normalization identical
-    to the batch loader (adaptive nanos-long vs native-timestamp)."""
+    """File-source stream over the events table, read in place, with the
+    schema and ts normalization of the batch loader (``load_table``)."""
     apply_runtime_conf(spark)
-    schema = _events_schema(spark, f"{sf_dir.rstrip('/')}/events.parquet")
-    reader = spark.readStream.schema(schema)
+    # a glob matching only the table: the file source requires a plain
+    # path to be a directory, and testdata keeps every table as one file
+    # in a shared dir (a table directory matches the glob too)
+    src = f"{sf_dir.rstrip('/')}/event[s].parquet"
+    reader = spark.readStream.schema(spark.read.parquet(src).schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # the file stream source wants a DIRECTORY; testdata keeps every table
-    # in one dir, so stage a per-table symlink dir (no data copied). In
-    # production the source is simply the table's own directory.
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(src.encode()).hexdigest()[:8]
-    stage = os.path.join(tempfile.gettempdir(), f"logstream-events-{tag}")
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    df = reader.parquet(stage)
-    if isinstance(schema["ts"].dataType, LongType):
-        # integer division first: the ns value exceeds double precision
-        df = df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    else:
-        df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return df
+    return normalize_nano_ts(reader.parquet(src), "events")
 
 
 def windowed_volume(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

@@ -41,7 +41,7 @@ def _us(h: int, m: int) -> int:
     return 1_704_067_200_000_000 + (h * 3600 + m * 60) * 1_000_000
 
 
-def _run(spark, slices, schema):
+def _run(spark, slices):
     from logstream_processing_service_spark.streaming.drive import (
         run_deterministic_batches,
     )
@@ -54,9 +54,7 @@ def _run(spark, slices, schema):
             .select("k", "event_id")
         )
 
-    cap = run_deterministic_batches(
-        spark, slices, schema, xform, output_mode="append"
-    )
+    cap = run_deterministic_batches(spark, slices, xform, output_mode="append")
     return sorted((r["k"], r["event_id"], r["_batch"]) for r in cap.collect())
 
 
@@ -86,7 +84,7 @@ def test_ddww_semantics_probe(spark):
             (_us(5, 0), "z", 34),   # rule 4: late (< 07:00) → dropped
         ]),
     ]
-    got = _run(spark, slices, schema)
+    got = _run(spark, slices)
     want = [
         ("a", 13, 0), ("a", 33, 2), ("hi", 14, 0), ("pad", 22, 1),
         ("w", 2, 0), ("x", 11, 0), ("y", 12, 0), ("y", 32, 2),

@@ -64,7 +64,7 @@ def test_state_carries_across_batches(spark):
         for rows in (rows_b0, rows_b1, rows_b2)
     ]
     captured = run_deterministic_batches(
-        spark, slices, "key string", ewma_volume_stream_key, "append"
+        spark, slices, ewma_volume_stream_key, "append"
     )
     final = {r["key"]: r for r in
              last_batch_per_key(captured, "key").collect()}

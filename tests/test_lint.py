@@ -144,3 +144,22 @@ def test_file_moves_stay_in_the_sink_verbs():
             if (rel, None) not in _MOVERS and (rel, scope) not in _MOVERS:
                 offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
     assert not offenders, "file move outside the sink verbs:\n" + "\n".join(offenders)
+
+
+def test_stream_twins_import_the_harness_at_module_level():
+    """perfbench's traced run wraps ``queries_streaming.run_deterministic_batches``
+    by patching the module attribute; a twin that imports the harness
+    inside its body binds the unwrapped function and escapes the trace."""
+    py = PKG / "queries_streaming.py"
+    tree = ast.parse(py.read_text(), filename=str(py))
+    offenders = [
+        f"{py.name}:{node.lineno} in {fn.name}"
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for node in ast.walk(fn)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        and any(a.name == "run_deterministic_batches" for a in node.names)
+    ]
+    assert not offenders, (
+        "function-local import of run_deterministic_batches:\n" + "\n".join(offenders)
+    )

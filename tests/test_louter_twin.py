@@ -89,7 +89,6 @@ def test_louter_semantics_probe(spark):
     captured = run_deterministic_batches(
         spark,
         slices,
-        schema,
         lambda s: correlated_pairs_stream(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
             watermark="2 hours",
@@ -165,7 +164,6 @@ def test_fouter_right_eviction_probe(spark):
     captured = run_deterministic_batches(
         spark,
         slices,
-        schema,
         lambda s: correlated_pairs_stream(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
             watermark="2 hours",
@@ -240,7 +238,6 @@ def test_router_right_arm_only(spark):
     captured = run_deterministic_batches(
         spark,
         slices,
-        schema,
         lambda s: correlated_pairs_stream(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
             watermark="2 hours",

@@ -637,11 +637,13 @@ def test_stream_stream_interval_join_matches_batch(spark, tmpdir):
     assert got == want > 0
 
 
-def test_run_deterministic_batches_empty_output_is_materialized(spark):
+def test_run_deterministic_batches_empty_output_is_materialized(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r5: a transform that emits zero rows must return a frame
     that survives the harness's temp-dir cleanup (the old lazy
     `.limit(0)` over the deleted capture dir failed on any later
-    action)."""
+    action). No slices at all is an error: there is no stream schema."""
     from pyspark.sql import functions as F
 
     from logstream_processing_service_spark.streaming.drive import (
@@ -656,10 +658,14 @@ def test_run_deterministic_batches_empty_output_is_materialized(spark):
     captured = run_deterministic_batches(
         spark,
         slices,
-        schema,
         lambda s: s.filter(F.col("v") > 100),  # filters everything out
         output_mode="append",
     )
     # any action after return must work — the frame is local, not a scan
     assert captured.count() == 0
     assert set(captured.columns) == {"k", "v", "_batch"}
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with pytest.raises(ValueError):
+        run_deterministic_batches(spark, [], lambda s: s, output_mode="append")
+    assert not any(tmp_path.iterdir())  # raised before any temp dir

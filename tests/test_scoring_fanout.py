@@ -209,3 +209,31 @@ def test_stream_scores_like_the_slice_driver(spark, trained, tmp_path):
     assert out["scored"] > 0 and out["incidents"] == len(want["incidents"])
     assert bare_id not in {r[0] for r in want["log_embeddings"]}
     assert _service_state(spark, stream_dir) == want
+
+
+def test_events_stream_reads_the_table_in_place(spark, tmp_path, monkeypatch):
+    """The events stream reads the table where it lies: it stages nothing
+    in the temp dir, has the batch loader's columns and types, and streams
+    every row."""
+    import tempfile
+
+    from logstream_processing_service_spark.sources import load_table
+    from logstream_processing_service_spark.streaming.pipeline import (
+        read_events_stream,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stream = read_events_stream(spark, SF_DIR)
+    assert not any(tmp_path.iterdir())
+    batch = load_table(spark, SF_DIR, "events")
+    assert stream.dtypes == batch.dtypes
+
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("events_in_place")
+        .option("checkpointLocation", str(tmp_path / "_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert spark.table("events_in_place").count() == batch.count()

@@ -51,7 +51,6 @@ def test_watermark_one_batch_lag_probe(spark):
     captured = run_deterministic_batches(
         spark,
         slices,
-        schema,
         lambda s: windowed_volume(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
             watermark="2 hours",
@@ -114,7 +113,6 @@ def _run_join_probe(spark, max_row_type: str) -> list[tuple[int, int]]:
     captured = run_deterministic_batches(
         spark,
         slices,
-        schema,
         lambda s: correlated_pairs_stream(
             s.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
             watermark="2 hours",
