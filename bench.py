@@ -259,7 +259,7 @@ EAGER_BUILD = {n for n in HEADLINE if n.endswith("_twin") or "registry" in n} | 
     "ann_recall_report",   # HNSW build + IVF probes at fn() time
     "ann_pq",              # PQ codebook training + query collect at fn() time
     "bloom_point_lookup",  # staging write + bloom build at fn() time
-    "part_pagerank",       # 8 localCheckpoint power iterations at fn() time
+    "part_pagerank",       # |V| count job at fn() time, then 8 cut power steps
     "bpe_token_counts",    # BPE merge-training loop at fn() time
     "unigram_token_counts",   # unigram-LM EM loop at fn() time
     "wordpiece_token_counts", # WordPiece merge training at fn() time

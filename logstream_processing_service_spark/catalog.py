@@ -600,94 +600,6 @@ _PRIORITY_R6: tuple[str, ...] = (
 )
 
 
-# Retired r5 window, kept for the displacement-rationale record the
-# VERDICT audits (catalog.py is the canonical place these lived):
-_PRIORITY_R5: tuple[str, ...] = (
-    # ------------------------------------------------------------------
-    # ROUND-5 WINDOW (r4 VERDICT "Next round" #1): freshness rotation.
-    # (a) all 29 queries whose latest driver row is from r1 — their only
-    # rows predate the r2 decimal/representation harness fixes; plans
-    # unchanged, locally parity-green every round, but the driver record
-    # is 4 rounds old. This closes the r1-stale debt COMPLETELY.
-    "scan_slice", "log_templates", "batch_volume", "decayed_volume",
-    "distinct_actors", "distinct_actors_approx", "volume_zscore",
-    "value_counts_topk", "volume_history_window", "value_percentiles",
-    "value_percentiles_approx", "value_histogram", "hourly_volume",
-    "crosstab_counts", "cube_volume", "watermark_bounds",
-    "upsert_append_dedup", "keyed_overwrite", "revenue_by_nation",
-    "top_quarter_suppliers", "first_order_per_customer",
-    "orders_with_error_events", "national_market_share",
-    "idle_rich_customers", "customers_without_orders",
-    "small_quantity_part_revenue", "priority_order_counts",
-    "events_in_windows", "pattern_mining_incremental",
-    # (b) NEW in r5 (first driver row required — never-checked debt stays
-    # zero): the stateful-streaming twins (the last §2 region with no
-    # driver rows, r4 VERDICT #5) and the deterministic-threshold CCNet
-    # bucketing (r4 VERDICT #7).
-    "count_window_stream_twin", "decayed_volume_stream_twin",
-    "denstream_stream_twin", "perplexity_buckets_exact",
-    "json_shred_profile", "ann_hnsw", "ann_ivf_hnsw",
-    "matview_refresh_twin", "windowed_volume_stream_twin",
-    "session_volume_stream_twin", "drift_report", "constraint_report",
-    "audio_dominant_tone", "image_histogram_stats", "kn_trigram_pruned",
-    "mjpeg_frame_pixel_stats",
-    # r5-changed but NOT re-slotted (the r4 shard_assignment precedent —
-    # behavior-neutral at the driver's scale, latest rows green, local
-    # parity re-checks every round): bpe_token_counts (trainer moved
-    # driver-side, exact-parity-tested vs the old loop's reference),
-    # rag_chunk_search (alias guard cannot fire below 1024 chunks),
-    # snapshot_timetravel_twin (manifests gained a HWM field the query
-    # does not read).
-    # (c) backfill from the r2-latest set (34 queries, 17 slots — the
-    # rest resume in r6), leading with the LLM-pipeline operators the
-    # r4 VERDICT named:
-    "dedup_minhash_lsh", "nearest_centroid", "anomaly_flags",
-    # dedup_exact displaced for the r5-new kn_trigram_pruned: exact
-    # hash-groupBy dedup is the degenerate case of the in-window
-    # dedup_minhash_lsh pipeline and keeps its r2-green row; resumes
-    # rotation in r6.
-    # dedup_simhash displaced for the r5-new image_histogram_stats: its
-    # hamming-band machinery shares the shingle pipeline with the
-    # in-window dedup_minhash_lsh and keeps its r2-green row; resumes
-    # rotation in r6.
-    # dedup_ngram_jaccard displaced for the r5-new audio_dominant_tone:
-    # its shingle-set machinery is the same pipeline the in-window
-    # dedup_minhash_lsh executes (shared shingle stream + verify);
-    # resumes rotation in r6.
-    # embedding_near_dup displaced for the r5-new constraint_report:
-    # its brute-force cosine pair machinery is exercised by the
-    # in-window ann_bruteforce and the r3-green embedding_near_dup_lsh;
-    # resumes rotation in r6.
-    "ann_bruteforce",
-    # ann_ivf displaced for the r5-new drift_report: the identical IVF
-    # coarse+fine join machinery runs inside the in-window ann_ivf_hnsw;
-    # resumes rotation in r6.
-    # kmeans_refit_assign displaced for the r5-new
-    # session_volume_stream_twin: it is a rows-only signal whose k-means
-    # assignment machinery is exercised by the in-window oracle-paired
-    # nearest_centroid; resumes rotation in r6.
-    # standardize_value displaced for the r5-new
-    # windowed_volume_stream_twin: its avg/stddev scaling aggregates are
-    # exercised by the in-window volume_zscore; resumes rotation in r6.
-    # onehot_event_type displaced for the r5-new matview_refresh_twin:
-    # its conditional-aggregation pivot shape is exercised by the
-    # in-window crosstab_counts (A7); resumes rotation in r6.
-    "language_id",
-    # text_quality displaced for the r5-new mjpeg_frame_pixel_stats: its
-    # zero-shuffle ratio projections are shared expression builders with
-    # the r4-green quality_feature_matrix (single-scan plan pin) and the
-    # in-window language_id scans the same text; resumes rotation in r6.
-    # token_counts and doc_fingerprints displaced for the r5-new
-    # ann_hnsw / ann_ivf_hnsw: their words()/md5 machinery is exercised
-    # by the in-window language_id/text_quality and dedup_* queries;
-    # both resume rotation in r6.
-    # train_test_split displaced for the r5-new json_shred_profile: its
-    # md5-threshold split machinery is r4-green via leakage_safe_split
-    # and curate_corpus (both run the same split_bucket SQL); resumes
-    # rotation in r6
-)
-
-
 def all_specs() -> list[QuerySpec]:
     # import registers the decorated functions in each module
     from . import queries_relational  # noqa: F401

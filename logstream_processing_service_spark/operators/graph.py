@@ -9,9 +9,10 @@ catalog data).
 Scale design: each iteration is ONE edge→rank equi-join plus ONE dst-keyed
 aggregation — the Pregel message-passing step expressed relationally, so
 Catalyst/AQE handle skew and the edge frame partitioning is reused across
-iterations (persisted once). Ranks are localCheckpoint()ed per iteration:
-the lineage would otherwise grow by a join+agg per step and replan from
-scratch (the same discipline as dedup.connected_components and bpe_train).
+iterations (persisted once). Ranks are cut per iteration
+(session.cut_lineage): the lineage would otherwise grow by a join+agg per
+step and replan from scratch (the same discipline as
+dedup.connected_components).
 Damping handles rank mass exactly because the co-order graph is
 undirected (every node has out-degree >= 1; no dangling-mass term).
 """
@@ -20,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import cut_lineage
 
 DAMPING = 0.85
 N_ITER = 8
@@ -64,102 +67,14 @@ def pagerank(
     damping: float = DAMPING,
     symmetric: bool = False,
 ) -> DataFrame:
-    """PageRank over a directed edge list by ``n_iter`` power-iteration
-    steps from the uniform start. Returns (node, degree, rank_scaled)
-    where rank_scaled = rank x |V| rounded at 6 dp (x|V| keeps the
-    magnitudes comparable across graph sizes).
-
-    Every node must have out-degree >= 1 (true for any symmetrized edge
-    list); dangling-node redistribution is intentionally out of scope and
-    guarded by construction here.
-
-    ``symmetric=True`` additionally asserts every node has IN-degree >= 1
-    (also true for any symmetrized edge list): then the per-iteration
-    contrib aggregate already contains every node, and the
-    nodes⋈contrib left join that re-attaches zero-in-mass nodes is
-    skipped — each iteration becomes exactly ONE exchange (the dst-keyed
-    message aggregation), the relational Pregel floor (guide §2.4). A
-    node with no in-edges would be silently dropped under this flag, so
-    only set it for symmetrized inputs; results are bit-identical there
-    (in_mass is never NULL, so the coalesce was a no-op).
-
-    Lineage is cut per iteration with ``localCheckpoint(eager=False)``;
-    an r14 A/B measured fusing two power steps per cut SLOWER here
-    (median 7.34 s vs 6.76 s with caches kept — the lazy-checkpoint
-    chain materializes tighter with one join+agg per cut), so the
-    per-iteration cut stays. ``localCheckpoint`` keeps iteration state
-    in executor-local blocks
-    with truncated lineage and NO recompute fallback: fine for the local
-    bench; on a real cluster swap in reliable ``checkpoint()`` (with
-    ``setCheckpointDir``) so an executor loss mid-power-iteration can
-    recompute instead of failing the job."""
-    # cache: caller-owned (repo contract — bench/driver clear per query)
-    edges = edges.persist()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # cache: caller-owned (repo contract — bench/driver clear per query)
-    nodes = deg.select(F.col("src").alias("node"), "outdeg").persist()
-    n = nodes.count()  # scalar: |V| (bounded — node-list cardinality)
-    if n == 0:
-        # empty edge list (e.g. every pair fell under a weight floor):
-        # the uniform start 1/n is undefined — return the empty result
-        # frame instead of a driver-side ZeroDivisionError
-        edges.unpersist()
-        return nodes.select(
-            "node",
-            F.col("outdeg").cast("bigint").alias("degree"),
-            F.lit(0.0).alias("rank_scaled"),
-        )
-    # outdeg is STATIC across iterations: attach it to the edge list once
-    # (guide §2.4 — don't re-establish the same join every step) instead of
-    # re-joining ranks⋈nodes per iteration; share = rank/outdeg is the same
-    # float64 per edge either way.
-    # cache: caller-owned (repo contract — bench/driver clear per query)
-    edeg = edges.join(
-        nodes.select(F.col("node").alias("src"), "outdeg"), "src"
-    ).persist()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for it in range(n_iter):
-        contrib = (
-            edeg.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("in_mass"))
-        )
-        if symmetric:
-            # every node receives mass: derive the next rank frame from
-            # contrib directly — no re-attachment join (see docstring)
-            nxt = contrib.select(
-                F.col("dst").alias("node"),
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("in_mass")
-                ).alias("rank"),
-            )
-        else:
-            nxt = (
-                nodes.select("node")
-                .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-                .select(
-                    "node",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-        ranks = nxt.localCheckpoint(eager=False)
-    # NOTE: edges/edeg are intentionally NOT unpersisted here — the whole
-    # iteration chain is lazy (localCheckpoint(eager=False)), so the
-    # caches first materialize at the CALLER's action and an in-function
-    # unpersist would drop them before they were ever used (each
-    # materialization job would then re-derive the edges⋈outdeg subtree).
-    # Cache lifecycle is caller-owned (repo contract — bench/driver clear
-    # per query).
-    return ranks.join(nodes, "node").select(
-        "node",
-        F.col("outdeg").cast("bigint").alias("degree"),
-        F.round(F.col("rank") * n, 6).alias("rank_scaled"),
-    )
+    """PageRank over a directed edge list (src, dst): the unit-weight case
+    of :func:`weighted_pagerank` (a node shares its rank equally over its
+    out-edges). Returns (node, degree, rank_scaled) with degree = out-degree
+    (BIGINT) and rank_scaled = rank x |V| rounded at 6 dp (x|V| keeps the
+    magnitudes comparable across graph sizes)."""
+    return weighted_pagerank(
+        edges.withColumn("w", F.lit(1).cast("bigint")), n_iter, damping, symmetric
+    ).withColumnRenamed("strength", "degree")
 
 
 def pagerank_oracle_sql(n_iter: int = N_ITER, damping: float = DAMPING) -> str:
@@ -216,23 +131,31 @@ def weighted_pagerank(
     damping: float = DAMPING,
     symmetric: bool = False,
 ) -> DataFrame:
-    """PageRank over a WEIGHTED directed edge list (src, dst, w): each
-    node distributes its rank proportionally to outgoing edge weight —
-    the update rule of TextRank (Mihalcea & Tarau 2004, eq. 2). Same
-    per-iteration shape as pagerank(): ONE edge→rank equi-join + ONE
-    dst-keyed aggregation, persisted edges, localCheckpoint per step.
+    """PageRank over a WEIGHTED directed edge list (src, dst, w) by
+    ``n_iter`` power-iteration steps from the uniform start: each node
+    distributes its rank proportionally to outgoing edge weight — the
+    update rule of TextRank (Mihalcea & Tarau 2004, eq. 2). Each step is
+    ONE edge→rank equi-join plus ONE dst-keyed aggregation over the
+    persisted edges, and lineage is cut once per step
+    (``session.cut_lineage``). An r14 A/B measured fusing two power
+    steps per cut slower (median 7.34 s vs 6.76 s): the chain materializes
+    tighter with one join+agg per cut.
 
     Returns (node, strength, rank_scaled): strength = Σ outgoing w
     (BIGINT — callers pass integer co-occurrence counts), rank_scaled =
     rank × |V| at 6 dp. Every node must have out-strength ≥ 1 (true for
-    any symmetrized edge list).
+    any symmetrized edge list); dangling-node redistribution is
+    intentionally out of scope and guarded by construction here.
 
-    ``symmetric=True``: same contract and same one-exchange-per-iteration
-    effect as :func:`pagerank` — every node must also RECEIVE mass (true
-    for symmetrized edge lists); bit-identical results there. Same
-    per-iteration lineage cut and caller-owned cache lifecycle as
-    :func:`pagerank` (see its docstring; production swaps
-    ``localCheckpoint`` for reliable ``checkpoint()``)."""
+    ``symmetric=True`` additionally asserts every node has IN-degree >= 1
+    (also true for any symmetrized edge list): then the per-iteration
+    contrib aggregate already contains every node, and the
+    nodes⋈contrib left join that re-attaches zero-in-mass nodes is
+    skipped — each iteration becomes exactly ONE exchange (the dst-keyed
+    message aggregation), the relational Pregel floor (guide §2.4). A
+    node with no in-edges would be silently dropped under this flag, so
+    only set it for symmetrized inputs; results are bit-identical there
+    (in_mass is never NULL, so the coalesce was a no-op)."""
     # cache: caller-owned (repo contract — bench/driver clear per query)
     edges = edges.persist()
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
@@ -240,16 +163,18 @@ def weighted_pagerank(
     nodes = outw.select(F.col("src").alias("node"), "outw").persist()
     n = nodes.count()  # scalar: |V| (node-list cardinality, bounded)
     if n == 0:
-        # same empty-graph contract as pagerank(): a weight floor can
-        # legitimately drain the edge list — return empty, don't divide
+        # empty edge list (e.g. every pair fell under a weight floor):
+        # the uniform start 1/n is undefined — return the empty result
+        # frame instead of a driver-side ZeroDivisionError
         edges.unpersist()
         return nodes.select(
             "node",
             F.col("outw").cast("bigint").alias("strength"),
             F.lit(0.0).alias("rank_scaled"),
         )
-    # same static-join hoist as pagerank(): outw never changes, so it
-    # rides the persisted edge frame instead of a per-iteration join.
+    # outw is STATIC across iterations: attach it to the edge list once
+    # (guide §2.4 — don't re-establish the same join every step) instead of
+    # re-joining ranks⋈nodes per iteration.
     # cache: caller-owned (repo contract — bench/driver clear per query)
     edeg = edges.join(
         nodes.select(F.col("node").alias("src"), "outw"), "src"
@@ -266,7 +191,8 @@ def weighted_pagerank(
             )
         )
         if symmetric:
-            # every node receives mass: no re-attachment join (docstring)
+            # every node receives mass: derive the next rank frame from
+            # contrib directly — no re-attachment join (see docstring)
             nxt = contrib.select(
                 F.col("dst").alias("node"),
                 (
@@ -287,10 +213,13 @@ def weighted_pagerank(
                     ).alias("rank"),
                 )
             )
-        ranks = nxt.localCheckpoint(eager=False)
-    # edges/edeg stay persisted for the caller's action (see pagerank —
-    # cache lifecycle is caller-owned; an in-function unpersist dropped
-    # the caches before the lazy chain ever materialized them).
+        ranks = cut_lineage(nxt)
+    # NOTE: edges/edeg are intentionally NOT unpersisted here — with the
+    # local cut the whole iteration chain is lazy, so the caches first
+    # materialize at the CALLER's action and an in-function unpersist
+    # would drop them before they were ever used (each materialization
+    # job would then re-derive the edges⋈outw subtree). Cache lifecycle
+    # is caller-owned (repo contract — bench/driver clear per query).
     return ranks.join(nodes, "node").select(
         "node",
         F.col("outw").cast("bigint").alias("strength"),
@@ -298,12 +227,7 @@ def weighted_pagerank(
     )
 
 
-def incremental_components(
-    spark,
-    assign_dir: str,
-    new_edges: DataFrame,
-    reliable: bool = False,
-) -> int:
+def incremental_components(spark, assign_dir: str, new_edges: DataFrame) -> int:
     """Incrementally maintain a connected-components assignment table
     (node, label; label = min reachable node id — the dedup_clusters
     canonical-id contract) under EDGE-BATCH arrivals, via contraction:
@@ -351,7 +275,7 @@ def incremental_components(
         )
     # edges inside one existing component contract to self-loops: drop
     contracted = e.filter(F.col("d1") != F.col("d2"))
-    cc = connected_components(contracted, reliable=reliable)
+    cc = connected_components(contracted)
     if assign is None:
         return TX.commit(assign_dir, cc)
 
@@ -413,17 +337,16 @@ def label_propagation(
     co-occurrence graph actually has.
 
     Scale: one join + one (dst, label) aggregate + one argmax window
-    per iteration, all bounded by |edges|; labels localCheckpoint per
-    step so the plan does not grow with n_iter.
+    per iteration, all bounded by |edges|; labels are cut per step so
+    the plan does not grow with n_iter.
     """
     from pyspark.sql import Window
 
     # cache: caller-owned (repo contract — bench/driver clear per query)
     edges = edges.persist()
-    labels = (
+    labels = cut_lineage(
         edges.select(F.col("src").alias("node")).distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
     )
     for _ in range(n_iter):
         mass = (
@@ -439,13 +362,11 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select(F.col("dst").alias("node"), F.col("label").alias("nl"))
         )
-        labels = (
-            labels.join(pick, "node", "left")
-            .select(
+        labels = cut_lineage(
+            labels.join(pick, "node", "left").select(
                 "node",
                 F.coalesce(F.col("nl"), F.col("label")).alias("label"),
             )
-            .localCheckpoint()
         )
     wsz = Window.partitionBy("label")
     return labels.select(
@@ -576,8 +497,8 @@ def kcore_decomposition(
     rather than returning a non-fixpoint (the connected_components
     convention), and the oracle unrolls the same bound (a converged core
     is stable under extra peels, so equal bounds give equal answers).
-    Each round materializes via localCheckpoint to truncate the
-    iterative lineage.
+    Each round's lineage is cut, and its edge ``count()`` is the job that
+    materializes it.
     """
     def one_peel(frame: DataFrame) -> DataFrame:
         # One peel step, shared by the loop body and the convergence
@@ -592,11 +513,11 @@ def kcore_decomposition(
             keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
 
-    cur = edges.select("src", "dst").localCheckpoint(eager=True)
+    cur = cut_lineage(edges.select("src", "dst"))
     prev_edges = cur.count()
     converged = False
     for _ in range(max_iters):
-        nxt = one_peel(cur).localCheckpoint(eager=True)
+        nxt = cut_lineage(one_peel(cur))
         n = nxt.count()
         cur = nxt
         if n == prev_edges:
@@ -607,7 +528,7 @@ def kcore_decomposition(
         # All max_iters peels strictly shrank — the result may STILL be
         # the fixpoint (peel depth exactly max_iters). One extra
         # convergence probe: count what a further peel would keep,
-        # WITHOUT checkpointing it. Equal → cur is stable and matches
+        # WITHOUT cutting it. Equal → cur is stable and matches
         # the oracle's max_iters-level unroll; smaller → genuinely
         # deeper than the bound, raise. This makes the usable peel
         # depth exactly max_iters, same as documented and unrolled.

@@ -617,7 +617,7 @@ def textrank_keywords(
 
     Composition: cooccurrence_edges (vocab-grain, in-row pair
     formation) → graph.weighted_pagerank (one join + one agg per
-    iteration, checkpointed) → TakeOrdered top-k. The iteration cost is
+    iteration, lineage cut per step) → TakeOrdered top-k. The iteration cost is
     |edges| ≈ |bigram vocab|, independent of corpus size once the
     count table is built — the property that makes TextRank viable at
     100 TB where per-document graphs would not be.

@@ -13,6 +13,7 @@ from .functions import text as T
 from .operators import dedup as D
 from .operators import sampling as S
 from .operators import textanalysis as TA
+from .session import cut_lineage
 
 _H_TEXT = T.hash48_sql("text")
 _H_WD = T.hash48_sql("wd")
@@ -198,7 +199,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_components_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster maintenance under ingest (graph.py
     incremental_components): the verified near-dup pair list is computed
-    ONCE (checkpointed — the same edge-list discipline dedup_clusters
+    ONCE (lineage cut — the same edge-list discipline dedup_clusters
     uses), sliced into 3 arrival batches by the NEWER doc's id, and
     folded into a txlog-backed assignment by contraction — per batch,
     CC runs only on the contracted delta plus one linear remap, never on
@@ -211,9 +212,9 @@ def q_components_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from .operators.graph import incremental_components, serve_components
 
-    pairs = D.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.8
-    ).localCheckpoint(eager=True)
+    pairs = cut_lineage(
+        D.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
+    )
     d = tempfile.mkdtemp(prefix="cc-assign-")
     for b in range(3):
         incremental_components(

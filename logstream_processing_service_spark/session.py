@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Conf that must hold on ANY session running this engine (including a session
 # created by an external driver) — all runtime-settable.
@@ -82,3 +82,24 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return apply_runtime_conf(spark)
+
+
+def cut_lineage(df: DataFrame) -> DataFrame:
+    """Truncate ``df``'s lineage between rounds of an iterative operator.
+
+    This is the engine's one lineage-cut policy; the session decides it:
+
+    - With a checkpoint dir set on the context (``spark.checkpoint.dir``
+      or ``setCheckpointDir``), the cut is a reliable
+      ``checkpoint(eager=True)``. Rounds land in that storage and survive
+      executor loss. It stays eager because a lazy reliable checkpoint
+      recomputes the round to write it.
+    - Otherwise the cut is ``localCheckpoint(eager=False)``: executor-local
+      blocks with no recompute fallback, and no job of its own. The next
+      action over the frame computes the round and keeps its blocks in the
+      same job, so callers make that action a full one (``count()``, not a
+      ``limit``/``take`` probe that leaves partitions uncomputed).
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=False)

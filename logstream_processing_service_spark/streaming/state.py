@@ -315,7 +315,7 @@ def _decay_apply_fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState)
 
 
 def decayed_volume_stream(
-    df: DataFrame, key_col: str = "event_type", use_tws: bool | None = None
+    df: DataFrame, key_col: str = "event_type"
 ) -> DataFrame:
     """Fading volume per key over a stream with columns (key_col, ts_us).
 
@@ -325,9 +325,7 @@ def decayed_volume_stream(
     to applyInPandasWithState where the TWS python runtime (protobuf) is
     unavailable. Both paths share decay_step, so semantics are identical.
     """
-    if use_tws is None:
-        use_tws = has_transform_with_state_runtime()
-    if use_tws:
+    if has_transform_with_state_runtime():
         return df.groupBy(key_col).transformWithStateInPandas(
             statefulProcessor=DecayedVolumeProcessor(),
             outputStructType=DECAY_OUTPUT_SCHEMA,

@@ -29,13 +29,11 @@ def test_bm25_incremental_hash_matches_batch_oracle(spark, sf_dir):
     assert r["status"] == "OK", r
 
 
-def test_delta_commit_writes_only_delta_postings(spark):
+def test_delta_commit_writes_only_delta_postings(spark, tmp_path):
     """The append commit must carry ONLY the delta docs' postings (the
     incremental contract: delta cost never re-tokenizes the base) —
     checked via the manifest file lists: v1 adds files, keeps v0's, and
     the v1-only files contain exactly the delta docs' posting rows."""
-    import shutil
-
     from logstream_processing_service_spark.operators.retrieval import (
         bm25_incremental_index,
         doc_tf,
@@ -44,8 +42,7 @@ def test_delta_commit_writes_only_delta_postings(spark):
     from logstream_processing_service_spark.sources import load_table
     from pyspark.sql import functions as F
 
-    t = "/tmp/logstream_bm25_inc_unit"
-    shutil.rmtree(t, ignore_errors=True)
+    t = str(tmp_path / "registry")
     docs = load_table(spark, SF_DIR, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
@@ -65,20 +62,17 @@ def test_delta_commit_writes_only_delta_postings(spark):
     assert merged.count() == doc_tf(base).count() + expect.count()
 
 
-def test_merged_stats_derive_not_stale(spark):
+def test_merged_stats_derive_not_stale(spark, tmp_path):
     """df/N/avgdl are derived from the merged postings, so a doc-count
     probe through bm25_topk must see the FULL corpus N — guard against
     the stored-stats staleness class."""
-    import shutil
-
     from logstream_processing_service_spark.operators.retrieval import (
         bm25_incremental_index,
     )
     from logstream_processing_service_spark.sources import load_table
     from pyspark.sql import functions as F
 
-    t = "/tmp/logstream_bm25_inc_unit2"
-    shutil.rmtree(t, ignore_errors=True)
+    t = str(tmp_path / "registry")
     docs = load_table(spark, SF_DIR, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)

@@ -105,29 +105,34 @@ _MOVERS = {
 }
 
 
-def _file_moves(tree: ast.AST):
-    """Yield (lineno, enclosing qualname) for every ``os.rename`` /
-    ``os.replace`` reference, and for any import of either from ``os``."""
+def _scoped(tree: ast.AST, hit):
+    """Yield (lineno, enclosing qualname) for every node where ``hit(node)``."""
 
     def walk(node, scope):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 yield from walk(child, f"{scope}.{child.name}" if scope else child.name)
                 continue
-            if (
-                isinstance(child, ast.Attribute)
-                and child.attr in ("rename", "replace")
-                and isinstance(child.value, ast.Name)
-                and child.value.id == "os"
-            ) or (
-                isinstance(child, ast.ImportFrom)
-                and child.module == "os"
-                and any(a.name in ("rename", "replace") for a in child.names)
-            ):
+            if hit(child):
                 yield child.lineno, scope
             yield from walk(child, scope)
 
     yield from walk(tree, "")
+
+
+def _is_file_move(node: ast.AST) -> bool:
+    """An ``os.rename`` / ``os.replace`` reference, or an import of either
+    from ``os``."""
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr in ("rename", "replace")
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "os"
+    ) or (
+        isinstance(node, ast.ImportFrom)
+        and node.module == "os"
+        and any(a.name in ("rename", "replace") for a in node.names)
+    )
 
 
 def test_file_moves_stay_in_the_sink_verbs():
@@ -140,7 +145,7 @@ def test_file_moves_stay_in_the_sink_verbs():
     for py in sorted(PKG.rglob("*.py")):
         rel = py.relative_to(PKG).as_posix()
         tree = ast.parse(py.read_text(), filename=str(py))
-        for lineno, scope in _file_moves(tree):
+        for lineno, scope in _scoped(tree, _is_file_move):
             if (rel, None) not in _MOVERS and (rel, scope) not in _MOVERS:
                 offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
     assert not offenders, "file move outside the sink verbs:\n" + "\n".join(offenders)
@@ -163,3 +168,26 @@ def test_stream_twins_import_the_harness_at_module_level():
     assert not offenders, (
         "function-local import of run_deterministic_batches:\n" + "\n".join(offenders)
     )
+
+
+def _is_lineage_cut(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("checkpoint", "localCheckpoint")
+    )
+
+
+def test_lineage_cuts_go_through_the_session_policy():
+    """Whether a cut is reliable or local is decided once, by
+    ``session.cut_lineage`` from the session's checkpoint dir. A direct
+    ``checkpoint`` / ``localCheckpoint`` call elsewhere re-decides it and
+    ignores a checkpoint dir the operator of the cluster has set."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for lineno, scope in _scoped(tree, _is_lineage_cut):
+            if (rel, scope) != ("session.py", "cut_lineage"):
+                offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
+    assert not offenders, "lineage cut outside session.cut_lineage:\n" + "\n".join(offenders)
