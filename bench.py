@@ -1,21 +1,32 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark the catalog's headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
+With no arguments, times every HEADLINE query once and prints ONE JSON line:
   {"metric": "...", "value": <total_sec>, "unit": "sec",
    "queries": {"<name>": sec, ...}, "sf": <sf>}
+and writes the same line to BENCH_full_latest.json ($SPARK_GRAFT_BENCH_OUT).
+
+  python bench.py name1 name2 ... [--reps N] [--sf DIR]
+times the named catalog queries N times in the given order, prints one JSON
+line per rep and then a line with each query's min and median, and writes
+no file: the before/after instrument for a change to a few operators.
 
 Each query is forced end-to-end with a noop-sink write (full computation,
-no result serialization to the driver skewing the number). For the
-EAGER_BUILD family (stream/registry twins, index builds, training loops)
-the fn() build itself is real work and runs inside the timed window —
-see the EAGER_BUILD note below (r12 VERDICT methodology fix, r13).
+no result serialization to the driver skewing the number). A query's fn()
+build is timed together with the write when fn() runs Spark work itself
+(stream/registry twins, index builds, training loops, iterative rounds):
+that work is part of the operator's cost. A pure plan's build, which only
+reads table metadata, stays outside the timer. ``time_query`` is the one
+place that applies this rule, and ``times_build`` names the timed builds.
+tools/scaling_study.py times its queries through the same function.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -245,15 +256,21 @@ HEADLINE = [
     "char_window_incremental_twin",
 ]
 
-# Queries whose fn(spark, sf_dir) call itself performs real execution work —
+# Queries whose fn(spark, sf_dir) call itself runs Spark jobs —
 # availableNow micro-batches, txlog registry commits, HNSW/PQ/bloom index
-# builds, vocab-grain training loops, driver-side greedy/MW iterations —
-# rather than pure lazy plan construction. r12 VERDICT methodology fix:
-# for these, the fn() build is the real cost of the operator, so it runs
-# INSIDE the timed window (build + noop-sink execution together). The one-time
-# timing discontinuity this creates for the twin/registry family is
-# annotated in BENCH_diff_r13.md rather than adjudicated as regression.
-EAGER_BUILD = {n for n in HEADLINE if n.endswith("_twin") or "registry" in n} | {
+# builds, vocab-grain training loops, driver-side greedy/MW iterations,
+# iterative graph rounds and driver collects of planning inputs — rather
+# than pure lazy plan construction. For these the fn() build is part of
+# the operator's cost, so it runs INSIDE the timed window (build +
+# noop-sink execution together); see ``time_query``.
+# tests/test_bench_protocol.py checks that every other HEADLINE query's
+# fn() submits no job beyond its parquet schema reads.
+def _stateful(name: str) -> bool:
+    """Stream twins drive micro-batches and registries commit in fn()."""
+    return name.endswith("_twin") or "registry" in name
+
+
+EAGER_BUILD = {n for n in HEADLINE if _stateful(n)} | {
     "ann_hnsw",            # HNSW graph build (driver-bounded) at fn() time
     "ann_ivf_hnsw",        # centroid HNSW build at fn() time
     "ann_recall_report",   # HNSW build + IVF probes at fn() time
@@ -266,30 +283,105 @@ EAGER_BUILD = {n for n in HEADLINE if n.endswith("_twin") or "registry" in n} | 
     "tokenizer_compare",      # trains all three tokenizers at fn() time
     "doremi_iterated",        # T=3 MW loop, domain-grain collects at fn() time
     "greedy_coverage_order",  # k greedy argmax collects at fn() time
+    # near-dup clusters: connected-components rounds, each cut + probed
+    "curate_corpus",
+    "dedup_keep_table",
+    "leakage_safe_split",
+    "quality_classifier_report",  # logistic-regression fit + AUC at fn() time
+    "textrank_keywords",   # |V| count + cut PageRank power steps at fn() time
+    "token_communities",   # cut label-propagation rounds at fn() time
+    "word_kcore",          # one count per k-core peel at fn() time
+    "association_rules",   # distinct-user count for the supports at fn() time
+    "decontaminate_bloom",  # bloom filter built by a collect at fn() time
+    "bloom_semi_join",      # bloom filter built by a collect at fn() time
+    "embedding_pca",       # PCA fit (dim probe + covariance collect) at fn() time
+    "shard_assignment",    # row count that sizes the shards at fn() time
 }
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+def times_build(name: str) -> bool:
+    """Whether ``time_query`` times ``name``'s fn() build: the EAGER_BUILD
+    names, plus any stream twin or registry query (catalog or not)."""
+    return name in EAGER_BUILD or _stateful(name)
+
+
+def time_query(spark, name: str, fn, sf_dir: str) -> float:
+    """Seconds for one catalog query, forced end to end through the noop
+    sink. A pure plan is built once outside the timer (that build reads
+    table metadata only); a build that runs Spark work (``times_build``)
+    is timed with the write."""
+    if times_build(name):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+    else:
+        df = fn(spark, sf_dir)
+        t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    elapsed = round(time.perf_counter() - t0, 3)
+    # operators persist() intermediate frames (shingle streams, stat
+    # frames); the cache lifecycle contract is CALLER-owned — drop them
+    # here so a long run doesn't accumulate dead cached frames that
+    # compete with shuffle/execution memory (each query builds fresh
+    # DataFrames, so there is never cross-query cache reuse to keep)
+    spark.catalog.clearCache()
+    return elapsed
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="catalog queries to time")
+    ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument(
+        "--sf",
+        default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+    )
+    args = ap.parse_args(argv)
+    if args.reps != 1 and not args.names:
+        ap.error("--reps times a named subset; the default run is one pass")
 
     from logstream_processing_service_spark.catalog import all_specs
     from logstream_processing_service_spark.session import get_spark
 
+    specs = {s.name: s for s in all_specs()}
+    unknown = [n for n in args.names if n not in specs]
+    if unknown:
+        ap.error(f"not catalog queries: {', '.join(unknown)}")
+
     spark = get_spark(app_name="logstream-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = {s.name: s for s in all_specs()}
 
     # JVM/codegen warm-up outside the timings: the first executed job pays
     # JIT compilation + parquet footer reads (~2-3s) that say nothing about
     # the plans under test
     from logstream_processing_service_spark.sources import load_table
 
-    load_table(spark, sf_dir, "lineitem").groupBy("l_returnflag").count().write.format(
+    load_table(spark, args.sf, "lineitem").groupBy("l_returnflag").count().write.format(
         "noop"
     ).mode("overwrite").save()
 
-    timings: dict[str, float] = {}
+    if args.names:
+        _time_subset(spark, specs, args.names, args.reps, args.sf)
+    else:
+        _time_headline(spark, specs, args.sf)
+    spark.stop()
+
+
+def _time_subset(spark, specs, names: list[str], reps: int, sf_dir: str) -> None:
+    """One JSON line per rep, then the per-query min and median."""
+    runs: dict[str, list[float]] = {n: [] for n in names}
+    for r in range(reps):
+        timings = {n: time_query(spark, n, specs[n].fn, sf_dir) for n in names}
+        for n, t in timings.items():
+            runs[n].append(t)
+        print(json.dumps({"rep": r, "queries": timings}), flush=True)
+    print(json.dumps({
+        "median": {n: round(statistics.median(v), 3) for n, v in runs.items()},
+        "min": {n: min(v) for n, v in runs.items()},
+    }), flush=True)
+
+
+def _time_headline(spark, specs, sf_dir: str) -> None:
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Pure-plan queries run FIRST, the EAGER_BUILD family last: the
     # eager twins' streaming micro-batches and registry builds leave the
     # shared local JVM with loaded state-store providers and GC pressure
@@ -302,26 +394,7 @@ def main() -> None:
     ordered = [n for n in HEADLINE if n not in EAGER_BUILD] + [
         n for n in HEADLINE if n in EAGER_BUILD
     ]
-    for name in ordered:
-        fn = specs[name].fn
-        if name in EAGER_BUILD:
-            # fn() drives micro-batches / builds registries / trains state:
-            # that IS the operator's cost — time build + execution together
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-        else:
-            # pure plan construction: one warm build to materialize table
-            # metadata outside the timing
-            df = fn(spark, sf_dir)
-            t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        # operators persist() intermediate frames (shingle streams, stat
-        # frames); the cache lifecycle contract is CALLER-owned — drop them
-        # here so a 49-query run doesn't accumulate dead cached frames that
-        # compete with shuffle/execution memory (each query builds fresh
-        # DataFrames, so there is never cross-query cache reuse to keep)
-        spark.catalog.clearCache()
+    timings = {n: time_query(spark, n, specs[n].fn, sf_dir) for n in ordered}
 
     total = round(sum(timings.values()), 3)
     line = json.dumps(
@@ -347,7 +420,6 @@ def main() -> None:
     )
     with open(out, "w") as f:
         f.write(line + "\n")
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -120,486 +120,6 @@ _PRIORITY: tuple[str, ...] = (
 )
 
 
-# Retired r12 window, kept for the displacement-rationale record the
-# VERDICT audits:
-_PRIORITY_R12: tuple[str, ...] = (
-    # ------------------------------------------------------------------
-    # ROUND-12 WINDOW (r11 VERDICT "Next round" #1+#3) — exactly the
-    # pre-computed r12 map, re-verified against the CORRECTNESS_r01-r11
-    # union at r12 start (histogram {r6:10, r7:50, r8:50, r9:50,
-    # r10:50, r11:50}, matching the map's assumption): (a) the 7
-    # rehearsed r12-queue registrations (first driver rows; all seven
-    # rehearsed green at both SFs in r11 through the compare harness —
-    # tests/test_bm25_incremental.py, tests/test_doremi.py,
-    # tests/test_affix_profile.py, tests/test_lcp_neighbor.py,
-    # tests/test_rho1.py, tests/test_source_coverage.py,
-    # tests/test_merkle.py; the r11-advice doremi micro-nat fix and the
-    # bm25 per-process-registry fix landed WITH regression tests before
-    # these registrations):
-    "bm25_incremental_twin", "doremi_domain_weights",
-    "shared_affix_profile", "lcp_neighbor_profile",
-    "rho1_token_selection", "source_coverage_report",
-    "merkle_integrity_diff",
-    # (b) the 10 remaining r6-latest queries (the r6 debt closes —
-    # after this round nothing is older than r7):
-    "text_quality", "tfidf_top_terms", "token_counts", "token_pmi",
-    "tokenizer_fertility", "top_tokens", "train_test_split",
-    "unigram_logprob", "volume_trend", "weekly_heavy_actors",
-    # (c) 33 backfills = the first 33 (alphabetical) of the 50 queries
-    # whose latest driver row is r7 (recomputed from the union this
-    # session — matches the r11 map verbatim). The 6th and 7th queue
-    # registrations displace the 34th/35th alphabetical slots:
-    # hll_rolling_distinct (its HLL registry machinery is exercised by
-    # the in-window distinct_actors_hll_registry) and
-    # large_volume_customers (its HAVING-on-sum aggregate is exercised
-    # by the in-window customer_order_stats and the r10-green
-    # top_quarter_suppliers family):
-    "ann_ivf_pq", "ann_ivfpq_index", "ann_pq", "audio_metadata",
-    "bigram_logprob", "bracketed_discount_revenue", "branch_wap_twin",
-    "c4_line_stats", "charclass_profile", "cheapest_supplier_per_part",
-    "clustering_quality", "compression_quality", "contamination_overlap",
-    "cross_source_dup_matrix", "customer_order_distribution",
-    "customer_order_stats", "dataset_card", "ddww_twin",
-    "decontaminate_bloom", "dedup_paragraphs", "dictionary_match_counts",
-    "distinct_actors_hll_registry", "doc_length_quartiles",
-    "dup_shingle_profile", "duplicate_spans", "embed_documents",
-    "embedding_int8_report", "embedding_near_dup_lsh", "fouter_twin",
-    "gif_frame_pixel_stats", "gopher_quality_report",
-    "grouping_sets_volume", "heavy_shippers_of_part_family",
-    # ------------------------------------------------------------------
-    # r13 map (pre-computed per the standing policy, assuming the r12
-    # driver run lands this window): the SEVEN rehearsed r13-queue
-    # entries (merkle_tree_update, bm25_delete_twin,
-    # greedy_coverage_order, doremi_iterated, lsh_incremental_twin,
-    # bm25_compaction_twin, char_window_incremental_twin — coordinates
-    # + exponents in ROADMAP's r13 queue; first driver rows), then the
-    # 17 remaining r7-latest queries (closes the r7 debt:
-    # hll_rolling_distinct, large_volume_customers,
-    # linestatus_priority_split, louter_twin, mad_anomaly,
-    # maxsim_search, maxsim_search_routed, pii_scan, pricing_summary,
-    # resample_daily_volume, seasonal_volume_decompose,
-    # textrank_keywords, token_communities, tokenizer_compare,
-    # unigram_token_counts, vocab_divergence, zipf_fit), then the first
-    # 26 (alphabetical) of the 50 r8-latest queries: activity_islands,
-    # actor_setops, ann_recall_report, asof_signup_before_error,
-    # association_rules, audio_pcm_stats, bloom_semi_join, bm25_search,
-    # bpe_token_counts, brand_priciest_part, bucketed_join_twin,
-    # chunk_documents, curate_corpus, curate_web_corpus,
-    # dedup_containment, dedup_keep_table, dedup_substrings,
-    # dsir_weights, embedding_drift_report, holt_winters_anomaly,
-    # holt_winters_daily, html_text_extract, kwic_snippets,
-    # merge_events_upsert, mmr_rerank, multimodal_features. The 24
-    # displaced r8 rows (nation_trade_volume ... wordpiece_token_counts,
-    # alphabetical) lead the r14 backfill. Any further queue
-    # registration beyond 7 displaces from the END of the r8 list with
-    # a named in-window rationale. Re-verify against the CORRECTNESS
-    # union at r13 start before registering.
-)
-
-
-# Retired r11 window, kept for the displacement-rationale record the
-# VERDICT audits:
-_PRIORITY_R11: tuple[str, ...] = (
-    # ------------------------------------------------------------------
-    # ROUND-11 WINDOW (r10 VERDICT "Next round" #1+#2) — exactly the
-    # pre-computed r11 map, re-verified against the CORRECTNESS_r01-r10
-    # union at r11 start (histogram {r5:3, r6:50, r7:50, r8:50, r9:50,
-    # r10:50}, matching the map's assumption): (a) the 7 rehearsed
-    # r11-queue registrations (first driver rows; all seven rehearsed
-    # green at both SFs in r10 through the compare harness —
-    # tests/test_char_windows.py, tests/test_manifest_diff.py,
-    # tests/test_prox_rerank.py, tests/test_retrieval_eval.py,
-    # tests/test_jaccard_sweep.py, tests/test_benford.py;
-    # jaccard_threshold_sweep registered in the SAMPLED form per the
-    # r10 verdict):
-    "char_window_dup_profile", "shard_manifest_diff", "proximity_rerank",
-    "retrieval_eval_report", "jaccard_threshold_sweep",
-    "manifest_timetravel_twin", "benford_deviation_report",
-    # (b) the 3 displaced r5 stragglers (the r5 debt closes — after
-    # this round nothing is older than r6):
-    "volume_zscore", "watermark_bounds", "windowed_volume_stream_twin",
-    # (c) 40 backfills = the first 40 (alphabetical) of the 50 queries
-    # whose latest driver row is r6 (recomputed from the union this
-    # session — matches the r10 map verbatim). The pre-computed map
-    # said 41; the 7th queue registration (benford_deviation_report,
-    # rehearsed after the map was written) displaces the last
-    # alphabetical slot, text_quality, whose scoring family is
-    # exercised by the in-window curation_funnel (same gopher-rule
-    # gates) and the quality_feature_matrix parity suite:
-    "ann_hnsw_registry", "ann_ivf", "bloom_point_lookup",
-    "cm_user_counts", "cohort_retention", "components_incremental_twin",
-    "curation_funnel", "cusum_changepoints", "decontaminate_report",
-    "dedup_clusters", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_simhash", "doc_fingerprints", "doc_stats", "domain_mix_plan",
-    "domain_mix_sample", "drift_window_twin", "dsir_gumbel_sample",
-    "embedding_near_dup", "embedding_norm_stats", "event_transitions",
-    "funnel_conversion", "image_dimensions", "kmeans_refit_assign",
-    "ohlc_bars", "onehot_event_type", "optimize_prune_twin",
-    "pack_sequences", "packing_efficiency", "repetition_scores",
-    "rolling_distinct_users", "sensitive_term_scrub",
-    "session_gap_sweep", "skew_report", "snapshot_cdc_twin",
-    "standardize_value", "stratified_sample_docs", "stream_join_twin",
-    "template_match",
-    # ------------------------------------------------------------------
-    # r12 map (pre-computed per the standing policy, assuming the r11
-    # driver run lands this window): the SEVEN rehearsed r12-queue
-    # entries (bm25_incremental_twin, doremi_domain_weights,
-    # shared_affix_profile, lcp_neighbor_profile, rho1_token_selection,
-    # source_coverage_report, merkle_integrity_diff — coordinates +
-    # exponents in ROADMAP's r12 queue; first driver rows), then the
-    # 10 remaining r6-latest queries (closes the r6
-    # debt: text_quality, tfidf_top_terms, token_counts, token_pmi,
-    # tokenizer_fertility, top_tokens, train_test_split,
-    # unigram_logprob, volume_trend, weekly_heavy_actors), then the
-    # first 33 (alphabetical) of the 50 r7-latest queries — the 6th
-    # and 7th queue entries displace the 34th/35th slots:
-    # large_volume_customers (its HAVING-on-sum aggregate is exercised
-    # by the in-window customer_order_stats and top_quarter_suppliers
-    # families) and hll_rolling_distinct (its HLL registry machinery is
-    # exercised by the in-window distinct_actors_hll_registry):
-    # ann_ivf_pq,
-    # ann_ivfpq_index, ann_pq, audio_metadata, bigram_logprob,
-    # bracketed_discount_revenue, branch_wap_twin, c4_line_stats,
-    # charclass_profile, cheapest_supplier_per_part, clustering_quality,
-    # compression_quality, contamination_overlap,
-    # cross_source_dup_matrix, customer_order_distribution,
-    # customer_order_stats, dataset_card, ddww_twin,
-    # decontaminate_bloom, dedup_paragraphs, dictionary_match_counts,
-    # distinct_actors_hll_registry, doc_length_quartiles,
-    # dup_shingle_profile, duplicate_spans, embed_documents,
-    # embedding_int8_report, embedding_near_dup_lsh, fouter_twin,
-    # gif_frame_pixel_stats, gopher_quality_report,
-    # grouping_sets_volume, heavy_shippers_of_part_family. The 17
-    # displaced r7 rows (hll_rolling_distinct,
-    # large_volume_customers ... zipf_fit, alphabetical) lead the r13
-    # backfill. Any further queue registration beyond 7 displaces from
-    # the END of the r7 list with a named in-window rationale.
-    # Re-verify against the CORRECTNESS union at r12 start before
-    # registering.
-)
-
-
-# Retired r10 window, kept for the displacement-rationale record the
-# VERDICT audits:
-_PRIORITY_R10: tuple[str, ...] = (
-    # ------------------------------------------------------------------
-    # ROUND-10 WINDOW (r9 VERDICT "Next round" #1+#2) — exactly the
-    # pre-computed r10 map: (a) the 6 rehearsed r10-queue registrations
-    # (first driver rows; all six rehearsed green at both SFs in r9
-    # through the compare harness — tests/test_rm3.py,
-    # tests/test_backtest.py, tests/test_lsh_quality.py,
-    # tests/test_ewma_stream.py, tests/test_rfm.py,
-    # tests/test_profile_diff.py):
-    "rm3_expanded_search", "forecast_backtest_report",
-    "lsh_quality_report", "ewma_volume_stream_twin", "rfm_segments",
-    "profile_diff_report",
-    # (b) 44 backfills = the first 44 (alphabetical) of the 47 queries
-    # whose latest driver row is r5 (computed from the union of
-    # CORRECTNESS_r01-r09). The last 3 alphabetical r5 slots
-    # (volume_zscore, watermark_bounds, windowed_volume_stream_twin)
-    # are displaced by the 3 extra queue registrations beyond the
-    # originally-mapped 3 (new queries must get first driver rows):
-    # volume_zscore's lag/rolling-window z machinery is exercised
-    # oracle-paired by the in-window anomaly_flags (the same daily
-    # z-flag family) and volume_history_window (same partitioned window
-    # frames); watermark_bounds' global min/max scalar aggregate is
-    # subsumed by the in-window constraint_report's min/max+count rule
-    # aggregates over the same events scan; windowed_volume_stream_twin's
-    # run_deterministic_batches tumbling-window state is exercised by
-    # the in-window session_volume_stream_twin / count_window_stream_twin
-    # / decayed_volume_stream_twin and the NEW ewma_volume_stream_twin
-    # (same T4/T6 foreachBatch family). All three lead the r11 backfill
-    # list and are re-verified by the local parity suite every session.
-    "anomaly_flags", "audio_dominant_tone", "batch_volume",
-    "constraint_report", "count_window_stream_twin", "crosstab_counts",
-    "cube_volume", "customers_without_orders", "decayed_volume",
-    "decayed_volume_stream_twin", "dedup_minhash_lsh",
-    "denstream_stream_twin", "distinct_actors", "distinct_actors_approx",
-    "drift_report", "events_in_windows", "first_order_per_customer",
-    "hourly_volume", "idle_rich_customers", "image_histogram_stats",
-    "json_shred_profile", "keyed_overwrite", "kn_trigram_pruned",
-    "language_id", "log_templates", "matview_refresh_twin",
-    "mjpeg_frame_pixel_stats", "national_market_share",
-    "nearest_centroid", "orders_with_error_events",
-    "pattern_mining_incremental", "perplexity_buckets_exact",
-    "priority_order_counts", "revenue_by_nation", "scan_slice",
-    "session_volume_stream_twin", "small_quantity_part_revenue",
-    "top_quarter_suppliers", "upsert_append_dedup", "value_counts_topk",
-    "value_histogram", "value_percentiles", "value_percentiles_approx",
-    "volume_history_window",
-    # ------------------------------------------------------------------
-    # r11 map (pre-computed per the standing policy, assuming the r10
-    # driver run lands this window): the 6 rehearsed r11-queue entries
-    # (char_window_dup_profile, shard_manifest_diff, proximity_rerank,
-    # retrieval_eval_report, jaccard_threshold_sweep,
-    # manifest_timetravel_twin — coordinates in ROADMAP's r11 queue),
-    # then the 3 displaced r5 stragglers (volume_zscore,
-    # watermark_bounds, windowed_volume_stream_twin — the r5 debt
-    # closes), then the first 41 (alphabetical) of the 50 r6-latest
-    # queries: ann_hnsw_registry, ann_ivf, bloom_point_lookup,
-    # cm_user_counts, cohort_retention, components_incremental_twin,
-    # curation_funnel, cusum_changepoints, decontaminate_report,
-    # dedup_clusters, dedup_exact, dedup_ngram_jaccard, dedup_simhash,
-    # doc_fingerprints, doc_stats, domain_mix_plan, domain_mix_sample,
-    # drift_window_twin, dsir_gumbel_sample, embedding_near_dup,
-    # embedding_norm_stats, event_transitions, funnel_conversion,
-    # image_dimensions, kmeans_refit_assign, ohlc_bars,
-    # onehot_event_type, optimize_prune_twin, pack_sequences,
-    # packing_efficiency, repetition_scores, rolling_distinct_users,
-    # sensitive_term_scrub, session_gap_sweep, skew_report,
-    # snapshot_cdc_twin, standardize_value, stratified_sample_docs,
-    # stream_join_twin, template_match, text_quality. The 9 displaced
-    # r6 rows (tfidf_top_terms ... weekly_heavy_actors, alphabetical)
-    # lead the r12 backfill; re-verify against the CORRECTNESS union at
-    # r11 start before registering.
-)
-
-
-# Retired r9 window, kept for the displacement-rationale record the
-# VERDICT audits:
-_PRIORITY_R9: tuple[str, ...] = (
-    # ------------------------------------------------------------------
-    # ROUND-9 WINDOW (r8 VERDICT "Next round" #1+#2) — exactly the
-    # pre-computed r9 map: (a) the 3 rehearsed r9-queue registrations
-    # (first driver rows; all three rehearsed green at both SFs in r8
-    # through the compare harness — tests/test_attribution.py,
-    # tests/test_novelty.py, tests/test_equidepth.py):
-    "purchase_attribution", "novelty_scores", "equidepth_bins",
-    # (a-cont.) 6 MORE new registrations from this session's build
-    # block, ALL oracle-paired (each rehearsed green at both SFs through
-    # the vanilla-session compare harness before registration; tests
-    # test_dhash_neardup, test_mining, test_ewma, test_hardneg,
-    # test_kcore, test_linkage):
-    "dhash_near_dup_report", "event_path_trigrams", "ewma_control_chart",
-    "hard_negative_mining", "word_kcore", "record_linkage_fs",
-    # (b) ALL 38 queries whose latest driver row is r4 (computed from
-    # the union of CORRECTNESS_r01-r08; includes the 5+5 r8-displaced
-    # queries resuming per their named rationales) — closes the r4 debt
-    # completely; after this round nothing is older than r5:
-    "embedding_pca", "events_in_windows_bucketed", "funnel_stages",
-    "fuzzy_customer_pairs", "heavy_hitter_words",
-    "hourly_resample_ffill", "hybrid_search_rrf", "image_dhash",
-    "image_pixel_stats", "incident_upsert_split", "join_overlap_theta",
-    "jpeg_pixel_stats", "json_key_volume", "kn_trigram_logprob",
-    "leakage_safe_split", "mean_shift_scores", "mp4_frame_index",
-    "part_pagerank", "pattern_mining", "perplexity_buckets",
-    "profile_events", "quality_classifier_report",
-    "quality_feature_matrix", "rag_chunk_search", "rolling_median_value",
-    "rollup_volume", "sample_k_per_source", "scd2_user_state",
-    "snapshot_diff", "snapshot_timetravel_twin", "streaming_bm25_twin",
-    "streaming_dedup_registry_twin", "temperature_mix_plan",
-    "user_retention_theta", "value_quantiles_kll_registry",
-    "vocab_growth_report", "weighted_sample_docs", "zorder_bucket_stats",
-    # (c) 3 backfills from the 50 r5-latest queries, alphabetical.
-    # The next 6 alphabetical r5 slots (anomaly_flags,
-    # audio_dominant_tone, batch_volume, constraint_report,
-    # count_window_stream_twin, crosstab_counts) are displaced by the 6
-    # session-new registrations above (new queries must get first driver
-    # rows): anomaly_flags's z-flag machinery is exercised oracle-paired
-    # by the in-window ewma_control_chart (same daily-agg + band-compare
-    # family) and the r7-green mad_anomaly; audio_dominant_tone rides
-    # the same codec lanes the in-window audio_pcm_stats hash-checks;
-    # batch_volume's integer-division bucketing is the in-window
-    # equidepth_bins' cut arithmetic at fixed width; constraint_report's
-    # rule aggregates are the in-window profile_events family;
-    # count_window_stream_twin's count-window state is exercised by the
-    # in-window streaming_dedup_registry_twin and streaming_bm25_twin;
-    # crosstab_counts' pivot shape is the in-window
-    # quality_feature_matrix's one-hot pivot. All six lead the r10
-    # backfill list and are re-verified by the local parity suite every
-    # session.
-    "ann_bruteforce", "ann_hnsw", "ann_ivf_hnsw",
-    # ------------------------------------------------------------------
-    # r10 map (pre-computed per the standing policy, assuming the r9
-    # driver run lands this window): r10's new registrations — the
-    # rehearsed queue rm3_expanded_search, forecast_backtest_report,
-    # lsh_quality_report (coordinates in ROADMAP's r10 queue) — followed
-    # by ALL 47 remaining r5-latest queries (exactly filling the 50
-    # slots; closes the r5 debt completely): anomaly_flags,
-    # audio_dominant_tone, batch_volume, constraint_report,
-    # count_window_stream_twin, crosstab_counts, cube_volume,
-    # customers_without_orders, decayed_volume,
-    # decayed_volume_stream_twin, dedup_minhash_lsh,
-    # denstream_stream_twin, distinct_actors, distinct_actors_approx,
-    # drift_report, events_in_windows, first_order_per_customer,
-    # hourly_volume, idle_rich_customers, image_histogram_stats,
-    # json_shred_profile, keyed_overwrite, kn_trigram_pruned,
-    # language_id, log_templates, matview_refresh_twin,
-    # mjpeg_frame_pixel_stats, national_market_share, nearest_centroid,
-    # orders_with_error_events, pattern_mining_incremental,
-    # perplexity_buckets_exact, priority_order_counts,
-    # revenue_by_nation, scan_slice, session_volume_stream_twin,
-    # small_quantity_part_revenue, top_quarter_suppliers,
-    # upsert_append_dedup, value_counts_topk, value_histogram,
-    # value_percentiles, value_percentiles_approx,
-    # volume_history_window, volume_zscore, watermark_bounds,
-    # windowed_volume_stream_twin.
-)
-
-
-# Retired r8 window, kept for the displacement-rationale record the
-# VERDICT audits:
-_PRIORITY_R8: tuple[str, ...] = (
-    # ------------------------------------------------------------------
-    # ROUND-8 WINDOW (r7 VERDICT "Next round" #1+#2).
-    # (a) the 11 r7-rehearsed queue entries registered this round
-    # (9 oracle-paired; wordpiece_token_counts + ann_recall_report are
-    # rows-only). Every one ran green through the driver's own compare
-    # harness at both SFs before registration (rehearsal tests:
-    # test_containment, test_holtwinters, test_htmlextract, test_urls,
-    # test_textnorm, test_webcorpus, test_wordpiece, test_maintenance,
-    # test_louter_twin, test_ann_recall).
-    "dedup_containment", "holt_winters_daily", "html_text_extract",
-    "url_parse", "url_domain_report", "wordpiece_token_counts",
-    "bloom_semi_join", "curate_web_corpus", "router_twin",
-    "normalize_text", "ann_recall_report",
-    # (a-cont.) 5 MORE new registrations from this session's build
-    # block, ALL oracle-paired (rehearsed green at both SFs through the
-    # compare harness before registration; tests test_mining, test_kwic,
-    # test_readability, test_bucketed_join): association-rule basket
-    # mining, KWIC search snippets, readability + token-entropy quality
-    # signals, and the bucketed co-located join twin.
-    "association_rules", "kwic_snippets", "readability_scores",
-    "token_entropy", "bucketed_join_twin", "word_triangles",
-    "mmr_rerank", "salted_join_twin", "holt_winters_anomaly",
-    "embedding_drift_report",
-    # (b) ALL 17 queries whose latest driver row is r3 (the remainder
-    # the r7 window could not fit - closes the r3 debt completely):
-    "merge_events_upsert", "multimodal_features", "nation_trade_volume",
-    "oov_rate", "part_supplier_counts", "part_value_share",
-    "promo_revenue", "returned_item_customers", "robust_anomaly_stats",
-    "semantic_dedup", "shard_assignment",
-    "single_failed_supplier_orders", "span_dup_profile",
-    "subword_token_counts", "supplier_part_revenue",
-    "top_revenue_orders", "user_sessions",
-    # (c) 17 backfills from the 50 r4-latest queries, alphabetical.
-    # The last 5 alphabetical slots (hourly_resample_ffill,
-    # hybrid_search_rrf, image_dhash, image_pixel_stats,
-    # incident_upsert_split) are displaced by the 5 session-new
-    # registrations above (new queries must get first driver rows):
-    # hourly_resample_ffill's spine-join gap-fill shares its expression
-    # family with r7-green resample_daily_volume; hybrid_search_rrf
-    # fuses the in-window bm25_search with the r5-green ann lanes;
-    # image_dhash and image_pixel_stats ride the same codec lanes the
-    # r7-green gif/mjpeg/jpeg pixel-stats queries hash-checked;
-    # incident_upsert_split's semi/anti split shape is exercised
-    # oracle-paired by the in-window bloom_semi_join and actor_setops.
-    # All five resume at the head of the r9 backfill list and are
-    # re-verified by the local parity suite every session.
-    # (heavy_hitter_words additionally yields its slot to the
-    # session-new word_triangles: its explode+count vocab machinery is
-    # exercised by the in-window token_entropy and the r7-green
-    # vocab_divergence; fuzzy_customer_pairs yields to the session-new
-    # mmr_rerank: its blocked pair-verify machinery shares the
-    # candidate-then-exact-verify shape with the in-window
-    # dedup_containment and the r7-green embedding_near_dup_lsh. Both
-    # resume r9.)
-    # (funnel_stages additionally yields its slot to the session-new
-    # salted_join_twin: its strict-sequencing window machinery is
-    # exercised by the r6-green funnel_conversion and the in-window
-    # user_sessions; events_in_windows_bucketed yields to the
-    # session-new holt_winters_anomaly: its bucketized interval-join
-    # machinery is the r5-green events_in_windows family and the plan
-    # pin re-checks it locally every session; embedding_pca yields to
-    # the session-new embedding_drift_report, which exercises the SAME
-    # posexplode per-dim aggregate grain oracle-paired. All resume r9.)
-    "activity_islands", "actor_setops", "asof_signup_before_error",
-    "audio_pcm_stats", "bm25_search", "bpe_token_counts",
-    "brand_priciest_part", "chunk_documents", "curate_corpus",
-    "dedup_keep_table", "dedup_substrings", "dsir_weights",
-    # r9 map (pre-computed per the standing policy): r9's new
-    # registrations first, then the 5 displaced r4 queries
-    # (hourly_resample_ffill, hybrid_search_rrf, image_dhash,
-    # image_pixel_stats, incident_upsert_split), then the 28 remaining
-    # r4-latest queries (join_overlap_theta, jpeg_pixel_stats, json_key_volume,
-    # kn_trigram_logprob, leakage_safe_split, mean_shift_scores,
-    # mp4_frame_index, part_pagerank, pattern_mining,
-    # perplexity_buckets, profile_events, quality_classifier_report,
-    # quality_feature_matrix, rag_chunk_search, rolling_median_value,
-    # rollup_volume, sample_k_per_source, scd2_user_state,
-    # snapshot_diff, snapshot_timetravel_twin, streaming_bm25_twin,
-    # streaming_dedup_registry_twin, temperature_mix_plan,
-    # user_retention_theta, value_quantiles_kll_registry,
-    # vocab_growth_report, weighted_sample_docs, zorder_bucket_stats),
-    # then r5-latest alphabetical backfill (count_window_stream_twin,
-    # crosstab_counts, ...) for any remaining slots.
-)
-
-
-# Retired r6 window, kept for the displacement-rationale record the
-# VERDICT audits:
-_PRIORITY_R6: tuple[str, ...] = (
-    # ------------------------------------------------------------------
-    # ROUND-6 WINDOW (r5 VERDICT "Next round" #1): freshness rotation.
-    # (a) ALL 29 queries whose latest driver row is from r2 — including
-    # every query displaced from the r5 window (displacement rationales
-    # in the r5 block below) and the VERDICT-named daily-compose set
-    # (dedup_exact, dedup_simhash, curation_funnel, onehot_event_type,
-    # standardize_value, text_quality, tfidf_top_terms). Closes the r2
-    # debt COMPLETELY; after this round nothing is older than r3.
-    "ann_ivf", "curation_funnel", "decontaminate_report",
-    "dedup_clusters", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_simhash", "doc_fingerprints", "doc_stats", "domain_mix_plan",
-    "domain_mix_sample", "embedding_near_dup", "embedding_norm_stats",
-    "image_dimensions", "kmeans_refit_assign", "onehot_event_type",
-    "pack_sequences", "packing_efficiency", "repetition_scores",
-    "sensitive_term_scrub", "standardize_value",
-    "stratified_sample_docs", "template_match", "text_quality",
-    "tfidf_top_terms", "token_counts", "top_tokens", "train_test_split",
-    "unigram_logprob",
-    # (b) NEW in r6 (first driver row required): the VERDICT-directed
-    # operators — windowed drift via incremental matview (#4), the
-    # count-min registry (#7), the durable incremental HNSW (#5) — plus
-    # the session-gap sweep and Gumbel-top-k DSIR from the candidate
-    # list.
-    "drift_window_twin", "cm_user_counts", "ann_hnsw_registry",
-    "session_gap_sweep", "dsir_gumbel_sample", "bloom_point_lookup",
-    "snapshot_cdc_twin", "skew_report", "tokenizer_fertility",
-    "components_incremental_twin", "weekly_heavy_actors",
-    "optimize_prune_twin",
-    # (b-cont.) NEW in the r6 continuation session: the trends family
-    # (cohort retention / Markov transitions / least-squares volume trend
-    # / CUSUM change-points / OHLC bars — operators/trends.py), the
-    # stream-stream join twin (first driver row for join-state eviction
-    # semantics; its per-arm pin was DISCRIMINATED at sf0.1, see
-    # queries_streaming.py), and PMI collocations:
-    "cohort_retention", "event_transitions", "volume_trend",
-    "cusum_changepoints", "ohlc_bars", "stream_join_twin", "token_pmi",
-    # third continuation block: strict-sequencing funnel + exact
-    # sliding-window distinct (the set-union twin of the HLL registry):
-    "funnel_conversion", "rolling_distinct_users",
-    # r6-changed but NOT re-slotted (the shard_assignment precedent —
-    # behavior-unchanged at the driver's scale, latest rows green, local
-    # parity re-checks every round): drift_report (KS tie fix + width
-    # guard verified by its r6-fresh local parity run and regression
-    # tests; its r5 row predates the fix, but the in-window
-    # drift_window_twin exercises the SAME corrected PSI/KS conventions
-    # oracle-paired).
-    # (c) backfill from the r3-latest set (47 queries, 2 slots after the
-    # continuation's 7 new queries took the tail — alphabetical order;
-    # the remainder, from ann_pq on, resumes in r7). Displaced for the
-    # continuation's new queries (each is re-verified fresh every session
-    # by the full local parity suite; new queries must get a first driver
-    # row, so never-checked debt stays zero): ann_pq (its PQ
-    # codebook/assign machinery runs inside the in-window ann_ivf_pq),
-    # audio_metadata (same WAV header walk as the r5-green
-    # audio_dominant_tone), bigram_logprob (same count/backoff machinery
-    # as the in-window unigram_logprob and the r5-green kn_trigram
-    # family), bracketed_discount_revenue (lineitem DECIMAL conventions
-    # shared with the r3-green pricing_summary), c4_line_stats,
-    # charclass_profile (both zero-shuffle in-row text profiles, same
-    # expression family as the in-window text_quality),
-    # cheapest_supplier_per_part (min-by-join shape shared with the
-    # in-window... none — plain r3 row stands; first to resume in r7).
-    # Third continuation block: the final two backfills (ann_ivf_pq,
-    # ann_ivfpq_index — r3-green; their IVF/PQ machinery is re-verified
-    # by the local parity suite each session) yield their slots to
-    # funnel_conversion + rolling_distinct_users, which need first
-    # driver rows; both resume rotation at the head of the r7 backfill
-    # list.
-)
-
-
 def all_specs() -> list[QuerySpec]:
     # import registers the decorated functions in each module
     from . import queries_relational  # noqa: F401

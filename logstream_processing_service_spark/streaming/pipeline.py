@@ -27,13 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import apply_runtime_conf
-from ..sources.tables import (
-    merge_full,
-    normalize_nano_ts,
-    put_tagged,
-    read_merge_target,
-    swap_in,
-)
+from ..sources.tables import merge_parquet, normalize_nano_ts, put_tagged
 
 
 def read_events_stream(
@@ -226,13 +220,10 @@ def merge_sink(
 ):
     """foreachBatch MERGE sink over ``{out_dir}/data``: the update-capable
     sibling of the scoring stream's insert-only sink
-    (``sources.tables.upsert_parquet``). Each micro-batch runs
-    the full Delta-style clause set (``sources.tables.merge_full``) against
-    the target and swaps the result in whole (``sources.tables.swap_in``).
-    The target is read with its own schema (``read_merge_target``, which
-    first recovers a swap that crashed), so a target holding a column the
-    batch lacks raises, as does an unreadable one, instead of being
-    replaced.
+    (``sources.tables.upsert_parquet``). Each micro-batch is one
+    ``sources.tables.merge_parquet`` with the full Delta-style clause set,
+    so a target holding a column the batch lacks raises, as does an
+    unreadable one, instead of being replaced.
 
     Replay-idempotent on at-least-once delivery: re-merging the same batch
     updates rows to the values they already hold and inserts nothing new.
@@ -241,15 +232,13 @@ def merge_sink(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        target = f"{out_dir}/data"
-        existing = read_merge_target(batch_df.sparkSession, target, batch_df.schema)
-        merged = merge_full(
-            existing,
+        merge_parquet(
+            batch_df.sparkSession,
+            f"{out_dir}/data",
             batch_df,
             key,
             when_matched=when_matched,
             matched_condition=matched_condition,
         )
-        swap_in(merged, target)
 
     return write

@@ -191,3 +191,15 @@ def test_lineage_cuts_go_through_the_session_policy():
             if (rel, scope) != ("session.py", "cut_lineage"):
                 offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
     assert not offenders, "lineage cut outside session.cut_lineage:\n" + "\n".join(offenders)
+
+
+def test_bench_and_tools_compile(tmp_path):
+    """bench.py and the tools/ scripts live outside the package, so the
+    package compile gate never sees them; a syntax error there would
+    surface only when someone next runs the script."""
+    import py_compile
+
+    root = PKG.parent
+    scripts = [root / "bench.py", *sorted((root / "tools").glob("*.py"))]
+    for py in scripts:
+        py_compile.compile(str(py), cfile=str(tmp_path / "x.pyc"), doraise=True)

@@ -18,7 +18,8 @@ Corpus points:
     sf0.1 so loaders resolve.
 
 Exponent: log(t_50k / t_5k) / log(10) from the per-query MIN of
-``reps`` warm runs (min is the right estimator under this VM family's
+``reps`` runs of ``bench.time_query``, bench.py's timing protocol (min is
+the right estimator under this VM family's
 documented run-to-run drift). alpha <= ~1.15 is linear-with-noise;
 > 1.3 triggers a diagnosis per the VERDICT's done-criterion.
 """
@@ -51,16 +52,14 @@ QUERIES = [
     "session_gap_sweep",            # events-grain: one window shuffle
     "components_incremental_twin",  # documents-grain: LSH + contraction
     "drift_window_twin",            # events-grain: 3 commits + refreshes
-    # r6 continuation (trends family + collocations; stream_join_twin is
-    # excluded — its stream runs at fn() build time, the eager caveat)
+    # r6 continuation (trends family + collocations)
     "cohort_retention",         # events-grain: one user-keyed shuffle
     "event_transitions",        # events-grain: user-keyed lag window
     "ohlc_bars",                # events-grain: single aggregation
     "funnel_conversion",        # events-grain: one sort, two windows
     "rolling_distinct_users",   # events-grain: day-grain sets + window
     "token_pmi",                # documents-grain: bigram vocab joins
-    # r6 continuation-4 (unregistered r7 candidates — resolved via
-    # EXTRA_QUERIES below until their catalog slots open)
+    # r6 continuation-4 (the r7 queue)
     "maxsim_search",            # documents-grain: token-pair stream
     "seasonal_volume_decompose",  # events-grain: daily windows
     "mad_anomaly",              # events-grain: two value sorts
@@ -74,7 +73,7 @@ QUERIES = [
     "compression_quality",      # documents-grain: one deflate per doc
     "vocab_divergence",         # vocab-grain: sources² × union vocab grid
     "zipf_fit",                 # vocab-grain: count + TakeOrdered + tiny fit
-    # r7 session (unregistered r8 candidates — resolved via EXTRA_QUERIES)
+    # r7 session (the r8 queue)
     "dedup_containment",        # documents-grain: shingle inverted index
     "holt_winters_daily",       # events-grain: daily agg + tiny recurrence
     "html_text_extract",        # documents-grain: zero-shuffle JVM regex
@@ -101,18 +100,18 @@ QUERIES = [
     "event_path_trigrams",
     "ewma_control_chart",
     "word_kcore",
-    # r10 queue (unregistered; resolved via EXTRA_QUERIES)
+    # r10 queue
     "rm3_expanded_search",      # documents-grain: two BM25 passes
     "forecast_backtest_report", # events-grain: daily series + HW fit
     "lsh_quality_report",       # documents-grain: shingle sig + verify
-    # r11 queue (unregistered; resolved via EXTRA_QUERIES)
+    # r11 queue
     "char_window_dup_profile",  # documents-grain: char-window df join
     "shard_manifest_diff",      # documents-grain: one id join + 16-row agg
     "proximity_rerank",         # documents-grain stage 1; candidate stage 2
     "retrieval_eval_report",    # documents-grain: 2 rankings + qrel scan
     "jaccard_threshold_sweep",  # documents-grain: full co-shingle pair join
     "benford_deviation_report", # events-grain: one scan + 9-row spine
-    # r12 queue (unregistered; resolved via EXTRA_QUERIES)
+    # r12 queue
     "bm25_incremental_twin",    # posting-grain: 2 commits + merged search
     "doremi_domain_weights",    # documents-grain: vocab agg + |D|-row tilt
     "shared_affix_profile",     # documents-grain: 10-rung short-key window
@@ -121,14 +120,14 @@ QUERIES = [
     "source_coverage_report",   # shingle-grain: two hash aggregates
     "merkle_integrity_diff",    # doc-grain: two scans + 73-row tree join
     "merkle_tree_update",       # doc-grain hash diff + tree-grain patch
-    # r13 queue (unregistered; rehearsed in r12, resolved via EXTRA_QUERIES)
+    # r13 queue
     "bm25_delete_twin",         # posting-grain: tombstone append + anti-join
     "greedy_coverage_order",    # shingle-grain pass + k bounded rounds
     "doremi_iterated",          # vocab-grain: 2 aggregates x T rounds
     "lsh_incremental_twin",     # band-key-grain: 2 commits + merged pairs
     "bm25_compaction_twin",     # posting-grain: delete + fold + plain read
     "char_window_incremental_twin",  # window-hash postings, df at read
-    # r14 queue (unregistered; rehearsed in r13, resolved via EXTRA_QUERIES).
+    # r14 queue (unregistered; resolved via _extra_queries).
     # ann_ivf_incremental_twin is embeddings-grain — that table is not
     # 10x'd in the decade (the r9 hard_negative_mining rule), so it is
     # bench-only.
@@ -159,308 +158,31 @@ QUERIES = [
 
 
 def _extra_queries():
-    """(spark, sf_dir) callables for operators not yet in the catalog
-    (the r7 rehearsed queue) — same run harness as registered queries."""
-    from logstream_processing_service_spark.operators.analytics import (
-        mad_anomaly,
-    )
-    from logstream_processing_service_spark.operators.retrieval import (
-        maxsim_topk,
-        maxsim_topk_routed,
-    )
-    from logstream_processing_service_spark.operators.trends import (
-        resample_daily_volume,
-        seasonal_decompose,
-    )
-    from logstream_processing_service_spark.operators.unigram import (
-        unigram_token_counts,
-        unigram_train,
-    )
-    from logstream_processing_service_spark.sources import load_table
+    """(spark, sf_dir) callables for the query functions not registered in
+    the catalog (the rehearsed r14 queue), timed like registered ones."""
+    import importlib
 
-    def _wordpiece(spark, sf_dir):
-        from logstream_processing_service_spark.operators.wordpiece import (
-            wordpiece_token_counts,
-            wordpiece_train,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        vocab = wordpiece_train(docs, num_merges=128, min_word_count=2)
-        return wordpiece_token_counts(docs, vocab)
-
-    def _bloom_semi(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from logstream_processing_service_spark.operators.maintenance import (
-            bloom_semi_join,
-        )
-
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_quantity"
-        )
-        urgent = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        ).select("o_orderkey")
-        return bloom_semi_join(li, urgent, "l_orderkey", "o_orderkey")
-
-    def _unigram(spark, sf_dir):
-        docs = load_table(spark, sf_dir, "documents")
-        m = unigram_train(
-            docs, vocab_size=512, max_piece_len=8, em_iters=2,
-            min_word_count=2,
-        )
-        return unigram_token_counts(docs, m)
-
-    from logstream_processing_service_spark.operators.dedup import (
-        dup_shingle_profile,
-    )
-    from logstream_processing_service_spark.operators.dedup import (
-        shingle_containment_pairs as _scp,
-    )
-    from logstream_processing_service_spark.operators.htmlextract import (
-        html_text_extract as _hx,
-        with_synthetic_html_payload as _hpay,
-    )
-    from logstream_processing_service_spark.operators.trends import (
-        holt_winters_daily as _hw,
-    )
-    from logstream_processing_service_spark.operators.urls import (
-        url_domain_report as _udr,
-        with_synthetic_url_column as _upay,
-    )
-    from logstream_processing_service_spark.operators.webcorpus import (
-        curate_web_corpus as _cwc,
-    )
-    from logstream_processing_service_spark.operators.textnorm import (
-        normalize_text as _ntx,
-        with_noisy_text as _noisy,
-    )
-    from logstream_processing_service_spark.operators.dictmatch import (
-        DICT_TERMS,
-        dictionary_match_counts,
-    )
-    from logstream_processing_service_spark.operators.gifcodec import (
-        gif_frame_pixel_stats,
-        with_synthetic_gif_payload,
-    )
-    from logstream_processing_service_spark.operators.textanalysis import (
-        compression_quality,
-        token_communities,
-        vocab_divergence,
-        zipf_fit,
-    )
-
-    from logstream_processing_service_spark.operators.dedup import (
-        lsh_quality_report as _lshq,
-    )
-    from logstream_processing_service_spark.operators.retrieval import (
-        rm3_expanded_search as _rm3,
-    )
-    from logstream_processing_service_spark.operators.trends import (
-        forecast_backtest_report as _fbt,
-    )
-
-    return {
-        # r10 queue (rehearsed, unregistered — exponents measured BEFORE
-        # registration per the VERDICT-r8 #6 discipline)
-        "rm3_expanded_search": lambda s, sf: _rm3(
-            load_table(s, sf, "documents")
-        ),
-        "forecast_backtest_report": lambda s, sf: _fbt(
-            load_table(s, sf, "events")
-        ),
-        "lsh_quality_report": lambda s, sf: _lshq(
-            load_table(s, sf, "documents")
-        ),
-        "maxsim_search": lambda s, sf: maxsim_topk(
-            load_table(s, sf, "documents")
-        ),
-        "seasonal_volume_decompose": lambda s, sf: seasonal_decompose(
-            load_table(s, sf, "events")
-        ),
-        "mad_anomaly": lambda s, sf: mad_anomaly(load_table(s, sf, "events")),
-        "unigram_token_counts": _unigram,
-        "dup_shingle_profile": lambda s, sf: dup_shingle_profile(
-            load_table(s, sf, "documents")
-        ),
-        "token_communities": lambda s, sf: token_communities(
-            load_table(s, sf, "documents")
-        ),
-        "resample_daily_volume": lambda s, sf: resample_daily_volume(
-            load_table(s, sf, "events")
-        ),
-        "gif_frame_pixel_stats": lambda s, sf: gif_frame_pixel_stats(
-            with_synthetic_gif_payload(load_table(s, sf, "documents"))
-        ),
-        "dictionary_match_counts": lambda s, sf: dictionary_match_counts(
-            load_table(s, sf, "documents"), list(DICT_TERMS)
-        ),
-        "maxsim_search_routed": lambda s, sf: maxsim_topk_routed(
-            load_table(s, sf, "documents")
-        ),
-        "compression_quality": lambda s, sf: compression_quality(
-            load_table(s, sf, "documents")
-        ),
-        "vocab_divergence": lambda s, sf: vocab_divergence(
-            load_table(s, sf, "documents")
-        ),
-        "zipf_fit": lambda s, sf: zipf_fit(load_table(s, sf, "documents")),
-        "dedup_containment": lambda s, sf: _scp(load_table(s, sf, "documents")),
-        "holt_winters_daily": lambda s, sf: _hw(load_table(s, sf, "events")),
-        "html_text_extract": lambda s, sf: _hx(
-            _hpay(load_table(s, sf, "documents"))
-        ),
-        "url_domain_report": lambda s, sf: _udr(
-            _upay(load_table(s, sf, "documents"))
-        ),
-        "wordpiece_token_counts": _wordpiece,
-        "bloom_semi_join": _bloom_semi,
-        "curate_web_corpus": lambda s, sf: _cwc(
-            load_table(s, sf, "documents")
-        ),
-        "normalize_text": lambda s, sf: _ntx(
-            _noisy(load_table(s, sf, "documents"))
-        ),
-        "purchase_attribution": lambda s, sf: __import__(
-            "logstream_processing_service_spark.operators.mining",
-            fromlist=["purchase_attribution"],
-        ).purchase_attribution(load_table(s, sf, "events")),
-        "novelty_scores": lambda s, sf: __import__(
-            "logstream_processing_service_spark.operators.dedup",
-            fromlist=["novelty_scores"],
-        ).novelty_scores(load_table(s, sf, "documents")),
-        "equidepth_bins": lambda s, sf: __import__(
-            "logstream_processing_service_spark.operators.analytics",
-            fromlist=["equidepth_bins"],
-        ).equidepth_bins(load_table(s, sf, "events")),
-        "char_window_dup_profile": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_char_window_dup_profile"],
-        ).q_char_window_dup_profile(s, sf),
-        "shard_manifest_diff": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_shard_manifest_diff"],
-        ).q_shard_manifest_diff(s, sf),
-        "proximity_rerank": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_proximity_rerank"],
-        ).q_proximity_rerank(s, sf),
-        "retrieval_eval_report": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_retrieval_eval_report"],
-        ).q_retrieval_eval_report(s, sf),
-        "jaccard_threshold_sweep": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_jaccard_threshold_sweep"],
-        ).q_jaccard_threshold_sweep(s, sf),
-        "benford_deviation_report": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_analytics",
-            fromlist=["q_benford_deviation_report"],
-        ).q_benford_deviation_report(s, sf),
-        # r12 queue (unregistered; rehearsed in r11)
-        "bm25_incremental_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_bm25_incremental_twin"],
-        ).q_bm25_incremental_twin(s, sf),
-        "doremi_domain_weights": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_doremi_domain_weights"],
-        ).q_doremi_domain_weights(s, sf),
-        "shared_affix_profile": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_shared_affix_profile"],
-        ).q_shared_affix_profile(s, sf),
-        "lcp_neighbor_profile": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_lcp_neighbor_profile"],
-        ).q_lcp_neighbor_profile(s, sf),
-        "rho1_token_selection": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_rho1_token_selection"],
-        ).q_rho1_token_selection(s, sf),
-        "source_coverage_report": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_source_coverage_report"],
-        ).q_source_coverage_report(s, sf),
-        "merkle_integrity_diff": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_merkle_integrity_diff"],
-        ).q_merkle_integrity_diff(s, sf),
-        "merkle_tree_update": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_merkle_tree_update"],
-        ).q_merkle_tree_update(s, sf),
-        # r13 queue (unregistered; rehearsed in r12)
-        "bm25_delete_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_bm25_delete_twin"],
-        ).q_bm25_delete_twin(s, sf),
-        "greedy_coverage_order": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_greedy_coverage_order"],
-        ).q_greedy_coverage_order(s, sf),
-        "doremi_iterated": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_doremi_iterated"],
-        ).q_doremi_iterated(s, sf),
-        "lsh_incremental_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_lsh_incremental_twin"],
-        ).q_lsh_incremental_twin(s, sf),
-        "bm25_compaction_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_bm25_compaction_twin"],
-        ).q_bm25_compaction_twin(s, sf),
-        "char_window_incremental_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_char_window_incremental_twin"],
-        ).q_char_window_incremental_twin(s, sf),
-        # r14 queue (unregistered; rehearsed in r13)
-        "lsh_compaction_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_lsh_compaction_twin"],
-        ).q_lsh_compaction_twin(s, sf),
-        "merkle_repair_plan": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_merkle_repair_plan"],
-        ).q_merkle_repair_plan(s, sf),
-        "doremi_to_mix_pipeline": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_curation",
-            fromlist=["q_doremi_to_mix_pipeline"],
-        ).q_doremi_to_mix_pipeline(s, sf),
-        "ann_ivf_incremental_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_vector",
-            fromlist=["q_ann_ivf_incremental_twin"],
-        ).q_ann_ivf_incremental_twin(s, sf),
-        "bloom_incremental_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_bloom_incremental_twin"],
-        ).q_bloom_incremental_twin(s, sf),
-        "snapshot_restore_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_relational",
-            fromlist=["q_snapshot_restore_twin"],
-        ).q_snapshot_restore_twin(s, sf),
-        "cm_incremental_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_relational",
-            fromlist=["q_cm_incremental_twin"],
-        ).q_cm_incremental_twin(s, sf),
-        "snapshot_vacuum_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_relational",
-            fromlist=["q_snapshot_vacuum_twin"],
-        ).q_snapshot_vacuum_twin(s, sf),
-        "zorder_prune_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_relational",
-            fromlist=["q_zorder_prune_twin"],
-        ).q_zorder_prune_twin(s, sf),
-        "cm_lifecycle_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_relational",
-            fromlist=["q_cm_lifecycle_twin"],
-        ).q_cm_lifecycle_twin(s, sf),
-        "bloom_rebuild_twin": lambda s, sf: __import__(
-            "logstream_processing_service_spark.queries_text",
-            fromlist=["q_bloom_rebuild_twin"],
-        ).q_bloom_rebuild_twin(s, sf),
+    modules = {
+        "lsh_compaction_twin": "queries_text",
+        "merkle_repair_plan": "queries_curation",
+        "doremi_to_mix_pipeline": "queries_curation",
+        "ann_ivf_incremental_twin": "queries_vector",
+        "bloom_incremental_twin": "queries_text",
+        "snapshot_restore_twin": "queries_relational",
+        "cm_incremental_twin": "queries_relational",
+        "snapshot_vacuum_twin": "queries_relational",
+        "zorder_prune_twin": "queries_relational",
+        "cm_lifecycle_twin": "queries_relational",
+        "bloom_rebuild_twin": "queries_text",
     }
+    return {
+        name: getattr(
+            importlib.import_module(f"logstream_processing_service_spark.{mod}"),
+            f"q_{name}",
+        )
+        for name, mod in modules.items()
+    }
+
 
 SCALE_DIR = "/tmp/logstream_scale10"
 SCALE100_DIR = "/tmp/logstream_scale100"
@@ -770,37 +492,11 @@ def main() -> None:
 
     load_table(spark, SRC_SF, "documents").count()  # JVM warm-up
 
-    # queries whose fn() does eager work (localCheckpoint / driver
-    # training loops): the timer must bracket the BUILD too, or the
-    # measured time is just the final projection (the stream_join_twin
-    # caveat, now handled instead of excluded)
-    # r13 bench methodology: one shared eager set with bench.py —
-    # registry/stream twins, index builds, and driver training/greedy
-    # loops do their real work at fn() build time, so the timer must
-    # bracket it (importing keeps the two harnesses from drifting; the
-    # greedy_coverage_order pathology was first masked by exactly such
-    # a drift — its 139 s build was timed as 0.24 s here).
-    import bench as _bench
-
-    eager = set(_bench.EAGER_BUILD) | {
-        "token_communities", "unigram_token_counts",
-        "wordpiece_token_counts",
-    }
+    from bench import time_query
 
     def run(name: str, sf_dir: str) -> float:
         fn = specs[name].fn if name in specs else extras[name]
-        if name.endswith("_twin") or "registry" in name:
-            eager.add(name)
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter() if name in eager else None
-            df = fn(spark, sf_dir)
-            if t0 is None:
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        return round(best, 3)
+        return min(time_query(spark, name, fn, sf_dir) for _ in range(reps))
 
     def run_matview_refresh(sf_dir: str) -> float:
         """Time ONE incremental refresh of a FIXED 10k-row delta on top
