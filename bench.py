@@ -246,7 +246,7 @@ HEADLINE = [
     "source_coverage_report",
     "merkle_integrity_diff",
     # r13 registrations (merkle_tree_update is pure-plan; the other six do
-    # registry commits / driver-loop work inside fn() and are EAGER_BUILD)
+    # registry commits / driver-loop work inside fn() and have timed builds)
     "merkle_tree_update",
     "bm25_delete_twin",
     "bm25_compaction_twin",
@@ -263,14 +263,11 @@ HEADLINE = [
 # than pure lazy plan construction. For these the fn() build is part of
 # the operator's cost, so it runs INSIDE the timed window (build +
 # noop-sink execution together); see ``time_query``.
+# Stream twins and registry queries are timed the same way by name
+# (``times_build``), so they are not listed here.
 # tests/test_bench_protocol.py checks that every other HEADLINE query's
 # fn() submits no job beyond its parquet schema reads.
-def _stateful(name: str) -> bool:
-    """Stream twins drive micro-batches and registries commit in fn()."""
-    return name.endswith("_twin") or "registry" in name
-
-
-EAGER_BUILD = {n for n in HEADLINE if _stateful(n)} | {
+EAGER_BUILD = {
     "ann_hnsw",            # HNSW graph build (driver-bounded) at fn() time
     "ann_ivf_hnsw",        # centroid HNSW build at fn() time
     "ann_recall_report",   # HNSW build + IVF probes at fn() time
@@ -301,8 +298,9 @@ EAGER_BUILD = {n for n in HEADLINE if _stateful(n)} | {
 
 def times_build(name: str) -> bool:
     """Whether ``time_query`` times ``name``'s fn() build: the EAGER_BUILD
-    names, plus any stream twin or registry query (catalog or not)."""
-    return name in EAGER_BUILD or _stateful(name)
+    names, plus any stream twin (drives micro-batches) or registry query
+    (commits to its txlog) in fn(), catalog or not."""
+    return name in EAGER_BUILD or name.endswith("_twin") or "registry" in name
 
 
 def time_query(spark, name: str, fn, sf_dir: str) -> float:
@@ -338,6 +336,8 @@ def main(argv: list[str] | None = None) -> None:
     args = ap.parse_args(argv)
     if args.reps != 1 and not args.names:
         ap.error("--reps times a named subset; the default run is one pass")
+    if args.reps < 1:
+        ap.error("--reps must be at least 1")
 
     from logstream_processing_service_spark.catalog import all_specs
     from logstream_processing_service_spark.session import get_spark
@@ -382,7 +382,7 @@ def _time_subset(spark, specs, names: list[str], reps: int, sf_dir: str) -> None
 
 def _time_headline(spark, specs, sf_dir: str) -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Pure-plan queries run FIRST, the EAGER_BUILD family last: the
+    # Pure-plan queries run FIRST, the timed-build family last: the
     # eager twins' streaming micro-batches and registry builds leave the
     # shared local JVM with loaded state-store providers and GC pressure
     # that measurably slows LATER queries (r13 adjudication: codec/text
@@ -391,8 +391,8 @@ def _time_headline(spark, specs, sf_dir: str) -> None:
     # fresh session). Phasing the run isolates that contamination to the
     # eager block, whose members are individually noisy anyway (state
     # store maintenance timing varies run to run).
-    ordered = [n for n in HEADLINE if n not in EAGER_BUILD] + [
-        n for n in HEADLINE if n in EAGER_BUILD
+    ordered = [n for n in HEADLINE if not times_build(n)] + [
+        n for n in HEADLINE if times_build(n)
     ]
     timings = {n: time_query(spark, n, specs[n].fn, sf_dir) for n in ordered}
 

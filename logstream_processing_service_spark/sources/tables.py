@@ -243,27 +243,17 @@ def merge_parquet(
     target: str,
     updates: DataFrame,
     key: str,
-    when_matched: str = "update",
-    matched_condition=None,
 ) -> None:
-    """MERGE INTO for plain parquet: by default WHEN MATCHED update (source
-    row wins), WHEN NOT MATCHED insert — the reference's dual write
-    (embedding upsert + cluster_id update in one txn,
-    src/db/log_ops.py:66-81) as one set-oriented sink. ``when_matched`` and
-    ``matched_condition`` are ``merge_full``'s clauses. The target is read
-    with its own schema (``read_merge_target``, which first recovers a swap
-    that crashed) and the merged result is swapped in whole (``swap_in``);
-    on Delta/Iceberg this whole function is one MERGE INTO.
+    """MERGE INTO for plain parquet: WHEN MATCHED update (source row wins),
+    WHEN NOT MATCHED insert — the reference's dual write (embedding upsert +
+    cluster_id update in one txn, src/db/log_ops.py:66-81) as one
+    set-oriented sink. The target is read with its own schema
+    (``read_merge_target``, which first recovers a swap that crashed) and
+    the merged result is swapped in whole (``swap_in``); on Delta/Iceberg
+    this whole function is one MERGE INTO.
     """
     existing = read_merge_target(spark, target, updates.schema)
-    merged = merge_full(
-        existing,
-        updates,
-        key,
-        when_matched=when_matched,
-        matched_condition=matched_condition,
-    )
-    swap_in(merged, target)
+    swap_in(merge_full(existing, updates, key), target)
 
 
 def merge_full(

@@ -212,17 +212,12 @@ def correlated_pairs_stream(
     )
 
 
-def merge_sink(
-    out_dir: str,
-    key: str = "event_id",
-    when_matched: str = "update",
-    matched_condition=None,
-):
+def merge_sink(out_dir: str, key: str = "event_id"):
     """foreachBatch MERGE sink over ``{out_dir}/data``: the update-capable
     sibling of the scoring stream's insert-only sink
     (``sources.tables.upsert_parquet``). Each micro-batch is one
-    ``sources.tables.merge_parquet`` with the full Delta-style clause set,
-    so a target holding a column the batch lacks raises, as does an
+    ``sources.tables.merge_parquet`` (WHEN MATCHED update, WHEN NOT MATCHED
+    insert), so a target holding a column the batch lacks raises, as does an
     unreadable one, instead of being replaced.
 
     Replay-idempotent on at-least-once delivery: re-merging the same batch
@@ -232,13 +227,6 @@ def merge_sink(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        merge_parquet(
-            batch_df.sparkSession,
-            f"{out_dir}/data",
-            batch_df,
-            key,
-            when_matched=when_matched,
-            matched_condition=matched_condition,
-        )
+        merge_parquet(batch_df.sparkSession, f"{out_dir}/data", batch_df, key)
 
     return write

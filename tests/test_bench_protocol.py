@@ -26,14 +26,23 @@ def test_time_query_times_the_build_only_when_it_runs_work(spark, name, timed):
     def fn(spark_, sf_dir):
         df = spark_.range(4).persist()
         df.count()
-        time.sleep(0.3)
+        time.sleep(2)
         return df
 
-    bench.time_query(spark, name, fn, "unused")  # warm the noop write path
+    # warm the noop write path
+    bench.time_query(spark, name, lambda spark_, sf_dir: spark_.range(4), "unused")
     before = _persistent_rdds(spark)
     elapsed = bench.time_query(spark, name, fn, "unused")
-    assert (elapsed >= 0.3) is timed, elapsed
+    if timed:
+        assert elapsed >= 2, elapsed
+    else:
+        assert elapsed < 1, elapsed
     assert _persistent_rdds(spark) <= before
+
+
+def test_bench_rejects_fewer_than_one_rep():
+    with pytest.raises(SystemExit):
+        bench.main(["pricing_summary", "--reps", "0"])
 
 
 def test_times_build_applies_the_suffix_rule_to_any_name():
@@ -58,7 +67,7 @@ def test_scaling_study_extras_are_unregistered():
 
 @pytest.mark.slow
 def test_untimed_builds_submit_only_schema_reads(spark, sf_dir):
-    """A HEADLINE query outside EAGER_BUILD has its ``fn()`` build left out
+    """A HEADLINE query that ``times_build`` rejects has its ``fn()`` build left out
     of the timed window, so ``fn()`` may submit only the parquet schema
     reads of its loaders: any other job is real work the bench would not
     time."""
@@ -68,7 +77,7 @@ def test_untimed_builds_submit_only_schema_reads(spark, sf_dir):
     offenders = {}
     try:
         for name in bench.HEADLINE:
-            if name in bench.EAGER_BUILD:
+            if bench.times_build(name):
                 continue
             group = f"bench-protocol:{name}"
             sc.setJobGroup(group, group)
