@@ -185,13 +185,6 @@ def minhash_value_sql(h_sql: str, perm: tuple[int, int]) -> str:
     return f"(({a}*{h_sql} + {b}) % {MINHASH_PRIME})"
 
 
-def minhash_cols(h: Column) -> list[Column]:
-    return [
-        ((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"mh_{j}")
-        for j, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-
-
 # ---------------------------------------------------------------------------
 # SimHash (32-bit) — near-dup by Hamming distance with banded blocking
 # ---------------------------------------------------------------------------

@@ -60,19 +60,6 @@ def onehot(df: DataFrame, col: str, categories: tuple[str, ...] = EVENT_TYPES) -
     return out
 
 
-def build_feature_frame(
-    df: DataFrame,
-    emb_col: str = "embedding",
-    cat_col: str = "event_type",
-    num_cols: tuple[str, ...] = ("value",),
-) -> DataFrame:
-    """M4: the reference's feature dict {vec_0..vec_n, level, source,
-    semantic_group} as a columnar frame: embedding stays ONE array column
-    (exploding 384 floats to 384 row-object fields is the row-store habit
-    Spark doesn't need), categoricals one-hot, numerics standardized."""
-    return onehot(standardize(df, list(num_cols)), cat_col)
-
-
 def fit_mllib_features(
     df: DataFrame,
     cat_cols: tuple[str, ...] = ("event_type",),

@@ -47,7 +47,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .textanalysis import GPT2_PRETOKEN_RE
@@ -196,13 +196,6 @@ def _train_in_memory(
                 pair_counts.pop(p, None)
                 pair_words.pop(p, None)
     return merges
-
-
-def merges_df(spark: SparkSession, merges: list[Merge]) -> DataFrame:
-    return spark.createDataFrame(
-        [(m.rank, m.left, m.right, m.pair_count) for m in merges],
-        "rank int, left string, right string, pair_count bigint",
-    )
 
 
 def encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:

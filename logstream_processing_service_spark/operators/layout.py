@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MORTON_BITS = 16  # per dimension; z fits in 32 bits, no sign issues
-
 
 def _spread_sql(x: str, dialect: str) -> str:
     """Interleave-ready bit spread of a 16-bit int (abcd… -> a0b0c0d0…),

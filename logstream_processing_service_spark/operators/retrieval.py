@@ -38,7 +38,6 @@ SEARCH_QUERIES: tuple[str, ...] = (
 )
 
 BM25_K1 = 1.2
-BM25_B = 0.75
 
 
 def _bm25_term_score(tc: Column, df: Column, dl: Column, n_docs: Column, avgdl: Column) -> Column:

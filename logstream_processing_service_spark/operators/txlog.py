@@ -586,61 +586,23 @@ def commit_with_stats(
     return v
 
 
-def read_snapshot_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Snapshot read that skips files from MANIFEST stats alone (no
-    parquet footer reads, no listing): files whose [min, max] for
-    ``col`` cannot intersect [lo, hi] are dropped from the scan, then
-    the exact predicate re-applies. Files without recorded stats are
-    conservatively read. The planning cost is the manifest's size —
-    KBs — which is the whole point at 100 TB."""
-    seen = _versions(table_dir)
-    if not seen:
-        raise ValueError(f"no committed version under {table_dir}")
-    v = seen[-1] if version is None else version
-    man = _manifest(table_dir, v)
-    stats = man.get("file_stats") or {}
-    keep = []
-    for f in man["files"]:
-        st = stats.get(f)
-        if st is None or st.get(f"min_{col}") is None:
-            keep.append(f)  # unknown: cannot prune
-            continue
-        if not (st[f"max_{col}"] < lo or st[f"min_{col}"] > hi):
-            keep.append(f)
-    if not keep:
-        base = read_snapshot(spark, table_dir, v)
-        return base.filter(F.lit(False))
-    if man.get("evolved"):
-        kept = spark.read.option("mergeSchema", "true").parquet(*keep)
-        kept = kept.select(*[name for name, _ in man["schema"]])
-    else:
-        kept = spark.read.parquet(*keep)
-    return kept.filter(F.col(col).between(lo, hi))
-
-
 def read_snapshot_pruned_box(
     spark: SparkSession,
     table_dir: str,
     box: dict,
     version: int | None = None,
 ) -> DataFrame:
-    """Multi-column manifest-stats pruning — the k-D generalization of
-    :func:`read_snapshot_pruned` (conjunctive box predicate
-    ``{col: (lo, hi), ...}``): a file is skipped when ANY dimension's
-    recorded [min, max] cannot intersect its range, then the exact
-    predicate re-applies on the kept scan, so answers equal the plain
-    filtered read by construction. This is the read side the Z-order
-    layout exists for: interleaving bounds EVERY clustered dimension
-    within each file, so a 2-D box prunes on both columns where a 1-D
-    sort layout prunes on its sort key only. Planning cost is the
-    manifest alone (KBs) — no footer reads, no listing."""
+    """Snapshot read that skips files from MANIFEST stats alone for a
+    conjunctive box predicate ``{col: (lo, hi), ...}`` (one entry is a
+    range probe): a file is skipped when ANY dimension's recorded
+    [min, max] cannot intersect its range, then the exact predicate
+    re-applies on the kept scan, so answers equal the plain filtered
+    read by construction. Files or columns without recorded stats are
+    conservatively read. Planning cost is the manifest alone (KBs) — no
+    footer reads, no listing. This is the read side the Z-order layout
+    exists for: interleaving bounds EVERY clustered dimension within
+    each file, so a 2-D box prunes on both columns where a 1-D sort
+    layout prunes on its sort key only."""
     seen = _versions(table_dir)
     if not seen:
         raise ValueError(f"no committed version under {table_dir}")
@@ -789,7 +751,7 @@ def optimize_table(
 
     A streaming ingest (streaming_commit_sink) accretes one small file
     per micro-batch; this is the companion job that folds them back into
-    scan-efficient files, with manifest stats so read_snapshot_pruned
+    scan-efficient files, with manifest stats so read_snapshot_pruned_box
     skips from the log."""
 
     def fold(df: DataFrame) -> DataFrame:

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import _t, spec
 from .operators import analytics as A
+from .session import scratch_dir
 
 
 @spec(
@@ -710,9 +711,6 @@ def q_matview_refresh_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental == full recompute, bit-for-bit (decimal sums make the
     merge associative). The refresh mode is asserted incremental so the
     twin cannot silently pass via the full-recompute fallback."""
-    import re
-    import shutil
-
     from .operators import txlog as TX
     from .operators.matview import (
         ViewSpec,
@@ -720,9 +718,7 @@ def q_matview_refresh_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         refresh_matview,
     )
 
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    base = f"/tmp/logstream_matview_{tag}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("matview")
     table_dir, view_dir = f"{base}/table", f"{base}/view"
     spec_ = ViewSpec(
         group_cols=("event_type",),
@@ -877,9 +873,6 @@ def q_drift_window_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift — hash-matches the oracle's ONE full-table recompute. Refresh
     mode asserted incremental so the twin cannot pass via the
     full-recompute fallback."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
@@ -890,9 +883,7 @@ def q_drift_window_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_drift,
     )
 
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    base = f"/tmp/logstream_driftwin_{tag}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("driftwin")
     table_dir, view_dir = f"{base}/table", f"{base}/view"
     grid = DriftGrid(lo=0.0, hi=600.0, bins=20, window_days=7)
     ev = _t(spark, sf_dir, "events")

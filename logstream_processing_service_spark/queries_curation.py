@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .catalog import _t, spec
 from .functions import text as T
 from .operators import curation as C
+from .session import scratch_dir
 
 _WORDS_DUCK = T.words_sql("text", "duckdb")
 _PACK_HASH = T.hash48_sql("concat('pack-v1:', CAST(doc_id AS STRING))")
@@ -753,9 +754,6 @@ def q_manifest_timetravel_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental-curation planner: at 100 TB this is exactly "which
     shards changed between yesterday's corpus commit and today's",
     answered from the log without keeping two physical corpus copies."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
@@ -768,9 +766,7 @@ def q_manifest_timetravel_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    t = f"/tmp/logstream_manifest_twin_{tag}"
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("manifest_twin")
     TX.commit(t, old)
     TX.commit(t, new, mode="overwrite")
     return C.shard_manifest_diff(

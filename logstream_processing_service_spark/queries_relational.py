@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import _t, spec
 from .operators import relational as R
+from .session import scratch_dir
 
 # ---------------------------------------------------------------------------
 # P1-P5 / O1-O2: slice scan with pushed predicates
@@ -889,9 +890,6 @@ def q_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain equality query — pruning is a superset filter plus exact
     re-filter, so answers are identical by construction; the pruning
     ratio itself is asserted in tests/test_maintenance.py."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators.maintenance import (
@@ -899,9 +897,7 @@ def q_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_bloom_pruned,
     )
 
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    out = f"/tmp/logstream_bloomidx_{tag}"
-    shutil.rmtree(out, ignore_errors=True)
+    out = f"{scratch_dir('bloomidx')}/events"
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -953,16 +949,11 @@ def q_snapshot_cdc_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's direct reconstruction of the two states. The append-lineage
     O(delta) fast path and vacuum-surviving restore are covered in
     tests/test_txlog.py."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
 
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    t = f"/tmp/logstream_cdc_{tag}"
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("cdc")
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", F.round("value", 2).alias("value")
     )
@@ -1225,9 +1216,6 @@ def q_snapshot_timetravel_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     then aggregate BOTH snapshots via time-travel reads. The oracle
     recomputes each snapshot's stats from the base table, so the hash
     match proves manifest isolation and append lineage."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
@@ -1235,9 +1223,7 @@ def q_snapshot_timetravel_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    t = f"/tmp/logstream_txlog_twin_{tag}"
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("txlog_twin")
     TX.commit(t, docs.filter(F.length("source") == 4))
     TX.commit(t, docs.filter(F.length("source") != 4), mode="append")
     out = []
@@ -1284,21 +1270,16 @@ def q_optimize_prune_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming-accrete -> OPTIMIZE -> log-only-skip lifecycle,
     driver-checked: 3 micro-batch commits of events, optimize_table into
     2 user_id-clustered files with manifest stats, then answer a range
-    probe through read_snapshot_pruned (scan planned from the manifest
+    probe through read_snapshot_pruned_box (scan planned from the manifest
     alone — no footer reads). The oracle is the plain filter; pruning is
     a superset + exact re-filter, so answers are identical by
     construction, and the file-skip ratio is asserted in
     tests/test_txlog.py."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
 
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    t = f"/tmp/logstream_optprune_{tag}"
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("optprune")
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", F.round("value", 2).alias("value")
     )
@@ -1308,9 +1289,9 @@ def q_optimize_prune_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     TX.optimize_table(
         spark, t, target_files=2, sort_col="user_id", stats_cols=("user_id",)
     )
-    return TX.read_snapshot_pruned(spark, t, "user_id", 10, 30).orderBy(
-        "event_id"
-    )
+    return TX.read_snapshot_pruned_box(
+        spark, t, {"user_id": (10, 30)}
+    ).orderBy("event_id")
 
 
 @spec(
@@ -1329,16 +1310,11 @@ def q_branch_wap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuum pinning, and the merge-rebase fuzzer live in
     tests/test_branches.py; this driver row hash-checks the fork/merge
     file-ledger arithmetic end to end."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
 
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    t = f"/tmp/logstream_wap_{tag}"
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("wap")
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", F.round("value", 2).alias("value")
     )
@@ -1550,9 +1526,6 @@ def q_snapshot_restore_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal v0) and the rolled-over v1 (must stay time-travelable with
     its full contents). Completes the driver-visible txlog verb set
     (commit/read/diff/CDC/optimize/branch/RESTORE)."""
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
@@ -1560,15 +1533,7 @@ def q_snapshot_restore_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    app = re.sub(
-        r"[^A-Za-z0-9._-]", "_", spark.sparkContext.applicationId
-    )
-    t = f"/tmp/logstream_restore_twin_{tag}_{app}"
-    import atexit
-
-    atexit.register(shutil.rmtree, t, ignore_errors=True)
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("restore_twin")
     TX.commit(t, docs.filter(F.length("source") == 4))
     TX.commit(t, docs.filter(F.length("source") != 4), mode="append")
     v2 = TX.restore(t, 0)
@@ -1619,10 +1584,6 @@ def q_snapshot_vacuum_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit/read/diff/CDC/optimize/branch/restore/VACUUM. The
     restore-pin interplay (restore re-references old files, so a later
     vacuum must keep them) is pinned in tests/test_txlog.py."""
-    import atexit
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
@@ -1630,13 +1591,7 @@ def q_snapshot_vacuum_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    app = re.sub(
-        r"[^A-Za-z0-9._-]", "_", spark.sparkContext.applicationId
-    )
-    t = f"/tmp/logstream_vacuum_twin_{tag}_{app}"
-    atexit.register(shutil.rmtree, t, ignore_errors=True)
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("vacuum_twin")
     TX.commit(t, docs.filter(F.length("source") == 4))
     TX.commit(t, docs.filter(F.length("source") != 4), mode="append")
     TX.optimize_table(spark, t, target_files=1)
@@ -1722,10 +1677,6 @@ def q_cm_lifecycle_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact alongside bm25, LSH, and IVF — each with the delete
     semantics its algebra affords (tombstone, tombstone, tombstone,
     negation) and bloom loudly rebuild-only."""
-    import atexit
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators.sketches import (
@@ -1738,13 +1689,7 @@ def q_cm_lifecycle_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import txlog as TX
 
     ev = _t(spark, sf_dir, "events")
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    app = re.sub(
-        r"[^A-Za-z0-9._-]", "_", spark.sparkContext.applicationId
-    )
-    t = f"/tmp/logstream_cm_lc_{tag}_{app}"
-    atexit.register(shutil.rmtree, t, ignore_errors=True)
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("cm_lc")
     for b in range(3):
         TX.commit(
             t,
@@ -1811,22 +1756,12 @@ def q_zorder_prune_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     zorder_bucket_stats proves the interleave arithmetic bit-for-bit;
     this proves the skip it buys. Scale: planning reads KBs of
     manifest; the skipped bytes scale with the table."""
-    import atexit
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
     from .operators.layout import morton2
 
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    app = re.sub(
-        r"[^A-Za-z0-9._-]", "_", spark.sparkContext.applicationId
-    )
-    t = f"/tmp/logstream_zorder_twin_{tag}_{app}"
-    atexit.register(shutil.rmtree, t, ignore_errors=True)
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("zorder_twin")
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", F.round("value", 2).alias("value")
     )
@@ -1860,22 +1795,12 @@ def q_cm_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     union, i.e. the registry composes under ingest. Completes the
     registry merge-algebra matrix: append (postings), OR (bloom),
     SUM (counters)."""
-    import atexit
-    import re
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators.sketches import cm_estimate, cm_incremental_registry
 
     ev = _t(spark, sf_dir, "events")
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    app = re.sub(
-        r"[^A-Za-z0-9._-]", "_", spark.sparkContext.applicationId
-    )
-    t = f"/tmp/logstream_cm_inc_{tag}_{app}"
-    atexit.register(shutil.rmtree, t, ignore_errors=True)
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("cm_inc")
     merged = cm_incremental_registry(
         ev.filter(F.col("event_id") % 2 == 0),
         ev.filter(F.col("event_id") % 2 == 1),

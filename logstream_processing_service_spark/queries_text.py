@@ -13,10 +13,9 @@ from .functions import text as T
 from .operators import dedup as D
 from .operators import sampling as S
 from .operators import textanalysis as TA
-from .session import cut_lineage
+from .session import cut_lineage, scratch_dir
 
 _H_TEXT = T.hash48_sql("text")
-_H_WD = T.hash48_sql("wd")
 _WORDS_DUCK = T.words_sql("text", "duckdb")
 
 # shared CTE: distinct (doc_id, shingle-hash) with doc-frequency cap 500 —
@@ -206,8 +205,6 @@ def q_components_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame
     the full edge list. The served report hash-matches the batch
     dedup_clusters oracle over ALL pairs: incremental == batch, under
     the driver hash."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from .operators.graph import incremental_components, serve_components
@@ -215,7 +212,7 @@ def q_components_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs = cut_lineage(
         D.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
     )
-    d = tempfile.mkdtemp(prefix="cc-assign-")
+    d = scratch_dir("cc_assign")
     for b in range(3):
         incremental_components(
             spark, d, pairs.filter(F.col("d2") % 3 == b)
@@ -1119,17 +1116,13 @@ def q_streaming_dedup_registry_twin(spark: SparkSession, sf_dir: str) -> DataFra
     accepted set. The oracle unrolls the same first-arrival-wins registry
     semantics in SQL, so the driver hash-checks the streaming component's
     keep decisions end-to-end — registry persistence, replay guard, and
-    in-batch chain rule included. Reruns are idempotent by the sink's own
-    replay design (batch 0 filters the registry to batch_id < 0 = empty)."""
-    import re
-
+    in-batch chain rule included."""
     from pyspark.sql import functions as F
 
     from .streaming.dedup import minhash_dedup_sink
 
     docs = _t(spark, sf_dir, "documents")
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    out = f"/tmp/logstream_registry_twin_{tag}"
+    out = scratch_dir("registry_twin")
     sink = minhash_dedup_sink(out, n=3, max_doc_freq=0)
     for b in range(3):
         sink(docs.filter(F.col("doc_id") % 3 == b), b)
@@ -1540,17 +1533,13 @@ def q_streaming_bm25_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     over 3 deterministic micro-batches (batch = doc_id % 3), then serve
     BM25 from the registry alone. BM25's corpus stats are additive across
     disjoint batches, so the ranking must hash-match the FULL-corpus BM25
-    oracle — proving the incremental index loses nothing. Reruns are
-    idempotent (per-batch dynamic partition overwrite)."""
-    import re
-
+    oracle — proving the incremental index loses nothing."""
     from pyspark.sql import functions as F
 
     from .streaming.search_index import bm25_from_index, index_sink
 
     docs = _t(spark, sf_dir, "documents")
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    out = f"/tmp/logstream_search_index_{tag}"
+    out = scratch_dir("search_index")
     sink = index_sink(out)
     for b in range(3):
         sink(docs.filter(F.col("doc_id") % 3 == b), b)
@@ -2150,39 +2139,6 @@ def q_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _bm25_inc_dir(
-    spark: SparkSession, sf_dir: str, kind: str = "bm25_inc"
-) -> str:
-    """Per-process registry dir for the incremental-registry twins.
-
-    r11-advice fix: keyed by sf_dir ALONE this raced — two concurrent
-    processes on the same sf_dir (parallel verify halves plus a test
-    run) could interleave one process's rmtree with the other's
-    snapshot read. The Spark applicationId is unique per SparkSession
-    (one session per process in every harness here), so suffixing it
-    gives each process its own registry; an atexit hook removes the
-    dir when the process ends (it must outlive this function — the
-    returned DataFrame reads the registry lazily at collect time).
-
-    r12-advice fix: the delete/compaction/charwin/lsh twins derive
-    SIBLING dirs, and deriving them by string surgery on this
-    function's return value left the siblings outside the atexit hook
-    (applicationId-suffixed paths are never reused, so each process
-    leaked its derived dirs in /tmp). ``kind`` moves the derivation
-    INSIDE, so the rmtree always registers on the exact final path."""
-    import atexit
-    import re
-    import shutil
-
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", sf_dir.rstrip("/"))
-    app = re.sub(
-        r"[^A-Za-z0-9._-]", "_", spark.sparkContext.applicationId
-    )
-    t = f"/tmp/logstream_{kind}_{tag}_{app}"
-    atexit.register(shutil.rmtree, t, ignore_errors=True)
-    return t
-
-
 from .operators.retrieval import bm25_oracle_sql as _bm25_oracle  # noqa: E402
 
 
@@ -2199,8 +2155,6 @@ def q_bm25_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch bm25 oracle over the full corpus proves the
     incremental maintenance path is exact: same ranking, same scores,
     without re-tokenizing the base corpus."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators.retrieval import bm25_incremental_index, bm25_topk
@@ -2208,8 +2162,7 @@ def q_bm25_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
-    t = _bm25_inc_dir(spark, sf_dir)
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("bm25_inc")
     registry = bm25_incremental_index(base, delta, t)
     return bm25_topk(docs, tf=registry)
 
@@ -2258,16 +2211,13 @@ def q_bm25_delete_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     the from-scratch batch oracle over the POST-DELETE corpus proves
     deletion-aware stats (N, avgdl, df all shrink) come out exact
     without rewriting the base postings."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators.retrieval import bm25_incremental_delete, bm25_topk
 
     docs = _t(spark, sf_dir, "documents")
     dels = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
-    t = _bm25_inc_dir(spark, sf_dir, kind="bm25_inc_del")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("bm25_inc_del")
     live = bm25_incremental_delete(docs, dels, t)
     return bm25_topk(docs, tf=live)
 
@@ -2286,8 +2236,6 @@ def q_bm25_compaction_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-matching the post-delete batch oracle proves compaction is a
     pure physical rewrite; the manifest-level test pins the fewer-files
     and no-tombstones facts plus v1's unchanged time-travel read."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from .operators import txlog as TX
@@ -2295,8 +2243,7 @@ def q_bm25_compaction_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     dels = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
-    t = _bm25_inc_dir(spark, sf_dir, kind="bm25_inc_cmp")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("bm25_inc_cmp")
     bm25_incremental_delete(docs, dels, t)  # v0 + v1 (tombstones)
     TX.rewrite_snapshot(  # v2: folded rewrite
         spark, t, lambda snap: TX.live_rows(snap, "doc_id", "tc").coalesce(1)
@@ -2318,15 +2265,12 @@ def q_char_window_incremental_twin(
     recomputed over the merged read (df is corpus-dependent and
     deliberately NOT stored). Hash-matches the from-scratch hashed-key
     batch profile on the union corpus."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
-    t = _bm25_inc_dir(spark, sf_dir, kind="charwin_inc")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("charwin_inc")
     return D.char_window_incremental_profile(base, delta, t)
 
 
@@ -2342,15 +2286,12 @@ def q_lsh_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged registry, true-Jaccard verify over the union. Hash-matching
     the from-scratch batch LSH (uncapped signatures) proves the dedup
     index composes under ingest without re-signaturing the base."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
-    t = _bm25_inc_dir(spark, sf_dir, kind="lsh_inc")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("lsh_inc")
     return D.lsh_incremental_pairs(base, delta, t)
 
 
@@ -2421,16 +2362,13 @@ def q_lsh_compaction_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     add/delete/compact triangle bm25_compaction_twin closed for the
     search index — reference tie: the incremental-batch discipline of
     scripts/run_incremental_batch.py:29-41)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
     dels = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
-    t = _bm25_inc_dir(spark, sf_dir, kind="lsh_lc")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("lsh_lc")
     return D.lsh_registry_lifecycle_pairs(base, delta, dels, t)
 
 
@@ -2478,12 +2416,9 @@ def q_bloom_rebuild_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to the retained eval slice — completing the per-family
     delete semantics (postings/LSH/IVF tombstone, CM negates, bloom
     rebuilds)."""
-    import shutil
-
     from .operators.dedup import decontaminate_bloom_rebuild
 
-    t = _bm25_inc_dir(spark, sf_dir, kind="bloom_rb")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("bloom_rb")
     return decontaminate_bloom_rebuild(
         _t(spark, sf_dir, "documents"), t
     )
@@ -2497,12 +2432,9 @@ def q_bloom_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact decontaminate_report oracle over the full eval split,
     proving the registry composes under growth (r14 queue; fourth
     registry family, opposite merge algebra)."""
-    import shutil
-
     from .operators.dedup import decontaminate_bloom_incremental
 
-    t = _bm25_inc_dir(spark, sf_dir, kind="bloom_inc")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("bloom_inc")
     return decontaminate_bloom_incremental(
         _t(spark, sf_dir, "documents"), t
     )

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .catalog import _t, spec
 from .functions import vector as V
 from .operators import similarity as S
+from .session import scratch_dir
 
 DIM = 64
 
@@ -254,8 +255,6 @@ def q_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir, then probe it — the end-to-end storage-layout path (rows-only:
     trained codebooks; equality with the in-memory ann_ivf_pq and the
     partition-pruning proof are asserted in tests/test_pq.py)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from .operators.similarity import (
@@ -266,7 +265,7 @@ def q_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = label_centroids(emb)
-    path = tempfile.mkdtemp(prefix="ivfpq-index-")
+    path = scratch_dir("ivfpq_index")
     books = build_ivfpq_index(emb, cents, path, m=8, n_centroids=16)
     return search_ivfpq_index(
         spark, path, cents, books, emb.filter(F.col("vec_id") < 10), k=5,
@@ -333,8 +332,6 @@ def q_ann_hnsw_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is not SQL-expressible — rebuild==incremental bit-parity, the
     append-only id contract, and the recall floor are asserted in
     tests/test_hnsw.py."""
-    import tempfile
-
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -343,7 +340,7 @@ def q_ann_hnsw_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     n = emb.count()
     c1, c2 = n // 3, 2 * n // 3
-    d = tempfile.mkdtemp(prefix="hnsw-registry-")
+    d = scratch_dir("hnsw_registry")
     idx = H.build_hnsw(
         emb.filter(F.col("vec_id") < c1), M=8, ef_construction=32, seed=0
     )
@@ -664,17 +661,12 @@ def q_ann_ivf_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-matching the frozen-centroid batch IVF over the union proves
     the ANN ingest path composes without re-assigning the standing
     corpus (r14 queue; third index family after bm25 and LSH)."""
-    import shutil
-
     from pyspark.sql import functions as F
-
-    from .queries_text import _bm25_inc_dir
 
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 5 != 0)
     delta = emb.filter(F.col("vec_id") % 5 == 0)
-    t = _bm25_inc_dir(spark, sf_dir, kind="ivf_inc")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("ivf_inc")
     return S.ann_ivf_incremental(
         base, delta, t, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2
     )
@@ -698,18 +690,13 @@ def q_ann_ivf_lifecycle_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain compacted scan. With ann_ivf_incremental_twin this completes
     the (bm25, LSH, IVF) × (add, delete, compact) matrix (r14
     queue)."""
-    import shutil
-
     from pyspark.sql import functions as F
-
-    from .queries_text import _bm25_inc_dir
 
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 5 != 0)
     delta = emb.filter(F.col("vec_id") % 5 == 0)
     dels = emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
-    t = _bm25_inc_dir(spark, sf_dir, kind="ivf_lc")
-    shutil.rmtree(t, ignore_errors=True)
+    t = scratch_dir("ivf_lc")
     return S.ann_ivf_lifecycle(
         base, delta, dels, t, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2
     )

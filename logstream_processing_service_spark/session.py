@@ -16,7 +16,10 @@ centralizes the configuration that matters at 100 TB:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -103,3 +106,26 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=False)
+
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(kind: str) -> str:
+    """A new, empty directory for on-disk query state (a txlog table, a
+    registry, an index, a stream's source and sink).
+
+    This is the engine's one policy for where such state lives and how
+    long it lasts. The first call in a process makes one root under
+    ``tempfile.gettempdir()`` (so ``TMPDIR`` is honoured) and registers
+    its removal at interpreter exit; every call returns a fresh
+    ``<kind>_*`` dir inside it. The dir is never reused and stays until
+    the process exits, because a returned DataFrame reads it lazily.
+    Concurrent processes get distinct roots, so none can clear
+    another's state.
+    """
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="logstream_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{kind}_", dir=_scratch_root)

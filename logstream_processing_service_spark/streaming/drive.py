@@ -33,16 +33,16 @@ setting is restored after the stream finishes.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import scratch_dir
 
 # ~bytes of staged micro-batch input per state partition: state volume for
 # these bounded twins tracks input volume, and partitions far below this
@@ -82,20 +82,16 @@ def run_deterministic_batches(
     ``ValueError`` before anything is written.
 
     The returned frame is materialized (the stream has finished); all
-    work happens at call time. The source/checkpoint temp dirs are
-    cleaned up on success; the captured-output dir survives the call
-    (the returned frame reads from it) and is removed at process exit."""
+    work happens at call time. The source/checkpoint dir is removed
+    when the call returns; the captured output lives in its own
+    ``session.scratch_dir``, new per call, because the returned frame
+    reads it lazily (no collect/re-upload round trip through the
+    driver), so it stays until the process exits."""
     if not slices:
         raise ValueError("run_deterministic_batches: `slices` is empty")
-    work = tempfile.mkdtemp(prefix="stream_twin_")
+    work = scratch_dir("stream_twin")
     src = f"{work}/src"
-    # the captured output outlives `work`: the returned DataFrame reads
-    # these files lazily (no collect/re-upload round trip through the
-    # driver — r13; the old form re-serialized every captured row), so
-    # the dir is kept for the session and reaped at interpreter exit.
-    out_keep = tempfile.mkdtemp(prefix="stream_twin_out_")
-    atexit.register(shutil.rmtree, out_keep, ignore_errors=True)
-    out = f"{out_keep}/out"
+    out = f"{scratch_dir('stream_twin_out')}/out"
     try:
         # independent single-file writes: run them concurrently and pin
         # batch order via explicit mtimes afterwards (module docstring)

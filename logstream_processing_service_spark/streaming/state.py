@@ -50,10 +50,6 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _minkowski(a: np.ndarray, b: np.ndarray, p: float = P) -> float:
-    return float(np.power(np.power(np.abs(a - b), p).sum(), 1.0 / p))
-
-
 def semantic_group_fn(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ):

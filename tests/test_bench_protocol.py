@@ -95,3 +95,39 @@ def test_untimed_builds_submit_only_schema_reads(spark, sf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert not offenders, "\n".join(f"{n}: {s}" for n, s in offenders.items())
+
+
+def test_scaling_study_rebuilds_unfinished_corpora(tmp_path, monkeypatch):
+    """A corpus is reused only when its ``_COMPLETE`` marker, written after
+    the build returns, names the current source SF; an interrupted build
+    or one from another SF is removed and rebuilt."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(bench.__file__).parent / "tools" / "scaling_study.py"
+    mod_spec = importlib.util.spec_from_file_location("scaling_study", path)
+    study = importlib.util.module_from_spec(mod_spec)
+    mod_spec.loader.exec_module(study)
+    monkeypatch.setattr(study, "SRC_SF", "/data/sf0.1")
+    corpus = tmp_path / "scale10"
+    builds = []
+
+    def build():
+        corpus.mkdir()
+        (corpus / "documents.parquet").write_text("docs")
+        builds.append(1)
+
+    def interrupted():
+        build()
+        raise KeyboardInterrupt
+
+    with pytest.raises(KeyboardInterrupt):
+        study._ensure_corpus(str(corpus), interrupted)
+    assert (corpus / "documents.parquet").exists()
+    study._ensure_corpus(str(corpus), build)  # no marker: rebuilt
+    study._ensure_corpus(str(corpus), build)  # finished build: reused
+    assert len(builds) == 2
+    assert (corpus / "_COMPLETE").read_text() == "/data/sf0.1"
+    monkeypatch.setattr(study, "SRC_SF", "/data/sf1")
+    study._ensure_corpus(str(corpus), build)  # another source SF: rebuilt
+    assert len(builds) == 3

@@ -83,7 +83,7 @@ def test_rebuild_overwrites_but_history_stays_travelable(spark, tmp_path):
     assert (pre == both).all()
 
 
-def test_or_merge_equals_one_shot_filter_and_tolerates_overlap(spark):
+def test_or_merge_equals_one_shot_filter_and_tolerates_overlap(spark, tmp_path):
     """The OR-merged registry words equal the one-shot filter built on
     the union shingle set — including when the two committed slices
     OVERLAP (idempotent OR; the property the posting registries must
@@ -102,10 +102,7 @@ def test_or_merge_equals_one_shot_filter_and_tolerates_overlap(spark):
     )
     s1 = s_all.filter(F.col("s") < 1040)          # overlaps s2 on 20 rows
     s2 = s_all.filter(F.col("s") >= 1020)
-    t = str(spark.sparkContext.applicationId)
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="bloom-reg-")
+    d = str(tmp_path / "bloom-reg")
     TX.commit(d, bloom_word_bits(s1, m_bits), mode="overwrite")
     TX.commit(d, bloom_word_bits(s2, m_bits), mode="append")
     merged = (

@@ -79,46 +79,3 @@ def test_merged_stats_derive_not_stale(spark, tmp_path):
     registry = bm25_incremental_index(base, delta, t)
     n_docs = registry.select("doc_id").distinct().count()
     assert n_docs == docs.count()
-
-
-def test_registry_dir_is_per_process(spark):
-    """r11-advice regression (queries_text q_bm25_incremental_twin):
-    the registry dir must be keyed by the SparkSession's
-    applicationId, not sf_dir alone — two concurrent processes on the
-    same sf_dir (parallel verify halves + a test run) would otherwise
-    race one process's rmtree against the other's snapshot read."""
-    from logstream_processing_service_spark.queries_text import (
-        _bm25_inc_dir,
-    )
-
-    d = _bm25_inc_dir(spark, "/root/testdata/sf0.01")
-    app = spark.sparkContext.applicationId
-    assert app.replace(":", "_") in d or app in d, (d, app)
-    # different sf_dirs under the same process stay distinct too
-    d2 = _bm25_inc_dir(spark, "/root/testdata/sf0.001")
-    assert d != d2
-
-
-def test_derived_registry_dirs_register_their_own_cleanup(spark, monkeypatch):
-    """r12-advice regression: the delete/compaction/charwin/lsh twins
-    derive SIBLING registry dirs; the atexit rmtree must register on
-    the exact final derived path (not only the base bm25_inc path),
-    or every process leaks its derived dirs in /tmp forever
-    (applicationId-suffixed paths are never reused)."""
-    import atexit
-
-    from logstream_processing_service_spark.queries_text import (
-        _bm25_inc_dir,
-    )
-
-    captured = []
-    monkeypatch.setattr(
-        atexit, "register",
-        lambda fn, *a, **kw: captured.append(a[0] if a else None),
-    )
-    for kind in ("bm25_inc", "bm25_inc_del", "bm25_inc_cmp",
-                 "charwin_inc", "lsh_inc"):
-        d = _bm25_inc_dir(spark, "/root/testdata/sf0.01", kind=kind)
-        assert f"logstream_{kind}_" in d, (kind, d)
-        assert captured[-1] == d, (kind, d, captured[-1])
-    assert len(set(captured)) == 5

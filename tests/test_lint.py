@@ -203,3 +203,100 @@ def test_bench_and_tools_compile(tmp_path):
     scripts = [root / "bench.py", *sorted((root / "tools").glob("*.py"))]
     for py in scripts:
         py_compile.compile(str(py), cfile=str(tmp_path / "x.pyc"), doraise=True)
+
+
+def _is_scratch_policy(node: ast.AST) -> bool:
+    """A temp-dir/file maker or an exit hook, referenced or imported."""
+    names = ("mkdtemp", "mkstemp")
+    return (
+        (isinstance(node, ast.Attribute) and node.attr in names)
+        or (isinstance(node, ast.Name) and node.id in names)
+        or (
+            isinstance(node, ast.Attribute)
+            and node.attr == "register"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "atexit"
+        )
+        or (
+            isinstance(node, ast.ImportFrom)
+            and node.module in ("tempfile", "atexit")
+            and any(a.name in (*names, "register") for a in node.names)
+        )
+    )
+
+
+def _is_tmp_literal(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("/tmp/")
+    )
+
+
+def test_on_disk_state_goes_through_scratch_dir():
+    """Where a query's on-disk state (txlog tables, registries, indexes,
+    stream sources) lives and how long it lasts is decided once, by
+    ``session.scratch_dir``: under ``TMPDIR``, one root per process,
+    removed at exit. A ``mkdtemp`` or exit hook elsewhere is a second
+    lifetime policy, and a fixed ``/tmp/...`` path in a query or the
+    stream harness ignores ``TMPDIR`` and is shared by every process on
+    the machine."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        tree = ast.parse(py.read_text(), filename=str(py))
+        if rel != "session.py":
+            for lineno, scope in _scoped(tree, _is_scratch_policy):
+                offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
+        if rel.startswith(("queries_", "streaming/")):
+            for lineno, scope in _scoped(tree, _is_tmp_literal):
+                offenders.append(f"{rel}:{lineno} /tmp literal in {scope or '<module>'}")
+    assert not offenders, (
+        "on-disk state outside session.scratch_dir:\n" + "\n".join(offenders)
+    )
+
+
+# Where a package definition may be referenced from.
+_REFERRERS = ("logstream_processing_service_spark", "tests", "tools", "perfbench")
+
+
+def _toplevel_definitions(tree: ast.Module):
+    """Yield (name, first line, last line) for each undecorated top-level
+    function or class and each top-level name assignment."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not node.decorator_list:
+                yield node.name, node.lineno, node.end_lineno
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name) and not t.id.startswith("__"):
+                    yield t.id, node.lineno, node.end_lineno
+
+
+def test_every_toplevel_definition_is_referenced():
+    """A top-level function, class or constant that nothing names is dead
+    code that reads as live. Decorated definitions are exempt: the
+    decorator (``@spec``, a UDF wrapper) is their reference."""
+    import re
+
+    root = PKG.parent
+    files = [root / "bench.py", root / "__spark_entry__.py"]
+    for d in _REFERRERS:
+        files += sorted((root / d).rglob("*.py"))
+    texts = {py: py.read_text() for py in files}
+    words: dict[str, int] = {}
+    for text in texts.values():
+        for w in re.findall(r"\w+", text):
+            words[w] = words.get(w, 0) + 1
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        lines = texts[py].splitlines()
+        for name, first, last in _toplevel_definitions(ast.parse(texts[py])):
+            own = sum(
+                len(re.findall(rf"\b{re.escape(name)}\b", ln))
+                for ln in lines[first - 1:last]
+            )
+            if words.get(name, 0) <= own:
+                offenders.append(f"{py.relative_to(root)}:{first} {name}")
+    assert not offenders, "unreferenced top-level definitions:\n" + "\n".join(offenders)

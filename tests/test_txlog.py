@@ -404,7 +404,7 @@ def test_restore_to_version(spark, tmp_path):
 def test_manifest_file_stats_pruning(spark, tmp_path):
     """Iceberg/Delta-shaped data skipping off the LOG: commit_with_stats
     records per-file min/max in the manifest (O(new files) per commit,
-    carried forward on appends); read_snapshot_pruned plans the scan
+    carried forward on appends); read_snapshot_pruned_box plans the scan
     from manifest stats alone and answers identically to a full scan."""
     from pyspark.sql import functions as F
 
@@ -425,7 +425,7 @@ def test_manifest_file_stats_pruning(spark, tmp_path):
     assert len(man["files"]) == 3
     assert len(man["file_stats"]) == 3  # append carried stats forward
 
-    pruned = TX.read_snapshot_pruned(spark, t, "id", 120, 180)
+    pruned = TX.read_snapshot_pruned_box(spark, t, {"id": (120, 180)})
     # only the middle file is scanned
     files_read = {
         r["_f"]
@@ -443,7 +443,7 @@ def test_manifest_file_stats_pruning(spark, tmp_path):
     assert sorted(r["id"] for r in pruned.collect()) == want
 
     # out-of-range probe: zero files, empty result, correct schema
-    none = TX.read_snapshot_pruned(spark, t, "id", 10_000, 20_000)
+    none = TX.read_snapshot_pruned_box(spark, t, {"id": (10_000, 20_000)})
     assert none.count() == 0 and set(none.columns) == {"id", "y"}
 
 
@@ -472,7 +472,7 @@ def test_optimize_table_compacts_with_stats(spark, tmp_path):
     # pre-optimize snapshot still readable
     assert _ids(TX.read_snapshot(spark, t, v - 1)) == want
     # range clustering + manifest stats -> one-file scans from the log
-    pruned = TX.read_snapshot_pruned(spark, t, "id", 10, 40)
+    pruned = TX.read_snapshot_pruned_box(spark, t, {"id": (10, 40)})
     files_read = {
         r["_f"]
         for r in pruned.select(F.input_file_name().alias("_f"))

@@ -226,6 +226,24 @@ SCALE100_QUERIES = (
 )
 
 
+def _ensure_corpus(path: str, build) -> None:
+    """Build the corpus at ``path`` unless a finished build of SRC_SF is
+    there. The ``_COMPLETE`` marker is written after ``build`` returns,
+    so an interrupted build, or one from another source SF, is removed
+    and rebuilt rather than measured."""
+    marker = os.path.join(path, "_COMPLETE")
+    try:
+        with open(marker) as fh:
+            if fh.read() == SRC_SF:
+                return
+    except FileNotFoundError:
+        pass
+    shutil.rmtree(path, ignore_errors=True)
+    build()
+    with open(marker, "w") as fh:
+        fh.write(SRC_SF)
+
+
 def build_scale10() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -478,11 +496,10 @@ def build_scale1000() -> None:
 
 def main() -> None:
     reps = int(os.environ.get("SCALE_REPS", "3"))
-    if not os.path.exists(os.path.join(SCALE_DIR, "documents.parquet")):
-        build_scale10()
+    _ensure_corpus(SCALE_DIR, build_scale10)
 
     from logstream_processing_service_spark.catalog import all_specs
-    from logstream_processing_service_spark.session import get_spark
+    from logstream_processing_service_spark.session import get_spark, scratch_dir
     from logstream_processing_service_spark.sources import load_table
 
     spark = get_spark(app_name="scaling-study")
@@ -504,8 +521,6 @@ def main() -> None:
         measured: the number should be ~flat across the 10x base step
         (alpha ~ 0), because refresh reads only the delta's files plus
         the KB-sized stored view."""
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from logstream_processing_service_spark.operators import txlog as TX
@@ -525,7 +540,7 @@ def main() -> None:
         delta = ev.limit(10_000).drop("event_id")
         best = float("inf")
         for _ in range(reps):
-            base = tempfile.mkdtemp(prefix="scale-mv-")
+            base = scratch_dir("scale_mv")
             tdir, vdir = f"{base}/t", f"{base}/v"
             TX.commit(tdir, ev.drop("event_id"), mode="overwrite")
             refresh_matview(spark, vdir, tdir, spec_)  # full, untimed
@@ -542,26 +557,20 @@ def main() -> None:
     # trend, not a point estimate. Events are not 100x'd (doc queries
     # only; the slice reuses the scale10 recipe with 100 copies).
     hundred = os.environ.get("SCALE_100") == "1"
-    if hundred and not os.path.exists(
-        os.path.join(SCALE100_DIR, "documents.parquet")
-    ):
-        build_scale100()
+    if hundred:
+        _ensure_corpus(SCALE100_DIR, build_scale100)
 
     # SCALE_1000=1: a FOURTH decade (5M docs) for the flagship pair
     thousand = os.environ.get("SCALE_1000") == "1"
-    if thousand and not os.path.exists(
-        os.path.join(SCALE1000_DIR, "documents.parquet")
-    ):
-        build_scale1000()
+    if thousand:
+        _ensure_corpus(SCALE1000_DIR, build_scale1000)
 
     # SCALE_HEAPS=1: a vocab-GROWTH decade (V ∝ n^0.7) for the
     # vocab-grain operators whose shuffle-decade exponents are blind to
     # type-inventory growth (r6 VERDICT #4)
     heaps = os.environ.get("SCALE_HEAPS") == "1"
-    if heaps and not os.path.exists(
-        os.path.join(HEAPS_DIR, "documents.parquet")
-    ):
-        build_scale10_heaps()
+    if heaps:
+        _ensure_corpus(HEAPS_DIR, build_scale10_heaps)
 
     # SCALE_ONLY=a,b,c restricts the run (e.g. just the third-decade set)
     only = os.environ.get("SCALE_ONLY")
