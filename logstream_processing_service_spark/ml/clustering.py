@@ -31,6 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the centroid table the model store saves and the scoring batch loads
+CENTROIDS_DDL = "label int, centroid array<double>"
+
 
 def fit_kmeans_centroids(
     embeddings: DataFrame,
@@ -55,8 +58,7 @@ def fit_kmeans_centroids(
     centers = model.clusterCenters()
     spark = embeddings.sparkSession
     return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "label int, centroid array<double>",
+        [(i, [float(x) for x in c]) for i, c in enumerate(centers)], CENTROIDS_DDL
     )
 
 
@@ -80,4 +82,6 @@ def train_and_assign(
     """The reference's training loop (learn_one+predict_one per row,
     run_training_batch.py:121-150) as fit → transform."""
     cents = fit_kmeans_centroids(embeddings, k=k)
-    return assign_clusters(embeddings, cents, threshold=threshold)
+    return assign_clusters(embeddings, cents, threshold=threshold).select(
+        "vec_id", "assigned_label", "dist"
+    )

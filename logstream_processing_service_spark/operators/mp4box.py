@@ -20,7 +20,6 @@ from __future__ import annotations
 import struct
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 
 _FTYP = struct.pack(">I4s4sI4s4s", 24, b"ftyp", b"isom", 512, b"isom", b"mp41")

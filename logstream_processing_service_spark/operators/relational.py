@@ -334,11 +334,14 @@ def flag_anomalies(
     here is the native deviation feature (lower = more anomalous volume
     spike direction is encoded by sign).
 
-    Fully lazy: the ratio guard is part of the plan (a broadcast scalar
-    aggregate joined in), NOT a driver-side count() branch — so the operator
-    composes into streaming foreachBatch and stays one job at any scale.
+    Fully lazy: the batch statistics and the ratio guard are unpartitioned
+    window aggregates in the plan, NOT a driver-side count() branch — so
+    the operator composes into streaming foreachBatch and stays one job at
+    any scale. Its input is one row per cluster after the first window, and
+    on an input that is already one partition no window needs an exchange.
     """
     latest = Window.partitionBy("cluster_id").orderBy(F.desc("batch_id"))
+    everything = Window.partitionBy()
     per_cluster = (
         features.withColumn("rn", F.row_number().over(latest))
         .filter(F.col("rn") == 1)
@@ -346,22 +349,18 @@ def flag_anomalies(
     )
     # score: the reference's IsolationForest scores are "lower = more
     # anomalous" (volume_analyzer.py:117-119); mirrored here by -|deviation|.
-    scored = per_cluster.withColumn("score", -F.abs(F.col("deviation")))
-    stats = scored.agg(
-        F.avg("score").alias("_mu"),
-        F.stddev_pop("score").alias("_sigma"),
-        F.count(F.lit(1)).alias("_n"),
-    )
     flagged = (
-        scored.crossJoin(F.broadcast(stats))
+        per_cluster.withColumn("score", -F.abs(F.col("deviation")))
+        .withColumn("_mu", F.avg("score").over(everything))
+        .withColumn("_sigma", F.stddev_pop("score").over(everything))
+        .withColumn("_n", F.count(F.lit(1)).over(everything))
         .withColumn(
             "rel_z", (F.col("score") - F.col("_mu")) / (F.col("_sigma") + F.lit(1e-9))
         )
         .filter(F.col("rel_z") < z_threshold)
     )
-    n_flagged = flagged.agg(F.count(F.lit(1)).alias("_nf"))
     guarded = (
-        flagged.crossJoin(F.broadcast(n_flagged))
+        flagged.withColumn("_nf", F.count(F.lit(1)).over(everything))
         # miscalibration guard (incident_ops.py:87-97): if too many clusters
         # flag at once, trust nothing and emit no incidents
         .filter(F.col("_nf") <= F.lit(ratio_guard) * F.col("_n"))
@@ -454,28 +453,22 @@ def mine_patterns(df: DataFrame, since_ts=None) -> DataFrame:
     (src/db/pattern_ops.py:28-65); the incremental variant adds
     ``timestamp > :last_time`` (:43).
 
-    Scale: the aggregate side is one row per cluster — tiny relative to the
-    fact table — so it is explicitly broadcast: the big side is NOT shuffled.
-    At 100 TB this is the difference between a map-side join and a full
-    sort-merge exchange.
+    Scale: one aggregate. ``min_by`` carries the first row's columns
+    through it, so the fact table is shuffled once, partially aggregated
+    map-side, and never joined back to its own aggregate.
     """
     base = df.filter(F.col("user_id").isNotNull())
     if since_ts is not None:
         base = base.filter(F.col("ts") > F.lit(since_ts))
     agg = base.groupBy("user_id").agg(
-        F.min("event_id").alias("first_event"),
+        F.min_by(F.struct("event_type", "props", "ts"), "event_id").alias("first"),
         F.count(F.lit(1)).alias("incident_count"),
     )
-    joined = base.alias("l").join(
-        F.broadcast(agg.alias("t")),
-        (F.col("l.user_id") == F.col("t.user_id"))
-        & (F.col("l.event_id") == F.col("t.first_event")),
-    )
-    return joined.select(
-        F.col("l.user_id").alias("cluster_id"),
-        F.concat_ws(" | ", F.col("l.event_type"), F.col("l.props")).alias("log_template"),
-        F.col("t.incident_count"),
-        F.col("l.ts").alias("last_seen"),
+    return agg.select(
+        F.col("user_id").alias("cluster_id"),
+        F.concat_ws(" | ", "first.event_type", "first.props").alias("log_template"),
+        "incident_count",
+        F.col("first.ts").alias("last_seen"),
     )
 
 

@@ -3,9 +3,9 @@
 The reference's only vector op is nearest-centroid assignment with mutable
 centroid state (src/ml/vector_engine.py:21-45). Batch re-expression here:
 
-- ``assign_nearest_centroid``: broadcast centroids × argmin distance — the
-  reference's scoring-path semantics (no centroid minting; the incremental
-  script discards minted centroids anyway, see SURVEY §3.1 step 7).
+- ``assign_nearest_centroid``: per-row argmin over one broadcast centroid
+  array — the reference's scoring-path semantics (no centroid minting; the
+  incremental script discards minted centroids anyway, see SURVEY §3.1 step 7).
 - ``ann_bruteforce``: exact top-k cosine neighbors for a query set.
 - ``ann_ivf``: IVF-style two-stage search — probe the nearest coarse
   centroids, then search only those buckets. This is the 100 TB path: the
@@ -51,38 +51,34 @@ def assign_nearest_centroid(
     p: float = 1.5,
     threshold: float | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment: argmin Minkowski(p) over broadcast
-    centroids (reference: src/ml/vector_engine.py:21-45, threshold 0.35).
+    """Nearest-centroid assignment: argmin Minkowski(p) over the centroids
+    (reference: src/ml/vector_engine.py:21-45, threshold 0.35). Keeps the
+    input columns and adds ``assigned_label`` and ``dist``.
 
-    Scale: centroid count is small (thousands at most) → broadcast cross
-    join keeps the big side unshuffled; ranking is per-row (no window over
-    the fact table needed since we rank within the per-row candidate list).
+    Scale: the centroids (thousands at most) are gathered into one array
+    row and broadcast, and each row takes ``array_min`` over its
+    (dist, label) pairs, so the ranking is per-row: the fact side is
+    neither shuffled nor windowed. Ties go to the lower label.
     """
-    cand = embeddings.crossJoin(
-        F.broadcast(centroids.select(F.col("label").alias("c_label"), "centroid"))
-    ).withColumn(
-        "dist", F.round(V.minkowski(F.col("embedding"), F.col("centroid"), p), 9)
+    cs = centroids.coalesce(1).agg(
+        F.collect_list(F.struct("label", "centroid")).alias("_cs")
     )
-    w = Window.partitionBy("vec_id").orderBy("dist", "c_label")
-    out = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            F.col("c_label").alias("assigned_label"),
-            F.round("dist", 6).alias("dist"),
-        )
+    nearest = F.array_min(F.transform("_cs", lambda c: F.struct(
+        F.round(V.minkowski(F.col("embedding"), c["centroid"], p), 9).alias("dist"),
+        c["label"].alias("label"),
+    )))
+    # its own projection, so the fields below read one argmin per row
+    best = embeddings.crossJoin(F.broadcast(cs)).select(
+        *embeddings.columns, nearest.alias("_best")
     )
+    dist, label = F.round("_best.dist", 6), F.col("_best.label")
     if threshold is not None:
         # reference semantics: beyond the threshold a NEW group is minted
         # (vector_engine.py:36-43); batch form marks them unassigned (-1)
-        out = out.withColumn(
-            "assigned_label",
-            F.when(F.col("dist") < threshold, F.col("assigned_label")).otherwise(
-                F.lit(-1)
-            ),
-        )
-    return out
+        label = F.when(dist < threshold, label).otherwise(F.lit(-1))
+    return best.select(
+        *embeddings.columns, label.alias("assigned_label"), dist.alias("dist")
+    )
 
 
 def ann_bruteforce(

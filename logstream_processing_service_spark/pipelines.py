@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
-from .ml.clustering import fit_kmeans_centroids
+from .ml.clustering import CENTROIDS_DDL, fit_kmeans_centroids
 from .ml.embedding import hash_featurizer
 from .operators import relational as R
 from .operators.similarity import assign_nearest_centroid
@@ -88,7 +88,9 @@ class ModelStore:
             json.dump({**meta, "saved_at": time.time()}, fh)
 
     def load_centroids(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.production, "centroids"))
+        return spark.read.schema(CENTROIDS_DDL).parquet(
+            os.path.join(self.production, "centroids")
+        )
 
     def load_manifest(self) -> dict:
         with open(os.path.join(self.production, "manifest.json")) as fh:
@@ -185,22 +187,12 @@ def run_training_batch(
     # algorithm (per-key applyInPandas / applyInPandasWithState)
     centroids = fit_kmeans_centroids(staged, k=k)
 
-    # score path: broadcast nearest-centroid (M3 batch form)
-    assigned = assign_nearest_centroid(
-        staged.select(F.col("event_id").alias("vec_id"), "embedding"),
-        centroids,
-        threshold=None,
-    )
-
-    # S6/S7 bulk load: embeddings + assignments in ONE set-oriented upsert
+    # score path: broadcast nearest-centroid (M3 batch form); S6/S7 bulk
+    # load: embeddings + assignments in ONE set-oriented upsert
     emb_table = (
-        staged.join(
-            assigned.select(
-                F.col("vec_id").alias("event_id"),
-                F.col("assigned_label").alias("cluster_id"),
-            ),
-            "event_id",
-        )
+        assign_nearest_centroid(staged, centroids, threshold=None)
+        .drop("dist")
+        .withColumnRenamed("assigned_label", "cluster_id")
     )
     upsert_parquet(spark, emb_table, os.path.join(work_dir, "log_embeddings"))
 
@@ -246,14 +238,18 @@ def anomaly_pass(
     J2 incident upsert split → insert append. Returns the incidents opened.
     ``volume`` replaces the history file tagged ``batch_tag``
     (``put_tagged``), so a replayed batch leaves the history as it was and
-    finds the clusters it flags already open."""
+    finds the clusters it flags already open. The history (one row per
+    cluster per 100-id virtual batch: 508 at the end of a traced
+    ``score_microbatch`` run, read whole until a bounded tail lands) and
+    the incidents are small, so each is read as one partition, which meets
+    every window's and the distinct's distribution: nothing is shuffled."""
     hist_path = os.path.join(work_dir, "volume_history")
     put_tagged(volume, hist_path, batch_tag)
-    history = spark.read.schema(volume.schema).parquet(hist_path)
+    history = spark.read.schema(volume.schema).parquet(hist_path).coalesce(1)
     flagged = R.flag_anomalies(R.volume_zscore(history))
 
     inc_path = os.path.join(work_dir, "incidents")
-    incidents = read_parquet_or_empty(spark, inc_path, R.INCIDENTS_DDL)
+    incidents = read_parquet_or_empty(spark, inc_path, R.INCIDENTS_DDL).coalesce(1)
     actions = R.open_incident_upsert(flagged.select("cluster_id"), incidents)
     # Count BEFORE appending: the plan reads inc_path, so re-running it
     # after the write would anti-join the new rows away. cache: NOT
@@ -290,10 +286,13 @@ def score_batch(
     The scored rows are persisted once: their count, the only action that
     runs the embed → assign plan, serves the empty-batch exit and the
     result, every sink reads the cache, and ``finally`` releases it. The
-    tables the service writes itself are read with their known schema, so
-    no schema-inference job runs. A replayed batch is idempotent: the
-    sinks skip the keys they hold and ``anomaly_pass`` replaces the
-    batch's history file.
+    assignment labels the embedded rows in place (each is embedded once),
+    and no small side is shuffled: the centroids are one broadcast row, the
+    patterns one aggregate, the anomaly pass one partition. The tables the
+    service writes itself are read with their known schema, so no
+    schema-inference job runs. A replayed batch is idempotent: the sinks
+    skip the keys they hold and ``anomaly_pass`` replaces the batch's
+    history file.
     """
     store = ModelStore(os.path.join(work_dir, "models"))
     centroids = store.load_centroids(spark)  # state load, §3.1 step 2
@@ -301,29 +300,24 @@ def score_batch(
     # embed + nearest-centroid with the 0.35 mint threshold (M3); batch
     # semantics: beyond-threshold rows stay unassigned (-1) — matching the
     # reference's scoring path, which discards minted centroids (§3.1 step 7)
-    emb = embed_events(events, dim)
-    assigned = assign_nearest_centroid(
-        emb.select(F.col("event_id").alias("vec_id"), "embedding"),
-        centroids,
-        threshold=CENTROID_THRESHOLD,
-    )
     # cache: NOT caller-owned — batch-scoped, released in the `finally` below
-    scored = emb.join(
-        assigned.select(
-            F.col("vec_id").alias("event_id"),
-            F.col("assigned_label").alias("cluster_id"),
-        ),
-        "event_id",
-    ).persist()
+    scored = (
+        assign_nearest_centroid(
+            embed_events(events, dim), centroids, threshold=CENTROID_THRESHOLD
+        )
+        .drop("dist")
+        .withColumnRenamed("assigned_label", "cluster_id")
+        .persist()
+    )
     try:
         n_scored = scored.count()
         if n_scored == 0:  # empty-batch early exit (:69-71)
             return {"scored": 0, "incidents": 0}
 
         # T2/S6 idempotent sink (vs per-row txn log_ops.py:66-81). The cached
-        # rows keep the assign window's shuffle partitions (AQE does not
-        # coalesce a cached plan's output), so without the rebalance every
-        # batch would append one small file per shuffle partition.
+        # rows keep the slice scan's input splits (AQE does not coalesce a
+        # cached plan's output), so without the rebalance every batch would
+        # append one small file per split.
         upsert_parquet(
             spark, scored.hint("rebalance", "event_id"),
             os.path.join(work_dir, "log_embeddings"),

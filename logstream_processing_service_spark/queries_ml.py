@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import _t, spec
 from .operators import relational as R
-from .queries_relational import _VOLUME_SQL, _ZSCORE_SQL
+from .queries_relational import _ZSCORE_SQL
 
 
 @spec(

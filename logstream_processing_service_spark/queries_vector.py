@@ -42,7 +42,9 @@ _CENTROIDS_CTE = f"""
 )
 def q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    return S.assign_nearest_centroid(emb, S.label_centroids(emb))
+    return S.assign_nearest_centroid(emb, S.label_centroids(emb)).select(
+        "vec_id", "assigned_label", "dist"
+    )
 
 
 @spec(

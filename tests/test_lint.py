@@ -300,3 +300,32 @@ def test_every_toplevel_definition_is_referenced():
             if words.get(name, 0) <= own:
                 offenders.append(f"{py.relative_to(root)}:{first} {name}")
     assert not offenders, "unreferenced top-level definitions:\n" + "\n".join(offenders)
+
+
+def test_module_imports_are_used():
+    """An import that its module never names is dead code that reads as
+    a dependency. A deliberate one (a re-export, an availability probe)
+    says so with ``noqa: F401`` on its lines; names listed in ``__all__``
+    count as used."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        lines = py.read_text().splitlines()
+        tree = ast.parse("\n".join(lines), filename=str(py))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                used |= {c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if any("noqa: F401" in ln for ln in lines[node.lineno - 1:node.end_lineno]):
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name != "*" and name not in used:
+                    offenders.append(f"{py.relative_to(PKG.parent)}:{node.lineno} {name}")
+    assert not offenders, "imported but never used:\n" + "\n".join(offenders)

@@ -6,6 +6,8 @@ sf0.001 numbers still look fine.
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,12 +45,14 @@ def test_log_templates_prunes_columns(spark):
     assert read == {"event_id", "user_id", "event_type", "props"}
 
 
-def test_mine_patterns_broadcasts_agg_side(spark):
+def test_mine_patterns_is_one_aggregate(spark):
     from logstream_processing_service_spark.operators.relational import mine_patterns
 
     plan = _plan(mine_patterns(_events(spark)))
-    assert "BroadcastHashJoin" in plan
+    # the first row rides through the aggregate: no join back to it
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
+    assert plan.count("Exchange") == 1
 
 
 def test_pricing_summary_partial_aggregation(spark):
@@ -67,10 +71,32 @@ def test_nearest_centroid_no_shuffle_of_fact_side(spark):
     from logstream_processing_service_spark.catalog import all_specs
 
     specs = {s.name: s for s in all_specs()}
-    plan = _plan(specs["nearest_centroid"].fn(spark, SF_DIR))
-    # centroids are broadcast; the embeddings side must not be exchanged
-    # before the join (one window exchange on vec_id afterwards is expected)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    lines = _plan(specs["nearest_centroid"].fn(spark, SF_DIR)).splitlines()
+    # the centroids are broadcast as one row and every embedding takes its
+    # argmin in place: the embeddings side is neither exchanged nor windowed
+    at = next(i for i, ln in enumerate(lines) if "BroadcastNestedLoopJoin" in ln)
+    col = lines[at].index("BroadcastNestedLoopJoin")
+    fact_side = list(
+        itertools.takewhile(lambda ln: ln[col:col + 1] == ":", lines[at + 1:])
+    )
+    assert fact_side and "Scan" in "\n".join(fact_side)
+    assert not any("Exchange" in ln for ln in fact_side)
+    assert not any("Window" in ln for ln in lines)
+
+
+def test_anomaly_flags_on_one_partition_shuffle_nothing(spark, tmp_path):
+    """The anomaly pass reads its history as one partition: every window
+    of the features and the flags is then met without an exchange, and
+    the batch statistics are joined in by no nested-loop join."""
+    from logstream_processing_service_spark.operators import relational as R
+
+    path = str(tmp_path / "history")
+    R.batch_volume(_events(spark)).write.parquet(path)
+    history = spark.read.parquet(path).coalesce(1)
+    plan = _plan(R.flag_anomalies(R.volume_zscore(history)))
+    assert "Window" in plan
+    assert "Exchange" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_dedup_paths_never_cartesian(spark):

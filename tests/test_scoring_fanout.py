@@ -85,8 +85,9 @@ def test_scoring_embeds_the_slice_once(spark, work_dir, monkeypatch):
     before_ids = _persisted_ids(spark)
     out = P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=0, end_id=999)
     assert out["scored"] > 0
-    # one materialization: the assign join reads the embedding twice at most
-    assert rows.value <= 2 * out["scored"]
+    # one materialization, and the assignment keeps the embedded rows
+    # instead of joining back to them: each scored row is embedded once
+    assert rows.value == out["scored"]
     assert _persisted_ids(spark) - before_ids == set()
 
     # re-running the slice adds nothing to the idempotent sink, and it
@@ -96,6 +97,27 @@ def test_scoring_embeds_the_slice_once(spark, work_dir, monkeypatch):
     P.run_incremental_batch(spark, SF_DIR, work_dir, start_id=0, end_id=999)
     assert _emb_rows(spark, work_dir) == n
     assert _anomaly_state(spark, work_dir) == state
+
+
+def test_scoring_batch_job_budget(spark, trained, tmp_path):
+    """One slice is scored in at most 17 Spark jobs: no small side (the
+    centroids, the pattern aggregate, the anomaly statistics) is shuffled
+    or joined back, and the centroid table is read with its known schema."""
+    import uuid
+
+    work = str(tmp_path / "svc")
+    shutil.copytree(trained, work)
+    sc = spark.sparkContext
+    group = f"scoring-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one scoring batch")
+    try:
+        out = P.run_incremental_batch(spark, SF_DIR, work, start_id=0, end_id=999)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out["scored"] > 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 17, sorted(jobs)
 
 
 def test_empty_slice_writes_nothing_and_releases_cache(spark, work_dir):
