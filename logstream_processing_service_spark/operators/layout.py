@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scratch_dir
+
 
 def _spread_sql(x: str, dialect: str) -> str:
     """Interleave-ready bit spread of a 16-bit int (abcd… -> a0b0c0d0…),
@@ -209,7 +211,6 @@ def stage_bucketed_join_tables(
     orders: DataFrame,
     n_buckets: int = 8,
     database: str = "bucketdb",
-    location: str = "/tmp/logstream_bucketdb",
     tag: str = "t",
 ) -> tuple[str, str]:
     """Stage both join sides as BUCKETED, bucket-sorted managed tables
@@ -220,20 +221,26 @@ def stage_bucketed_join_tables(
     table happens once, at ingest, not per query. Returns the two table
     names.
 
-    A managed-table database pinned to an explicit LOCATION keeps the
-    staging independent of the session's working directory (the
-    bloom_point_lookup staging precedent)."""
+    The managed-table database is created once per session catalog,
+    at a ``session.scratch_dir`` location, so the staging depends on
+    neither the session's working directory nor a path shared with
+    other processes. A database the catalog already holds keeps the
+    location it was created with."""
     import shutil
+    from urllib.parse import urlparse
+    from urllib.request import url2pathname
 
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {database} LOCATION '{location}'"
-    )
+    if not spark.catalog.databaseExists(database):
+        spark.sql(
+            f"CREATE DATABASE {database} LOCATION '{scratch_dir('bucketdb')}'"
+        )
+    uri = spark.catalog.getDatabase(database).locationUri
+    location = url2pathname(urlparse(uri).path)
     li_t = f"{database}.li_bucketed_{tag}"
     od_t = f"{database}.orders_bucketed_{tag}"
-    # idempotent restage: a FRESH metastore (every driver session gets
-    # one) does not know about a previous session's table, but the
-    # managed LOCATION persists on disk and saveAsTable refuses to
-    # adopt it (LOCATION_ALREADY_EXISTS) — drop both halves explicitly
+    # idempotent restage: saveAsTable refuses to adopt a managed table
+    # dir the catalog does not know (LOCATION_ALREADY_EXISTS), so drop
+    # both halves and whatever a failed write left on disk
     for t in (li_t, od_t):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(

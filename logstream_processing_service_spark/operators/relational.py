@@ -473,7 +473,7 @@ def mine_patterns(df: DataFrame, since_ts=None) -> DataFrame:
 
 
 # the incidents table the batch and the streaming anomaly passes append to
-INCIDENTS_DDL = "cluster_id bigint, status string, created_at timestamp"
+INCIDENTS_DDL = "cluster_id int, status string, created_at timestamp"
 
 
 def open_incident_upsert(

@@ -293,6 +293,13 @@ def score_batch(
     schema-inference job runs. A replayed batch is idempotent: the sinks
     skip the keys they hold and ``anomaly_pass`` replaces the batch's
     history file.
+
+    In a ``get_spark`` session a steady-state batch reuses the generated
+    classes the previous batch compiled (``session.CODEGEN_CACHE_ENTRIES``).
+    Two plans still compile each batch, because codegen inlines their
+    per-batch literals: the slice driver's ``R.scan_slice`` stage, with the
+    slice's ``event_id`` bounds, and the ``current_timestamp()`` of
+    ``anomaly_pass``'s ``created_at``.
     """
     store = ModelStore(os.path.join(work_dir, "models"))
     centroids = store.load_centroids(spark)  # state load, §3.1 step 2

@@ -78,3 +78,24 @@ def test_bucketed_join_plan_has_no_join_side_exchange(spark):
     # order's range shuffle — nothing feeding the join itself
     assert plan.count("Exchange") == 2
     assert "SelectedBucketsCount" in plan  # reader honored the buckets
+
+
+def test_bucketed_database_lives_in_a_scratch_dir(spark):
+    """The database is created once per session catalog in a
+    ``session.scratch_dir`` (under ``TMPDIR``, removed at exit), not at a
+    fixed path every process on the machine shares; a restage reuses it
+    and replaces the table's files."""
+    import os
+    import tempfile
+    from urllib.parse import urlparse
+
+    def location() -> str:
+        return urlparse(spark.catalog.getDatabase("bucketdb").locationUri).path
+
+    li_t, _ = _stage(spark, SF_DIR, "loc")
+    loc = location()
+    assert loc.startswith(tempfile.gettempdir() + os.sep)
+    assert os.path.basename(loc).startswith("bucketdb_")
+    _stage(spark, SF_DIR, "loc")
+    assert location() == loc
+    assert os.listdir(os.path.join(loc, li_t.split(".", 1)[1]))

@@ -238,9 +238,9 @@ def test_on_disk_state_goes_through_scratch_dir():
     stream sources) lives and how long it lasts is decided once, by
     ``session.scratch_dir``: under ``TMPDIR``, one root per process,
     removed at exit. A ``mkdtemp`` or exit hook elsewhere is a second
-    lifetime policy, and a fixed ``/tmp/...`` path in a query or the
-    stream harness ignores ``TMPDIR`` and is shared by every process on
-    the machine."""
+    lifetime policy, and a fixed ``/tmp/...`` path anywhere in the
+    package ignores ``TMPDIR`` and is shared by every process on the
+    machine."""
     offenders = []
     for py in sorted(PKG.rglob("*.py")):
         rel = py.relative_to(PKG).as_posix()
@@ -248,9 +248,8 @@ def test_on_disk_state_goes_through_scratch_dir():
         if rel != "session.py":
             for lineno, scope in _scoped(tree, _is_scratch_policy):
                 offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
-        if rel.startswith(("queries_", "streaming/")):
-            for lineno, scope in _scoped(tree, _is_tmp_literal):
-                offenders.append(f"{rel}:{lineno} /tmp literal in {scope or '<module>'}")
+        for lineno, scope in _scoped(tree, _is_tmp_literal):
+            offenders.append(f"{rel}:{lineno} /tmp literal in {scope or '<module>'}")
     assert not offenders, (
         "on-disk state outside session.scratch_dir:\n" + "\n".join(offenders)
     )

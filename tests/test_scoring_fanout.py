@@ -120,6 +120,60 @@ def test_scoring_batch_job_budget(spark, trained, tmp_path):
     assert len(jobs) <= 17, sorted(jobs)
 
 
+def test_scoring_batch_compile_budget(spark, trained, tmp_path):
+    """A steady-state batch compiles at most 8 generated classes: the
+    session's codegen cache holds what the previous batch of the same
+    shape compiled. What remains are the two plans whose per-batch
+    literals codegen inlines (the slice bounds, the incidents'
+    ``created_at``). Spark's default 100-entry cache recompiled about 100
+    per batch. Two slices warm up: the first creates the sink targets and
+    the second is the first to read them, each with plans of its own."""
+    work = str(tmp_path / "svc")
+    shutil.copytree(trained, work)
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for lo in (0, 300):
+        P.run_incremental_batch(spark, SF_DIR, work, start_id=lo, end_id=lo + 299)
+    before = compiles.getCount()
+    out = P.run_incremental_batch(spark, SF_DIR, work, start_id=600, end_id=899)
+    assert out["scored"] > 0
+    assert compiles.getCount() - before <= 8
+
+
+def test_incidents_keep_the_cluster_id_type_they_are_written_with(spark, trained, tmp_path):
+    """Every service table stores ``cluster_id`` as int32, and the pinned
+    incidents schema reads the incidents back as written: same type, same
+    rows, so the upsert's anti-join compares the keys without a cast."""
+    from pyspark.sql import functions as F
+
+    from logstream_processing_service_spark.operators.relational import INCIDENTS_DDL
+
+    work = str(tmp_path / "svc")
+    shutil.copytree(trained, work)
+    P.run_incremental_batch(spark, SF_DIR, work, start_id=0, end_id=999)
+    for table in ("log_embeddings", "log_patterns_incr", "volume_history"):
+        schema = pq.read_table(os.path.join(work, table)).schema
+        assert schema.field("cluster_id").type == pa.int32(), table
+
+    # no slice of the small fixture bursts, so the anomaly pass runs on a
+    # planted history in the scored history's column types: ten steady
+    # clusters, one of which bursts in its fifth virtual batch
+    hist = spark.read.parquet(os.path.join(work, "volume_history"))
+    rows = [(c, b, 1000 if (c, b) == (0, 4) else 10) for c in range(10) for b in range(5)]
+    burst = spark.createDataFrame(rows, ["cluster_id", "batch_id", "log_count"]).select(
+        *(F.col(f.name).cast(f.dataType) for f in hist.schema)
+    )
+    anomaly_dir = str(tmp_path / "anomaly")
+    assert P.anomaly_pass(spark, burst, anomaly_dir, "burst") == 1
+
+    inc_path = os.path.join(anomaly_dir, "incidents")
+    assert pq.read_table(inc_path).schema.field("cluster_id").type == pa.int32()
+    pinned = spark.read.schema(INCIDENTS_DDL).parquet(inc_path)
+    as_written = spark.read.parquet(inc_path)
+    assert pinned.dtypes == as_written.dtypes
+    assert sorted(map(tuple, pinned.collect())) == sorted(map(tuple, as_written.collect()))
+
+
 def test_empty_slice_writes_nothing_and_releases_cache(spark, work_dir):
     files = _files(work_dir)
     before_ids = _persisted_ids(spark)
