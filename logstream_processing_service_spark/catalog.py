@@ -101,22 +101,20 @@ _PRIORITY: tuple[str, ...] = (
     "holt_winters_daily", "html_text_extract", "kwic_snippets",
     "merge_events_upsert", "mmr_rerank", "multimodal_features",
     # ------------------------------------------------------------------
-    # r14 map (pre-computed per the standing policy, assuming the r13
-    # driver run lands this window): r14's new registrations first
-    # (the rehearsed r14 queue — coordinates in ROADMAP), then the 24
-    # displaced r8-latest rows (computed from the r1-r12 union this
-    # session: nation_trade_volume, normalize_text, oov_rate,
+    # r14 map: the rehearsed r14 queue was never registered, and its
+    # query functions are deleted (the catalog no longer grows), so no
+    # new registrations lead the next window. The 24 displaced
+    # r8-latest rows (computed from the r1-r12 union:
+    # nation_trade_volume, normalize_text, oov_rate,
     # part_supplier_counts, part_value_share, promo_revenue,
     # readability_scores, returned_item_customers,
     # robust_anomaly_stats, router_twin, salted_join_twin,
     # semantic_dedup, shard_assignment, single_failed_supplier_orders,
     # span_dup_profile, subword_token_counts, supplier_part_revenue,
     # token_entropy, top_revenue_orders, url_domain_report, url_parse,
-    # user_sessions, word_triangles, wordpiece_token_counts —
-    # re-verify against the union at r14 start), then
-    # r9-latest alphabetical backfill for any remaining slots. Any
-    # registration beyond the queue displaces from the END of the r9
-    # list with a named in-window rationale.
+    # user_sessions, word_triangles, wordpiece_token_counts) would come
+    # first, then r9-latest alphabetical backfill. The window above is
+    # unchanged: reordering it would reorder all_specs().
 )
 
 

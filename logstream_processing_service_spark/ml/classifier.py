@@ -106,17 +106,3 @@ def quality_classifier_report(documents: DataFrame) -> DataFrame:
         ("n_lbfgs_iters", float(model.summary.totalIterations)),
     ]
     return spark.createDataFrame(rows, "metric string, value double")
-
-
-def score_documents(documents: DataFrame, model, assembler) -> DataFrame:
-    """Apply a trained filter to the corpus: one projection, coefficients
-    ride the closure — the deployable form of the classifier."""
-    from pyspark.ml.functions import vector_to_array
-
-    frame = quality_training_frame(documents).na.fill(0.0)
-    scored = model.transform(assembler.transform(frame))
-    return scored.select(
-        "doc_id",
-        F.round(vector_to_array("probability")[1], 6).alias("quality_score"),
-        F.col("prediction").cast("int").alias("keep"),
-    )

@@ -2815,212 +2815,3 @@ def merkle_tree_oracle_sql(
     SELECT level, node_id, node_hash, n_docs FROM ({union})
     ORDER BY level, node_id
     """
-
-
-def merkle_repair_plan(
-    old_docs: DataFrame,
-    new_docs: DataFrame,
-    n_shards: int = 64,
-    fanout: int = 8,
-    salt: str = "manifest-v1",
-) -> DataFrame:
-    """The rsync planner on top of :func:`merkle_integrity_diff` —
-    given a local replica (``old_docs``) and the source of truth
-    (``new_docs``), emit the MINIMAL shard-grain repair plan: one row
-    per divergent LEAF (matching subtree hashes certify every other
-    shard without reading it), with the source-side doc count and a
-    bytes-to-ship estimate (sum of text lengths — chars ≈ bytes for
-    the planner's purpose; swap in an on-disk size column when the
-    manifest carries one). ``action`` is ``fetch_shard`` (replace the
-    local shard with the source's) or ``drop_shard`` (the source no
-    longer has the shard at all). Reference tie: the anti-entropy
-    repair the reference's snapshot jobs do by full re-export
-    (src/jobs/run_full_batch.py), reduced to touched shards only.
-
-    Output: (shard, n_docs_local, n_docs_src, bytes_est, action),
-    ordered by shard.
-
-    Scale: the two tree builds are one (shard, rowhash) scan each;
-    the bytes estimate is ONE extra map-side-combined aggregate of
-    (shard, length) longs over the source corpus, joined to the
-    ≤ ``n_shards``-row divergent-leaf frame (broadcast). Nothing
-    doc-grain ever reaches the driver; shipping the plan costs KBs.
-    A 100 TB replica with 1% drift reads two integer projections and
-    repairs ~1% of shards instead of re-exporting the corpus.
-    """
-    diff = merkle_integrity_diff(old_docs, new_docs, n_shards, fanout, salt)
-    leaves = diff.filter(
-        (F.col("level") == 0) & F.col("differs")
-    ).select(
-        F.col("node_id").alias("shard"),
-        F.col("n_docs_old").alias("n_docs_local"),
-        F.col("n_docs_new").alias("n_docs_src"),
-    )
-    shard = (
-        F.expr(T.hash48_sql(f"concat('{salt}:', cast(doc_id as string))"))
-        % n_shards
-    ).cast("int")
-    nbytes = (
-        new_docs.select(
-            shard.alias("shard"),
-            F.length(F.coalesce(F.col("text"), F.lit(""))).alias("b"),
-        )
-        .groupBy("shard")
-        .agg(F.sum("b").cast("bigint").alias("bytes_est"))
-    )
-    return (
-        leaves.join(nbytes, "shard", "left")
-        .select(
-            "shard",
-            "n_docs_local",
-            "n_docs_src",
-            F.coalesce("bytes_est", F.lit(0)).cast("bigint").alias(
-                "bytes_est"
-            ),
-            F.when(F.col("n_docs_src") == 0, F.lit("drop_shard"))
-            .otherwise(F.lit("fetch_shard"))
-            .alias("action"),
-        )
-        .orderBy("shard")
-    )
-
-
-def merkle_repair_oracle_sql(
-    old_cte: str,
-    new_cte: str,
-    n_shards: int = 64,
-    salt: str = "manifest-v1",
-) -> str:
-    """DuckDB twin of :func:`merkle_repair_plan` — leaf-grain xor
-    compare (upper tree levels cannot change the plan: a divergent
-    leaf set determines it) + the source-side bytes aggregate."""
-    h_shard = T.hash48_sql(f"concat('{salt}:', cast(doc_id as string))")
-    h_row = T.hash48_sql(
-        "concat('merkle-v1:', cast(doc_id as string), ':', "
-        "coalesce(text, ''))"
-    )
-    return f"""
-    WITH old_snap AS ({old_cte}),
-    new_snap AS ({new_cte}),
-    lo AS (
-        SELECT CAST(({h_shard}) % {n_shards} AS INT) AS shard,
-               CAST(bit_xor({h_row}) AS BIGINT) AS h,
-               CAST(count(*) AS BIGINT) AS n
-        FROM old_snap GROUP BY 1
-    ),
-    ln AS (
-        SELECT CAST(({h_shard}) % {n_shards} AS INT) AS shard,
-               CAST(bit_xor({h_row}) AS BIGINT) AS h,
-               CAST(count(*) AS BIGINT) AS n
-        FROM new_snap GROUP BY 1
-    ),
-    nb AS (
-        SELECT CAST(({h_shard}) % {n_shards} AS INT) AS shard,
-               CAST(sum(length(coalesce(text, ''))) AS BIGINT) AS bytes_est
-        FROM new_snap GROUP BY 1
-    ),
-    d AS (
-        SELECT coalesce(lo.shard, ln.shard) AS shard,
-               CAST(coalesce(lo.n, 0) AS BIGINT) AS n_docs_local,
-               CAST(coalesce(ln.n, 0) AS BIGINT) AS n_docs_src,
-               (lo.h IS DISTINCT FROM ln.h) AS differs
-        FROM lo FULL OUTER JOIN ln ON lo.shard = ln.shard
-    )
-    SELECT d.shard, d.n_docs_local, d.n_docs_src,
-           CAST(coalesce(nb.bytes_est, 0) AS BIGINT) AS bytes_est,
-           CASE WHEN d.n_docs_src = 0 THEN 'drop_shard'
-                ELSE 'fetch_shard' END AS action
-    FROM d LEFT JOIN nb ON d.shard = nb.shard
-    WHERE d.differs
-    ORDER BY d.shard
-    """
-
-
-def doremi_to_mix_pipeline(
-    documents: DataFrame,
-    t_rounds: int = 3,
-    eta: float = 1.0,
-    eps: float = 0.01,
-    budget_frac: float = 0.5,
-    strata_col: str = "source",
-) -> DataFrame:
-    """DoReMi weights OPERATIONALIZED as a sampling plan — the
-    composition the curate_corpus discipline prescribes: run
-    :func:`doremi_iterated` (T multiplicative-weight rounds on the
-    micro-nat integer state), then feed the learned domain weights
-    into the :func:`temperature_mix_plan` rate arithmetic as the
-    target shares. Where temperature mixing flattens the NATURAL
-    distribution (n^α heuristic), this plan targets the group-DRO
-    weights the proxy loop actually learned — the last mile between
-    "we computed weights" and "the sampler knows what to do".
-
-    Output, one row per domain: (source, n_tokens, natural_share,
-    target_share, sample_rate, expected_tokens) — the
-    temperature_mix_plan audit shape with DoReMi weights in the
-    target_share seat.
-
-    Cross-engine discipline: the rate arithmetic is the same
-    double-precision expression on both engines in the same
-    association order (domain_weight is an exact micro-unit integer
-    ratio; total_tokens an exact BIGINT; one multiply chain + one
-    correctly-rounded divide, then round(·, 6)).
-
-    Scale: the corpus-sized work all happens inside doremi_iterated
-    (one corpus scan, T vocab-grain rounds); this composition runs on
-    the |domains|-row weight frame joined to a broadcast 1-row total.
-    """
-    w = doremi_iterated(documents, t_rounds, eta, eps, strata_col)
-    total = w.agg(
-        F.sum("n_tokens").cast("bigint").alias("total_tokens")
-    )
-    natural = F.col("n_tokens") / F.col("total_tokens").cast("double")
-    rate = F.least(
-        F.lit(1.0),
-        F.col("domain_weight")
-        * F.col("total_tokens")
-        * F.lit(budget_frac)
-        / F.col("n_tokens"),
-    )
-    return (
-        w.crossJoin(F.broadcast(total))
-        .select(
-            strata_col,
-            "n_tokens",
-            F.round(natural, 6).alias("natural_share"),
-            F.col("domain_weight").alias("target_share"),
-            F.round(rate, 6).alias("sample_rate"),
-            F.round(rate * F.col("n_tokens"), 2).alias("expected_tokens"),
-        )
-        .orderBy(strata_col)
-    )
-
-
-def doremi_to_mix_oracle_sql(
-    t_rounds: int = 3,
-    eta: float = 1.0,
-    eps: float = 0.01,
-    budget_frac: float = 0.5,
-    strata_col: str = "source",
-) -> str:
-    """DuckDB twin: the doremi_iterated oracle nested as a CTE, the
-    temperature_mix_plan rate arithmetic on top — every double
-    expression in the identical association order."""
-    inner = doremi_iterated_oracle_sql(t_rounds, eta, eps, strata_col)
-    return f"""
-    WITH doremi AS ({inner}),
-    tot AS (
-        SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens FROM doremi
-    )
-    SELECT {strata_col}, n_tokens,
-           round(n_tokens / CAST(total_tokens AS DOUBLE), 6)
-               AS natural_share,
-           domain_weight AS target_share,
-           round(least(1.0, domain_weight * total_tokens
-                             * CAST({budget_frac!r} AS DOUBLE)
-                             / n_tokens), 6) AS sample_rate,
-           round(least(1.0, domain_weight * total_tokens
-                             * CAST({budget_frac!r} AS DOUBLE)
-                             / n_tokens) * n_tokens, 2) AS expected_tokens
-    FROM doremi, tot
-    ORDER BY {strata_col}
-    """

@@ -1475,80 +1475,6 @@ def decontaminate_bloom_incremental(
     )
 
 
-def decontaminate_bloom_rebuild(
-    documents: DataFrame,
-    table_dir: str,
-    n: int = 5,
-    strata_col: str = "lang",
-    test_threshold_hex: str = "1a",
-    salt: str = "split-v1",
-    m_bits: int = 1 << 20,
-    k_hashes: int = 5,
-) -> DataFrame:
-    """The bloom registry's DELETE path, which for a bloom is loudly a
-    REBUILD: bits are shared across eval sets (OR is not invertible),
-    so 'remove eval slice 2' cannot subtract — the registry is rebuilt
-    from the RETAINED slices and committed as an overwrite version
-    (history stays time-travelable: the pre-delete filter remains
-    readable at its version until vacuumed). This is the documented
-    non-verb made a tested path, completing the per-family delete
-    semantics: postings/LSH/IVF tombstone, CM negates, bloom rebuilds.
-
-    Sequence: slice-1 words committed v0, slice-2 appended v1 (the
-    growth history), then the slice-2 removal rebuilds from slice 1
-    alone -> overwrite v2. The returned report is the decontamination
-    report against the RETAINED eval set only and hash-matches the
-    exact oracle restricted to it. Scale: the rebuild re-reduces only
-    the retained EVAL slices (KB-grain word frames from eval-suite
-    shingle sets) — the 100-TB train corpus is never touched by the
-    delete; it re-probes the new closure array in-row as always."""
-    from . import txlog as TX
-    from .sampling import split_bucket
-
-    sh = (
-        shingle_table(documents, n, max_doc_freq=0)
-        .withColumn(
-            "split",
-            F.when(
-                split_bucket("doc_id", salt) < test_threshold_hex, "test"
-            ).otherwise("train"),
-        )
-        # cache: caller-owned (repo contract)
-        .persist()
-    )
-    ev = sh.filter(F.col("split") == "test")
-    slice1 = ev.filter(F.col("doc_id") % 2 == 0).select("s").distinct()
-    slice2 = ev.filter(F.col("doc_id") % 2 == 1).select("s").distinct()
-    TX.commit(
-        table_dir, bloom_word_bits(slice1, m_bits, k_hashes),
-        mode="overwrite",
-    )
-    TX.commit(
-        table_dir, bloom_word_bits(slice2, m_bits, k_hashes), mode="append"
-    )
-    # the delete request: rebuild from the retained slice, overwrite
-    TX.commit(
-        table_dir, bloom_word_bits(slice1, m_bits, k_hashes),
-        mode="overwrite",
-    )
-    merged = (
-        TX.read_snapshot(documents.sparkSession, table_dir)
-        .groupBy("w")
-        .agg(F.expr("bit_or(bits)").alias("bits"))
-    )
-    words = _collect_bloom_words(merged, m_bits)
-    # the retained-eval view: slice-2 test docs leave the eval set
-    # (train rows are untouched — deleting eval docs never changes the
-    # train population the report counts)
-    sh_retained = sh.filter(
-        ~((F.col("split") == "test") & (F.col("doc_id") % 2 == 1))
-    )
-    return _bloom_decontaminate_report(
-        documents, sh_retained, words, strata_col, test_threshold_hex,
-        salt, m_bits, k_hashes,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Substring-grain exact dedup (whole-document containment)
 # ---------------------------------------------------------------------------

@@ -187,24 +187,3 @@ def windowed_drift(
         )
         .orderBy("day", "event_type")
     )
-
-
-def drift_sink(table_dir: str, view_dir: str, grid: DriftGrid):
-    """foreachBatch sink composing exactly-once txlog appends with the
-    incremental drift view — the streaming deployment of this monitor:
-    each micro-batch lands as pre-binned rows (replay-guarded by the
-    manifest HWM) and the (event_type, day, bin) view advances by that
-    batch's files only, so ``windowed_drift`` is always serveable at
-    O(report) cost over a continuously-ingesting stream (the
-    matview_sink pattern, specialized to the drift grain)."""
-    from . import txlog as TX
-
-    base_sink = TX.streaming_commit_sink(
-        table_dir, mode="append", txn_app_id="drift-monitor"
-    )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        base_sink(prepare_drift_rows(batch_df, grid), batch_id)
-        refresh_drift_view(batch_df.sparkSession, view_dir, table_dir)
-
-    return write

@@ -136,31 +136,6 @@ def lzw_encode(pixels: bytes, mcs: int) -> bytes:
     return bw.finish()
 
 
-def lzw_encode_uncompressed(pixels: bytes, mcs: int) -> bytes:
-    """Independent second encoder: literal codes only at FIXED width
-    mcs+1, with a CLEAR before the decoder's table could force a width
-    bump (next_code reaches 2^(mcs+1)). Trivially spec-correct — used to
-    cross-validate the decoder against lzw_encode."""
-    clear = 1 << mcs
-    eoi = clear + 1
-    width = mcs + 1
-    # decoder starts next_code at eoi+1 and adds one entry per code
-    # AFTER the first; stay strictly below the early-widen threshold
-    # (2^width - 1 table slots)
-    budget = (1 << width) - (eoi + 1) - 3
-    bw = _BitWriter()
-    bw.write(clear, width)
-    since_clear = 0
-    for b in pixels:
-        if since_clear > budget:
-            bw.write(clear, width)
-            since_clear = 0
-        bw.write(b, width)
-        since_clear += 1
-    bw.write(eoi, width)
-    return bw.finish()
-
-
 def lzw_decode(data: bytes, mcs: int, max_pixels: int | None = None) -> bytes:
     """GIF LZW decoder: handles CLEAR/EOI, the KwKwK case (code ==
     next_code), width bump at next_code == 2^width, deferred clears."""

@@ -609,162 +609,3 @@ def insert_hnsw(spark, index_dir: str, embeddings: DataFrame) -> int:
         np.array([r["embedding"] for r in rows], dtype=np.float64),
     )
     return save_hnsw(spark, index, index_dir)
-
-
-def hnsw_index_sink(index_dir: str, txn_app_id: str = "hnsw-ingest"):
-    """foreachBatch sink that keeps a durable HNSW registry current over
-    a stream of (vec_id, embedding) rows — the "continuously index new
-    embeddings" deployment: batch 0 builds the graph, later batches run
-    the incremental insert, and each step commits a new snapshot (so
-    searchers keep snapshot isolation while the index grows).
-
-    Exactly-once: the registry snapshot's manifest carries a per-app
-    batch HWM (the txlog txn_app_id pattern) — a replayed batch is a
-    no-op instead of a double insert, which would corrupt the
-    rebuild==incremental parity contract. The monotone-id insert
-    contract applies per batch: ids must arrive in increasing ranges
-    (natural for ingestion-assigned ids); an out-of-order batch raises
-    rather than silently degrading the graph."""
-    from . import txlog as TX
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions = TX._versions(index_dir)
-        if versions:
-            m = TX._manifest(index_dir, versions[-1])
-            hwm = (m.get("txn_hwms") or {}).get(txn_app_id)
-            if hwm is not None and batch_id <= hwm:
-                return  # replay after crash: already durably inserted
-            index = load_hnsw(spark, index_dir)
-            rows = batch_df.select("vec_id", "embedding").collect()
-            rows.sort(key=lambda r: r["vec_id"])
-            insert_hnsw_batch(
-                index,
-                [int(r["vec_id"]) for r in rows],
-                np.array([r["embedding"] for r in rows], dtype=np.float64),
-            )
-        else:
-            index = build_hnsw(batch_df)
-        _commit_index(spark, index, index_dir, batch_id, txn_app_id)
-
-    return write
-
-
-def _commit_index(
-    spark, index: HNSWIndex, index_dir: str, batch_id: int, txn_app_id: str
-) -> int:
-    """save_hnsw with the streaming HWM riding in the same manifest."""
-    from . import txlog as TX
-
-    return TX.commit(
-        index_dir,
-        _node_frame(spark, index),
-        mode="overwrite",
-        batch_id=batch_id,
-        txn_app_id=txn_app_id,
-        extra=_index_state(index),
-    )
-
-
-def compact_hnsw_registry(
-    spark,
-    index_dir: str,
-    min_vec_id: int | None = None,
-    retain_last: int = 2,
-    min_age_seconds: float = 3600.0,
-) -> dict:
-    """Registry maintenance for the durable HNSW index — the
-    dedup-registry compaction discipline (streaming/dedup.py
-    ``compact_registry``) applied to the ANN registry. HNSW's staleness
-    profile differs from the LSH registry's, so the policy has two
-    distinct legs:
-
-    1. GRAPH QUALITY needs no periodic re-layering — by construction.
-       The incremental insert IS the construction algorithm
-       (``insert_hnsw_batch`` continues the same RNG stream and
-       neighbor-selection heuristic ``build_hnsw`` uses), so an index
-       grown by any sequence of monotone-id batches is BIT-FOR-BIT the
-       index a from-scratch rebuild would produce (pinned by
-       tests/test_hnsw.py's insert==rebuild parity). There is no drift
-       to compact away; the LSH registry, by contrast, accumulates dead
-       band keys and NEEDS its TTL.
-
-    2. What DOES grow without bound is HISTORY and, in rolling-horizon
-       deployments, EXPIRED VECTORS. Every insert commits a full
-       overwrite snapshot (searchers keep snapshot isolation, but
-       superseded versions accumulate O(index) files each); and an
-       index meant to serve only the trailing N days keeps paying
-       search-frontier and snapshot cost for vectors past the horizon.
-
-    ``min_vec_id`` (ids are ingestion-monotone, hence time-ordered)
-    drops expired vectors by REBUILD over the kept set: deletion cannot
-    be incremental in HNSW without tombstone bookkeeping that would
-    break the parity contract, and the rebuild is driver-bounded
-    exactly like the original build (the registry stays codebook-scale
-    by design — ``build_hnsw``'s ``max_index_rows`` guard re-applies).
-    The rebuilt index is the CANONICAL index of the kept set, so
-    rebuild==incremental parity keeps holding for every later insert.
-    Exactly-once HWMs carry through the compaction commit (txlog
-    carries ``txn_hwms`` forward), so a replayed stream batch stays a
-    no-op afterwards.
-
-    ``retain_last`` / ``min_age_seconds`` then vacuum superseded
-    snapshots under txlog's retention rule (never the versions a
-    concurrent searcher may still pin inside the retention window).
-
-    Returns ``{"nodes_before", "nodes_after", "versions_before",
-    "versions_after"}``.
-    """
-    from . import txlog as TX
-
-    versions_before = len(TX._versions(index_dir))
-    index = load_hnsw(spark, index_dir)
-    nodes_before = len(index.ids)
-    nodes_after = nodes_before
-    if min_vec_id is not None:
-        keep = [i for i, vid in enumerate(index.ids) if vid >= min_vec_id]
-        nodes_after = len(keep)
-        if nodes_after == 0:
-            raise ValueError(
-                "compact_hnsw_registry would drop every vector — refusing "
-                "(an empty registry cannot serve; delete the index dir "
-                "explicitly if that is intended)"
-            )
-        if nodes_after < nodes_before:
-            # rebuild from the STORED unit vectors, skipping build_hnsw's
-            # renormalization: re-normalizing an already-unit vector
-            # wobbles last bits (||v̂|| = 1 ± ulp), which would break the
-            # bit-for-bit "compacted == canonical build of the kept set"
-            # contract the parity tests pin. The insert loop below IS
-            # build()'s, fresh RNG stream included — seeded with the
-            # ORIGINAL build seed from the manifest (r7 ADVICE): a
-            # hardcoded seed=0 would silently switch the level-draw
-            # stream for registries built with seed != 0, breaking
-            # "compacted == canonical build of the kept set". Parity is
-            # guaranteed only when the stored seed is reused, which is
-            # why the seed rides in hnsw_meta rather than being a
-            # compaction parameter.
-            rebuilt = HNSWIndex(
-                M=index.M,
-                ef_construction=index.ef_construction,
-                seed=index.seed,
-            )
-            rebuilt.vecs = index.vecs[keep].copy()
-            rebuilt.ids = [int(index.ids[i]) for i in keep]
-            rebuilt._compute_dmat()  # same accelerator as build()
-            draws = rebuilt.rng.random(nodes_after)
-            for j in range(nodes_after):
-                rebuilt._insert(
-                    j, int(-math.log(max(draws[j], 1e-300)) * rebuilt.ml)
-                )
-            rebuilt._dmat = None
-            save_hnsw(spark, rebuilt, index_dir)
-    TX.vacuum(
-        index_dir, retain_last=retain_last, min_age_seconds=min_age_seconds
-    )
-    return {
-        "nodes_before": nodes_before,
-        "nodes_after": nodes_after,
-        "versions_before": versions_before,
-        "versions_after": len(TX._versions(index_dir)),
-    }

@@ -184,22 +184,6 @@ def with_hilbert(
     return cur.drop("_hx", "_hy", "_rx", "_ry", "_nx", "_ny")
 
 
-def write_hilbert(
-    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int = 16,
-    order: int = HILBERT_ORDER,
-) -> None:
-    """write_zordered's Hilbert twin: range-repartition + sort on the
-    Hilbert index."""
-    (
-        with_hilbert(df, col_a, col_b, "_h", order)
-        .repartitionByRange(n_files, "_h")
-        .sortWithinPartitions("_h")
-        .drop("_h")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Bucketed co-located join (r8 session, r9 queue)
 # ---------------------------------------------------------------------------

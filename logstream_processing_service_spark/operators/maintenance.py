@@ -128,34 +128,6 @@ def build_file_stats_index(
     return df.groupBy("_file").agg(*aggs)
 
 
-def prune_files(index_df, col: str, lo, hi) -> list[str]:
-    """Files whose [min, max] for ``col`` intersects [lo, hi] — the
-    skipping decision, answered from the metadata-sized index without
-    touching data. The index is small by construction; collecting it is
-    the planner-side step."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        index_df.filter(
-            ~((F.col(f"max_{col}") < lo) | (F.col(f"min_{col}") > hi))
-        )
-        .select("_file")
-        .collect()
-    )
-    return [r["_file"] for r in rows]
-
-
-def read_pruned(spark: SparkSession, index_df, col: str, lo, hi):
-    """Scan only the files the index says can match, then re-apply the
-    exact predicate (the index is a superset filter)."""
-    from pyspark.sql import functions as F
-
-    files = prune_files(index_df, col, lo, hi)
-    if not files:
-        raise ValueError("no files match — caller should handle empty scan")
-    return spark.read.parquet(*files).filter(F.col(col).between(lo, hi))
-
-
 # ---------------------------------------------------------------------------
 # Bloom-filter file index — the point-lookup data-skipping structure
 # (Delta bloom index / parquet column bloom analogue). min/max stats

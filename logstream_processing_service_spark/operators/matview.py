@@ -173,21 +173,3 @@ def read_matview(
             .alias(f"approx_distinct_{c}")
         )
     return df.select(*cols).orderBy(*spec.group_cols)
-
-
-def matview_sink(table_dir: str, view_dir: str, spec: ViewSpec):
-    """foreachBatch sink composing exactly-once txlog appends with
-    incremental view refresh: each micro-batch lands as a base-table
-    commit (replay-guarded by the manifest batch-id HWM) and the view
-    advances by that batch's files only — the streaming form of IVM,
-    so a continuously-ingesting 100 TB fact table keeps its aggregates
-    fresh at O(micro-batch) cost."""
-    from pyspark.sql import DataFrame
-
-    base_sink = TX.streaming_commit_sink(table_dir, mode="append")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        base_sink(batch_df, batch_id)
-        refresh_matview(batch_df.sparkSession, view_dir, table_dir, spec)
-
-    return write

@@ -243,37 +243,6 @@ def mp4_frame_index(media) -> "pd.DataFrame":
     )
 
 
-def mp4_frame_extract(media, every_k: int = 2, max_frames: int = 4):
-    """Actual frame PAYLOADS for every k-th sample (bounded per doc):
-    the ranged-read half of video frame sampling — at scale the offsets
-    come from `parse_sample_table` and the reads go to object storage;
-    here both halves run against the in-memory payload. Codec decode of
-    the extracted bytes stays the pyav gate."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                picked = parse_sample_table(b)[::every_k][:max_frames]
-                for si, off, size, pts in picked:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "frame_idx": si,
-                            "pts_ticks": pts,
-                            "frame": b[off : off + size],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "pts_ticks", "frame"]
-            )
-
-    return media.mapInPandas(
-        run, "doc_id bigint, frame_idx int, pts_ticks bigint, frame binary"
-    )
-
-
 def synthetic_mjpeg_mp4(doc_id: int) -> bytes:
     """A REAL Motion-JPEG video: n = doc%4+2 frames, each a genuine
     16×16 block-constant JPEG at quality 100 (DC-only → decode exact),

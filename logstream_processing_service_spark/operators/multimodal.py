@@ -417,15 +417,6 @@ RESIZED_SCHEMA = StructType(
     ]
 )
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
 def resize_media(media: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
     """Image resize over the Arrow lane. PNG and baseline JPEG are REAL:
     decode (stdlib / native DCT codec), nearest-neighbor resample via
@@ -473,40 +464,6 @@ def resize_media(media: DataFrame, width: int = 224, height: int = 224) -> DataF
         "doc_id", "payload", F.col("meta.media_type").alias("media_type")
     )
     return flat.mapInPandas(run, RESIZED_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_n_bytes: int = 256, max_frames: int = 8) -> DataFrame:
-    """Frame-sampling plumbing (video): one input row explodes to ≤
-    ``max_frames`` frame rows. The pyav keyframe decode is the stub seam;
-    the stand-in slices the payload at fixed strides — the row-explosion
-    shape (the part that matters for partition sizing at scale) is real."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for d, p, m in zip(pdf["doc_id"], pdf["payload"], pdf["media_type"]):
-                if m == "video/mp4":
-                    raise NotImplementedError(
-                        "pyav not available here; plug keyframe extraction "
-                        "into this branch"
-                    )
-                b = bytes(p)
-                if m == "audio/wav":
-                    # REAL PCM frame sampling: every_n_bytes is the window
-                    # stride in BYTES over the decoded int16 mono stream
-                    wave, _ = decode_wav(b)
-                    mono = (wave[:, 0] * 32768.0).astype("<i2").tobytes()
-                    b = mono
-                for i in range(min(max_frames, max(1, len(b) // every_n_bytes))):
-                    ids.append(d)
-                    idxs.append(i)
-                    frames.append(b[i * every_n_bytes : (i + 1) * every_n_bytes])
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
-
-    flat = media.select(
-        "doc_id", "payload", F.col("meta.media_type").alias("media_type")
-    )
-    return flat.mapInPandas(run, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

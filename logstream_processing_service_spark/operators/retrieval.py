@@ -496,41 +496,6 @@ def rag_chunk_search_oracle_sql(
     """
 
 
-def phrase_match_docs(documents: DataFrame, phrase: str) -> DataFrame:
-    """Exact phrase search via POSITIONAL postings: explode (doc_id, tok,
-    pos), probe each phrase term's posting list, and join consecutive
-    terms on (doc_id, pos+offset) — the positional-index query plan every
-    search engine runs, instead of scanning text with contains().
-
-    Scale: the corpus reduces to posting rows ONCE; each phrase term
-    keeps only its own postings (a tiny broadcast filter), so the
-    adjacency join chain touches Σ|postings(term)| rows, never the
-    corpus text. Returns (doc_id, n_hits) for docs containing the
-    phrase, with the number of distinct start positions.
-    """
-    terms = [t for t in phrase.split(" ") if t]
-    if not terms:
-        raise ValueError("empty phrase")
-    post = documents.select(
-        "doc_id",
-        F.posexplode(T.words(F.col("text"))).alias("pos", "tok"),
-    )
-    first = post.filter(F.col("tok") == terms[0]).select(
-        "doc_id", F.col("pos").alias("p0")
-    )
-    cur = first
-    for i, t in enumerate(terms[1:], start=1):
-        nxt = post.filter(F.col("tok") == t).select(
-            "doc_id", (F.col("pos") - i).alias("p0")
-        )
-        cur = cur.join(nxt, ["doc_id", "p0"])
-    return (
-        cur.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
-        .orderBy("doc_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Late-interaction (ColBERT-style maxsim) retrieval
 # ---------------------------------------------------------------------------

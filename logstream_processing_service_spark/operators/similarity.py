@@ -499,79 +499,6 @@ def semantic_dedup(
     )
 
 
-def build_ivf_index(
-    embeddings: DataFrame, centroids: DataFrame, path: str
-) -> None:
-    """Materialize an IVF index: embeddings coarse-quantized to their
-    nearest centroid and written PARTITIONED BY bucket.
-
-    At 100 TB the win is layout, not math: a probe of ``nprobe`` buckets
-    prunes every other partition directory before any IO (the same
-    PartitionFilters mechanism as date partitioning — see
-    tests/test_plans.py::test_ivf_index_probe_prunes).
-    """
-    cent = F.broadcast(
-        centroids.select(F.col("label").alias("bucket"), "centroid")
-    )
-    cand = embeddings.crossJoin(cent).withColumn(
-        "_d", F.round(V.minkowski(F.col("embedding"), F.col("centroid"), 2.0), 9)
-    )
-    w = Window.partitionBy("vec_id").orderBy("_d", "bucket")
-    bucketed = (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "embedding", "bucket")
-    )
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def search_ivf_index(
-    spark,
-    path: str,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Probe a materialized IVF index: rank the ``nprobe`` nearest buckets
-    per query, scan ONLY those partitions, exact-rank within them.
-
-    The bucket filter is an IN-list on the partition column, so the scan
-    never touches the other directories.
-    """
-    index = spark.read.parquet(path)
-    cent = F.broadcast(
-        centroids.select(F.col("label").alias("bucket"), "centroid")
-    )
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    qc = q.crossJoin(cent).withColumn(
-        "_d", F.round(V.minkowski(F.col("q_emb"), F.col("centroid"), 2.0), 9)
-    )
-    w = Window.partitionBy("q_id").orderBy("_d", "bucket")
-    probed = (
-        qc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= nprobe)
-        .select("q_id", "q_emb", F.col("bucket").alias("q_bucket"))
-    )
-    # partition pruning: restrict the index scan to the union of probed
-    # buckets (collected — nprobe × |Q| ints, tiny by construction)
-    buckets = [r["q_bucket"] for r in probed.select("q_bucket").distinct().collect()]
-    scoped = index.filter(F.col("bucket").isin(buckets))
-    scored = (
-        scoped.join(F.broadcast(probed), F.col("bucket") == F.col("q_bucket"))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 6))
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "cos")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) ANN — memory-compressed scale path
 # ---------------------------------------------------------------------------
@@ -632,29 +559,6 @@ def _train_pq_numpy(X, m: int, k: int, iters: int = 10):
             cent[nz] = sums[nz] / counts[nz, None]
         books[j] = cent
     return books
-
-
-def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
-    """Encode vectors to ``m`` one-byte codes (nearest centroid per
-    subspace) — a 32× compression of a 64-float vector.
-
-    The encoder is an Arrow-batched pandas_udf doing one vectorized
-    numpy argmin per subspace per batch; the codebook rides along as a
-    closure constant (m·k·sub doubles — KBs).
-    """
-    m, k, sub = codebooks.shape
-    books = codebooks
-
-    @F.pandas_udf("array<int>")
-    def enc(s: pd.Series) -> pd.Series:
-        X = np.asarray(s.tolist(), dtype=np.float64)
-        out = np.empty((len(X), m), dtype=np.int32)
-        for j in range(m):
-            Xj = X[:, j * sub : (j + 1) * sub]
-            out[:, j] = _sq_dists(Xj, books[j]).argmin(1)
-        return pd.Series(list(out))
-
-    return embeddings.select("vec_id", enc("embedding").alias("codes"))
 
 
 def ann_pq(
@@ -778,10 +682,9 @@ def ann_ivf_pq(
     queries × 16 buckets × 16 × 256 float64 ≈ 2.7 GB is already past
     comfortable closure size; the guard fails loudly well before).
     At 100 TB the bucket+codes table would be
-    materialized PARTITIONED BY bucket (compose ``build_ivf_index`` +
-    ``pq_encode``) so the probe prunes partition directories before IO —
-    the streaming-compute form here shows the semantics; the storage
-    layout is the same as tests/test_plans.py::test_ivf_index_probe_prunes.
+    materialized PARTITIONED BY bucket (``build_ivfpq_index``, probed by
+    ``search_ivfpq_index``) so the probe prunes partition directories
+    before IO — the streaming-compute form here shows the semantics.
     """
     if coarse is None:
         coarse = label_centroids(embeddings)
@@ -803,7 +706,7 @@ def ann_ivf_pq(
             f"ann_ivf_pq: query side exceeds max_queries={max_queries}; "
             "the dense LUT stack is O(|Q|*nlist*m*n_centroids) "
             "driver/closure memory — chunk the query set, or materialize "
-            "the index (build_ivf_index + pq_encode) and probe it"
+            "the index (build_ivfpq_index) and probe it (search_ivfpq_index)"
         )
     q_ids = [int(r["vec_id"]) for r in qrows]
     n_q = len(q_ids)
@@ -1400,64 +1303,3 @@ def hard_negative_mining(
         F.round("cos", 6).alias("cos"),
     )
     return neg.unionByName(pos).orderBy("q_id", "kind", "rank")
-
-
-def ann_ivf_lifecycle(
-    base_emb: DataFrame,
-    delta_emb: DataFrame,
-    delete_ids: DataFrame,
-    table_dir: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """The vector registry's FULL lifecycle — with
-    :func:`ann_ivf_incremental` (add) this completes the third column
-    of the index-family × lifecycle-verb matrix (bm25, LSH, IVF) ×
-    (add, delete, compact): base assignments v0 (centroids frozen on
-    the base), delta assignments appended v1, vec-grain tombstones v2
-    (``txlog.tombstones``, sentinel ``v_bucket = -1``),
-    ``txlog.rewrite_snapshot`` folds them into a rewritten v3 of the
-    ``live_rows``, and probes read the PLAIN compacted scan.
-    Hash-matching the frozen-centroid batch IVF over the post-delete
-    union proves compaction is a pure physical rewrite of the vector
-    index.
-    Centroid REFRESH (re-cluster + full reassign) is deliberately not
-    a lifecycle verb — it is the scheduled rebuild that creates a new
-    registry generation.
-
-    Precondition: coarse buckets are label ids ≥ 0 (the tombstone
-    sentinel's namespace); base/delta vec_ids disjoint; deletes may
-    hit either side.
-
-    Scale: every verb is O(its own delta); compaction's rewrite ships
-    (vec_id, vector, bucket) rows once, off the ingest path.
-    """
-    from . import txlog as TX
-
-    spark = base_emb.sparkSession
-    # centroid frame persists across the three commits + probe; the cache
-    # lifecycle is caller-owned (repo contract — bench/driver clear caches
-    # per query)
-    cent = label_centroids(base_emb).persist()
-    base_assign = _nearest_buckets(
-        base_emb, cent, "vec_id", "embedding", 1, "v_bucket"
-    ).select("vec_id", "embedding", "v_bucket")
-    TX.commit(table_dir, base_assign, mode="overwrite")
-    TX.commit(
-        table_dir,
-        _nearest_buckets(delta_emb, cent, "vec_id", "embedding", 1, "v_bucket")
-        .select("vec_id", "embedding", "v_bucket"),
-        mode="append",
-    )
-    TX.commit(
-        table_dir,
-        TX.tombstones(delete_ids, base_assign, "vec_id", "v_bucket"),
-        mode="append",
-    )
-    TX.rewrite_snapshot(
-        spark, table_dir,
-        lambda snap: TX.live_rows(snap, "vec_id", "v_bucket").coalesce(1),
-    )
-    bucketed = TX.read_snapshot(spark, table_dir)  # plain scan: v3 only
-    return _ivf_probe(bucketed, cent, queries, k, nprobe)

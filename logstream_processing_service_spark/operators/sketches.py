@@ -358,63 +358,6 @@ def join_key_overlap_estimate(
     )
 
 
-def mg_topk_per_group(
-    df: DataFrame, group_col: str, item_col: str, k: int = 16
-) -> DataFrame:
-    """Per-GROUP Misra-Gries frequent items: one MG summary per group via
-    ``applyInPandas`` (the per-domain vocabulary monitor — which terms
-    dominate each source, with the same lower/upper-bound contract as
-    the global mg_topk).
-
-    Scale: one shuffle on the group key; per-group state is O(k)
-    regardless of group size, so a group with billions of rows costs the
-    same memory as a tiny one (contrast an exact per-group count, whose
-    state is the group's vocabulary). Output ≤ k+ rows per group:
-    (group, item, est_lower, est_upper).
-    """
-    import pandas as pd
-
-    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf[group_col].iloc[0]
-        counts: dict[str, int] = {}
-        err = 0
-        for item in pdf[item_col]:
-            if item is None:
-                continue
-            if item in counts:
-                counts[item] += 1
-            elif len(counts) < k:
-                counts[item] = 1
-            else:
-                err += 1
-                dead = []
-                for it in counts:
-                    counts[it] -= 1
-                    if counts[it] == 0:
-                        dead.append(it)
-                for it in dead:
-                    del counts[it]
-        items = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        return pd.DataFrame(
-            {
-                group_col: [g] * len(items),
-                "item": [it for it, _ in items],
-                "est_lower": [c for _, c in items],
-                "est_upper": [c + err for _, c in items],
-            }
-        )
-
-    return (
-        df.select(group_col, F.col(item_col).alias(item_col))
-        .groupBy(group_col)
-        .applyInPandas(
-            summarize,
-            f"{group_col} string, item string, est_lower bigint, "
-            "est_upper bigint",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Count-min sketch registry (VERDICT r5 #7) — point-query twin of the
 # Misra-Gries family above: MG answers "which items are frequent",
@@ -625,112 +568,6 @@ def cm_view_spec():
     from .matview import ViewSpec
 
     return ViewSpec(group_cols=("key", "day", "r", "c"))
-
-
-def cm_incremental_registry(
-    base_events: DataFrame,
-    delta_events: DataFrame,
-    table_dir: str,
-    key_col: str = "event_type",
-    item_col: str = "user_id",
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
-) -> DataFrame:
-    """The count-min registry under INGEST — the counter-algebra member
-    of the registry-family matrix: postings merge by append (+tombstone
-    deletes), the decontamination bloom by bitwise OR (idempotent), CM
-    counter matrices by cell-wise SUM. Each arriving event slice is
-    reduced to its own sparse (key, day, r, c, cnt) cell frame and
-    COMMITTED as one txlog version (KB-grain: ≤ |keys|·days·depth·width
-    rows regardless of slice size); the merge-on-read is one
-    groupBy-sum over the merged scan (:func:`cm_merge` — counters are
-    closed under addition), so sum(per-slice registries) is cell-for-
-    cell identical to the one-shot registry over the union.
-
-    PRECONDITION (the r12-advice discipline, stated at birth): the
-    committed slices must PARTITION the event stream — each event
-    counted in exactly one slice. Addition is not idempotent, so
-    re-ingesting a slice double-counts (contrast the bloom registry,
-    whose OR tolerates overlap by algebra). The natural ingest contract
-    (one commit per arriving batch) satisfies this for free; exact
-    de-duplication of replayed batches belongs to the txlog layer
-    (idempotent upsert), not the sketch.
-
-    Returns the merged (key, r, c, cnt) counter frame. Scale: commits
-    are sketch-grain forever; the estimate path broadcasts the merged
-    sketch and never rescans raw events (module docstring's 100 TB
-    pattern, now maintained incrementally instead of rebuilt)."""
-    from . import txlog as TX
-
-    TX.commit(
-        table_dir,
-        cm_daily_registry(base_events, key_col, item_col, depth, width),
-        mode="overwrite",
-    )
-    TX.commit(
-        table_dir,
-        cm_daily_registry(delta_events, key_col, item_col, depth, width),
-        mode="append",
-    )
-    return cm_merge(
-        TX.read_snapshot(base_events.sparkSession, table_dir)
-    )
-
-
-def cm_delete_slice(
-    events: DataFrame,
-    table_dir: str,
-    key_col: str = "event_type",
-    item_col: str = "user_id",
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
-) -> int:
-    """The CM registry's DELETE verb — the turnstile property counters
-    have and the other registries lack: because cells merge by SUM, a
-    slice is retracted EXACTLY by appending its NEGATED cell frame
-    (cnt -> -cnt); the merge-on-read then cancels its contribution
-    cell-for-cell, with no tombstone read path and no rebuild (contrast
-    postings: doc-grain tombstones + anti-join at read; bloom: no
-    delete at all — shared bits force a rebuild). PRECONDITION: the
-    retracted slice must previously have been committed exactly once
-    (retracting an uncommitted slice drives counters negative — CM
-    estimates stay safe because min() over garbage is still an upper
-    bound only for non-negative sketches, so the caller owns slice
-    bookkeeping; the natural ledger is one commit per ingest batch,
-    one retraction per backed-out batch)."""
-    from . import txlog as TX
-
-    neg = cm_daily_registry(events, key_col, item_col, depth, width)
-    return TX.commit(
-        table_dir,
-        neg.withColumn("cnt", (-F.col("cnt")).cast("bigint")),
-        mode="append",
-    )
-
-
-def cm_compact_registry(
-    spark, table_dir: str, target_files: int = 1
-) -> int:
-    """The CM registry's COMPACT verb: fold the accumulated per-slice
-    (and retraction) cell frames into one summed frame and commit it as
-    an overwrite version — after compaction readers scan one small file
-    with no groupBy-sum fan-in over many versions. Cells whose folded
-    count is ZERO (fully retracted) are DROPPED, so a compacted
-    registry is cell-for-cell identical to a one-shot registry over the
-    surviving slices (asserted in tests/test_cm_incremental.py). The
-    rewrite is ``txlog.rewrite_snapshot``, so a slice commit landing
-    mid-fold is a CommitConflict, never silently dropped."""
-    from . import txlog as TX
-
-    def fold(merged: DataFrame) -> DataFrame:
-        return (
-            merged.groupBy("key", "day", "r", "c")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            .filter(F.col("cnt") != 0)
-            .coalesce(target_files)
-        )
-
-    return TX.rewrite_snapshot(spark, table_dir, fold)
 
 
 def mg_daily_registry(

@@ -340,29 +340,6 @@ def streaming_commit_sink(
     return write
 
 
-def merge_commit(
-    spark: SparkSession,
-    table_dir: str,
-    source: DataFrame,
-    key: str,
-    **merge_kwargs,
-) -> int:
-    """Transactional MERGE: read the latest snapshot, apply merge_full,
-    commit the result as a new version with optimistic concurrency
-    pinned to the snapshot that was read — a racing writer triggers
-    CommitConflict instead of silently losing the race (read-modify-write
-    is safe to retry)."""
-    from ..sources.tables import merge_full
-
-    seen = _versions(table_dir)
-    base = seen[-1] if seen else -1
-    if base < 0:
-        raise ValueError("merge_commit needs an existing snapshot")
-    target = read_snapshot(spark, table_dir, version=base)
-    merged = merge_full(target, source, key, **merge_kwargs)
-    return commit(table_dir, merged, mode="overwrite", expected_version=base)
-
-
 def snapshot_diff(
     spark: SparkSession,
     table_dir: str,
@@ -634,42 +611,6 @@ def read_snapshot_pruned_box(
     else:
         kept = spark.read.parquet(*keep)
     return kept.filter(pred)
-
-
-def read_snapshot_null_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    version: int | None = None,
-) -> DataFrame:
-    """IS NULL probe served from the manifest's per-file null COUNTS
-    (the third statistic commit_with_stats already records beside
-    min/max): files with ``nulls_col == 0`` cannot contribute a row to
-    "find the records missing this field" — the data-quality workhorse
-    query — and are skipped without touching their footers. Files
-    without recorded stats are conservatively read. min/max pruning
-    cannot express this (a file's [min, max] says nothing about
-    nulls, which sort outside the value order)."""
-    seen = _versions(table_dir)
-    if not seen:
-        raise ValueError(f"no committed version under {table_dir}")
-    v = seen[-1] if version is None else version
-    man = _manifest(table_dir, v)
-    stats = man.get("file_stats") or {}
-    keep = []
-    for f in man["files"]:
-        st = stats.get(f)
-        n_nulls = None if st is None else st.get(f"nulls_{col}")
-        if n_nulls is None or n_nulls > 0:
-            keep.append(f)
-    if not keep:
-        return read_snapshot(spark, table_dir, v).filter(F.lit(False))
-    if man.get("evolved"):
-        kept = spark.read.option("mergeSchema", "true").parquet(*keep)
-        kept = kept.select(*[name for name, _ in man["schema"]])
-    else:
-        kept = spark.read.parquet(*keep)
-    return kept.filter(F.col(col).isNull())
 
 
 def rewrite_snapshot(
@@ -1052,47 +993,3 @@ def _external_refs(table_dir: str) -> set[str]:
             me = os.path.basename(os.path.abspath(table_dir))
             refs |= _all_referenced_dirs(parent, skip_branch=me)
     return refs
-
-
-def branch_diff(
-    spark: SparkSession, table_dir: str, name: str, key: str | None = None
-) -> DataFrame:
-    """Merge preview: the change feed merging branch ``name`` would apply
-    to the parent head, tagged like snapshot_diff (the review-before-merge
-    step of write-audit-publish).
-
-    Scale shape mirrors snapshot_diff's two tiers: when the parent head's
-    files are a subset of the branch head's (fork + branch appends,
-    parent unmoved — the WAP common case) the preview reads ONLY the
-    branch-added files, O(delta); otherwise one general frame diff."""
-    bdir = _branch_dir(table_dir, name)
-    if not os.path.isfile(os.path.join(bdir, "FORK.json")):
-        raise ValueError(f"no branch {name!r} under {table_dir}")
-    hman = _manifest(table_dir, _versions(table_dir)[-1])
-    bman = _manifest(bdir, _versions(bdir)[-1])
-    h_files, b_files = hman["files"], bman["files"]
-    if set(h_files) <= set(b_files):
-        added = [f for f in b_files if f not in set(h_files)]
-        if not added:
-            return read_snapshot(spark, table_dir).limit(0).withColumn(
-                "_change_type", F.lit("insert")
-            )
-        if bman.get("evolved"):
-            adf = spark.read.option("mergeSchema", "true").parquet(*added)
-            for cname, typ in bman["schema"]:
-                if cname not in adf.columns:
-                    adf = adf.withColumn(cname, F.lit(None).cast(typ))
-            adf = adf.select(*[cname for cname, _ in bman["schema"]])
-        else:
-            adf = spark.read.parquet(*added)
-        return adf.withColumn("_change_type", F.lit("insert"))
-
-    a = read_snapshot(spark, table_dir)
-    b = read_snapshot(spark, bdir)
-    if a.columns != b.columns:
-        # compare in the branch head's schema (the post-merge shape)
-        for cname, typ in bman["schema"]:
-            if cname not in a.columns:
-                a = a.withColumn(cname, F.lit(None).cast(typ))
-        a = a.select(*[cname for cname, _ in bman["schema"]])
-    return _frame_cdf(a, b, key)

@@ -57,7 +57,7 @@ import math
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bpe import word_frequency_table
@@ -373,12 +373,6 @@ def unigram_train(
     total = sum(probs.values())
     final = sorted((p, math.log(v / total)) for p, v in probs.items())
     return UnigramModel(pieces=tuple(final), max_piece_len=max_piece_len)
-
-
-def model_df(spark: SparkSession, model: UnigramModel) -> DataFrame:
-    return spark.createDataFrame(
-        [(p, lp) for p, lp in model.pieces], "piece string, logprob double"
-    )
 
 
 def unigram_token_counts(

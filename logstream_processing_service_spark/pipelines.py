@@ -393,6 +393,22 @@ def run_incremental_batch(
 # ---------------------------------------------------------------------------
 
 
+# The log_embeddings columns the quality audit uses, as both writers store
+# them. Training writes 5-column files and score_batch 9-column ones, so a
+# bare read's columns depend on the footer Spark samples, and it runs a
+# schema-inference job.
+AUDIT_EMBEDDINGS_DDL = (
+    "event_id bigint, event_type string, embedding array<float>, cluster_id int"
+)
+
+
+def read_audit_embeddings(spark: SparkSession, work_dir: str) -> DataFrame:
+    """``log_embeddings`` read with ``AUDIT_EMBEDDINGS_DDL`` (no job)."""
+    return spark.read.schema(AUDIT_EMBEDDINGS_DDL).parquet(
+        os.path.join(work_dir, "log_embeddings")
+    )
+
+
 def run_quality_validation(
     spark: SparkSession, work_dir: str, sample: int = 2000
 ) -> dict:
@@ -402,7 +418,7 @@ def run_quality_validation(
     sample for reference parity."""
     from .ml.quality import quality_report, silhouette
 
-    scored = spark.read.parquet(os.path.join(work_dir, "log_embeddings"))
+    scored = read_audit_embeddings(spark, work_dir)
     if sample:
         scored = scored.orderBy("event_id").limit(sample)
     # truth = source+"_"+level (validate_quality.py:17); events have one

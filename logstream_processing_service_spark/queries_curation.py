@@ -845,10 +845,6 @@ def q_merkle_integrity_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.merkle_integrity_diff(old, new)
 
 
-def merkle_query_oracle_sql() -> str:
-    return C.merkle_diff_oracle_sql(_MANIFEST_OLD_CTE, _MANIFEST_NEW_CTE)
-
-
 @spec(
     "merkle_tree_update",
     C.merkle_tree_oracle_sql(_MANIFEST_NEW_CTE),
@@ -872,10 +868,6 @@ def q_merkle_tree_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.merkle_tree_update(old, new)
 
 
-def merkle_update_oracle_sql() -> str:
-    return C.merkle_tree_oracle_sql(_MANIFEST_NEW_CTE)
-
-
 @spec(
     "greedy_coverage_order",
     C.greedy_coverage_oracle_sql(),
@@ -887,10 +879,6 @@ def q_greedy_coverage_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension of source_coverage_report (which is this loop's t=1
     step); the onboarding-order planner for a multi-feed corpus."""
     return C.greedy_coverage_order(_t(spark, sf_dir, "documents"))
-
-
-def greedy_coverage_oracle_sql() -> str:
-    return C.greedy_coverage_oracle_sql()
 
 
 @spec(
@@ -905,51 +893,3 @@ def q_doremi_iterated(spark: SparkSession, sf_dir: str) -> DataFrame:
     static-signal special case is the registered
     doremi_domain_weights."""
     return C.doremi_iterated(_t(spark, sf_dir, "documents"))
-
-
-def doremi_iterated_query_oracle_sql() -> str:
-    return C.doremi_iterated_oracle_sql()
-
-
-# ---------------------------------------------------------------------------
-# r14 queue (rehearsed in r13, NOT yet registered — the standing
-# pre-measure-then-register cadence; tests/test_merkle_repair.py runs the
-# compare harness at both SFs before any @spec line lands)
-# ---------------------------------------------------------------------------
-
-
-def q_merkle_repair_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The rsync planner on
-    top of merkle_integrity_diff: given the manifest family's local
-    (old) and source (new) snapshots, emit the minimal shard-grain
-    repair plan — divergent leaves only, with source doc counts and a
-    bytes-to-ship estimate. Matching subtree hashes certify every
-    other shard without reading it (r14 queue)."""
-    from pyspark.sql import functions as F
-
-    docs = _t(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 17 != 3).select("doc_id", "text")
-    new = docs.filter(F.col("doc_id") % 13 != 2).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 11 == 5, F.upper("text"))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return C.merkle_repair_plan(old, new)
-
-
-def merkle_repair_query_oracle_sql() -> str:
-    return C.merkle_repair_oracle_sql(_MANIFEST_OLD_CTE, _MANIFEST_NEW_CTE)
-
-
-def q_doremi_to_mix_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DoReMi-learned domain
-    weights operationalized as a sampling plan — doremi_iterated's T=3
-    multiplicative-weights output fed into the temperature_mix_plan
-    rate arithmetic as target shares (r14 queue; the composed last
-    mile between learned weights and a runnable sampler)."""
-    return C.doremi_to_mix_pipeline(_t(spark, sf_dir, "documents"))
-
-
-def doremi_to_mix_query_oracle_sql() -> str:
-    return C.doremi_to_mix_oracle_sql()

@@ -1493,346 +1493,3 @@ def q_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.matching import fellegi_sunter_pairs
 
     return fellegi_sunter_pairs(_t(spark, sf_dir, "customer"))
-
-
-# ---------------------------------------------------------------------------
-# r14 queue (rehearsed in r13, NOT yet registered — the standing
-# pre-measure-then-register cadence; tests/test_restore_twin.py runs the
-# compare harness at both SFs before any @spec line lands)
-# ---------------------------------------------------------------------------
-
-
-def snapshot_restore_oracle_sql() -> str:
-    """After RESTORE TO v0 the latest read must equal the v0 slice;
-    the rolled-over v1 must stay time-travelable with its full
-    contents (restore is an auditable commit, not a rewrite)."""
-    return """
-    SELECT 'restored_latest' AS state, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents WHERE length(source) = 4
-    UNION ALL
-    SELECT 'rolled_over_v1' AS state, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents
-    ORDER BY state
-    """
-
-
-def q_snapshot_restore_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The table-maintenance
-    ROLLBACK verb driver-checked (r14 queue): commit v0, append v1,
-    RESTORE TO v0 (txlog.restore — a new manifest referencing the old
-    files, no data copied), then read BOTH the restored latest (must
-    equal v0) and the rolled-over v1 (must stay time-travelable with
-    its full contents). Completes the driver-visible txlog verb set
-    (commit/read/diff/CDC/optimize/branch/RESTORE)."""
-    from pyspark.sql import functions as F
-
-    from .operators import txlog as TX
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    t = scratch_dir("restore_twin")
-    TX.commit(t, docs.filter(F.length("source") == 4))
-    TX.commit(t, docs.filter(F.length("source") != 4), mode="append")
-    v2 = TX.restore(t, 0)
-    assert v2 == 2
-    latest = TX.read_snapshot(spark, t).agg(
-        F.lit("restored_latest").alias("state"),
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-    )
-    rolled = TX.read_snapshot(spark, t, version=1).agg(
-        F.lit("rolled_over_v1").alias("state"),
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-    )
-    return latest.unionByName(rolled).orderBy("state")
-
-
-def snapshot_vacuum_oracle_sql() -> str:
-    """Post-vacuum latest must still equal the full table (vacuum never
-    touches the live snapshot), and the removed-manifest/dir counts are
-    deterministic by construction: three versions (commit, append,
-    optimize-rewrite), retain_last=1 keeps only the optimize result, so
-    exactly 2 manifests and the 2 pre-optimize data dirs go."""
-    return """
-    SELECT 'post_vacuum_latest' AS state, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents
-    UNION ALL
-    SELECT 'removed_data_dirs' AS state, CAST(2 AS BIGINT) AS n,
-           CAST(NULL AS BIGINT) AS total_chars
-    UNION ALL
-    SELECT 'removed_manifests' AS state, CAST(2 AS BIGINT) AS n,
-           CAST(NULL AS BIGINT) AS total_chars
-    ORDER BY state
-    """
-
-
-def q_snapshot_vacuum_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The table-maintenance GC verb
-    driver-checked (r14 queue): commit v0, append v1, OPTIMIZE into one
-    file (v2 — a rewrite, so v0/v1's data dirs become unreferenced),
-    then VACUUM with retain_last=1 and min_age=0 (safe: no concurrent
-    writers in the twin). The latest read must be byte-identical to the
-    full table — vacuum only ever deletes what no retained manifest
-    references — and the removed counts are deterministic by
-    construction (2 manifests, 2 data dirs). With RESTORE this
-    completes the maintenance verb set the driver can see:
-    commit/read/diff/CDC/optimize/branch/restore/VACUUM. The
-    restore-pin interplay (restore re-references old files, so a later
-    vacuum must keep them) is pinned in tests/test_txlog.py."""
-    from pyspark.sql import functions as F
-
-    from .operators import txlog as TX
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    t = scratch_dir("vacuum_twin")
-    TX.commit(t, docs.filter(F.length("source") == 4))
-    TX.commit(t, docs.filter(F.length("source") != 4), mode="append")
-    TX.optimize_table(spark, t, target_files=1)
-    rep = TX.vacuum(t, retain_last=1, min_age_seconds=0.0)
-    assert rep["skipped_recent_dirs"] == 0, rep
-    latest = TX.read_snapshot(spark, t).agg(
-        F.lit("post_vacuum_latest").alias("state"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-    )
-    counters = spark.createDataFrame(
-        [
-            ("removed_data_dirs", rep["removed_data_dirs"], None),
-            ("removed_manifests", rep["removed_manifests"], None),
-        ],
-        "state string, n long, total_chars long",
-    )
-    return latest.unionByName(counters).orderBy("state")
-
-
-def cm_lifecycle_oracle_sql() -> str:
-    """The cm_user_counts oracle restricted to the SURVIVING slices
-    (event_id % 3 in (0, 1)): after the twin commits three slices,
-    retracts the third by negation, and compacts, its registry must be
-    the one-shot registry over slices 0+1 — so estimate and exact both
-    read from that population."""
-    from .operators.sketches import CM_WIDTH, _cm_cell_sql
-
-    cell = _cm_cell_sql("item", "r", CM_WIDTH)
-    return f"""
-    WITH depth_t AS (SELECT CAST(range AS INT) AS r FROM range(5)),
-    base AS (
-        SELECT event_type AS key, CAST(ts AS DATE) AS day,
-               CAST(user_id AS STRING) AS item
-        FROM events WHERE event_id % 3 < 2
-    ),
-    reg AS (
-        SELECT key, day, r, CAST({cell} AS INT) AS c, count(*) AS cnt
-        FROM base, depth_t GROUP BY 1, 2, 3, 4
-    ),
-    merged AS (
-        SELECT key, r, c, sum(cnt) AS cnt FROM reg GROUP BY 1, 2, 3
-    ),
-    items AS (
-        SELECT DISTINCT event_type AS key,
-               CAST(user_id AS STRING) AS item
-        FROM events WHERE user_id < 20 AND event_id % 3 < 2
-    ),
-    probes AS (
-        SELECT key, item, r, CAST({cell} AS INT) AS c
-        FROM items, depth_t
-    ),
-    est AS (
-        SELECT p.key, p.item,
-               CAST(min(coalesce(m.cnt, 0)) AS BIGINT) AS cm_est
-        FROM probes p LEFT JOIN merged m
-          ON m.key = p.key AND m.r = p.r AND m.c = p.c
-        GROUP BY 1, 2
-    ),
-    exact AS (
-        SELECT event_type AS key, CAST(user_id AS STRING) AS item,
-               CAST(count(*) AS BIGINT) AS exact_cnt
-        FROM events WHERE user_id < 20 AND event_id % 3 < 2
-        GROUP BY 1, 2
-    )
-    SELECT e.key, e.item, e.exact_cnt, est.cm_est,
-           CAST(est.cm_est - e.exact_cnt AS BIGINT) AS overcount
-    FROM exact e JOIN est ON e.key = est.key AND e.item = est.item
-    ORDER BY 1, 2
-    """
-
-
-def q_cm_lifecycle_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The count-min registry's FULL
-    lifecycle (r14 queue): three event slices committed, the third
-    RETRACTED by appending its negated cell frame (the turnstile
-    delete SUM-merge counters get for free — no tombstones, no
-    rebuild), then COMPACTED via the OCC fold (zero-count cells
-    dropped, so the compacted registry is cell-for-cell the one-shot
-    registry over the surviving slices). Estimates read from the plain
-    compacted scan and must hash-match the exact oracle over slices
-    0+1. Completes the registry verb matrix: CM now has add/delete/
-    compact alongside bm25, LSH, and IVF — each with the delete
-    semantics its algebra affords (tombstone, tombstone, tombstone,
-    negation) and bloom loudly rebuild-only."""
-    from pyspark.sql import functions as F
-
-    from .operators.sketches import (
-        cm_compact_registry,
-        cm_daily_registry,
-        cm_delete_slice,
-        cm_estimate,
-        cm_merge,
-    )
-    from .operators import txlog as TX
-
-    ev = _t(spark, sf_dir, "events")
-    t = scratch_dir("cm_lc")
-    for b in range(3):
-        TX.commit(
-            t,
-            cm_daily_registry(ev.filter(F.col("event_id") % 3 == b)),
-            mode="overwrite" if b == 0 else "append",
-        )
-    cm_delete_slice(ev.filter(F.col("event_id") % 3 == 2), t)
-    cm_compact_registry(spark, t)
-    merged = cm_merge(TX.read_snapshot(spark, t))
-    surviving = ev.filter(F.col("event_id") % 3 < 2)
-    items = (
-        surviving.filter(F.col("user_id") < 20)
-        .select(
-            F.col("event_type").alias("key"),
-            F.col("user_id").cast("string").alias("item"),
-        )
-        .distinct()
-    )
-    est = cm_estimate(merged, items)
-    exact = (
-        surviving.filter(F.col("user_id") < 20)
-        .groupBy(
-            F.col("event_type").alias("key"),
-            F.col("user_id").cast("string").alias("item"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
-    )
-    return (
-        exact.join(est, ["key", "item"])
-        .select(
-            "key",
-            "item",
-            "exact_cnt",
-            "cm_est",
-            (F.col("cm_est") - F.col("exact_cnt"))
-            .cast("bigint")
-            .alias("overcount"),
-        )
-        .orderBy("key", "item")
-    )
-
-
-def zorder_prune_oracle_sql() -> str:
-    return """
-    SELECT event_id, user_id, round(value, 2) AS value
-    FROM events
-    WHERE user_id BETWEEN 10 AND 30
-      AND round(value, 2) BETWEEN 100 AND 300
-    ORDER BY event_id
-    """
-
-
-def q_zorder_prune_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Z-order layout's PAYOFF
-    driver-checked (r14 queue): commit events clustered on
-    interleave(user_id, value) (layout.morton2 — one range repartition
-    on the z-value, in-partition sort) with per-file stats on BOTH
-    dimensions, then answer a 2-D box probe through
-    read_snapshot_pruned_box: files are skipped from manifest stats on
-    EITHER dimension (a 1-D sort layout prunes on its sort key only —
-    the comparison is pinned in tests/test_zorder_prune.py), and the
-    exact predicate re-applies, so the result equals the plain filter
-    by construction. Completes the layout story driver-side:
-    zorder_bucket_stats proves the interleave arithmetic bit-for-bit;
-    this proves the skip it buys. Scale: planning reads KBs of
-    manifest; the skipped bytes scale with the table."""
-    from pyspark.sql import functions as F
-
-    from .operators import txlog as TX
-    from .operators.layout import morton2
-
-    t = scratch_dir("zorder_twin")
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.round("value", 2).alias("value")
-    )
-    clustered = (
-        ev.withColumn(
-            "_z",
-            morton2(
-                "CAST(user_id % 65536 AS BIGINT)",
-                "CAST(CAST(floor(value) AS BIGINT) % 65536 AS BIGINT)",
-            ),
-        )
-        .repartitionByRange(16, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    TX.commit_with_stats(t, clustered, stats_cols=("user_id", "value"))
-    return TX.read_snapshot_pruned_box(
-        spark, t, {"user_id": (10, 30), "value": (100.0, 300.0)}
-    ).orderBy("event_id")
-
-
-def q_cm_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The count-min registry under
-    ingest (r14 queue): events split into two disjoint slices
-    (event_id parity — the partition precondition satisfied by
-    construction), each slice's sparse cell frame committed as one
-    txlog version, merge-on-read = cell-wise SUM (counters are closed
-    under addition). The estimate-vs-exact report is identical to
-    ``cm_user_counts`` and reuses its bit-for-bit oracle — the hash
-    match proves sum(per-slice sketches) == one-shot sketch on the
-    union, i.e. the registry composes under ingest. Completes the
-    registry merge-algebra matrix: append (postings), OR (bloom),
-    SUM (counters)."""
-    from pyspark.sql import functions as F
-
-    from .operators.sketches import cm_estimate, cm_incremental_registry
-
-    ev = _t(spark, sf_dir, "events")
-    t = scratch_dir("cm_inc")
-    merged = cm_incremental_registry(
-        ev.filter(F.col("event_id") % 2 == 0),
-        ev.filter(F.col("event_id") % 2 == 1),
-        t,
-    )
-    items = (
-        ev.filter(F.col("user_id") < 20)
-        .select(
-            F.col("event_type").alias("key"),
-            F.col("user_id").cast("string").alias("item"),
-        )
-        .distinct()
-    )
-    est = cm_estimate(merged, items)
-    exact = (
-        ev.filter(F.col("user_id") < 20)
-        .groupBy(
-            F.col("event_type").alias("key"),
-            F.col("user_id").cast("string").alias("item"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
-    )
-    return (
-        exact.join(est, ["key", "item"])
-        .select(
-            "key",
-            "item",
-            "exact_cnt",
-            "cm_est",
-            (F.col("cm_est") - F.col("exact_cnt"))
-            .cast("bigint")
-            .alias("overcount"),
-        )
-        .orderBy("key", "item")
-    )

@@ -2323,118 +2323,3 @@ def q_lcp_neighbor_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     range 5.7 / 4.7 s — 2x faster unskewed, skew-IMMUNE, still exact
     via the boundary-pass fix)."""
     return D.lcp_neighbor_profile(_t(spark, sf_dir, "documents"), mode="range")
-
-
-# ---------------------------------------------------------------------------
-# r14 queue (rehearsed in r13, NOT yet registered — the standing
-# pre-measure-then-register cadence; tests/test_lsh_lifecycle.py runs the
-# compare harness at both SFs before any @spec line lands)
-# ---------------------------------------------------------------------------
-
-
-def lsh_lifecycle_oracle_sql() -> str:
-    """Batch rebuild on the POST-DELETE union corpus with the
-    base-frozen hot filter: after the full add/delete/compact
-    lifecycle the registry read must be indistinguishable from never
-    having indexed the deleted docs — EXCEPT the frozen hot list,
-    which was computed when the soon-deleted docs were still present
-    (metadata freezes at registry creation; its refresh is a rebuild),
-    so the hot CTE sees the full base slice while sig/verify see only
-    live docs."""
-    return f"""
-    WITH {_minhash_cte(
-        sig_src="sh_all",
-        base_hot_pred="doc_id % 5 <> 0",
-        corpus_pred="doc_id % 7 <> 3",
-    )}
-    SELECT d1, d2, jaccard FROM verified WHERE jaccard >= 0.8
-    ORDER BY d1, d2
-    """
-
-
-def q_lsh_compaction_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs after the dedup registry's FULL lifecycle — base
-    band keys v0, delta keys appended v1, doc-grain tombstones v2,
-    txlog.rewrite_snapshot folds them into a rewritten v3, and candidate
-    generation reads the PLAIN compacted scan. Hash-matching the batch
-    LSH over the post-delete union proves compaction is a pure
-    physical rewrite of the dedup index (r14 queue; completes the
-    add/delete/compact triangle bm25_compaction_twin closed for the
-    search index — reference tie: the incremental-batch discipline of
-    scripts/run_incremental_batch.py:29-41)."""
-    from pyspark.sql import functions as F
-
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    delta = docs.filter(F.col("doc_id") % 5 == 0)
-    dels = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id")
-    t = scratch_dir("lsh_lc")
-    return D.lsh_registry_lifecycle_pairs(base, delta, dels, t)
-
-
-def bloom_rebuild_oracle_sql() -> str:
-    """The exact decontamination oracle restricted to the RETAINED eval
-    slice (even-doc_id test docs) — what the rebuilt filter must
-    match after 'deleting' the odd-doc_id eval slice."""
-    return f"""
-    WITH labeled AS (
-        SELECT doc_id, lang, text,
-               CASE WHEN md5(concat('split-v1', ':', CAST(doc_id AS VARCHAR))) < '1a'
-                    THEN 'test' ELSE 'train' END AS split
-        FROM documents
-    ),
-    words AS (SELECT doc_id, lang, split, {_WORDS5_DUCK} AS w FROM labeled),
-    whs AS (SELECT doc_id, lang, split,
-                   {T.word_hash_array_sql('w', 'duckdb')} AS wh FROM words),
-    sh AS (
-        SELECT DISTINCT doc_id, split,
-               unnest({T.shingle_hash_array_sql('wh', 5, 'duckdb')}) AS s
-        FROM whs
-    ),
-    eval_sh AS (
-        SELECT DISTINCT s FROM sh WHERE split = 'test' AND doc_id % 2 = 0
-    ),
-    cont AS (
-        SELECT DISTINCT doc_id FROM sh
-        WHERE split = 'train' AND s IN (SELECT s FROM eval_sh)
-    )
-    SELECT l.lang, count(*) AS n_train,
-           CAST(sum(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_contaminated
-    FROM labeled l LEFT JOIN cont c ON l.doc_id = c.doc_id
-    WHERE l.split = 'train'
-    GROUP BY l.lang ORDER BY l.lang
-    """
-
-
-def q_bloom_rebuild_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bloom registry's delete-as-
-    REBUILD path (r14 queue): shared bits make OR non-invertible, so
-    removing an eval slice rebuilds the filter from the retained
-    slices (overwrite commit; the pre-delete filter stays
-    time-travelable). The report must match the exact oracle
-    restricted to the retained eval slice — completing the per-family
-    delete semantics (postings/LSH/IVF tombstone, CM negates, bloom
-    rebuilds)."""
-    from .operators.dedup import decontaminate_bloom_rebuild
-
-    t = scratch_dir("bloom_rb")
-    return decontaminate_bloom_rebuild(
-        _t(spark, sf_dir, "documents"), t
-    )
-
-
-def q_bloom_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The decontamination bloom
-    as a sketch registry under eval-suite growth — word frames
-    committed per eval slice, OR-merged at read (bloom union IS
-    bitwise OR: idempotent, overlap-tolerant, no tombstones). Matches
-    the exact decontaminate_report oracle over the full eval split,
-    proving the registry composes under growth (r14 queue; fourth
-    registry family, opposite merge algebra)."""
-    from .operators.dedup import decontaminate_bloom_incremental
-
-    t = scratch_dir("bloom_inc")
-    return decontaminate_bloom_incremental(
-        _t(spark, sf_dir, "documents"), t
-    )

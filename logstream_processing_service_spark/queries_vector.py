@@ -598,107 +598,3 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     return S.hard_negative_mining(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-
-# ---------------------------------------------------------------------------
-# r14 queue (rehearsed in r13, NOT yet registered — the standing
-# pre-measure-then-register cadence; tests/test_ann_incremental.py runs the
-# compare harness at both SFs before any @spec line lands)
-# ---------------------------------------------------------------------------
-
-
-def ann_ivf_incremental_oracle_sql() -> str:
-    """Batch IVF with centroids FROZEN on the base slice and
-    assignment over the full corpus — exactly what the merged
-    registry read must equal."""
-    return f"""
-    WITH base AS (SELECT * FROM embeddings WHERE vec_id % 5 <> 0),
-    cent_dim AS (
-        SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
-        FROM base, range(1, {DIM + 1}) t(i)
-        GROUP BY label, i
-    ),
-    centroids AS (
-        SELECT label, list(m ORDER BY i) AS centroid FROM cent_dim GROUP BY label
-    ),
-    v_assign AS (
-        SELECT vec_id, embedding, bucket FROM (
-            SELECT e.vec_id, e.embedding, c.label AS bucket,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY round({V.minkowski_sql_duckdb("e.embedding", "c.centroid", DIM, 2.0)}, 9), c.label
-                   ) AS rn
-            FROM embeddings e, centroids c
-        ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-    q_probe AS (
-        SELECT q_id, q_emb, bucket FROM (
-            SELECT q.q_id, q.q_emb, c.label AS bucket,
-                   row_number() OVER (
-                       PARTITION BY q.q_id
-                       ORDER BY round({V.minkowski_sql_duckdb("q.q_emb", "c.centroid", DIM, 2.0)}, 9), c.label
-                   ) AS rn
-            FROM q, centroids c
-        ) WHERE rn <= 2
-    ),
-    scored AS (
-        SELECT p.q_id, v.vec_id,
-               round({V.cosine_sql_duckdb("p.q_emb", "v.embedding", DIM)}, 9) AS cos
-        FROM v_assign v JOIN q_probe p ON v.bucket = p.bucket
-        WHERE v.vec_id <> p.q_id
-    )
-    SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(cos, 6) AS cos FROM (
-        SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-    """
-
-
-def q_ann_ivf_incremental_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vector index under
-    ingest — base vectors' IVF bucket assignments committed v0
-    (centroids frozen on the base), delta vectors assigned to the same
-    frozen centroids and appended v1, probes over the merged read.
-    Hash-matching the frozen-centroid batch IVF over the union proves
-    the ANN ingest path composes without re-assigning the standing
-    corpus (r14 queue; third index family after bm25 and LSH)."""
-    from pyspark.sql import functions as F
-
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    t = scratch_dir("ivf_inc")
-    return S.ann_ivf_incremental(
-        base, delta, t, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2
-    )
-
-
-def ann_ivf_lifecycle_oracle_sql() -> str:
-    """Frozen-centroid batch IVF over the POST-DELETE corpus — what the
-    compacted plain-scan read must equal (centroids stay frozen on the
-    FULL base slice: deletion does not refresh index structure)."""
-    return ann_ivf_incremental_oracle_sql().replace(
-        "FROM embeddings e, centroids c",
-        "FROM (SELECT * FROM embeddings WHERE vec_id % 7 <> 3) e, centroids c",
-        1,
-    )
-
-
-def q_ann_ivf_lifecycle_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vector registry's full
-    lifecycle — base assignments v0 (frozen centroids), delta appended
-    v1, vec-grain tombstones v2, compaction rewrite v3, probes on the
-    plain compacted scan. With ann_ivf_incremental_twin this completes
-    the (bm25, LSH, IVF) × (add, delete, compact) matrix (r14
-    queue)."""
-    from pyspark.sql import functions as F
-
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    dels = emb.filter(F.col("vec_id") % 7 == 3).select("vec_id")
-    t = scratch_dir("ivf_lc")
-    return S.ann_ivf_lifecycle(
-        base, delta, dels, t, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2
-    )

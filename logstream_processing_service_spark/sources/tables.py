@@ -111,23 +111,6 @@ def jdbc_table(
     return reader.load()
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("event_date",),
-    mode: str = "overwrite",
-) -> None:
-    """Date-partitioned parquet sink — the storage layout that makes 100 TB
-    queryable: a time-range predicate prunes whole directories before any
-    IO (PartitionFilters), and each day's files compact independently.
-
-    The reference appends everything into flat Postgres tables and rescans
-    with WHERE (src/db/cluster_ops.py:14-19); partition pruning is the
-    columnar equivalent of its (log_id BETWEEN …) slicing, done by layout.
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
 def recover_swap(path: str) -> bool:
     """Repair a rename-swap that crashed. If ``path`` is missing but
     ``<path>._old`` exists, the crash happened between the two renames of

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_band_keys
-from ..sources.tables import read_parquet_or_empty, recover_swap, swap_in
+from ..sources.tables import read_parquet_or_empty, swap_in
 
 REGISTRY_SCHEMA = "band int, bkey string, first_doc_id long, batch_id long"
 
@@ -161,32 +161,3 @@ def minhash_dedup_sink(
                 dropped.unpersist()
 
     return write
-
-
-def compact_registry(
-    spark, out_dir: str, max_age: int, current_batch_id: int
-) -> dict:
-    """Registry TTL compaction: drop band-key rows minted more than
-    ``max_age`` batches before ``current_batch_id``. An append-only
-    registry grows with every accepted document forever; when the dedup
-    contract is a rolling horizon (suppress near-dups of anything ingested
-    in the last N batches — the news/feed-ingest case), compaction bounds
-    registry size at O(horizon) instead of O(history). Documents colliding
-    only with EXPIRED entries become acceptable again — that is the
-    sliding-window semantics, not a bug; run the batch ``minhash_lsh_pairs``
-    audit over the accepted set when full-history dedup is required.
-
-    Recovers a crashed swap first, then uses the sink's ``swap_in``, so a
-    crashed compaction never leaves a partial registry. Returns
-    {"before": n, "after": n} row counts (the registry is
-    KBs-per-thousand-docs small; two counts of it are maintenance noise,
-    not a corpus scan).
-    """
-    reg_path = f"{out_dir}/registry/data"
-    recover_swap(reg_path)
-    reg = spark.read.parquet(reg_path)
-    before = reg.count()
-    kept = reg.filter(F.col("batch_id") > current_batch_id - max_age)
-    after = kept.count()
-    swap_in(kept, reg_path)
-    return {"before": before, "after": after}

@@ -136,18 +136,6 @@ def session_volume(
     )
 
 
-def deduped_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming exactly-once-per-key dedup (T7): dropDuplicates bounded by
-    a watermark so the seen-keys state is evicted as event time advances —
-    the unbounded-state-safe form of the reference's ON CONFLICT DO NOTHING
-    (src/db/log_ops.py:53)."""
-    return (
-        events.withColumn("ts_tz", F.col("ts").cast("timestamp"))
-        .withWatermark("ts_tz", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-
-
 def correlated_pairs_stream(
     events: DataFrame,
     left_type: str = "signup",

@@ -1,6 +1,6 @@
-"""IVF vector index under ingest — rehearsed r14 catalog candidate
-`ann_ivf_incremental_twin` (the bm25/LSH incremental-registry
-discipline applied to the third index family)."""
+"""IVF vector index under ingest (``similarity.ann_ivf_incremental``): the
+bm25/LSH incremental-registry discipline applied to the third index
+family."""
 
 from __future__ import annotations
 
@@ -12,19 +12,84 @@ from .conftest import SF_DIR, SF_DIR_ORACLE
 from .oracle_harness import compare_one, duckdb_conn
 
 
-@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
-def test_ann_ivf_incremental_hash_matches_frozen_centroid_oracle(
-    spark, sf_dir
-):
-    from logstream_processing_service_spark.queries_vector import (
-        ann_ivf_incremental_oracle_sql,
-        q_ann_ivf_incremental_twin,
+def _incremental_probe(spark, sf_dir: str, t: str):
+    """Base vectors (vec_id % 5 != 0) committed v0 with centroids frozen on
+    them, delta vectors appended v1, probes for vec_id < 10 over the
+    merged read."""
+    from pyspark.sql import functions as F
+
+    from logstream_processing_service_spark.operators.similarity import (
+        ann_ivf_incremental,
+    )
+    from logstream_processing_service_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return ann_ivf_incremental(
+        emb.filter(F.col("vec_id") % 5 != 0),
+        emb.filter(F.col("vec_id") % 5 == 0),
+        t, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2,
     )
 
+
+def _frozen_centroid_oracle() -> str:
+    """Batch IVF with centroids frozen on the base slice and assignment
+    over the full corpus: what the merged registry read must equal."""
+    from logstream_processing_service_spark.functions import vector as V
+    from logstream_processing_service_spark.queries_vector import DIM
+
+    return f"""
+    WITH base AS (SELECT * FROM embeddings WHERE vec_id % 5 <> 0),
+    cent_dim AS (
+        SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
+        FROM base, range(1, {DIM + 1}) t(i)
+        GROUP BY label, i
+    ),
+    centroids AS (
+        SELECT label, list(m ORDER BY i) AS centroid FROM cent_dim GROUP BY label
+    ),
+    v_assign AS (
+        SELECT vec_id, embedding, bucket FROM (
+            SELECT e.vec_id, e.embedding, c.label AS bucket,
+                   row_number() OVER (
+                       PARTITION BY e.vec_id
+                       ORDER BY round({V.minkowski_sql_duckdb("e.embedding", "c.centroid", DIM, 2.0)}, 9), c.label
+                   ) AS rn
+            FROM embeddings e, centroids c
+        ) WHERE rn = 1
+    ),
+    q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
+    q_probe AS (
+        SELECT q_id, q_emb, bucket FROM (
+            SELECT q.q_id, q.q_emb, c.label AS bucket,
+                   row_number() OVER (
+                       PARTITION BY q.q_id
+                       ORDER BY round({V.minkowski_sql_duckdb("q.q_emb", "c.centroid", DIM, 2.0)}, 9), c.label
+                   ) AS rn
+            FROM q, centroids c
+        ) WHERE rn <= 2
+    ),
+    scored AS (
+        SELECT p.q_id, v.vec_id,
+               round({V.cosine_sql_duckdb("p.q_emb", "v.embedding", DIM)}, 9) AS cos
+        FROM v_assign v JOIN q_probe p ON v.bucket = p.bucket
+        WHERE v.vec_id <> p.q_id
+    )
+    SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(cos, 6) AS cos FROM (
+        SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
+        FROM scored
+    ) WHERE rank <= 5
+    """
+
+
+@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
+def test_ann_ivf_incremental_hash_matches_frozen_centroid_oracle(
+    spark, sf_dir, tmp_path
+):
     con = duckdb_conn(sf_dir)
     r = compare_one(
-        spark, con, "ann_ivf_incremental_twin", q_ann_ivf_incremental_twin,
-        ann_ivf_incremental_oracle_sql(), sf_dir,
+        spark, con, "ann_ivf_incremental_twin",
+        lambda s, d: _incremental_probe(s, d, str(tmp_path / "reg")),
+        _frozen_centroid_oracle(), sf_dir,
     )
     assert r["status"] == "OK", r
 
@@ -70,67 +135,3 @@ def test_delta_commit_is_delta_grain_and_probe_sees_both(spark, tmp_path):
     top = {r["q_id"]: r["vec_id"] for r in rows if r["rank"] == 1}
     # query 3's top hit is its near-clone from the DELTA commit
     assert top[3] == 100
-
-
-@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
-def test_ann_ivf_lifecycle_hash_matches_post_delete_oracle(spark, sf_dir):
-    """Probes over the compacted registry (plain scan) must equal the
-    frozen-centroid batch IVF over the post-delete corpus — the vector
-    index's delete + compact verbs are exact."""
-    from logstream_processing_service_spark.queries_vector import (
-        ann_ivf_lifecycle_oracle_sql,
-        q_ann_ivf_lifecycle_twin,
-    )
-
-    con = duckdb_conn(sf_dir)
-    r = compare_one(
-        spark, con, "ann_ivf_lifecycle_twin", q_ann_ivf_lifecycle_twin,
-        ann_ivf_lifecycle_oracle_sql(), sf_dir,
-    )
-    assert r["status"] == "OK", r
-
-
-def test_ivf_compaction_folds_tombstones_and_preserves_time_travel(
-    spark, tmp_path
-):
-    """After compaction: fewer files than merged v2, zero tombstones,
-    zero rows for deleted vectors; v2's tombstone-aware read equals
-    the compacted read; the deleted vector never appears in probe
-    results."""
-    from pyspark.sql import functions as F
-
-    from logstream_processing_service_spark.operators import txlog as TX
-    from logstream_processing_service_spark.operators.similarity import (
-        ann_ivf_lifecycle,
-    )
-
-    def vec(seed, dim=8):
-        return [float((seed * (i + 3)) % 7) / 7.0 + 0.1 for i in range(dim)]
-
-    base = spark.createDataFrame(
-        [(i, vec(i), i % 2) for i in range(1, 9)],
-        "vec_id long, embedding array<double>, label int",
-    )
-    delta = spark.createDataFrame(
-        [(100, [x * 1.001 for x in vec(3)], 1)],
-        "vec_id long, embedding array<double>, label int",
-    )
-    dels = spark.createDataFrame([(3,)], "vec_id long")
-    queries = spark.createDataFrame(
-        [(3, vec(3))], "vec_id long, embedding array<double>"
-    )
-    t = str(tmp_path / "reg")
-    out = ann_ivf_lifecycle(base, delta, dels, t, queries, k=3, nprobe=2)
-    hits = [r["vec_id"] for r in out.collect()]
-    assert 100 in hits          # the delta near-clone is served
-    assert 3 not in hits        # the deleted vector is gone
-    assert len(TX._manifest(t, 3)["files"]) < len(TX._manifest(t, 2)["files"])
-    compacted = TX.read_snapshot(spark, t)
-    assert compacted.filter(F.col("v_bucket") < 0).count() == 0
-    assert compacted.filter("vec_id = 3").count() == 0
-    v2 = TX.live_rows(
-        TX.read_snapshot(spark, t, version=2), "vec_id", "v_bucket"
-    )
-    a = sorted((r["vec_id"], r["v_bucket"]) for r in v2.collect())
-    b = sorted((r["vec_id"], r["v_bucket"]) for r in compacted.collect())
-    assert a == b

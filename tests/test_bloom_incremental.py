@@ -1,6 +1,6 @@
-"""Decontamination bloom as a sketch registry under eval-suite growth —
-rehearsed r14 catalog candidate `bloom_incremental_twin` (bloom union =
-bitwise OR of word frames; idempotent, overlap-tolerant merge)."""
+"""Decontamination bloom as a sketch registry under eval-suite growth
+(``dedup.decontaminate_bloom_incremental``): bloom union = bitwise OR of
+word frames, an idempotent, overlap-tolerant merge."""
 
 from __future__ import annotations
 
@@ -13,31 +13,24 @@ from .oracle_harness import compare_one, duckdb_conn
 
 
 @pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
-def test_bloom_incremental_hash_matches_exact_oracle(spark, sf_dir):
+def test_bloom_incremental_hash_matches_exact_oracle(spark, sf_dir, tmp_path):
+    """Word frames committed per eval slice and OR-merged at read match
+    the exact decontaminate_report oracle over the full eval split."""
+    from logstream_processing_service_spark.operators.dedup import (
+        decontaminate_bloom_incremental,
+    )
     from logstream_processing_service_spark.queries_text import (
         _decontaminate_oracle,
-        q_bloom_incremental_twin,
     )
+    from logstream_processing_service_spark.sources import load_table
 
     con = duckdb_conn(sf_dir)
     r = compare_one(
-        spark, con, "bloom_incremental_twin", q_bloom_incremental_twin,
+        spark, con, "bloom_incremental_twin",
+        lambda s, d: decontaminate_bloom_incremental(
+            load_table(s, d, "documents"), str(tmp_path / "reg")
+        ),
         _decontaminate_oracle(), sf_dir,
-    )
-    assert r["status"] == "OK", r
-
-
-@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
-def test_bloom_rebuild_matches_retained_slice_oracle(spark, sf_dir):
-    from logstream_processing_service_spark.queries_text import (
-        bloom_rebuild_oracle_sql,
-        q_bloom_rebuild_twin,
-    )
-
-    con = duckdb_conn(sf_dir)
-    r = compare_one(
-        spark, con, "bloom_rebuild_twin", q_bloom_rebuild_twin,
-        bloom_rebuild_oracle_sql(), sf_dir,
     )
     assert r["status"] == "OK", r
 

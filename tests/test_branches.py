@@ -212,43 +212,11 @@ def test_branch_of_branch(spark, table):
     assert _vals(spark, table) == [(1, "a"), (2, "b")]
 
 
-def test_branch_diff_fast_path_is_insert_only(spark, table):
-    b = TX.create_branch(table, "dev")
-    TX.commit(b, _df(spark, [(3, "c")]), mode="append")
-    d = TX.branch_diff(spark, table, "dev")
-    rows = [(r["k"], r["v"], r["_change_type"]) for r in d.collect()]
-    assert rows == [(3, "c", "insert")]
-    # fast path: only the branch-added file is read
-    assert all("_branches/dev/data" in f for f in d.inputFiles())
-
-
-def test_branch_diff_empty_when_no_branch_commits(spark, table):
-    TX.create_branch(table, "dev")
-    assert TX.branch_diff(spark, table, "dev").count() == 0
-
-
-def test_branch_diff_keyed_general_tier(spark, table):
-    b = TX.create_branch(table, "dev")
-    TX.commit(b, _df(spark, [(1, "a"), (2, "B"), (3, "c")]),
-              mode="overwrite")
-    TX.commit(table, _df(spark, [(9, "z")]), mode="append")
-    d = TX.branch_diff(spark, table, "dev", key="k")
-    got = sorted(
-        (r["k"], r["v"], r["_change_type"]) for r in d.collect()
-    )
-    assert got == [
-        (2, "B", "update_postimage"),
-        (2, "b", "update_preimage"),
-        (3, "c", "insert"),
-        (9, "z", "delete"),
-    ]
-
-
 def test_write_audit_publish_composition(spark, table):
     """The WAP pattern end-to-end: stream micro-batches into a branch
-    via the exactly-once sink, audit with constraint_report, preview
-    with branch_diff, publish with merge_branch — the parent never sees
-    unaudited data, and a replayed batch on the branch is a no-op."""
+    via the exactly-once sink, audit with constraint_report, publish
+    with merge_branch — the parent never sees unaudited data, and a
+    replayed batch on the branch is a no-op."""
     from logstream_processing_service_spark.operators.analytics import (
         constraint_report,
     )
@@ -269,8 +237,6 @@ def test_write_audit_publish_composition(spark, table):
         ],
     )
     assert all(r["passed"] for r in audit.collect())
-    preview = TX.branch_diff(spark, table, "ingest")
-    assert preview.count() == 2  # the two audited batches
     TX.merge_branch(table, "ingest")
     assert _vals(spark, table) == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
     # the publish carried the exactly-once HWM to the parent

@@ -21,17 +21,6 @@ def test_report_metrics_and_auc_floor(spark, sf_dir):
     assert m["n_features"] >= 10
 
 
-def test_scoring_consistent_with_decision_rule(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    model, assembler, _ = C.train_quality_classifier(docs)
-    scored = C.score_documents(docs, model, assembler)
-    rows = scored.collect()
-    assert len(rows) == 200
-    for r in rows:
-        assert 0.0 <= r["quality_score"] <= 1.0
-        assert r["keep"] == (1 if r["quality_score"] > 0.5 else 0)
-
-
 def test_split_is_deterministic_and_leak_free(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     f1 = C.quality_training_frame(docs).select("doc_id", "split")

@@ -19,15 +19,15 @@ from .oracle_harness import compare_one, duckdb_conn
 
 @pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
 def test_iterated_hash_matches_unrolled_oracle(spark, sf_dir):
+    from logstream_processing_service_spark import catalog
     from logstream_processing_service_spark.queries_curation import (
-        doremi_iterated_query_oracle_sql,
         q_doremi_iterated,
     )
 
     con = duckdb_conn(sf_dir)
     r = compare_one(
         spark, con, "doremi_iterated", q_doremi_iterated,
-        doremi_iterated_query_oracle_sql(), sf_dir,
+        catalog.oracle_sql()["doremi_iterated"], sf_dir,
     )
     assert r["status"] == "OK", r
     spark.catalog.clearCache()

@@ -13,13 +13,13 @@ from hypothesis import strategies as st
 from logstream_processing_service_spark.operators.gifcodec import (
     _analytic_frame,
     _analytic_palette,
+    _BitWriter,
     decode_gif,
     encode_gif,
     gif_frame_pixel_stats,
     gif_frame_stats_oracle_sql,
     lzw_decode,
     lzw_encode,
-    lzw_encode_uncompressed,
     synthetic_gif,
     with_synthetic_gif_payload,
 )
@@ -31,6 +31,32 @@ from .oracle_harness import compare_one, duckdb_conn
 # ---------------------------------------------------------------------------
 # LZW
 # ---------------------------------------------------------------------------
+
+
+def lzw_encode_uncompressed(pixels: bytes, mcs: int) -> bytes:
+    """Independent second encoder: literal codes only at FIXED width
+    mcs+1, with a CLEAR before the decoder's table could force a width
+    bump (next_code reaches 2^(mcs+1)). Trivially spec-correct — used to
+    cross-validate the decoder against lzw_encode."""
+    clear = 1 << mcs
+    eoi = clear + 1
+    width = mcs + 1
+    # decoder starts next_code at eoi+1 and adds one entry per code
+    # AFTER the first; stay strictly below the early-widen threshold
+    # (2^width - 1 table slots)
+    budget = (1 << width) - (eoi + 1) - 3
+    bw = _BitWriter()
+    bw.write(clear, width)
+    since_clear = 0
+    for b in pixels:
+        if since_clear > budget:
+            bw.write(clear, width)
+            since_clear = 0
+        bw.write(b, width)
+        since_clear += 1
+    bw.write(eoi, width)
+    return bw.finish()
+
 
 @pytest.mark.parametrize("encoder", [lzw_encode, lzw_encode_uncompressed])
 @pytest.mark.parametrize(

@@ -15,15 +15,15 @@ from .oracle_harness import compare_one, duckdb_conn
 
 @pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
 def test_greedy_order_hash_matches_unrolled_oracle(spark, sf_dir):
+    from logstream_processing_service_spark import catalog
     from logstream_processing_service_spark.queries_curation import (
-        greedy_coverage_oracle_sql,
         q_greedy_coverage_order,
     )
 
     con = duckdb_conn(sf_dir)
     r = compare_one(
         spark, con, "greedy_coverage_order", q_greedy_coverage_order,
-        greedy_coverage_oracle_sql(), sf_dir,
+        catalog.oracle_sql()["greedy_coverage_order"], sf_dir,
     )
     assert r["status"] == "OK", r
     spark.catalog.clearCache()

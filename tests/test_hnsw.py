@@ -209,121 +209,6 @@ def test_hnsw_registry_persist_insert_search(spark, sf_dir, tmp_path):
     assert _recall(spark, got, exact, 5) >= 0.85
 
 
-def test_hnsw_index_sink_streaming_ingest(spark, sf_dir, tmp_path):
-    """Streaming index maintenance: 3 micro-batches through
-    hnsw_index_sink equal the one-shot rebuild over the union; a
-    replayed batch is a no-op (exactly-once via the manifest HWM)."""
-    import pyspark.sql.functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < 240
-    )
-    d = str(tmp_path / "hnsw-stream")
-    sink = H.hnsw_index_sink(d)
-    for b, (lo, hi) in enumerate([(0, 80), (80, 160), (160, 240)]):
-        sink(
-            emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
-            b,
-        )
-    # crash replay of the middle batch: must not double-insert
-    sink(emb.filter((F.col("vec_id") >= 80) & (F.col("vec_id") < 160)), 1)
-
-    grown = H.load_hnsw(spark, d)
-    rebuilt = H.build_hnsw(emb)
-    assert _graph_equal(rebuilt, grown)
-
-
-def test_hnsw_registry_compaction_policy(spark, sf_dir, tmp_path):
-    """r6 VERDICT #6: the registry maintenance story. Quality
-    re-layering is unnecessary by construction (insert==rebuild parity,
-    pinned above); what compaction bounds is HISTORY (superseded
-    snapshots) and rolling-horizon VECTOR TTL (id-threshold rebuild).
-    After TTL compaction the index must be bit-for-bit the canonical
-    build of the kept set, searches serve, exactly-once HWMs survive,
-    and vacuum drops superseded versions."""
-    import pyspark.sql.functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < 300
-    )
-    d = str(tmp_path / "hnsw")
-    H.save_hnsw(
-        spark,
-        H.build_hnsw(emb.filter(F.col("vec_id") < 100), M=8,
-                     ef_construction=32, seed=0),
-        d,
-    )
-    H.insert_hnsw(
-        spark, d,
-        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 200)),
-    )
-    H.insert_hnsw(spark, d, emb.filter(F.col("vec_id") >= 200))
-
-    stats = H.compact_hnsw_registry(
-        spark, d, min_vec_id=100, retain_last=1, min_age_seconds=0.0
-    )
-    assert stats["nodes_before"] == 300
-    assert stats["nodes_after"] == 200
-    assert stats["versions_after"] <= stats["versions_before"]
-
-    # the compacted registry IS the canonical index of the kept set
-    kept = emb.filter(F.col("vec_id") >= 100).select("vec_id", "embedding")
-    canonical = H.build_hnsw(kept, M=8, ef_construction=32, seed=0)
-    compacted = H.load_hnsw(spark, d)
-    assert _graph_equal(canonical, compacted)
-
-    # later inserts keep the parity contract on the compacted base:
-    # fake a fresh tail batch with ids above the kept range
-    tail = emb.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 300).alias("vec_id"), "embedding"
-    )
-    H.insert_hnsw(spark, d, tail)
-    grown = H.load_hnsw(spark, d)
-    union_rebuild = H.build_hnsw(
-        kept.unionByName(tail), M=8, ef_construction=32, seed=0
-    )
-    assert _graph_equal(union_rebuild, grown)
-
-    # a dropped-everything compaction must refuse loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="drop every vector"):
-        H.compact_hnsw_registry(spark, d, min_vec_id=10_000)
-
-
-def test_hnsw_compaction_reuses_build_seed(spark, sf_dir, tmp_path):
-    """r7 ADVICE regression: compaction must rebuild with the ORIGINAL
-    build seed (persisted in hnsw_meta), not a hardcoded seed=0 — for a
-    seed!=0 registry the canonical-build parity contract must hold
-    against a rebuild with THAT seed."""
-    import pyspark.sql.functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < 200
-    )
-    d = str(tmp_path / "hnsw7")
-    H.save_hnsw(
-        spark,
-        H.build_hnsw(emb.filter(F.col("vec_id") < 120), M=8,
-                     ef_construction=32, seed=7),
-        d,
-    )
-    H.insert_hnsw(spark, d, emb.filter(F.col("vec_id") >= 120))
-    H.compact_hnsw_registry(
-        spark, d, min_vec_id=60, retain_last=1, min_age_seconds=0.0
-    )
-    kept = emb.filter(F.col("vec_id") >= 60).select("vec_id", "embedding")
-    compacted = H.load_hnsw(spark, d)
-    assert compacted.seed == 7  # seed survives the save/load round-trip
-    assert _graph_equal(
-        H.build_hnsw(kept, M=8, ef_construction=32, seed=7), compacted
-    )
-    # and seed=0 is genuinely a DIFFERENT level-draw stream here, so the
-    # assertion above is discriminating (guard against a vacuous pass)
-    z = H.build_hnsw(kept, M=8, ef_construction=32, seed=0)
-    assert not _graph_equal(z, compacted)
-
-
 def test_save_never_built_index_is_empty_snapshot(spark, tmp_path):
     """r14 (ADVICE): an index constructed but never built (vecs is None)
     must save as a zero-row snapshot — the pre-Arrow row-list path

@@ -8,6 +8,8 @@ import pytest
 
 from logstream_processing_service_spark.operators import jpegcodec as J
 
+from .jpeg_progressive import _optimal_table, encode_jpeg_progressive
+
 
 def test_constant_and_block_images_roundtrip_exactly():
     px = np.full((16, 24), 77, dtype=np.uint8)
@@ -239,10 +241,10 @@ def test_progressive_decode_identical_to_baseline():
     for img, q, sub in cases:
         if img.ndim == 2:
             base = J.decode_jpeg(J.encode_jpeg_gray(img, quality=q))
-            prog_bytes = J.encode_jpeg_progressive(img, quality=q)
+            prog_bytes = encode_jpeg_progressive(img, quality=q)
         else:
             base = J.decode_jpeg(J.encode_jpeg_color(img, q, subsampling=sub))
-            prog_bytes = J.encode_jpeg_progressive(img, q, subsampling=sub)
+            prog_bytes = encode_jpeg_progressive(img, q, subsampling=sub)
         assert b"\xff\xc2" in prog_bytes  # really SOF2
         prog = J.decode_jpeg(prog_bytes)  # delegation path
         assert np.array_equal(base, prog), (img.shape, q, sub)
@@ -251,7 +253,7 @@ def test_progressive_decode_identical_to_baseline():
 def test_progressive_stream_has_multiple_scans_and_optimal_tables():
     rng = np.random.default_rng(13)
     img = rng.integers(0, 256, (32, 32, 3)).astype(np.uint8)
-    b = J.encode_jpeg_progressive(img, 80)
+    b = encode_jpeg_progressive(img, 80)
     assert b.count(b"\xff\xda") == 10  # libjpeg standard 10-scan script
     # per-scan DHTs: more DHT segments than the 2 up-front DC tables
     assert b.count(b"\xff\xc4") >= 8
@@ -262,7 +264,7 @@ def test_progressive_refinement_scans_matter():
     proves successive approximation actually carries information."""
     rng = np.random.default_rng(17)
     img = rng.integers(0, 256, (24, 24)).astype(np.uint8)
-    b = J.encode_jpeg_progressive(img, 85)
+    b = encode_jpeg_progressive(img, 85)
     full = J.decode_jpeg_progressive(b)
     # truncate at the LAST SOS (the Ah=1->Al=0 luma refinement)
     last_sos = b.rfind(b"\xff\xda")
@@ -284,14 +286,13 @@ def test_progressive_gray_script_and_point_transform_edge():
     img[:, 12:] = 255
     for q in (100, 40, 5):
         base = J.decode_jpeg(J.encode_jpeg_gray(img, q))
-        prog = J.decode_jpeg(J.encode_jpeg_progressive(img, q))
+        prog = J.decode_jpeg(encode_jpeg_progressive(img, q))
         assert np.array_equal(base, prog)
 
 
 def test_optimal_table_is_valid_prefix_code():
     from logstream_processing_service_spark.operators.jpegcodec import (
         _canonical_codes,
-        _optimal_table,
     )
 
     rng = np.random.default_rng(23)
@@ -327,14 +328,14 @@ def test_422_411_layouts_roundtrip_and_progressive_parity():
             assert base.shape == img.shape
             assert np.abs(base.astype(int) - img.astype(int)).max() <= 2
             prog = J.decode_jpeg(
-                J.encode_jpeg_progressive(img, 100, subsampling=sub)
+                encode_jpeg_progressive(img, 100, subsampling=sub)
             )
             assert np.array_equal(base, prog)
     # noisy chroma content: still exact baseline<->progressive parity
     c = rng.integers(0, 256, (24, 40, 3), dtype=np.uint8)
     for sub in ("422", "411"):
         b1 = J.decode_jpeg(J.encode_jpeg_color(c, 90, subsampling=sub))
-        b2 = J.decode_jpeg(J.encode_jpeg_progressive(c, 90, subsampling=sub))
+        b2 = J.decode_jpeg(encode_jpeg_progressive(c, 90, subsampling=sub))
         assert np.array_equal(b1, b2)
 
 
@@ -343,7 +344,7 @@ def test_decoder_rejects_garbage_without_hanging():
     and promptly — never hang, loop, or return garbage silently."""
     rng = np.random.default_rng(41)
     img = rng.integers(0, 256, (24, 24)).astype(np.uint8)
-    good_prog = J.encode_jpeg_progressive(img, 80)
+    good_prog = encode_jpeg_progressive(img, 80)
     good_base = J.encode_jpeg_gray(img, 80)
     cases = []
     for good in (good_base, good_prog):

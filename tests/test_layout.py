@@ -138,10 +138,11 @@ def test_hilbert2_matches_python_reference(spark):
 
 
 def test_hilbert_layout_prunes_like_zorder(spark, tmp_path):
-    """Hilbert clustering bounds BOTH dimensions per file at least as
-    well as Z-order on the same data (tighter on average)."""
+    """Hilbert clustering (the layout ``maintenance.compact_parquet``
+    writes with ``curve="hilbert"``) bounds BOTH dimensions per file at
+    least as well as Z-order on the same data (tighter on average)."""
     from logstream_processing_service_spark.operators.layout import (
-        write_hilbert,
+        with_hilbert,
         write_zordered,
     )
 
@@ -152,7 +153,13 @@ def test_hilbert_layout_prunes_like_zorder(spark, tmp_path):
     )
     zp, hp = str(tmp_path / "z"), str(tmp_path / "h")
     write_zordered(df, zp, "x", "y", n_files=files)
-    write_hilbert(df, hp, "x", "y", n_files=files)
+    (
+        with_hilbert(df, "x", "y", "_h")
+        .repartitionByRange(files, "_h")
+        .sortWithinPartitions("_h")
+        .drop("_h")
+        .write.parquet(hp)
+    )
     assert spark.read.parquet(hp).count() == n
 
     lo, hi = 1024, 1279

@@ -1,7 +1,6 @@
-"""Dedup-registry lifecycle completion — rehearsed r14 catalog
-candidate `lsh_compaction_twin` (add / delete / COMPACT on the LSH
-band-key registry, the bm25_compaction_twin discipline on the dedup
-index)."""
+"""Dedup-registry lifecycle: add / delete / COMPACT on the LSH band-key
+registry (``dedup.lsh_registry_lifecycle_pairs``), the bm25_compaction_twin
+discipline on the dedup index."""
 
 from __future__ import annotations
 
@@ -11,21 +10,52 @@ from .conftest import SF_DIR, SF_DIR_ORACLE
 from .oracle_harness import compare_one, duckdb_conn
 
 
+def _lifecycle_pairs(spark, sf_dir: str, t: str):
+    """Base band keys v0 (doc_id % 5 != 0), delta keys v1, tombstones for
+    doc_id % 7 == 3 at v2, compaction to v3, pairs from the plain scan."""
+    from pyspark.sql import functions as F
+
+    from logstream_processing_service_spark.operators import dedup as D
+    from logstream_processing_service_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    return D.lsh_registry_lifecycle_pairs(
+        docs.filter(F.col("doc_id") % 5 != 0),
+        docs.filter(F.col("doc_id") % 5 == 0),
+        docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"),
+        t,
+    )
+
+
+def _post_delete_oracle() -> str:
+    """Batch LSH over the post-delete union corpus with the base-frozen
+    hot filter: the hot list was computed while the deleted docs were
+    still present (metadata freezes at registry creation), so the hot
+    CTE sees the full base slice while sig/verify see only live docs."""
+    from logstream_processing_service_spark.queries_text import _minhash_cte
+
+    return f"""
+    WITH {_minhash_cte(
+        sig_src="sh_all",
+        base_hot_pred="doc_id % 5 <> 0",
+        corpus_pred="doc_id % 7 <> 3",
+    )}
+    SELECT d1, d2, jaccard FROM verified WHERE jaccard >= 0.8
+    ORDER BY d1, d2
+    """
+
+
 @pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
-def test_lsh_lifecycle_hash_matches_post_delete_oracle(spark, sf_dir):
+def test_lsh_lifecycle_hash_matches_post_delete_oracle(spark, sf_dir, tmp_path):
     """Pairs from the compacted registry (plain scan, no tombstone
     filtering left) must equal the from-scratch batch LSH over the
     post-delete union corpus — compaction is a pure physical rewrite
     of the dedup index."""
-    from logstream_processing_service_spark.queries_text import (
-        lsh_lifecycle_oracle_sql,
-        q_lsh_compaction_twin,
-    )
-
     con = duckdb_conn(sf_dir)
     r = compare_one(
-        spark, con, "lsh_compaction_twin", q_lsh_compaction_twin,
-        lsh_lifecycle_oracle_sql(), sf_dir,
+        spark, con, "lsh_compaction_twin",
+        lambda s, d: _lifecycle_pairs(s, d, str(tmp_path / "reg")),
+        _post_delete_oracle(), sf_dir,
     )
     assert r["status"] == "OK", r
 

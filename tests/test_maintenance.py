@@ -9,6 +9,16 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 
+def _files_overlapping(index_df, col: str, lo, hi) -> list[str]:
+    """Files whose indexed [min, max] for ``col`` intersects [lo, hi]:
+    the skipping decision a stats-aware reader makes from
+    ``build_file_stats_index``'s frame."""
+    rows = index_df.filter(
+        ~((F.col(f"max_{col}") < lo) | (F.col(f"min_{col}") > hi))
+    ).select("_file").collect()
+    return [r["_file"] for r in rows]
+
+
 def test_compact_reduces_files_and_preserves_data(spark, tmp_path):
     from logstream_processing_service_spark.operators.maintenance import (
         compact_parquet,
@@ -67,7 +77,6 @@ def test_file_stats_index_prunes_and_stays_correct(spark, tmp_path):
     from logstream_processing_service_spark.operators.maintenance import (
         build_file_stats_index,
         compact_parquet,
-        read_pruned,
     )
 
     path = str(tmp_path / "tbl3")
@@ -81,13 +90,10 @@ def test_file_stats_index_prunes_and_stays_correct(spark, tmp_path):
     idx = build_file_stats_index(spark, path, ["x", "y"])
     n_files = idx.count()
     assert n_files > 2
-    from logstream_processing_service_spark.operators.maintenance import (
-        prune_files,
-    )
-
-    hit = prune_files(idx, "x", 4000, 4500)
+    hit = _files_overlapping(idx, "x", 4000, 4500)
     assert 0 < len(hit) <= max(2, n_files // 3)  # real skipping
-    got = read_pruned(spark, idx, "x", 4000, 4500).count()
+    # the index is a superset filter: the skipped files hold no match
+    got = spark.read.parquet(*hit).filter(F.col("x").between(4000, 4500)).count()
     want = (
         spark.read.parquet(path).filter(F.col("x").between(4000, 4500)).count()
     )
@@ -102,7 +108,6 @@ def test_compact_with_2d_clustering(spark, tmp_path):
     from logstream_processing_service_spark.operators.maintenance import (
         build_file_stats_index,
         compact_parquet,
-        prune_files,
     )
 
     path = str(tmp_path / "tbl2d")
@@ -123,7 +128,7 @@ def test_compact_with_2d_clustering(spark, tmp_path):
     # files (with ~2^k files each bounds both dims to ~half/quarter range;
     # the exact count wobbles with range-sampling boundaries)
     for col in ("x", "y"):
-        assert len(prune_files(idx, col, 1024, 1279)) <= (2 * n_files) // 3
+        assert len(_files_overlapping(idx, col, 1024, 1279)) <= (2 * n_files) // 3
     with pytest.raises(ValueError):
         compact_parquet(
             spark, path, sort_col="x", cluster_cols=("x", "y")
@@ -172,7 +177,6 @@ def test_bloom_file_index_point_lookup(spark, sf_dir, tmp_path):
         bloom_prune_files,
         build_bloom_file_index,
         build_file_stats_index,
-        prune_files,
         read_bloom_pruned,
     )
     from logstream_processing_service_spark.sources import load_table
@@ -212,7 +216,7 @@ def test_bloom_file_index_point_lookup(spark, sf_dir, tmp_path):
     # fully overlap and stats prune nothing; the small test domain lets
     # them prune some — bloom must still be the tighter filter)
     stats = build_file_stats_index(spark, out, ["user_id"])
-    assert len(got_files) <= len(prune_files(stats, "user_id", probe, probe))
+    assert len(got_files) <= len(_files_overlapping(stats, "user_id", probe, probe))
 
     want = sorted(
         tuple(r)

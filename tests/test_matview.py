@@ -79,47 +79,6 @@ def test_vacuumed_base_manifest_triggers_full(spark, tmp_path):
     assert _served(spark, v) == _served(spark, v2)
 
 
-def test_matview_sink_under_real_stream(spark, tmp_path):
-    """The streaming composition: availableNow micro-batches -> txlog
-    appends -> incremental refresh per batch; the served view equals the
-    batch aggregate over everything ingested, and stream restart with
-    the same checkpoint is a no-op for both table and view."""
-    import os
-
-    from logstream_processing_service_spark.operators.matview import (
-        matview_sink,
-    )
-
-    src = str(tmp_path / "src")
-    t, v = str(tmp_path / "t"), str(tmp_path / "v")
-    os.makedirs(src)
-
-    def run_stream():
-        q = (
-            spark.readStream.schema("k string, v double")
-            .parquet(src)
-            .writeStream.foreachBatch(matview_sink(t, v, SPEC))
-            .option("checkpointLocation", str(tmp_path / "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    _mk(spark, [("a", 1.0), ("b", 2.0)]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run_stream()
-    _mk(spark, [("a", 3.0)]).coalesce(1).write.mode("append").parquet(src)
-    run_stream()
-    assert _served(spark, v) == {
-        ("a", 2, 4.0, 1.0, 3.0),
-        ("b", 1, 2.0, 2.0, 2.0),
-    }
-    n_t, n_v = len(TX.history(t)), len(TX.history(v))
-    run_stream()  # nothing new: full no-op
-    assert (len(TX.history(t)), len(TX.history(v))) == (n_t, n_v)
-
-
 def test_windowed_drift_detects_planted_week_shift(spark, tmp_path):
     """Incremental windowed drift monitor (driftwindow.py): two calm
     weeks then a shifted third week — anchors whose current window
@@ -189,44 +148,6 @@ def test_windowed_drift_detects_planted_week_shift(spark, tmp_path):
     assert hot["mean_shift"] > 90, hot
 
 
-def test_drift_sink_streaming_composition(spark, tmp_path, sf_dir):
-    """The streaming drift monitor: micro-batches through drift_sink
-    (txlog append + incremental view refresh per batch, replay-guarded)
-    serve the same report as one batch build; a replayed batch is a
-    no-op."""
-    from pyspark.sql import functions as F
-
-    from logstream_processing_service_spark.operators import txlog as TX
-    from logstream_processing_service_spark.operators.driftwindow import (
-        DriftGrid,
-        drift_sink,
-        prepare_drift_rows,
-        refresh_drift_view,
-        windowed_drift,
-    )
-    from logstream_processing_service_spark.sources import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    grid = DriftGrid(lo=0.0, hi=600.0, bins=20, window_days=7)
-
-    tdir, vdir = str(tmp_path / "t"), str(tmp_path / "v")
-    sink = drift_sink(tdir, vdir, grid)
-    for b in range(3):
-        sink(ev.filter(F.col("event_id") % 3 == b), b)
-    sink(ev.filter(F.col("event_id") % 3 == 1), 1)  # replay: no-op
-    got = [
-        r.asDict() for r in windowed_drift(spark, vdir, grid).collect()
-    ]
-
-    tdir2, vdir2 = str(tmp_path / "t2"), str(tmp_path / "v2")
-    TX.commit(tdir2, prepare_drift_rows(ev, grid), mode="overwrite")
-    refresh_drift_view(spark, vdir2, tdir2)
-    want = [
-        r.asDict() for r in windowed_drift(spark, vdir2, grid).collect()
-    ]
-    assert got == want and len(got) > 0
-
-
 def test_matview_hll_measures_incremental_equals_full(spark, tmp_path, sf_dir):
     """Approx-distinct measures ride the incremental view: HLL register
     state is max-merged, so 3 incremental refreshes estimate IDENTICALLY
@@ -283,70 +204,3 @@ def test_matview_hll_measures_incremental_equals_full(spark, tmp_path, sf_dir):
     for k, n in exact.items():
         est = inc[k]["approx_distinct_user_id"]
         assert abs(est - n) / n < 0.05, (k, est, n)
-
-
-def test_wau_registry_streamed_equals_oneshot(spark, tmp_path, sf_dir):
-    """The WAU deployment composition: events stream in micro-batches →
-    txlog appends → O(delta) incremental refresh of the (key, day) HLL
-    registry view → hll_rolling_distinct serves the trailing-7-day
-    distinct report from KB sketches. The served report must estimate
-    IDENTICALLY to the one-shot registry built over all events at once
-    (HLL registers merge by max — associative — so refresh order cannot
-    change any estimate)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from logstream_processing_service_spark.operators.matview import (
-        ViewSpec,
-        matview_sink,
-    )
-    from logstream_processing_service_spark.operators.sketches import (
-        hll_daily_registry,
-        hll_rolling_distinct,
-    )
-    from logstream_processing_service_spark.sources import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").alias("key"),
-        F.to_date("ts").alias("day"),
-        "user_id",
-        "event_id",
-    )
-    spec = ViewSpec(group_cols=("key", "day"), hll_cols=("user_id",))
-    src = str(tmp_path / "src")
-    t, v = str(tmp_path / "t"), str(tmp_path / "v")
-    os.makedirs(src)
-    for b in range(3):
-        ev.filter(F.col("event_id") % 3 == b).drop("event_id").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        q = (
-            spark.readStream.schema("key string, day date, user_id long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(matview_sink(t, v, spec))
-            .option("checkpointLocation", str(tmp_path / "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    served_reg = TX.read_snapshot(spark, v).select(
-        "key", "day", F.col("hll_user_id").alias("sketch")
-    )
-    got = {
-        (r["key"], r["day"]): (r["approx_day"], r["approx_win"])
-        for r in hll_rolling_distinct(served_reg).collect()
-    }
-    oneshot = {
-        (r["key"], r["day"]): (r["approx_day"], r["approx_win"])
-        for r in hll_rolling_distinct(
-            hll_daily_registry(load_table(spark, sf_dir, "events"))
-        ).collect()
-    }
-    assert got == oneshot
-    # three base commits; refreshes after the first ran incrementally
-    assert len(TX.history(t)) == 3
-    modes = [m.get("refresh_mode") for m in TX.history(v)]
-    assert "full" not in modes[1:]

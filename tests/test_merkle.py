@@ -18,15 +18,15 @@ from .oracle_harness import compare_one, duckdb_conn
 
 @pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_ORACLE])
 def test_merkle_diff_hash_matches_oracle(spark, sf_dir):
+    from logstream_processing_service_spark import catalog
     from logstream_processing_service_spark.queries_curation import (
-        merkle_query_oracle_sql,
         q_merkle_integrity_diff,
     )
 
     con = duckdb_conn(sf_dir)
     r = compare_one(
         spark, con, "merkle_integrity_diff", q_merkle_integrity_diff,
-        merkle_query_oracle_sql(), sf_dir,
+        catalog.oracle_sql()["merkle_integrity_diff"], sf_dir,
     )
     assert r["status"] == "OK", r
     spark.catalog.clearCache()
@@ -166,15 +166,15 @@ def test_merkle_tree_update_hash_matches_full_rebuild_oracle(spark, sf_dir):
     """The incremental xor-patch must reproduce the from-scratch tree
     of the NEW snapshot row-for-row — the O(delta) maintenance claim as
     a hash-checked equality, at both SFs."""
+    from logstream_processing_service_spark import catalog
     from logstream_processing_service_spark.queries_curation import (
-        merkle_update_oracle_sql,
         q_merkle_tree_update,
     )
 
     con = duckdb_conn(sf_dir)
     r = compare_one(
         spark, con, "merkle_tree_update", q_merkle_tree_update,
-        merkle_update_oracle_sql(), sf_dir,
+        catalog.oracle_sql()["merkle_tree_update"], sf_dir,
     )
     assert r["status"] == "OK", r
     spark.catalog.clearCache()

@@ -62,38 +62,6 @@ def test_mg_partials_bounded_size(spark, sf_dir):
     assert partials.count() <= (32 + 1) * n_parts
 
 
-def test_mg_topk_per_group_bounds_and_coverage(spark):
-    """Per-group MG: bounds bracket the exact count in every group, and
-    any item above the 1/(k+1) share inside ITS group is reported."""
-    from collections import Counter
-
-    from logstream_processing_service_spark.operators.sketches import (
-        mg_topk_per_group,
-    )
-
-    rows = []
-    rows += [("a", "hot")] * 500 + [("a", f"w{i % 97}") for i in range(400)]
-    rows += [("b", "cold")] * 30 + [("b", f"v{i % 7}") for i in range(70)]
-    df = spark.createDataFrame(rows, "src STRING, item STRING")
-    out = mg_topk_per_group(df.repartition(16), "src", "item", k=8)
-    exact = {
-        g: Counter(i for s, i in rows if s == g) for g in ("a", "b")
-    }
-    per_group = {}
-    for r in out.collect():
-        per_group.setdefault(r["src"], {})[r["item"]] = (
-            r["est_lower"], r["est_upper"]
-        )
-        true = exact[r["src"]][r["item"]]
-        assert r["est_lower"] <= true <= r["est_upper"], (r, true)
-    # coverage: 'hot' is 55% of group a, 'cold' is 30% of group b — both
-    # far above 1/(k+1) = 1/9 of their groups
-    assert "hot" in per_group["a"]
-    assert "cold" in per_group["b"]
-    # dominant items' lower bounds dominate their group's reports
-    assert per_group["a"]["hot"][0] == max(v[0] for v in per_group["a"].values())
-
-
 def test_cm_sketch_bound_and_merge(spark):
     """Count-min guarantees: (a) NEVER undercounts; (b) overcount is
     <= eps*N (eps = e/width) for >= (1-delta) of items (delta =

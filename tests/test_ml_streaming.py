@@ -424,9 +424,8 @@ def test_streaming_sessions_match_batch(spark, tmp_path):
     assert extra == {}
 
 
-def test_multimodal_resize_and_frames(spark):
+def test_multimodal_resize(spark):
     from logstream_processing_service_spark.operators.multimodal import (
-        frame_sample,
         resize_media,
         with_binary_payload,
     )
@@ -437,13 +436,6 @@ def test_multimodal_resize_and_frames(spark):
     rows = resized.collect()
     assert len(rows) == 30
     assert all(len(r["payload"]) == 64 for r in rows)
-    frames = frame_sample(media, every_n_bytes=64, max_frames=4)
-    fr = frames.collect()
-    assert len(fr) > 30  # rows explode
-    per_doc = {}
-    for r in fr:
-        per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    assert all(sorted(v) == list(range(len(v))) and len(v) <= 4 for v in per_doc.values())
 
 
 def test_viz_prep_and_gate(spark):
@@ -516,31 +508,6 @@ def test_streaming_count_windows(spark, tmp_path):
         (r["key"], r["window_idx"]): (r["first_id"], r["last_id"]) for r in got
     }
     assert got_m == want
-
-
-def test_streaming_dedup_with_watermark(spark, tmp_path):
-    from logstream_processing_service_spark.streaming.pipeline import (
-        deduped_stream,
-        read_events_stream,
-    )
-
-    # duplicate the stream by unioning it with itself: dedup must collapse
-    # every event back to one occurrence
-    ev = read_events_stream(spark, SF_DIR)
-    doubled = ev.union(ev)
-    q = (
-        deduped_stream(doubled)
-        .writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp_path}/_ckpt_dd")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM dedup_stream").first()
-    assert got["n"] == got["d"]
-    assert got["n"] == _events(spark).count()
 
 
 def test_decay_step_math():

@@ -109,24 +109,6 @@ def test_co64_offsets_supported():
         assert bytes(out)[o] == i + 1
 
 
-def test_mp4_frame_extract_content(spark, sf_dir):
-    """Extracted frame bytes are the exact mdat slices: every byte of
-    frame i equals (doc+i) % 256, sizes match the closed form."""
-    from logstream_processing_service_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    rows = M.mp4_frame_extract(
-        M.with_synthetic_mp4_payload(docs), every_k=2, max_frames=3
-    ).collect()
-    assert rows
-    for r in rows:
-        d, i = r["doc_id"], r["frame_idx"]
-        assert i % 2 == 0  # every 2nd frame
-        frame = bytes(r["frame"])
-        assert len(frame) == 100 + (d + i) % 50
-        assert set(frame) == {(d + i) % 256}
-
-
 def test_mjpeg_frames_decode_exactly(spark):
     """Every sample-table byte range is a REAL decodable JPEG; the
     decoded block-constant pixels match the closed form exactly."""

@@ -98,26 +98,6 @@ def test_resize_media_real_png(spark):
         assert px[0, 0] == seed % 256
 
 
-def test_frame_sample_real_pcm(spark):
-    from logstream_processing_service_spark.operators.multimodal import (
-        frame_sample,
-        with_tone_audio_payload,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").limit(4)
-    rows = frame_sample(
-        with_tone_audio_payload(docs), every_n_bytes=256, max_frames=4
-    ).collect()
-    by_doc: dict[int, list] = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for d, frames in by_doc.items():
-        assert 1 <= len(frames) <= 4
-        # frames are 128 int16 mono samples each; the tone is non-silent
-        arr = np.frombuffer(bytes(frames[0]["frame"]), dtype="<i2")
-        assert len(arr) == 128 and np.abs(arr).max() > 0
-
-
 def test_jpeg_decodes_natively_and_mp4_remains_gated(spark):
     import numpy as np
 

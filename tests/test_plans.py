@@ -128,29 +128,42 @@ def test_sessionize_single_exchange_per_key(spark):
     assert len([l for l in exchanges if "user_id" in l]) == 1
 
 
+def _ivfpq_codes(spark, path):
+    """The package's partitioned parquet layout: the IVF+PQ codes table
+    ``build_ivfpq_index`` writes PARTITIONED BY bucket (the registered
+    ``ann_ivfpq_index`` query's storage). Returns the coarse centroids."""
+    from logstream_processing_service_spark.operators.similarity import (
+        build_ivfpq_index,
+        label_centroids,
+    )
+    from logstream_processing_service_spark.sources import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    cents = label_centroids(emb)
+    build_ivfpq_index(emb, cents, path, m=8, n_centroids=16)
+    return cents
+
+
 def test_partitioned_layout_prunes(spark, tmp_path):
-    """write_partitioned + a date predicate => directory-level pruning
-    (PartitionFilters), the layout contract for 100 TB."""
+    """Partitioned sink + a partition-key predicate => directory-level
+    pruning (PartitionFilters), the layout contract for 100 TB."""
     from logstream_processing_service_spark.plans import (
         partition_filters,
         scan_columns,
     )
-    from logstream_processing_service_spark.sources.tables import write_partitioned
 
-    ev = _events(spark).withColumn("event_date", F.to_date("ts"))
-    path = str(tmp_path / "events_by_day")
-    write_partitioned(ev, path)
-    back = spark.read.parquet(path).filter(
-        F.col("event_date") == "2024-01-05"
-    ).select("event_id", "event_type")
-    pf = partition_filters(back)
-    assert "event_date" in pf
-    # pruned read touches only the needed data columns (+ the partition
+    path = str(tmp_path / "ivfpq")
+    _ivfpq_codes(spark, path)
+    codes = spark.read.parquet(path)
+    bucket = codes.select("bucket").first()["bucket"]
+    back = codes.filter(F.col("bucket") == bucket).select("vec_id")
+    assert "bucket" in partition_filters(back)
+    # pruned read touches only the needed data column (+ the partition
     # column itself, which is directory metadata, not file IO)
-    assert scan_columns(back) == {"event_id", "event_type", "event_date"}
-    # and the result matches the unpartitioned filter
-    want = ev.filter(F.to_date("ts") == "2024-01-05").count()
-    assert back.count() == want
+    assert scan_columns(back) == {"vec_id", "bucket"}
+    # and the result matches a read of that partition's directory alone
+    want = spark.read.parquet(f"{path}/bucket={bucket}").count()
+    assert back.count() == want > 0
 
 
 def test_plan_helpers_roundtrip(spark):
@@ -220,33 +233,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     assert joined.count() == ev.count()
     spark.sql("DROP TABLE IF EXISTS ev_bucketed")
     spark.sql("DROP TABLE IF EXISTS dim_bucketed")
-
-
-def test_ivf_index_probe_prunes(spark, tmp_path):
-    """A materialized IVF index probe must prune unprobed bucket
-    partitions (PartitionFilters on the bucket column) and agree with the
-    in-memory two-stage search."""
-    from logstream_processing_service_spark.ml.clustering import fit_kmeans_centroids
-    from logstream_processing_service_spark.operators.similarity import (
-        ann_ivf,
-        build_ivf_index,
-        search_ivf_index,
-    )
-    from logstream_processing_service_spark.plans import partition_filters
-    from logstream_processing_service_spark.sources import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cents = fit_kmeans_centroids(emb, k=4)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, cents, path)
-    queries = emb.limit(5)
-    got = search_ivf_index(spark, path, cents, queries, k=3, nprobe=2)
-    # pruning proof: the index scan carries a bucket partition filter
-    assert "bucket" in partition_filters(got)
-    want = ann_ivf(emb, cents, queries, k=3, nprobe=2)
-    got_m = {(r["q_id"], r["rank"]): r["vec_id"] for r in got.collect()}
-    want_m = {(r["q_id"], r["rank"]): r["vec_id"] for r in want.collect()}
-    assert got_m == want_m
 
 
 def test_brand_priciest_part_single_exchange(spark):
@@ -473,27 +459,20 @@ def test_range_join_bucketed_is_equi_join(spark):
     assert not joins, joins
 
 
-def test_dynamic_partition_pruning_on_date_layout(spark, tmp_path):
-    """Date-partitioned fact + selective dim filter ⇒ Spark injects a
+def test_dynamic_partition_pruning_on_bucket_layout(spark, tmp_path):
+    """Partitioned fact + selective dim filter ⇒ Spark injects a
     dynamicpruning subquery into the fact scan's PartitionFilters — the
     runtime companion to static partition pruning: at 100 TB the fact
-    directories for non-qualifying days are never listed, driven by the
-    dim filter's runtime values."""
-    from logstream_processing_service_spark.sources import load_table
-    from logstream_processing_service_spark.sources.tables import write_partitioned
-
-    ev = load_table(spark, SF_DIR, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    path = str(tmp_path / "fact")
-    write_partitioned(ev, path, partition_cols=("event_date",))
+    directories for non-qualifying buckets are never listed, driven by
+    the dim filter's runtime values."""
+    path = str(tmp_path / "ivfpq")
+    cents = _ivfpq_codes(spark, path)
     fact = spark.read.parquet(path)
-    dim = (
-        ev.select("event_date").distinct()
-        .withColumn("is_hot", F.dayofmonth("event_date") <= 2)
+    dim = cents.select(F.col("label").alias("bucket")).withColumn(
+        "is_hot", F.col("bucket") % 3 == 0
     )
-    joined = fact.join(dim.filter("is_hot"), "event_date").groupBy(
-        "event_date"
+    joined = fact.join(dim.filter("is_hot"), "bucket").groupBy(
+        "bucket"
     ).count()
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:2000]

@@ -533,17 +533,19 @@ def test_jpeg_progressive_equals_baseline_fuzz(spark, w, h, seed, q5, layout):
 
     from logstream_processing_service_spark.operators import jpegcodec as J
 
+    from .jpeg_progressive import encode_jpeg_progressive
+
     rng = np.random.default_rng(seed)
     q = q5 * 5
     if layout == "gray":
         img = rng.integers(0, 256, (h, w)).astype(np.uint8)
         base = J.decode_jpeg(J.encode_jpeg_gray(img, q))
-        prog = J.decode_jpeg(J.encode_jpeg_progressive(img, q))
+        prog = J.decode_jpeg(encode_jpeg_progressive(img, q))
     else:
         img = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
         base = J.decode_jpeg(J.encode_jpeg_color(img, q, subsampling=layout))
         prog = J.decode_jpeg(
-            J.encode_jpeg_progressive(img, q, subsampling=layout)
+            encode_jpeg_progressive(img, q, subsampling=layout)
         )
     assert np.array_equal(base, prog)
 

@@ -418,35 +418,6 @@ def test_cli_list_and_validation(capsys):
     assert main(["run", "definitely_not_a_query"]) == 2
 
 
-def test_phrase_match_equals_naive_contains(spark):
-    """Positional-join phrase search must equal the naive normalized
-    contains() scan, including overlapping occurrences and repeated
-    words inside the phrase."""
-    from logstream_processing_service_spark.operators.retrieval import (
-        phrase_match_docs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for phrase in ("fast table", "table table", "window agg join", "nope_x"):
-        got = {
-            r["doc_id"]: r["n_hits"]
-            for r in phrase_match_docs(docs, phrase).collect()
-        }
-        # naive ground truth in python over the same tokenization
-        want = {}
-        for r in docs.select("doc_id", "text").collect():
-            toks = [t for t in r["text"].split(" ") if t]
-            p = phrase.split(" ")
-            n = sum(
-                1
-                for i in range(len(toks) - len(p) + 1)
-                if toks[i : i + len(p)] == p
-            )
-            if n:
-                want[r["doc_id"]] = n
-        assert got == want, phrase
-
-
 def test_resample_ffill_matches_pandas(spark):
     """The docstring's claim made literal: resample_ffill equals pandas
     resample('1h').mean().ffill() on the global hourly grid, per type."""

@@ -6,8 +6,6 @@ snapshot (never silently dropped by the rewrite)."""
 
 from __future__ import annotations
 
-import datetime as dt
-
 import pytest
 
 from logstream_processing_service_spark.operators import txlog as TX
@@ -21,25 +19,6 @@ def _optimize_case(spark, t):
             spark, t, target_files=1, sort_col="id", stats_cols=("id",)
         ),
         spark.range(4, 5),
-    )
-
-
-def _cm_case(spark, t):
-    from logstream_processing_service_spark.operators.sketches import (
-        cm_compact_registry,
-        cm_daily_registry,
-    )
-
-    def events(users):
-        return spark.createDataFrame(
-            [("click", dt.datetime(2024, 1, 1, 12), u) for u in users],
-            "event_type string, ts timestamp, user_id long",
-        )
-
-    TX.commit(t, cm_daily_registry(events([1, 2, 3])))
-    return (
-        lambda: cm_compact_registry(spark, t),
-        cm_daily_registry(events([4, 5])),
     )
 
 
@@ -68,8 +47,8 @@ def _tombstone_case(spark, t):
 
 @pytest.mark.parametrize(
     "case",
-    [_optimize_case, _cm_case, _tombstone_case],
-    ids=["optimize_table", "cm_compact_registry", "tombstone_compaction"],
+    [_optimize_case, _tombstone_case],
+    ids=["optimize_table", "tombstone_compaction"],
 )
 def test_rewrite_conflicts_on_concurrent_append(
     spark, tmp_path, monkeypatch, case

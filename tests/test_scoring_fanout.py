@@ -174,6 +174,35 @@ def test_incidents_keep_the_cluster_id_type_they_are_written_with(spark, trained
     assert sorted(map(tuple, pinned.collect())) == sorted(map(tuple, as_written.collect()))
 
 
+def test_quality_audit_reads_embeddings_with_a_pinned_schema(spark, trained, tmp_path):
+    """``log_embeddings`` holds training's 5-column files and the scoring
+    batch's 9-column ones. The audit reads the columns it uses with their
+    written types whichever footer Spark would sample, and the read runs
+    no schema-inference job."""
+    import glob
+    import uuid
+
+    from pyspark.sql.types import StructType
+
+    work = str(tmp_path / "svc")
+    shutil.copytree(trained, work)
+    P.run_incremental_batch(spark, SF_DIR, work, start_id=0, end_id=999)
+    files = glob.glob(os.path.join(work, "log_embeddings", "*.parquet"))
+    assert {len(pq.read_schema(f)) for f in files} == {5, 9}
+
+    sc = spark.sparkContext
+    group = f"audit-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "audit read")
+    try:
+        emb = P.read_audit_embeddings(spark, work)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert emb.schema == StructType.fromDDL(P.AUDIT_EMBEDDINGS_DDL)
+    assert emb.count() == sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
 def test_empty_slice_writes_nothing_and_releases_cache(spark, work_dir):
     files = _files(work_dir)
     before_ids = _persisted_ids(spark)

@@ -7,8 +7,6 @@ import pytest
 pytestmark = pytest.mark.slow  # tiered run: see pytest.ini (r13 VERDICT #1)
 
 
-from pyspark.sql import functions as F
-
 from logstream_processing_service_spark.streaming.dedup import minhash_dedup_sink
 
 A = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -112,38 +110,3 @@ def test_minhash_dedup_sink_under_real_stream(spark, tmpdir):
     _batch(spark, [(4, A), (5, C)]).coalesce(1).write.mode("append").parquet(src)
     run_stream()
     assert _kept_ids(spark, out) == [1, 3, 5]
-
-
-def test_registry_ttl_compaction(spark, tmpdir):
-    """Compaction keeps only the last max_age batches' registry rows, the
-    swap is atomic-by-rename, and an expired-entry collision is accepted
-    again on the next batch (sliding-window semantics)."""
-    import pyspark.sql.functions as F
-
-    from logstream_processing_service_spark.streaming.dedup import (
-        compact_registry,
-        minhash_dedup_sink,
-    )
-
-    out = str(tmpdir / "ttl")
-    sink = minhash_dedup_sink(out)
-    base = (
-        "the quick brown fox jumps over the lazy dog and then "
-        "runs far away into the deep dark woods tonight"
-    )
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    sink(mk([(1, base)]), 0)
-    sink(mk([(2, "completely different second batch text goes here now")]), 1)
-    reg = spark.read.parquet(f"{out}/registry/data")
-    assert reg.filter(F.col("batch_id") == 0).count() > 0
-
-    stats = compact_registry(spark, out, max_age=1, current_batch_id=1)
-    assert stats["after"] < stats["before"]
-    reg = spark.read.parquet(f"{out}/registry/data")
-    assert reg.filter(F.col("batch_id") == 0).count() == 0
-    assert reg.filter(F.col("batch_id") == 1).count() == stats["after"]
-
-    # doc 3 duplicates EXPIRED doc 1 -> accepted again (sliding window)
-    sink(mk([(3, base)]), 2)
-    kept3 = spark.read.parquet(f"{out}/kept").filter(F.col("_batch") == 2)
-    assert [r["doc_id"] for r in kept3.collect()] == [3]

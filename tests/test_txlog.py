@@ -95,28 +95,6 @@ def test_streaming_commit_sink_exactly_once(spark, tmp_path):
     assert [m.get("batch_id") for m in TX.history(t)] == [0, 1, 2]
 
 
-def test_merge_commit_transactional(spark, tmp_path):
-    from logstream_processing_service_spark.operators import txlog as TX
-
-    t = str(tmp_path / "merge_tbl")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id LONG, v STRING"
-    )
-    TX.commit(t, base)
-    src = spark.createDataFrame([(2, "B2"), (4, "d")], "id LONG, v STRING")
-    v = TX.merge_commit(spark, t, src, "id")
-    assert v == 1
-    got = {
-        (r["id"], r["v"]) for r in TX.read_snapshot(spark, t).collect()
-    }
-    assert got == {(1, "a"), (2, "B2"), (3, "c"), (4, "d")}
-    # the pre-merge snapshot is still time-travelable
-    old = {
-        (r["id"], r["v"]) for r in TX.read_snapshot(spark, t, 0).collect()
-    }
-    assert old == {(1, "a"), (2, "b"), (3, "c")}
-
-
 def test_append_rejects_incompatible_schema(spark, tmp_path):
     from logstream_processing_service_spark.operators import txlog as TX
 
@@ -566,44 +544,3 @@ def test_schema_evolution_cdc_in_latest_schema(spark, tmp_path):
     assert feed.columns == ["id", "score", "_change_type"]
     got = {(r["id"], r["score"], r["_change_type"]) for r in feed.collect()}
     assert got == {(10, 7.0, "insert"), (11, 7.0, "insert")}
-
-
-def test_null_pruned_read_skips_complete_files(spark, tmp_path):
-    """IS NULL probes skip files whose manifest null count is zero;
-    results match the full-scan answer and the skip actually happens
-    (asserted via the scanned file set in the plan)."""
-    from logstream_processing_service_spark.operators import txlog as TX
-
-    t = str(tmp_path / "tbl")
-    clean = spark.range(100).select(
-        "id", F.col("id").cast("double").alias("score")
-    )
-    holey = spark.range(100, 140).select(
-        "id",
-        F.when(F.col("id") % 7 == 0, None).otherwise(
-            F.col("id").cast("double")
-        ).alias("score"),
-    )
-    TX.commit_with_stats(t, clean.coalesce(1), stats_cols=("score",))
-    TX.commit_with_stats(
-        t, holey.coalesce(1), stats_cols=("score",), mode="append"
-    )
-    pruned = TX.read_snapshot_null_pruned(spark, t, "score")
-    full = TX.read_snapshot(spark, t).filter(F.col("score").isNull())
-    assert sorted(r["id"] for r in pruned.collect()) == sorted(
-        r["id"] for r in full.collect()
-    )
-    # the clean file is not in the pruned scan
-    man = TX.history(t)[-1]
-    clean_files = [
-        f for f, st in man["file_stats"].items() if st["nulls_score"] == 0
-    ]
-    assert clean_files
-    scanned = {f.split("/")[-1] for f in pruned.inputFiles()}
-    for f in clean_files:
-        assert f.split("/")[-1] not in scanned
-    # and the full scan does include it (the assertion above is not
-    # vacuous)
-    assert {f.split("/")[-1] for f in full.inputFiles()} >= {
-        f.split("/")[-1] for f in clean_files
-    }

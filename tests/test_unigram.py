@@ -305,16 +305,6 @@ def test_fertility_beats_char_grain(spark):
     assert n_tokens < n_chars
 
 
-def test_model_df_roundtrip(spark):
-    from logstream_processing_service_spark.operators.unigram import model_df
-
-    docs = _docs(spark, TEXTS)
-    m = unigram_train(docs, vocab_size=40, max_piece_len=4)
-    df = model_df(spark, m)
-    back = {(r["piece"], r["logprob"]) for r in df.collect()}
-    assert back == set(m.pieces)
-
-
 def test_tokenizer_compare_report(spark):
     """The head-to-head report: chars is the upper bound on any
     tokenizer's total; trained BPE and unigram must both compress

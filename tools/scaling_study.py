@@ -17,6 +17,9 @@ Corpus points:
     near-dup families survive once. Non-document tables are copied from
     sf0.1 so loaders resolve.
 
+Every query the study times is a registered catalog query, run through its
+``all_specs()`` entry.
+
 Exponent: log(t_50k / t_5k) / log(10) from the per-query MIN of
 ``reps`` runs of ``bench.time_query``, bench.py's timing protocol (min is
 the right estimator under this VM family's
@@ -127,20 +130,6 @@ QUERIES = [
     "lsh_incremental_twin",     # band-key-grain: 2 commits + merged pairs
     "bm25_compaction_twin",     # posting-grain: delete + fold + plain read
     "char_window_incremental_twin",  # window-hash postings, df at read
-    # r14 queue (unregistered; resolved via _extra_queries).
-    # ann_ivf_incremental_twin is embeddings-grain — that table is not
-    # 10x'd in the decade (the r9 hard_negative_mining rule), so it is
-    # bench-only.
-    "lsh_compaction_twin",        # band-key-grain: 3 commits + fold + pairs
-    "merkle_repair_plan",         # doc-grain hash scans + ≤64-row plan
-    "doremi_to_mix_pipeline",     # doremi rounds + |domains|-row rate math
-    "bloom_incremental_twin",     # word-grain: 2 KB-sized commits + OR-merge
-    "snapshot_restore_twin",      # doc-grain: 2 commits + manifest-only restore
-    "cm_incremental_twin",        # cell-grain: 2 sketch commits + sum-merge
-    "snapshot_vacuum_twin",       # doc-grain: 2 commits + rewrite + dir GC
-    "zorder_prune_twin",          # events-grain: z write + manifest-skip read
-    "cm_lifecycle_twin",          # cell-grain: 4 commits + neg-delete + fold
-    "bloom_rebuild_twin",         # word-grain: 3 commits (rebuild) + probe
     # r14 optimization round (VERDICT #9: measure the r13/r14-touched
     # operators' scaling claims, not just argue them). part_pagerank is
     # lineitem-grain — that table is not 10x'd in the decade, so its
@@ -155,33 +144,6 @@ QUERIES = [
     "dedup_simhash",              # documents-grain: conv()-hash signatures
     "doc_fingerprints",           # documents-grain: conv()-hash one pass
 ]
-
-
-def _extra_queries():
-    """(spark, sf_dir) callables for the query functions not registered in
-    the catalog (the rehearsed r14 queue), timed like registered ones."""
-    import importlib
-
-    modules = {
-        "lsh_compaction_twin": "queries_text",
-        "merkle_repair_plan": "queries_curation",
-        "doremi_to_mix_pipeline": "queries_curation",
-        "ann_ivf_incremental_twin": "queries_vector",
-        "bloom_incremental_twin": "queries_text",
-        "snapshot_restore_twin": "queries_relational",
-        "cm_incremental_twin": "queries_relational",
-        "snapshot_vacuum_twin": "queries_relational",
-        "zorder_prune_twin": "queries_relational",
-        "cm_lifecycle_twin": "queries_relational",
-        "bloom_rebuild_twin": "queries_text",
-    }
-    return {
-        name: getattr(
-            importlib.import_module(f"logstream_processing_service_spark.{mod}"),
-            f"q_{name}",
-        )
-        for name, mod in modules.items()
-    }
 
 
 SCALE_DIR = "/tmp/logstream_scale10"
@@ -505,15 +467,15 @@ def main() -> None:
     spark = get_spark(app_name="scaling-study")
     spark.sparkContext.setLogLevel("ERROR")
     specs = {s.name: s for s in all_specs()}
-    extras = _extra_queries()
 
     load_table(spark, SRC_SF, "documents").count()  # JVM warm-up
 
     from bench import time_query
 
     def run(name: str, sf_dir: str) -> float:
-        fn = specs[name].fn if name in specs else extras[name]
-        return min(time_query(spark, name, fn, sf_dir) for _ in range(reps))
+        return min(
+            time_query(spark, name, specs[name].fn, sf_dir) for _ in range(reps)
+        )
 
     def run_matview_refresh(sf_dir: str) -> float:
         """Time ONE incremental refresh of a FIXED 10k-row delta on top
