@@ -20,6 +20,7 @@ message+parsed_data→props, cluster_id→assigned cluster label.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -33,8 +34,15 @@ from .ml.clustering import CENTROIDS_DDL, fit_kmeans_centroids
 from .ml.embedding import hash_featurizer
 from .operators import relational as R
 from .operators.similarity import assign_nearest_centroid
+from .session import fan_out
 from .sources import load_table
-from .sources.tables import put_tagged, read_parquet_or_empty, upsert_parquet
+from .sources.tables import (
+    append_rows,
+    put_tagged,
+    read_parquet_or_empty,
+    unseen_rows,
+    upsert_parquet,
+)
 
 CENTROID_THRESHOLD = 0.35  # src/ml/vector_engine.py:8
 EMBED_DIM = 64  # test stand-in for the 384-dim MiniLM space
@@ -251,24 +259,15 @@ def anomaly_pass(
     inc_path = os.path.join(work_dir, "incidents")
     incidents = read_parquet_or_empty(spark, inc_path, R.INCIDENTS_DDL).coalesce(1)
     actions = R.open_incident_upsert(flagged.select("cluster_id"), incidents)
-    # Count BEFORE appending: the plan reads inc_path, so re-running it
-    # after the write would anti-join the new rows away. cache: NOT
-    # caller-owned — released in the `finally` below.
-    new_incidents = (
-        actions.filter(F.col("action") == "insert")
-        .select(
-            "cluster_id",
-            F.lit("NEW").alias("status"),
-            F.current_timestamp().alias("created_at"),
-        )
-        .persist()
+    # collect: bounded, flag_anomalies flags at most max_anomalies (3)
+    # clusters per batch. Collected BEFORE the append, because the plan
+    # reads inc_path and would anti-join the new rows away afterwards.
+    inserts = actions.filter(F.col("action") == "insert").select("cluster_id").collect()
+    created_at = datetime.datetime.now(datetime.timezone.utc)
+    append_rows(
+        spark, [(r.cluster_id, "NEW", created_at) for r in inserts], R.INCIDENTS_DDL, inc_path
     )
-    try:
-        n_new = new_incidents.count()
-        new_incidents.write.mode("append").parquet(inc_path)
-    finally:
-        new_incidents.unpersist()
-    return n_new
+    return len(inserts)
 
 
 def score_batch(
@@ -283,23 +282,30 @@ def score_batch(
     refresh → anomaly pass over ``events``, rows already kept by
     ``R.scorable``; ``tag`` names the batch's volume history file.
 
-    The scored rows are persisted once: their count, the only action that
-    runs the embed → assign plan, serves the empty-batch exit and the
-    result, every sink reads the cache, and ``finally`` releases it. The
-    assignment labels the embedded rows in place (each is embedded once),
-    and no small side is shuffled: the centroids are one broadcast row, the
-    patterns one aggregate, the anomaly pass one partition. The tables the
-    service writes itself are read with their known schema, so no
-    schema-inference job runs. A replayed batch is idempotent: the sinks
-    skip the keys they hold and ``anomaly_pass`` replaces the batch's
-    history file.
+    The scored rows are persisted once. One aggregate, the only action
+    that runs the embed → assign plan, gives their count (for the
+    empty-batch exit and the result) and their ``event_id`` bounds (for
+    the embeddings upsert, which then reads only the target keys that can
+    collide). The three sinks each read only the cache and write their
+    own table, so they run concurrently through ``session.fan_out``,
+    under the caller's job group, longest first: the anomaly pass, the
+    embeddings upsert, the pattern refresh. ``fan_out`` joins all three
+    before it re-raises a failure, so ``finally`` releases the cache only
+    after every sink has stopped reading it. The assignment labels the
+    embedded rows in place (each is embedded once), and no small side is
+    shuffled: the centroids are one broadcast row, the patterns one
+    aggregate, the anomaly pass one partition. The two small tables,
+    patterns and incidents, get a file only when the batch adds rows to
+    them. The tables the service writes itself are read with their known
+    schema, so no schema-inference job runs. A replayed batch is
+    idempotent: the sinks skip the keys they hold and ``anomaly_pass``
+    replaces the batch's history file.
 
     In a ``get_spark`` session a steady-state batch reuses the generated
     classes the previous batch compiled (``session.CODEGEN_CACHE_ENTRIES``).
-    Two plans still compile each batch, because codegen inlines their
-    per-batch literals: the slice driver's ``R.scan_slice`` stage, with the
-    slice's ``event_id`` bounds, and the ``current_timestamp()`` of
-    ``anomaly_pass``'s ``created_at``.
+    The plans that inline per-batch literals still compile each batch: the
+    slice driver's ``R.scan_slice`` stage, with the slice's ``event_id``
+    bounds, and the embeddings upsert's key-range read.
     """
     store = ModelStore(os.path.join(work_dir, "models"))
     centroids = store.load_centroids(spark)  # state load, §3.1 step 2
@@ -317,32 +323,43 @@ def score_batch(
         .persist()
     )
     try:
-        n_scored = scored.count()
+        n_scored, lo, hi = scored.agg(
+            F.count(F.lit(1)), F.min("event_id"), F.max("event_id")
+        ).first()
         if n_scored == 0:  # empty-batch early exit (:69-71)
             return {"scored": 0, "incidents": 0}
 
-        # T2/S6 idempotent sink (vs per-row txn log_ops.py:66-81). The cached
-        # rows keep the slice scan's input splits (AQE does not coalesce a
-        # cached plan's output), so without the rebalance every batch would
-        # append one small file per split.
-        upsert_parquet(
-            spark, scored.hint("rebalance", "event_id"),
-            os.path.join(work_dir, "log_embeddings"),
-        )
+        def upsert_embeddings() -> None:
+            # T2/S6 idempotent sink (vs per-row txn log_ops.py:66-81). A key
+            # outside [lo, hi] cannot collide with the batch. The cached rows
+            # keep the slice scan's input splits, so coalesce: one file per
+            # batch, whose statistics the next batches' key reads skip.
+            upsert_parquet(
+                spark, scored.coalesce(1), os.path.join(work_dir, "log_embeddings"),
+                key_range=(lo, hi),
+            )
 
-        # pattern refresh above the watermark (S8 + P6, pattern_ops.py:12-46)
         clustered = scored.select(
             "event_id", F.col("cluster_id").alias("user_id"), "event_type",
             F.col("text").alias("props"), "ts",
         ).filter(F.col("user_id") >= 0)
-        patterns = R.mine_patterns(clustered)
-        upsert_parquet(
-            spark, patterns, os.path.join(work_dir, "log_patterns_incr"), key="cluster_id"
-        )
+
+        def refresh_patterns() -> None:
+            # pattern refresh above the watermark (S8 + P6, pattern_ops.py:12-46)
+            path = os.path.join(work_dir, "log_patterns_incr")
+            patterns = R.mine_patterns(clustered)
+            # collect: bounded, at most one new pattern per centroid
+            fresh = unseen_rows(spark, patterns, path, "cluster_id").collect()
+            append_rows(spark, fresh, patterns.schema, path)
 
         # anomaly pass (incident_ops.py:44-105), one history file per batch
         volume = R.batch_volume(clustered.select("user_id", "event_id"))
-        n_new = anomaly_pass(spark, volume, work_dir, tag)
+        n_new, _, _ = fan_out(
+            spark,
+            lambda: anomaly_pass(spark, volume, work_dir, tag),
+            upsert_embeddings,
+            refresh_patterns,
+        )
         return {"scored": n_scored, "incidents": n_new}
     finally:
         scored.unpersist()

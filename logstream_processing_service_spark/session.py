@@ -25,11 +25,16 @@ centralizes the configuration that matters at 100 TB:
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
+import threading
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 # Conf that must hold on ANY session running this engine (including a session
 # created by an external driver) — all runtime-settable.
@@ -153,3 +158,47 @@ def scratch_dir(kind: str) -> str:
         _scratch_root = tempfile.mkdtemp(prefix="logstream_")
         atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
     return tempfile.mkdtemp(prefix=f"{kind}_", dir=_scratch_root)
+
+
+def fan_out(spark: SparkSession, *fns: Callable[[], Any]) -> list:
+    """Run each zero-argument callable on its own thread and return their
+    results in argument order.
+
+    This is the engine's one way to overlap independent Spark actions,
+    such as sinks that read one cached frame and each write their own
+    table. A plain thread starts its JVM side with no local properties, so
+    its jobs would escape the caller's job group: ``getJobIdsForGroup``
+    would not count them and cancelling the group would not stop them.
+    Each thread here runs under ``pyspark.util.inheritable_thread_target``
+    and so keeps the caller's job group, description, tags and any other
+    local property, such as a stream's batch properties inside
+    ``foreachBatch``. The wrapper is made once per thread because it
+    copies the properties when it is made; the threads then do not share
+    one mutable copy, into which Spark SQL writes each query's execution
+    id.
+
+    Every thread is joined before the first failure, in argument order, is
+    re-raised, so a caller's ``finally`` never releases a cache that a
+    running sibling still reads.
+    """
+    results: list = [None] * len(fns)
+    errors: list[BaseException | None] = [None] * len(fns)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # re-raised in the caller's thread
+            errors[i] = e
+
+    threads = [
+        threading.Thread(target=inheritable_thread_target(spark)(functools.partial(run, i)))
+        for i in range(len(fns))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_band_keys
+from ..session import fan_out
 from ..sources.tables import read_parquet_or_empty, swap_in
 
 REGISTRY_SCHEMA = "band int, bkey string, first_doc_id long, batch_id long"
@@ -70,8 +71,6 @@ def minhash_dedup_sink(
     query does)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         spark = batch_df.sparkSession
         reg_path = f"{out_dir}/registry/data"
         # band keys feed FIVE consumers across the batch's write actions
@@ -148,11 +147,7 @@ def minhash_dedup_sink(
                         .parquet(f"{out_dir}/kept")
                     )
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fk = pool.submit(_write_kept)
-                    fr = pool.submit(swap_in, merged, reg_path)
-                    fk.result()
-                    fr.result()
+                fan_out(spark, _write_kept, lambda: swap_in(merged, reg_path))
             finally:
                 sc.set("spark.sql.sources.partitionOverwriteMode", prev)
         finally:

@@ -37,12 +37,11 @@ import os
 import shutil
 import time
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import scratch_dir
+from ..session import fan_out, scratch_dir
 
 # ~bytes of staged micro-batch input per state partition: state volume for
 # these bounded twins tracks input volume, and partitions far below this
@@ -95,13 +94,10 @@ def run_deterministic_batches(
     try:
         # independent single-file writes: run them concurrently and pin
         # batch order via explicit mtimes afterwards (module docstring)
-        def _write(b_sl):
-            b, sl = b_sl
-            sl.coalesce(1).write.mode("overwrite").parquet(f"{src}/batch={b}")
-            return b
+        def _write(b: int, sl: DataFrame):
+            return lambda: sl.coalesce(1).write.mode("overwrite").parquet(f"{src}/batch={b}")
 
-        with ThreadPoolExecutor(max_workers=min(4, len(slices))) as pool:
-            list(pool.map(_write, enumerate(slices)))
+        fan_out(spark, *(_write(b, sl) for b, sl in enumerate(slices)))
         base = time.time()
         for b in range(len(slices)):
             for f in os.listdir(f"{src}/batch={b}"):

@@ -255,6 +255,37 @@ def test_on_disk_state_goes_through_scratch_dir():
     )
 
 
+def _is_thread_maker(node: ast.AST) -> bool:
+    """A ``threading`` import or a ``ThreadPoolExecutor`` reference."""
+    return (
+        (isinstance(node, ast.Import) and any(a.name == "threading" for a in node.names))
+        or (isinstance(node, ast.ImportFrom) and node.module == "threading")
+        or (isinstance(node, ast.Attribute) and node.attr == "ThreadPoolExecutor")
+        or (isinstance(node, ast.Name) and node.id == "ThreadPoolExecutor")
+        or (
+            isinstance(node, ast.ImportFrom)
+            and any(a.name == "ThreadPoolExecutor" for a in node.names)
+        )
+    )
+
+
+def test_threads_go_through_fan_out():
+    """Concurrent Spark actions run through ``session.fan_out``, whose
+    threads keep the caller's job group and local properties. A plain
+    thread or pool submits jobs outside the caller's group, where
+    ``getJobIdsForGroup`` does not count them and cancelling the group
+    does not stop them."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        if rel == "session.py":
+            continue
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for lineno, scope in _scoped(tree, _is_thread_maker):
+            offenders.append(f"{rel}:{lineno} in {scope or '<module>'}")
+    assert not offenders, "thread outside session.fan_out:\n" + "\n".join(offenders)
+
+
 # Where a package definition may be referenced from. ``tests/`` is not a
 # referrer: code that only a test runs is never run by a catalog query,
 # ``__spark_entry__.py``, the scoring service or a benchmark.
